@@ -39,6 +39,15 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kafka_streams_the_clojure_way_spark.operators.dedup import (
+    IndexDataset,
+    _in_literals,
+    _index_meta,
+    build_index,
+    compact_index,
+    index_dataset_root,
+    serve_index_stream,
+)
 from kafka_streams_the_clojure_way_spark.sources.files import (
     read_static_schema,
     with_min_parallelism,
@@ -311,25 +320,25 @@ def build_audiofp_index(
 
     Fingerprinting the corpus runs ONCE; after this, per-batch probe
     cost is O(batch + matching postings) regardless of corpus size."""
-    from kafka_streams_the_clojure_way_spark.operators.dedup import (
-        _invalidate_index_meta,
-    )
     from kafka_streams_the_clojure_way_spark.sources.files import write_partitioned
 
-    _invalidate_index_meta(path)
     fps = audio_fingerprints(
         with_min_parallelism(corpus_assets), id_col, decode
     ).cache()
     keys = fps.groupBy("frame_idx", "fp").agg(F.count(F.lit(1)).alias("df"))
     dropped = keys.filter(F.col("df") > df_cap).select("frame_idx", "fp")
     kept = fps.join(dropped, ["frame_idx", "fp"], "left_anti")
-    write_partitioned(kept.repartition("fp"), f"{path}/postings", "fp")
-    dropped.coalesce(1).write.mode("overwrite").parquet(f"{path}/dropped")
-    corpus_assets.sparkSession.createDataFrame(
-        [(FRAME_W, N_BANDS, FP_BITS, df_cap, min_shared, id_col, decode or "")],
+
+    def write(root: str) -> None:
+        write_partitioned(kept.repartition("fp"), f"{root}/postings", "fp")
+        dropped.coalesce(1).write.mode("overwrite").parquet(f"{root}/dropped")
+
+    build_index(
+        corpus_assets.sparkSession, path, write,
+        (FRAME_W, N_BANDS, FP_BITS, df_cap, min_shared, id_col, decode or ""),
         "frame_w int, n_bands int, fp_bits int, df_cap int, min_shared int, "
         "id_col string, decode string",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
+    )
     fps.unpersist()
 
 
@@ -339,7 +348,7 @@ def _read_postings(spark, root: str, id_col: str):
     files, where schema inference fails — an empty index must probe as
     empty, not error. ``root`` is a RESOLVED dataset root
     (``dedup.index_dataset_root``) — callers resolve once per call so
-    a versioned repoint mid-call can never mix snapshots."""
+    a repoint mid-call can never mix snapshots."""
     return spark.read.schema(
         f"{id_col} long, frame_idx long, fp long"
     ).parquet(f"{root}/postings")
@@ -366,12 +375,6 @@ def audiofp_index_probe(
     the batch side broadcasts into the (frame_idx, fp) equi-join. The
     df cap is a property of the INDEXED corpus (the between-form
     semantics); batch-side keys are never capped."""
-    from kafka_streams_the_clojure_way_spark.operators.dedup import (
-        _in_literals,
-        _index_meta,
-        index_dataset_root,
-    )
-
     meta = _index_meta(spark, index_path)
     root = index_dataset_root(index_path)  # one snapshot per probe
     bar = meta["min_shared"] if min_shared is None else min_shared
@@ -454,12 +457,6 @@ def audiofp_index_upsert(
     (stricter, never looser), and the retry's id anti-join skips the
     half-added docs; a rebuild restores them. The reverse order would
     leave over-cap keys SERVING quadratic fanout until the retry."""
-    from kafka_streams_the_clojure_way_spark.operators.dedup import (
-        _in_literals,
-        _index_meta,
-        index_dataset_root,
-    )
-
     meta = _index_meta(spark, index_path)
     root = index_dataset_root(index_path)  # writers land in the active version
     fps = audio_fingerprints(
@@ -509,73 +506,26 @@ def audiofp_index_upsert(
     )
 
 
-def compact_audiofp_index(spark, index_path: str, *, versioned: bool = False) -> None:
-    """Fold upsert-appended slivers back to one file per fp directory
-    AND physically remove postings on dropped keys (the logical deletes
-    the upsert path accrues). Answers unchanged — probes already
-    anti-join the drop list; this restores scan-planning cost and
-    reclaims the hidden rows' bytes. Same crash-safe rename-aside swap
-    as the other families (complete old or new dataset, never torn —
-    tests/test_compaction_contract.py); the default in-place mode is
-    NOT concurrent-probe safe — single-writer maintenance window: run
-    between probe batches (``audiofp_index_probe_stream`` can do it on
-    a cadence, serial with the loop). ``versioned=True`` is the
-    snapshot-read mode (the ``compact_minhash_index`` contract):
-    compacted postings land in a fresh version dir with the drop list
-    COPIED alongside (unlike tombstones it is a permanent df-cap
-    artifact — probes and upserts keep consulting it), then the atomic
-    CURRENT repoint; reclaim stale versions with
-    :func:`gc_audiofp_index_versions`."""
-    import os
-
-    from kafka_streams_the_clojure_way_spark.operators.dedup import (
-        compact_into_version,
-        index_dataset_root,
-    )
-    from kafka_streams_the_clojure_way_spark.sources.files import (
-        compact_partitioned,
-    )
-
-    root = index_dataset_root(index_path)
-    has_files = any(
-        f.endswith(".parquet")
-        for _, _, files in os.walk(f"{root}/postings")
-        for f in files
-    )
-    if not has_files:  # already empty (e.g. fully df-capped): no-op
-        return
-    dropped = read_static_schema(spark, f"{root}/dropped").localCheckpoint(
-        eager=True
-    )
-    anti = lambda df: df.join(  # noqa: E731
-        F.broadcast(dropped), ["frame_idx", "fp"], "left_anti"
-    )
-    if versioned:
-
-        def write(newroot: str) -> None:
-            compact_partitioned(
-                spark, f"{root}/postings", "fp", transform=anti,
-                dest=f"{newroot}/postings",
-            )
-            # the drop list survives versions: future upserts must keep
-            # honoring keys the corpus already capped
-            dropped.coalesce(1).write.mode("overwrite").parquet(
-                f"{newroot}/dropped"
-            )
-
-        compact_into_version(index_path, write)
-        return
-    compact_partitioned(spark, f"{root}/postings", "fp", transform=anti)
+def anti_drop_list(spark, df: DataFrame, root: str, meta) -> DataFrame:
+    """Rewrite rule: physically remove postings on keys in the drop list
+    (the logical deletes the upsert path accrues)."""
+    dropped = read_static_schema(spark, f"{root}/dropped")
+    return df.join(F.broadcast(dropped), ["frame_idx", "fp"], "left_anti")
 
 
-def gc_audiofp_index_versions(index_path: str) -> list[str]:
-    """``dedup.gc_index_versions`` for the audio fingerprint family's
-    datasets."""
-    from kafka_streams_the_clojure_way_spark.operators.dedup import (
-        gc_index_versions,
-    )
+#: ``postings`` one file per fp directory minus the dropped keys; the
+#: drop list itself is copied unchanged — unlike tombstones it is a
+#: permanent df-cap artifact that probes and upserts keep consulting.
+AUDIOFP_LAYOUT = (
+    IndexDataset("postings", ("fp",), anti_drop_list),
+    IndexDataset("dropped"),
+)
 
-    return gc_index_versions(index_path, datasets=("postings", "dropped"))
+
+def compact_audiofp_index(spark, index_path: str) -> str:
+    """``dedup.compact_index`` over :data:`AUDIOFP_LAYOUT` (concurrent
+    probes and crashes: see ``dedup.index_dataset_root``)."""
+    return compact_index(spark, index_path, AUDIOFP_LAYOUT)
 
 
 def audio_fp_pairs_between_sql(
@@ -649,50 +599,21 @@ def audiofp_index_probe_stream(
     df-cap invariant maintained incrementally by the upsert path;
     replays stay idempotent via its anti-join (default
     ``assume_new_ids=False``). ``compact_every=N`` compacts after every
-    N-th upserting batch — serial with the loop, so the
-    not-concurrent-reader-safe swap is safe here, and each compaction
-    also PHYSICALLY removes postings the cap logically dropped."""
-    if isinstance(sink, str):
-        out_path = sink
-
-        def sink_fn(pairs: DataFrame, batch_id: int) -> None:
-            pairs.coalesce(1).write.mode("append").parquet(out_path)
-
-    else:
-        sink_fn = sink
-
-    def serve(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        caches: list[DataFrame] = []
-        pairs = audiofp_index_probe(
-            spark,
-            index_path,
-            batch_df,
-            id_col=id_col,
-            min_shared=min_shared,
+    N-th upserting batch, and each compaction also PHYSICALLY removes
+    postings the cap logically dropped."""
+    return serve_index_stream(
+        spark, index_path, stream, sink,
+        lambda batch, caches: audiofp_index_probe(
+            spark, index_path, batch, id_col=id_col, min_shared=min_shared,
             cache_registry=caches,
-        )
-        try:
-            sink_fn(pairs, batch_id)
-            if upsert:
-                audiofp_index_upsert(
-                    spark,
-                    index_path,
-                    batch_df,
-                    id_col=id_col,
-                    assume_new_ids=assume_new_ids,
-                )
-        finally:
-            for frame in caches:
-                frame.unpersist()
-        if upsert and compact_every and (batch_id + 1) % compact_every == 0:
-            compact_audiofp_index(spark, index_path)
-
-    writer = stream.writeStream.foreachBatch(serve)
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.trigger(**(trigger or {"availableNow": True})).start()
+        ),
+        lambda batch: audiofp_index_upsert(
+            spark, index_path, batch, id_col=id_col, assume_new_ids=assume_new_ids
+        ),
+        compact_audiofp_index,
+        upsert_batches=upsert, compact_every=compact_every,
+        checkpoint=checkpoint, trigger=trigger,
+    )
 
 
 def resample_audio_assets(

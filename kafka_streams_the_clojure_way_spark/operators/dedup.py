@@ -29,6 +29,9 @@ this whole module is north-star surface.
 from __future__ import annotations
 
 import os
+import shutil
+from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -36,9 +39,16 @@ from pyspark.sql import functions as F
 from kafka_streams_the_clojure_way_spark.functions.portable import MERSENNE_31
 from kafka_streams_the_clojure_way_spark.operators.text import tokens_col, tokens_sql
 from kafka_streams_the_clojure_way_spark.sources.files import (
+    compact_files,
+    compact_partitioned,
     invalidate_static_schema,
     read_static_schema,
     with_min_parallelism,
+    write_partitioned,
+)
+from kafka_streams_the_clojure_way_spark.streaming.runner import (
+    as_batch_sink,
+    run_foreach_batch,
 )
 
 SHINGLE_K = 3
@@ -126,33 +136,47 @@ def _in_literals(expr_sql: str, values) -> "F.Column":
 
 
 # --------------------------------------------------------------------------
-# Versioned dataset roots: probe-during-compact without a maintenance
-# window (VERDICT r9 #7, minhash as the template family)
+# Index lifecycle core: every persisted index family is a versioned
+# snapshot, maintained through one compaction, GC and tombstone path
 # --------------------------------------------------------------------------
 
-#: pointer file naming the index's ACTIVE dataset-root (a relative
-#: subdirectory). Absent => the legacy in-place layout (datasets live
-#: directly under the index root) — every build_* writes that, so old
-#: indexes keep working untouched.
+#: pointer file naming the index's ACTIVE version directory (``v_NNNNNN``,
+#: relative to the index root). Every build_* writes its datasets as a
+#: new version (``v_000000`` on a fresh path) and this pointer; ``meta``
+#: stays at the index root.
 INDEX_CURRENT_POINTER = "CURRENT"
 
 
 def index_dataset_root(index_path: str) -> str:
-    """Resolve the ACTIVE dataset root of a persisted index: the
+    """Resolve the ACTIVE version directory of a persisted index — the
     directory its data tables (bands/shingles/tombstones/...) live in.
-    ``{index_path}/CURRENT``, when present, names a versioned
-    subdirectory; otherwise the root IS the index path (the build-time
-    layout). Readers resolve ONCE per probe and read every dataset from
-    the same root — a consistent snapshot even while a versioned
-    compaction repoints the index under them (their version's files are
-    never deleted by the swap, only by an explicit later GC)."""
+
+    The lifecycle contract, shared by all nine index families:
+
+    - **Snapshot reads.** Readers resolve the root ONCE per probe and
+      read every dataset from it, so a probe is a consistent snapshot:
+      a compaction never touches the files of a version it supersedes,
+      so probes stay safe while it runs concurrently, and only
+      :func:`gc_index_versions` deletes them later.
+    - **Single writer.** Upserts, deletes and compactions land in (or
+      read from) the current version; never run two of them
+      concurrently.
+    - **Crash safety.** A new version becomes visible only through the
+      atomic rename of ``CURRENT``: a crash before it leaves an orphan
+      version dir (readers unaffected, GC reclaims it), never a torn
+      index.
+
+    An index without ``CURRENT`` predates this layout (or is not an
+    index at all) and raises instead of being read as something else."""
     try:
         with open(os.path.join(index_path, INDEX_CURRENT_POINTER)) as fh:
             rel = fh.read().strip()
     except OSError:
-        return index_path
-    if not rel or rel == ".":
-        return index_path
+        rel = ""
+    if not rel:
+        raise FileNotFoundError(
+            f"index at {index_path} has no CURRENT pointer; rebuild it with build_*"
+        )
     return os.path.join(index_path, rel)
 
 
@@ -166,65 +190,183 @@ def _repoint_index_version(index_path: str, rel: str) -> None:
     os.replace(tmp, os.path.join(index_path, INDEX_CURRENT_POINTER))
 
 
-def _next_index_version(index_path: str) -> str:
-    """Next unused ``v_NNNNNN`` subdirectory name (monotonic by scan —
-    single-writer maintenance makes the scan race-free)."""
-    n = 0
-    for name in os.listdir(index_path):
-        if name.startswith("v_") and name[2:].isdigit():
-            n = max(n, int(name[2:]) + 1)
-    return f"v_{n:06d}"
-
-
-def gc_index_versions(index_path: str, *, datasets: tuple[str, ...]) -> list[str]:
-    """Delete every NON-CURRENT version of a versioned index: stale
-    ``v_*`` directories, and — once CURRENT points at a version dir —
-    the legacy in-place copies of ``datasets`` directly under the index
-    root. Run this only after in-flight readers of older versions have
-    finished (the reader contract is resolve-once-per-probe, so any
-    probe CONSTRUCTED after the repoint no longer touches them; a
-    production loop GCs one compaction cycle behind). Returns the
-    deleted paths."""
-    import shutil
-
-    root = index_dataset_root(index_path)
-    deleted = []
-    for name in sorted(os.listdir(index_path)):
-        full = os.path.join(index_path, name)
-        if name.startswith("v_") and name[2:].isdigit() and full != root:
-            shutil.rmtree(full, ignore_errors=True)
-            deleted.append(full)
-    if root != index_path:
-        for ds in datasets:
-            legacy = os.path.join(index_path, ds)
-            if os.path.isdir(legacy):
-                shutil.rmtree(legacy, ignore_errors=True)
-                deleted.append(legacy)
-    return deleted
+def _version_dirs(index_path: str) -> list[str]:
+    return sorted(
+        name for name in os.listdir(index_path)
+        if name.startswith("v_") and name[2:].isdigit()
+    )
 
 
 def compact_into_version(index_path: str, write_fn) -> str:
-    """Shared versioned-compact driver for EVERY index family: allocate
-    the next ``v_NNNNNN`` directory, let ``write_fn(newroot)`` write
-    the family's compacted datasets into it, then atomically repoint
-    CURRENT. Crash-safe by construction — a crash inside ``write_fn``
-    leaves an orphan version dir (CURRENT untouched, readers
-    unaffected; GC reclaims it), and the pointer write is an atomic
-    rename. Returns the new root path. Single-writer contract as
-    everywhere: never run concurrently with an upsert or another
-    compact."""
-    rel = _next_index_version(index_path)
+    """The one version writer (builds and compactions alike): allocate
+    the next unused ``v_NNNNNN`` directory, let ``write_fn(newroot)``
+    write the datasets into it, then atomically repoint CURRENT.
+    Returns the new root. A crash inside ``write_fn`` leaves CURRENT
+    untouched; never run it concurrently with another writer (see
+    :func:`index_dataset_root`)."""
+    os.makedirs(index_path, exist_ok=True)
+    taken = [int(name[2:]) for name in _version_dirs(index_path)]
+    rel = f"v_{max(taken, default=-1) + 1:06d}"
     newroot = os.path.join(index_path, rel)
     write_fn(newroot)
     _repoint_index_version(index_path, rel)
     return newroot
 
 
-def gc_minhash_index_versions(index_path: str) -> list[str]:
-    """:func:`gc_index_versions` for the minhash family's datasets."""
-    return gc_index_versions(
-        index_path, datasets=("bands", "shingles", "tombstones")
+def build_index(spark, path: str, write_fn, meta: tuple, meta_schema: str) -> None:
+    """Write a fresh index at ``path``: ``write_fn(root)`` writes the
+    datasets into a new version directory (``v_000000`` on a fresh
+    path; a rebuild leaves the old versions to GC) through
+    :func:`compact_into_version`, then the one ``meta`` row (typed by
+    ``meta_schema``) lands at the index root."""
+    _invalidate_index_meta(path)
+    compact_into_version(path, write_fn)
+    spark.createDataFrame([meta], meta_schema).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(f"{path}/meta")
+
+
+def gc_index_versions(index_path: str) -> list[str]:
+    """Delete every version directory except the current one (stale
+    versions and orphans of crashed compactions); returns the deleted
+    paths. Serve loops call it one cycle behind — just before each
+    compaction — so probes planned against the previous version have
+    finished and disk use stays at most two versions."""
+    current = os.path.basename(index_dataset_root(index_path))
+    deleted = []
+    for name in _version_dirs(index_path):
+        if name != current:
+            full = os.path.join(index_path, name)
+            shutil.rmtree(full, ignore_errors=True)
+            invalidate_static_schema(full)
+            deleted.append(full)
+    return deleted
+
+
+class IndexDataset(NamedTuple):
+    """One dataset of an index layout: its directory name, its hive
+    partition columns (empty = size-targeted files), and the rewrite
+    rule compaction applies to its rows — ``rewrite(spark, df, root,
+    meta)`` with ``root`` the version being compacted; None keeps the
+    rows unchanged."""
+
+    name: str
+    partition_by: tuple[str, ...] = ()
+    rewrite: Callable | None = None
+
+
+def drop_tombstoned(spark, df: DataFrame, root: str, meta) -> DataFrame:
+    """Rewrite rule: drop rows whose ``meta.id_col`` is tombstoned. The
+    tombstone set is not carried into the new version — folded in."""
+    tomb = _read_optional(spark, f"{root}/tombstones")
+    if tomb is None:
+        return df
+    dead = F.broadcast(tomb.select(meta["id_col"]).distinct())
+    return df.join(dead, meta["id_col"], "left_anti")
+
+
+def or_fold_bits(spark, df: DataFrame, root: str, meta) -> DataFrame:
+    """Rewrite rule: fold upsert-appended (segment, word_idx) bit rows
+    into one OR-ed word each — the probe's own fold, moved to write
+    time."""
+    return df.groupBy("segment", "word_idx").agg(F.bit_or("word").alias("word"))
+
+
+def _has_parquet(path: str) -> bool:
+    return any(
+        f.endswith(".parquet") for _, _, files in os.walk(path) for f in files
     )
+
+
+def compact_index(spark, index_path: str, layout) -> str:
+    """Write the next version of an index from its ``layout`` (a
+    sequence of :class:`IndexDataset`): every dataset is rewritten from
+    the current version with its rule applied — one file per partition
+    directory, or size-targeted files — and an empty dataset stays an
+    empty directory. Probe answers are identical before and after.
+
+    The compacted layout goes into a fresh ``v_NNNNNN`` directory and
+    CURRENT is repointed atomically, so probes running concurrently
+    finish on the snapshot they resolved, and a crash before the
+    repoint leaves the index as it was (:func:`index_dataset_root`
+    states the whole contract). Reclaim the superseded version with
+    :func:`gc_index_versions`. Returns the new root."""
+    meta = _index_meta(spark, index_path)
+    src = index_dataset_root(index_path)
+
+    def write(dst: str) -> None:
+        for ds in layout:
+            source, dest = f"{src}/{ds.name}", f"{dst}/{ds.name}"
+            if not _has_parquet(source):
+                os.makedirs(dest)
+                continue
+            transform = None if ds.rewrite is None else (
+                lambda df, rule=ds.rewrite: rule(spark, df, src, meta)
+            )
+            if ds.partition_by:
+                compact_partitioned(
+                    spark, source, *ds.partition_by, transform=transform, dest=dest
+                )
+            else:
+                compact_files(spark, source, transform=transform, dest=dest)
+
+    return compact_into_version(index_path, write)
+
+
+def index_delete(spark, index_path: str, ids, *, id_col: str = "doc_id") -> None:
+    """LOGICAL delete (tombstone) of corpus rows from a persisted index
+    — the takedown path (license revocation, opt-out, contamination
+    removal) that cannot wait for a rebuild: the ids are appended to the
+    current version's ``tombstones`` (column ``meta.id_col``); every
+    probe anti-joins candidates against the (broadcast) set from the
+    next call on, and compaction folds them in physically
+    (:func:`drop_tombstoned`).
+
+    ``ids``: a DataFrame with ``id_col`` or a plain iterable of ids.
+
+    Deletes are append-only and idempotent (duplicate tombstones are
+    harmless — probes take distinct, compaction drops by membership). A
+    tombstoned id stays visible to the upserts' add-only anti-join until
+    compaction, so RE-adding a deleted id requires a compact first."""
+    tcol = _index_meta(spark, index_path)["id_col"]
+    if isinstance(ids, DataFrame):
+        frame = ids.select(F.col(id_col).cast("long").alias(tcol))
+    else:
+        frame = spark.createDataFrame([(int(i),) for i in ids], f"{tcol} long")
+    frame.coalesce(1).write.mode("append").parquet(
+        f"{index_dataset_root(index_path)}/tombstones"
+    )
+
+
+def serve_index_stream(
+    spark, index_path: str, stream: DataFrame, sink, probe, upsert, compact,
+    *, upsert_batches: bool, compact_every: int | None,
+    checkpoint: str | None, trigger: dict | None,
+):
+    """The serve loop every ``*_probe_stream`` runs: per non-empty
+    micro-batch, ``probe(batch_df, caches)`` -> ``sink``; with
+    ``upsert_batches`` the batch is then added by ``upsert(batch_df)``,
+    and every ``compact_every``-th batch GCs the version superseded one
+    cycle ago, then ``compact(spark, index_path)``s. Caches the probe
+    registers are unpersisted after each batch."""
+    sink_fn = as_batch_sink(sink)
+
+    def serve(batch_df: DataFrame, batch_id: int) -> None:
+        caches: list[DataFrame] = []
+        out = probe(batch_df, caches)
+        try:
+            sink_fn(out, batch_id)
+            if upsert_batches:
+                upsert(batch_df)
+        finally:
+            for frame in caches:
+                frame.unpersist()
+        if upsert_batches and compact_every and (batch_id + 1) % compact_every == 0:
+            gc_index_versions(index_path)
+            compact(spark, index_path)
+
+    return run_foreach_batch(stream, serve, checkpoint=checkpoint, trigger=trigger)
+
 
 #: (a, b) seeds for the portable universal-hash family h_i(x) = (a*x+b) % M31.
 #: Fixed constants — NOT runtime-random — so signatures are reproducible
@@ -856,9 +998,6 @@ def build_minhash_index(
     re-signing. At 100 TB the banding table is ~1% of corpus bytes, and
     re-signing the corpus per arriving batch (what the index-less
     ``minhash_lsh_pairs_between`` does) would dominate every batch."""
-    _invalidate_index_meta(path)
-    from kafka_streams_the_clojure_way_spark.sources.files import write_partitioned
-
     if n_hashes % bands:
         raise ValueError(f"n_hashes={n_hashes} must divide evenly into bands={bands}")
     rows = n_hashes // bands
@@ -887,18 +1026,21 @@ def build_minhash_index(
         F.col("bk.band").alias("band"),
         F.pmod(F.col("bk.bkey"), F.lit(n_buckets)).alias("bucket"),
     )
-    # one shuffle into the partition layout = ONE file per (band, bucket)
-    # directory — without it every upstream task writes a sliver into
-    # every directory (tasks x 64 tiny files) and probe-side scan
-    # planning pays the file-listing bill forever after
-    write_partitioned(
-        banded.repartition("band", "bucket"), f"{path}/bands", "band", "bucket"
-    )
-    sigs.select(id_col, "sh").write.mode("overwrite").parquet(f"{path}/shingles")
-    corpus.sparkSession.createDataFrame(
-        [(n_hashes, bands, n_buckets, id_col)],
+
+    def write(root: str) -> None:
+        # one shuffle into the partition layout = ONE file per (band,
+        # bucket) directory — without it every upstream task writes a
+        # sliver into every directory (tasks x 64 tiny files) and
+        # probe-side scan planning pays the file-listing bill forever
+        write_partitioned(
+            banded.repartition("band", "bucket"), f"{root}/bands", "band", "bucket"
+        )
+        sigs.select(id_col, "sh").write.mode("overwrite").parquet(f"{root}/shingles")
+
+    build_index(
+        corpus.sparkSession, path, write, (n_hashes, bands, n_buckets, id_col),
         "n_hashes int, bands int, n_buckets int, id_col string",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
+    )
     sigs.unpersist()
 
 
@@ -1060,7 +1202,7 @@ def minhash_index_probe(
     appended to it instead — unpersist after materializing results."""
     meta = _index_meta(spark, index_path)
     # snapshot the dataset root ONCE: every dataset this probe reads
-    # comes from the same index version even if a versioned compaction
+    # comes from the same index version even if a compaction
     # repoints CURRENT while the probe's plan is still executing.
     root = index_dataset_root(index_path)
     n_hashes, bands, n_buckets = meta["n_hashes"], meta["bands"], meta["n_buckets"]
@@ -1200,105 +1342,20 @@ def _read_optional(spark, path: str):
         return None
 
 
-def minhash_index_delete(spark, index_path: str, ids, *, id_col: str = "doc_id") -> None:
-    """LOGICAL delete (tombstone) of corpus docs from a persisted
-    MinHash index — the takedown path (license revocation, opt-out,
-    contamination removal) that cannot wait for a rebuild: the ids are
-    appended to ``path/tombstones``; every probe anti-joins candidates
-    against the (broadcast) tombstone set from the next call on, and
-    :func:`compact_minhash_index` folds tombstones in PHYSICALLY
-    (drops the banding + shingle rows, then clears the set).
+minhash_index_delete = index_delete
 
-    ``ids``: a DataFrame with ``id_col`` or a plain iterable of ids.
-
-    Contract: deletes are append-only and idempotent (duplicate
-    tombstones are harmless — probes take distinct, compaction drops by
-    membership). A tombstoned id stays visible to
-    :func:`minhash_index_upsert`'s add-only anti-join until compaction,
-    so RE-adding a deleted id requires a compact first — the price of
-    an append-only log with no read-modify-write on the index. Cost:
-    one tiny append now; each probe pays a broadcast anti-join bounded
-    by the live tombstone count (reset to zero by compaction)."""
-    meta = _index_meta(spark, index_path)
-    if isinstance(ids, DataFrame):
-        frame = ids.select(F.col(id_col).cast("long").alias(meta["id_col"]))
-    else:
-        frame = spark.createDataFrame(
-            [(int(i),) for i in ids], f"{meta['id_col']} long"
-        )
-    frame.coalesce(1).write.mode("append").parquet(
-        f"{index_dataset_root(index_path)}/tombstones"
-    )
+#: ``bands`` one file per (band, bucket) directory, ``shingles``
+#: size-targeted; both drop tombstoned ids.
+MINHASH_LAYOUT = (
+    IndexDataset("bands", ("band", "bucket"), drop_tombstoned),
+    IndexDataset("shingles", (), drop_tombstoned),
+)
 
 
-def compact_minhash_index(spark, index_path: str, *, versioned: bool = False) -> None:
-    """Index maintenance for long-running ingestion: restore the
-    build-time file layout — ONE file per (band, bucket) directory in
-    ``bands``, size-targeted files in ``shingles`` — after many
-    :func:`minhash_index_upsert` batches have each appended their own
-    file, and fold any :func:`minhash_index_delete` tombstones in
-    physically (their rows are dropped during the rewrite and the
-    tombstone set is cleared). Probe results are byte-identical
-    before/after (tombstoned docs were already anti-joined away).
-    Crash-safe via the rename-aside swap — a crash after the rewrites
-    but before the tombstone clear just means probes keep paying the
-    (now-redundant) anti-join until the next compact. The default
-    in-place mode is NOT concurrent-probe safe — run it between probes
-    (``minhash_index_probe_stream`` can do this on a cadence, where it
-    is trivially serial with the probe loop).
-
-    ``versioned=True`` (r10 — VERDICT r9 #7) lifts the maintenance
-    window for READERS: the compacted layout is written to a fresh
-    ``v_NNNNNN`` directory and the index's ``CURRENT`` pointer is
-    atomically repointed, so probes that resolved their dataset root
-    before the repoint finish on their complete snapshot (nothing they
-    read is deleted) and later probes read the new version — crash-safe
-    too (a crash before the repoint leaves an orphan version dir that
-    GC removes; the pointer write itself is an atomic rename). The
-    single-writer contract still covers WRITERS: never run an upsert or
-    another compact concurrently. Reclaim stale versions afterwards
-    with :func:`gc_minhash_index_versions`, one compaction cycle behind
-    the probes."""
-    import shutil
-
-    from kafka_streams_the_clojure_way_spark.sources.files import (
-        compact_files,
-        compact_partitioned,
-        write_partitioned,
-    )
-
-    meta = _index_meta(spark, index_path)
-    root = index_dataset_root(index_path)
-    tomb = _read_optional(spark, f"{root}/tombstones")
-    drop = None
-    if tomb is not None:
-        dead = F.broadcast(tomb.select(meta["id_col"]).distinct())
-
-        def drop(df):  # noqa: F811
-            return df.join(dead, meta["id_col"], "left_anti")
-
-    if versioned:
-        rel = _next_index_version(index_path)
-        newroot = os.path.join(index_path, rel)
-        bands = spark.read.parquet(f"{root}/bands")
-        shingles = spark.read.parquet(f"{root}/shingles")
-        if drop is not None:
-            bands, shingles = drop(bands), drop(shingles)
-        write_partitioned(
-            bands.repartition("band", "bucket"),
-            f"{newroot}/bands",
-            "band",
-            "bucket",
-        )
-        shingles.coalesce(1).write.mode("overwrite").parquet(f"{newroot}/shingles")
-        # no tombstones dir in the new version — they were folded in
-        _repoint_index_version(index_path, rel)
-        return
-
-    compact_partitioned(spark, f"{root}/bands", "band", "bucket", transform=drop)
-    compact_files(spark, f"{root}/shingles", transform=drop)
-    if tomb is not None:
-        shutil.rmtree(f"{root}/tombstones")
+def compact_minhash_index(spark, index_path: str) -> str:
+    """:func:`compact_index` over :data:`MINHASH_LAYOUT` (concurrent
+    probes and crashes: see :func:`index_dataset_root`)."""
+    return compact_index(spark, index_path, MINHASH_LAYOUT)
 
 
 def minhash_index_probe_stream(
@@ -1346,56 +1403,27 @@ def minhash_index_probe_stream(
     unique AND the checkpoint guarantees no replay matters.
 
     ``compact_every=N`` runs :func:`compact_minhash_index` after every
-    N-th upserting batch — serial with the probe loop, so the
-    not-concurrent-reader-safe swap is safe here. Caches created by the
-    probe are unpersisted each batch (no per-trigger cache leak).
+    N-th upserting batch, GC-ing the version it superseded one cycle
+    later. Caches created by the probe are unpersisted each batch (no
+    per-trigger cache leak).
 
     Returns the started ``StreamingQuery``. Default trigger is
     ``availableNow`` (drain-what-exists, then stop); pass e.g.
     ``trigger={"processingTime": "30 seconds"}`` for a resident loop."""
-    if isinstance(sink, str):
-        out_path = sink
-
-        def sink_fn(pairs: DataFrame, batch_id: int) -> None:
-            pairs.coalesce(1).write.mode("append").parquet(out_path)
-
-    else:
-        sink_fn = sink
-
-    def serve(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():  # availableNow emits empty triggers; skip
-            return
-        caches: list[DataFrame] = []
-        pairs = minhash_index_probe(
-            spark,
-            index_path,
-            batch_df,
-            text=text,
-            id_col=id_col,
-            threshold=threshold,
-            cache_registry=caches,
-        )
-        try:
-            sink_fn(pairs, batch_id)
-            if upsert:
-                minhash_index_upsert(
-                    spark,
-                    index_path,
-                    batch_df,
-                    text=text,
-                    id_col=id_col,
-                    assume_new_ids=assume_new_ids,
-                )
-        finally:
-            for frame in caches:
-                frame.unpersist()
-        if upsert and compact_every and (batch_id + 1) % compact_every == 0:
-            compact_minhash_index(spark, index_path)
-
-    writer = stream.writeStream.foreachBatch(serve)
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.trigger(**(trigger or {"availableNow": True})).start()
+    return serve_index_stream(
+        spark, index_path, stream, sink,
+        lambda batch, caches: minhash_index_probe(
+            spark, index_path, batch, text=text, id_col=id_col,
+            threshold=threshold, cache_registry=caches,
+        ),
+        lambda batch: minhash_index_upsert(
+            spark, index_path, batch, text=text, id_col=id_col,
+            assume_new_ids=assume_new_ids,
+        ),
+        compact_minhash_index,
+        upsert_batches=upsert, compact_every=compact_every,
+        checkpoint=checkpoint, trigger=trigger,
+    )
 
 
 # --------------------------------------------------------------------------
@@ -1432,17 +1460,17 @@ def build_hash_index(
     probed 1/``n_buckets`` slices per batch, vs re-hashing the full
     corpus per batch without the index. One file per bucket directory
     (same layout rule as build_minhash_index)."""
-    _invalidate_index_meta(path)
-    from kafka_streams_the_clojure_way_spark.sources.files import write_partitioned
-
     hashed = with_min_parallelism(corpus).select(
         F.col(id_col),
         content_hash(F.col(text)).alias("content_hash"),
     ).withColumn("bucket", F.pmod(F.col("content_hash"), F.lit(n_buckets)))
-    write_partitioned(hashed.repartition("bucket"), f"{path}/hashes", "bucket")
-    corpus.sparkSession.createDataFrame(
-        [(n_buckets, id_col)], "n_buckets int, id_col string"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
+    build_index(
+        corpus.sparkSession, path,
+        lambda root: write_partitioned(
+            hashed.repartition("bucket"), f"{root}/hashes", "bucket"
+        ),
+        (n_buckets, id_col), "n_buckets int, id_col string",
+    )
 
 
 def hash_index_upsert(
@@ -1572,72 +1600,16 @@ def hash_index_probe(
     return cand
 
 
-def hash_index_delete(spark, index_path: str, ids, *, id_col: str = "doc_id") -> None:
-    """LOGICAL delete (tombstone) — same contract as
-    :func:`minhash_index_delete`: ids append to ``path/tombstones``,
-    probes anti-join the (broadcast) set, :func:`compact_hash_index`
-    folds them in physically and clears the set. A tombstoned id stays
-    visible to the upsert anti-join until compaction (re-add requires a
-    compact first)."""
-    meta = _index_meta(spark, index_path)
-    root = index_dataset_root(index_path)
-    if isinstance(ids, DataFrame):
-        frame = ids.select(F.col(id_col).cast("long").alias(meta["id_col"]))
-    else:
-        frame = spark.createDataFrame([(int(i),) for i in ids], f"{meta['id_col']} long")
-    frame.coalesce(1).write.mode("append").parquet(f"{root}/tombstones")
+hash_index_delete = index_delete
+
+#: ``hashes`` one file per bucket directory, tombstoned ids dropped.
+HASH_LAYOUT = (IndexDataset("hashes", ("bucket",), drop_tombstoned),)
 
 
-def compact_hash_index(spark, index_path: str, *, versioned: bool = False) -> None:
-    """Restore ONE file per bucket directory after many upsert batches,
-    folding any tombstones in physically (rows dropped in the rewrite,
-    set cleared). Probe answers are byte-identical before/after.
-    Crash-safe rename-aside swap; the default in-place mode is not
-    concurrent-probe safe — run between probe batches
-    (``hash_index_probe_stream`` can do it on a cadence, where it is
-    trivially serial with the loop). ``versioned=True`` is the
-    snapshot-read mode (same contract as
-    :func:`compact_minhash_index`): new layout into a fresh version
-    dir, atomic CURRENT repoint, in-flight probes finish on their old
-    version, writers stay single-writer; reclaim stale versions with
-    :func:`gc_hash_index_versions`."""
-    import shutil
-
-    from kafka_streams_the_clojure_way_spark.sources.files import (
-        compact_partitioned,
-        write_partitioned,
-    )
-
-    meta = _index_meta(spark, index_path)
-    root = index_dataset_root(index_path)
-    tomb = _read_optional(spark, f"{root}/tombstones")
-    drop = None
-    if tomb is not None:
-        dead = F.broadcast(tomb.select(meta["id_col"]).distinct())
-
-        def drop(df):  # noqa: F811
-            return df.join(dead, meta["id_col"], "left_anti")
-
-    if versioned:
-        rel = _next_index_version(index_path)
-        newroot = os.path.join(index_path, rel)
-        hashes = spark.read.parquet(f"{root}/hashes")
-        if drop is not None:
-            hashes = drop(hashes)
-        write_partitioned(
-            hashes.repartition("bucket"), f"{newroot}/hashes", "bucket"
-        )
-        _repoint_index_version(index_path, rel)
-        return
-
-    compact_partitioned(spark, f"{root}/hashes", "bucket", transform=drop)
-    if tomb is not None:
-        shutil.rmtree(f"{root}/tombstones")
-
-
-def gc_hash_index_versions(index_path: str) -> list[str]:
-    """:func:`gc_index_versions` for the hash family's datasets."""
-    return gc_index_versions(index_path, datasets=("hashes", "tombstones"))
+def compact_hash_index(spark, index_path: str) -> str:
+    """:func:`compact_index` over :data:`HASH_LAYOUT` (concurrent probes
+    and crashes: see :func:`index_dataset_root`)."""
+    return compact_index(spark, index_path, HASH_LAYOUT)
 
 
 def hash_index_probe_stream(
@@ -1666,38 +1638,19 @@ def hash_index_probe_stream(
     the default anti-join keeps replays idempotent.
     ``compact_every=N`` compacts after every N-th upserting batch.
     Returns the started StreamingQuery (default trigger availableNow)."""
-    if isinstance(sink, str):
-        out_path = sink
-
-        def sink_fn(pairs: DataFrame, batch_id: int) -> None:
-            pairs.coalesce(1).write.mode("append").parquet(out_path)
-
-    else:
-        sink_fn = sink
-
-    def serve(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        pairs = hash_index_probe(
-            spark, index_path, batch_df, text=text, id_col=id_col
-        )
-        sink_fn(pairs, batch_id)
-        if upsert:
-            hash_index_upsert(
-                spark,
-                index_path,
-                batch_df,
-                text=text,
-                id_col=id_col,
-                assume_new_ids=assume_new_ids,
-            )
-            if compact_every and (batch_id + 1) % compact_every == 0:
-                compact_hash_index(spark, index_path)
-
-    writer = stream.writeStream.foreachBatch(serve)
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.trigger(**(trigger or {"availableNow": True})).start()
+    return serve_index_stream(
+        spark, index_path, stream, sink,
+        lambda batch, caches: hash_index_probe(
+            spark, index_path, batch, text=text, id_col=id_col
+        ),
+        lambda batch: hash_index_upsert(
+            spark, index_path, batch, text=text, id_col=id_col,
+            assume_new_ids=assume_new_ids,
+        ),
+        compact_hash_index,
+        upsert_batches=upsert, compact_every=compact_every,
+        checkpoint=checkpoint, trigger=trigger,
+    )
 
 
 # --------------------------------------------------------------------------
@@ -1719,8 +1672,12 @@ def _long_array(vals) -> Column:
     # ``F.lit(v).cast("long")`` loop paid a py4j round trip per seed
     # (~120-256 per signature expression, constructed per query); the
     # ``L`` suffix pins each literal to BIGINT, so the parsed array is
-    # the identical expression.
-    return F.expr("array(" + ",".join(f"{int(v)}L" for v in vals) + ")")
+    # the identical expression. An empty ``vals`` stays array<bigint>
+    # (a bare ``array()`` would type as array<string>).
+    body = ",".join(f"{int(v)}L" for v in vals)
+    if not body:
+        return F.expr("CAST(array() AS array<bigint>)")
+    return F.expr(f"array({body})")
 
 
 def simhash_from_hashes(hashes: Column) -> Column:
@@ -2632,30 +2589,32 @@ def build_containment_index(
     incremental gate) — any fixed total order keeps the pigeonhole
     guarantee; corpus-frequency order would go stale as batches arrive.
     """
-    _invalidate_index_meta(path)
     spark = corpus.sparkSession
     sets = (
         with_min_parallelism(corpus)
         .select(F.col(id_col), shingle_hashes(F.col(text)).alias("sh"))
         .withColumn("size", F.array_size("sh"))
     )
-    sets.write.mode("overwrite").parquet(f"{path}/sets")
-    sets_r = spark.read.parquet(f"{path}/sets")  # reuse the materialized table
     prefix_len = (
         F.col("size")
         - F.expr(f"(size * {t_num} + {t_den} - 1) div {t_den}")
         + 1
     )
-    sets_r.select(
-        F.col(id_col), F.explode("sh").alias("h")
-    ).write.mode("overwrite").parquet(f"{path}/full")
-    sets_r.select(
-        F.col(id_col),
-        F.explode(F.slice(F.sort_array(F.col("sh")), 1, prefix_len)).alias("h"),
-    ).write.mode("overwrite").parquet(f"{path}/prefix")
-    spark.createDataFrame(
-        [(t_num, t_den, id_col)], "t_num int, t_den int, id_col string"
-    ).write.mode("overwrite").parquet(f"{path}/meta")
+
+    def write(root: str) -> None:
+        sets.write.mode("overwrite").parquet(f"{root}/sets")
+        sets_r = spark.read.parquet(f"{root}/sets")  # reuse the materialized table
+        sets_r.select(
+            F.col(id_col), F.explode("sh").alias("h")
+        ).write.mode("overwrite").parquet(f"{root}/full")
+        sets_r.select(
+            F.col(id_col),
+            F.explode(F.slice(F.sort_array(F.col("sh")), 1, prefix_len)).alias("h"),
+        ).write.mode("overwrite").parquet(f"{root}/prefix")
+
+    build_index(
+        spark, path, write, (t_num, t_den, id_col), "t_num int, t_den int, id_col string"
+    )
 
 
 def containment_index_probe(
@@ -2820,78 +2779,20 @@ def containment_index_upsert(
     ).coalesce(1).write.mode("append").parquet(f"{root}/prefix")
 
 
-def containment_index_delete(
-    spark, index_path: str, ids, *, id_col: str = "doc_id"
-) -> None:
-    """LOGICAL delete (tombstone) — same contract as the other indexes:
-    ids append to ``path/tombstones``, probes anti-join the (broadcast)
-    set, :func:`compact_containment_index` folds them in physically and
-    clears the set. A tombstoned id stays visible to the upsert
-    anti-join until compaction (re-add requires a compact first)."""
-    meta = _index_meta(spark, index_path)
-    if isinstance(ids, DataFrame):
-        frame = ids.select(F.col(id_col).cast("long").alias(meta["id_col"]))
-    else:
-        frame = spark.createDataFrame([(int(i),) for i in ids], f"{meta['id_col']} long")
-    frame.coalesce(1).write.mode("append").parquet(
-        f"{index_dataset_root(index_path)}/tombstones"
-    )
+containment_index_delete = index_delete
+
+#: ``sets``/``full``/``prefix`` size-targeted, tombstoned ids dropped.
+#: Compaction preserves rows, it does not re-derive them: a doc left
+#: partially posted by a crashed upsert is healed by a rebuild.
+CONTAINMENT_LAYOUT = tuple(
+    IndexDataset(leg, (), drop_tombstoned) for leg in ("sets", "full", "prefix")
+)
 
 
-def compact_containment_index(
-    spark, index_path: str, *, versioned: bool = False
-) -> None:
-    """Restore size-targeted files in ``sets``/``full``/``prefix`` after
-    many upsert batches, folding tombstones in physically (rows dropped
-    during the rewrite, set cleared) — probe answers byte-identical
-    before/after. Note compaction preserves rows, it does not re-derive
-    them: a doc left partially posted by a crashed upsert (the
-    documented orphan state) is healed by a rebuild, not a compact.
-    Crash-safe rename-aside swap; the default in-place mode is not
-    concurrent-probe safe — run between probe batches.
-    ``versioned=True`` is the snapshot-read mode (the
-    :func:`compact_minhash_index` contract): compacted legs into a
-    fresh version dir, atomic CURRENT repoint, in-flight probes finish
-    on their old version; reclaim stale versions with
-    :func:`gc_containment_index_versions`."""
-    import shutil
-
-    from kafka_streams_the_clojure_way_spark.sources.files import compact_files
-
-    meta = _index_meta(spark, index_path)
-    root = index_dataset_root(index_path)
-    tomb = _read_optional(spark, f"{root}/tombstones")
-    drop = None
-    if tomb is not None:
-        dead = F.broadcast(tomb.select(meta["id_col"]).distinct())
-
-        def drop(df):  # noqa: F811
-            return df.join(dead, meta["id_col"], "left_anti")
-
-    if versioned:
-
-        def write(newroot: str) -> None:
-            for leg in ("sets", "full", "prefix"):
-                compact_files(
-                    spark, f"{root}/{leg}", transform=drop,
-                    dest=f"{newroot}/{leg}",
-                )
-            # no tombstones dir in the new version — they were folded in
-
-        compact_into_version(index_path, write)
-        return
-
-    for leg in ("sets", "full", "prefix"):
-        compact_files(spark, f"{root}/{leg}", transform=drop)
-    if tomb is not None:
-        shutil.rmtree(f"{root}/tombstones")
-
-
-def gc_containment_index_versions(index_path: str) -> list[str]:
-    """:func:`gc_index_versions` for the containment family's datasets."""
-    return gc_index_versions(
-        index_path, datasets=("sets", "full", "prefix", "tombstones")
-    )
+def compact_containment_index(spark, index_path: str) -> str:
+    """:func:`compact_index` over :data:`CONTAINMENT_LAYOUT` (concurrent
+    probes and crashes: see :func:`index_dataset_root`)."""
+    return compact_index(spark, index_path, CONTAINMENT_LAYOUT)
 
 
 # --------------------------------------------------------------------------
@@ -3005,9 +2906,6 @@ def build_bloom_index(
     honors its tombstones); a deleted doc only costs a false positive
     here until the next rebuild. That is the standard production
     trade (RocksDB/Cassandra SSTable filters behave identically)."""
-    _invalidate_index_meta(path)
-    from kafka_streams_the_clojure_way_spark.sources.files import write_partitioned
-
     bits = (
         _bloom_bit_rows(
             with_min_parallelism(corpus),
@@ -3019,11 +2917,14 @@ def build_bloom_index(
         .groupBy("segment", "word_idx")
         .agg(F.bit_or("mask").alias("word"))
     )
-    write_partitioned(bits.repartition("segment"), f"{path}/bits", "segment")
-    corpus.sparkSession.createDataFrame(
-        [(n_segments, words_per_segment, k, id_col, text)],
+    build_index(
+        corpus.sparkSession, path,
+        lambda root: write_partitioned(
+            bits.repartition("segment"), f"{root}/bits", "segment"
+        ),
+        (n_segments, words_per_segment, k, id_col, text),
         "n_segments int, words_per_segment int, k int, id_col string, text_col string",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
+    )
 
 
 def bloom_index_probe(
@@ -3149,37 +3050,14 @@ def bloom_index_upsert(
     )
 
 
-def compact_bloom_index(spark, index_path: str, *, versioned: bool = False) -> None:
-    """Fold upsert-appended rows back to at most one (word_idx, word)
-    row per word and ONE file per segment directory — probe answers
-    byte-identical before/after (the probe folds rows itself; compaction
-    just moves that fold to write time). Crash-safe rename-aside swap;
-    the default in-place mode is not concurrent-probe safe — run
-    between probe batches. ``versioned=True`` is the snapshot-read mode
-    (the :func:`compact_minhash_index` contract): folded bits into a
-    fresh version dir + atomic CURRENT repoint; reclaim stale versions
-    with :func:`gc_bloom_index_versions`."""
-    from kafka_streams_the_clojure_way_spark.sources.files import compact_partitioned
-
-    def fold(df: DataFrame) -> DataFrame:
-        return df.groupBy("segment", "word_idx").agg(F.bit_or("word").alias("word"))
-
-    root = index_dataset_root(index_path)
-    if versioned:
-        compact_into_version(
-            index_path,
-            lambda newroot: compact_partitioned(
-                spark, f"{root}/bits", "segment", transform=fold,
-                dest=f"{newroot}/bits",
-            ),
-        )
-        return
-    compact_partitioned(spark, f"{root}/bits", "segment", transform=fold)
+#: ``bits`` one file per segment directory, bit rows OR-folded.
+BLOOM_LAYOUT = (IndexDataset("bits", ("segment",), or_fold_bits),)
 
 
-def gc_bloom_index_versions(index_path: str) -> list[str]:
-    """:func:`gc_index_versions` for the Bloom family's dataset."""
-    return gc_index_versions(index_path, datasets=("bits",))
+def compact_bloom_index(spark, index_path: str) -> str:
+    """:func:`compact_index` over :data:`BLOOM_LAYOUT` (concurrent probes
+    and crashes: see :func:`index_dataset_root`)."""
+    return compact_index(spark, index_path, BLOOM_LAYOUT)
 
 
 def bloom_gated_exact_probe(
@@ -3269,9 +3147,7 @@ def build_keyset_index(
     cannot unset; until then a deleted key costs a confirm lookup, never
     a wrong answer (membership truth lives in ``keys``)."""
     from kafka_streams_the_clojure_way_spark.functions.portable import hash60
-    from kafka_streams_the_clojure_way_spark.sources.files import write_partitioned
 
-    _invalidate_index_meta(path)
     base = (
         with_min_parallelism(keys)
         .select(F.col(key_col).alias("key"))
@@ -3289,12 +3165,15 @@ def build_keyset_index(
         .groupBy("segment", "word_idx")
         .agg(F.bit_or("mask").alias("word"))
     )
-    write_partitioned(bits.repartition("segment"), f"{path}/bits", "segment")
-    write_partitioned(base.repartition("segment"), f"{path}/keys", "segment")
-    keys.sparkSession.createDataFrame(
-        [(n_segments, words_per_segment, k, key_col)],
+
+    def write(root: str) -> None:
+        write_partitioned(bits.repartition("segment"), f"{root}/bits", "segment")
+        write_partitioned(base.repartition("segment"), f"{root}/keys", "segment")
+
+    build_index(
+        keys.sparkSession, path, write, (n_segments, words_per_segment, k, key_col),
         "n_segments int, words_per_segment int, k int, key_col string",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
+    )
 
 
 def keyset_index_probe(
@@ -3468,46 +3347,18 @@ def keyset_index_upsert(
     )
 
 
-def compact_keyset_index(spark, index_path: str, *, versioned: bool = False) -> None:
-    """Fold upsert-appended bit rows and restore ONE file per segment
-    directory in both legs — probe answers byte-identical before/after
-    (upserts anti-join, so keys are already duplicate-free; the bit
-    fold just moves the probe's own fold to write time). Crash-safe
-    rename-aside swap (a crash leaves a complete old or new dataset,
-    pinned in tests/test_compaction_contract.py); the default in-place
-    mode is NOT concurrent-probe safe — single-writer maintenance
-    window: run between probe batches (the *_probe_stream loops can
-    compact on a cadence, trivially serial with the loop).
-    ``versioned=True`` is the snapshot-read mode (the
-    :func:`compact_minhash_index` contract): both legs into a fresh
-    version dir + atomic CURRENT repoint; reclaim stale versions with
-    :func:`gc_keyset_index_versions`."""
-    from kafka_streams_the_clojure_way_spark.sources.files import compact_partitioned
-
-    def fold(df: DataFrame) -> DataFrame:
-        return df.groupBy("segment", "word_idx").agg(F.bit_or("word").alias("word"))
-
-    root = index_dataset_root(index_path)
-    if versioned:
-
-        def write(newroot: str) -> None:
-            compact_partitioned(
-                spark, f"{root}/bits", "segment", transform=fold,
-                dest=f"{newroot}/bits",
-            )
-            compact_partitioned(
-                spark, f"{root}/keys", "segment", dest=f"{newroot}/keys"
-            )
-
-        compact_into_version(index_path, write)
-        return
-    compact_partitioned(spark, f"{root}/bits", "segment", transform=fold)
-    compact_partitioned(spark, f"{root}/keys", "segment")
+#: ``bits`` OR-folded and ``keys`` unchanged (upserts anti-join, so keys
+#: are already duplicate-free), one file per segment directory each.
+KEYSET_LAYOUT = (
+    IndexDataset("bits", ("segment",), or_fold_bits),
+    IndexDataset("keys", ("segment",)),
+)
 
 
-def gc_keyset_index_versions(index_path: str) -> list[str]:
-    """:func:`gc_index_versions` for the keyset family's datasets."""
-    return gc_index_versions(index_path, datasets=("bits", "keys"))
+def compact_keyset_index(spark, index_path: str) -> str:
+    """:func:`compact_index` over :data:`KEYSET_LAYOUT` (concurrent
+    probes and crashes: see :func:`index_dataset_root`)."""
+    return compact_index(spark, index_path, KEYSET_LAYOUT)
 
 
 # --------------------------------------------------------------------------

@@ -46,6 +46,15 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kafka_streams_the_clojure_way_spark.operators.dedup import (
+    IndexDataset,
+    _in_literals,
+    _index_meta,
+    build_index,
+    compact_index,
+    index_dataset_root,
+    serve_index_stream,
+)
 from kafka_streams_the_clojure_way_spark.sources.files import (
     read_static_schema,
     with_min_parallelism,
@@ -598,38 +607,26 @@ def build_phash_index(
 
     Signing the corpus runs ONCE; after this, per-batch probe cost is
     O(batch + matching postings) regardless of corpus size."""
-    from kafka_streams_the_clojure_way_spark.operators.dedup import (
-        _invalidate_index_meta,
-    )
     from kafka_streams_the_clojure_way_spark.sources.files import write_partitioned
 
-    _invalidate_index_meta(path)
     sigs = phash_assets(with_min_parallelism(corpus_assets), id_col, decode)
     banded = _banded(sigs, id_col, n_bands).withColumn(
         "bucket", F.pmod(F.col("bkey"), F.lit(n_buckets))
-    )
-    write_partitioned(
-        banded.repartition("band", "bucket"), f"{path}/bands", "band", "bucket"
     )
     coef_sum = sum(c for row in DCT_COEF for c in row)
     # decode is a SIGNATURE PARAMETER: probing a real-pixel index with
     # raw-byte signatures (or vice versa) would silently miss — the meta
     # row pins it so every probe/upsert hashes the way the build did.
-    corpus_assets.sparkSession.createDataFrame(
-        [
-            (
-                n_bands,
-                _band_bits(n_bands),
-                n_bands - 1,
-                n_buckets,
-                coef_sum,
-                id_col,
-                decode or "",
-            )
-        ],
+    build_index(
+        corpus_assets.sparkSession, path,
+        lambda root: write_partitioned(
+            banded.repartition("band", "bucket"), f"{root}/bands", "band", "bucket"
+        ),
+        (n_bands, _band_bits(n_bands), n_bands - 1, n_buckets, coef_sum, id_col,
+         decode or ""),
         "n_bands int, band_bits int, max_dist int, n_buckets int, "
         "dct_checksum long, id_col string, decode string",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
+    )
 
 
 def phash_index_probe(
@@ -656,12 +653,6 @@ def phash_index_probe(
     bkey) from a fused multi-probe routing job
     (``plans.ingestion.compute_asset_routing``); skips this probe's own
     eager collect."""
-    from kafka_streams_the_clojure_way_spark.operators.dedup import (
-        _in_literals,
-        _index_meta,
-        index_dataset_root,
-    )
-
     meta = _index_meta(spark, index_path)
     root = index_dataset_root(index_path)  # one snapshot per probe
     dist = meta["max_dist"] if max_dist is None else max_dist
@@ -738,11 +729,6 @@ def phash_index_upsert(
     ``assume_new_ids=False``, already-indexed ids are anti-joined out
     first so at-least-once replays stay idempotent (the
     ``minhash_index_upsert`` contract)."""
-    from kafka_streams_the_clojure_way_spark.operators.dedup import (
-        _index_meta,
-        index_dataset_root,
-    )
-
     meta = _index_meta(spark, index_path)
     root = index_dataset_root(index_path)  # writers land in the active version
     sigs = phash_assets(
@@ -763,47 +749,14 @@ def phash_index_upsert(
     ).parquet(f"{root}/bands")
 
 
-def compact_phash_index(spark, index_path: str, *, versioned: bool = False) -> None:
-    """Fold upsert-appended slivers back to one file per (band, bucket)
-    directory — answers unchanged, file-listing cost restored. Same
-    crash-safe rename-aside swap as ``compact_minhash_index`` (complete
-    old or new dataset, never torn — tests/test_compaction_contract.py);
-    the default in-place mode is NOT concurrent-probe safe —
-    single-writer maintenance window: run between probe batches
-    (``phash_index_probe_stream`` can compact on a cadence, serial with
-    the loop). ``versioned=True`` is the snapshot-read mode (the
-    ``compact_minhash_index`` contract): compacted bands into a fresh
-    version dir + atomic CURRENT repoint — in-flight probes finish on
-    their old version; reclaim stale versions with
-    :func:`gc_phash_index_versions`."""
-    from kafka_streams_the_clojure_way_spark.operators.dedup import (
-        compact_into_version,
-        index_dataset_root,
-    )
-    from kafka_streams_the_clojure_way_spark.sources.files import (
-        compact_partitioned,
-    )
-
-    root = index_dataset_root(index_path)
-    if versioned:
-        compact_into_version(
-            index_path,
-            lambda newroot: compact_partitioned(
-                spark, f"{root}/bands", "band", "bucket",
-                dest=f"{newroot}/bands",
-            ),
-        )
-        return
-    compact_partitioned(spark, f"{root}/bands", "band", "bucket")
+#: ``bands`` one file per (band, bucket) directory, rows unchanged.
+PHASH_LAYOUT = (IndexDataset("bands", ("band", "bucket")),)
 
 
-def gc_phash_index_versions(index_path: str) -> list[str]:
-    """``dedup.gc_index_versions`` for the image pHash family's dataset."""
-    from kafka_streams_the_clojure_way_spark.operators.dedup import (
-        gc_index_versions,
-    )
-
-    return gc_index_versions(index_path, datasets=("bands",))
+def compact_phash_index(spark, index_path: str) -> str:
+    """``dedup.compact_index`` over :data:`PHASH_LAYOUT` (concurrent
+    probes and crashes: see ``dedup.index_dataset_root``)."""
+    return compact_index(spark, index_path, PHASH_LAYOUT)
 
 
 def phash_index_probe_stream(
@@ -833,49 +786,20 @@ def phash_index_probe_stream(
     batches near-dup against every image already admitted; replays stay
     idempotent via the upsert's anti-join with the default
     ``assume_new_ids=False``. ``compact_every=N`` compacts after every
-    N-th upserting batch (serial with the loop, so the
-    not-concurrent-reader-safe swap is safe here)."""
-    if isinstance(sink, str):
-        out_path = sink
-
-        def sink_fn(pairs: DataFrame, batch_id: int) -> None:
-            pairs.coalesce(1).write.mode("append").parquet(out_path)
-
-    else:
-        sink_fn = sink
-
-    def serve(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        caches: list[DataFrame] = []
-        pairs = phash_index_probe(
-            spark,
-            index_path,
-            batch_df,
-            id_col=id_col,
-            max_dist=max_dist,
+    N-th upserting batch."""
+    return serve_index_stream(
+        spark, index_path, stream, sink,
+        lambda batch, caches: phash_index_probe(
+            spark, index_path, batch, id_col=id_col, max_dist=max_dist,
             cache_registry=caches,
-        )
-        try:
-            sink_fn(pairs, batch_id)
-            if upsert:
-                phash_index_upsert(
-                    spark,
-                    index_path,
-                    batch_df,
-                    id_col=id_col,
-                    assume_new_ids=assume_new_ids,
-                )
-        finally:
-            for frame in caches:
-                frame.unpersist()
-        if upsert and compact_every and (batch_id + 1) % compact_every == 0:
-            compact_phash_index(spark, index_path)
-
-    writer = stream.writeStream.foreachBatch(serve)
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.trigger(**(trigger or {"availableNow": True})).start()
+        ),
+        lambda batch: phash_index_upsert(
+            spark, index_path, batch, id_col=id_col, assume_new_ids=assume_new_ids
+        ),
+        compact_phash_index,
+        upsert_batches=upsert, compact_every=compact_every,
+        checkpoint=checkpoint, trigger=trigger,
+    )
 
 
 # --------------------------------------------------------------------------
@@ -916,12 +840,8 @@ def build_video_phash_index(
     matching postings) regardless of corpus size — re-encoded uploads
     of already-ingested footage are caught without ever re-decoding the
     archive."""
-    from kafka_streams_the_clojure_way_spark.operators.dedup import (
-        _invalidate_index_meta,
-    )
     from kafka_streams_the_clojure_way_spark.sources.files import write_partitioned
 
-    _invalidate_index_meta(path)
     sigs = video_frame_phashes(
         with_min_parallelism(corpus_assets), id_col, stride=stride
     )
@@ -941,26 +861,17 @@ def build_video_phash_index(
         )
         .withColumn("bucket", F.pmod(F.col("bkey"), F.lit(n_buckets)))
     )
-    write_partitioned(
-        banded.repartition("band", "bucket"), f"{path}/frames", "band", "bucket"
-    )
     coef_sum = sum(c for row in DCT_COEF for c in row)
-    corpus_assets.sparkSession.createDataFrame(
-        [
-            (
-                n_bands,
-                _band_bits(n_bands),
-                n_bands - 1,
-                min_frames,
-                stride,
-                n_buckets,
-                coef_sum,
-                id_col,
-            )
-        ],
+    build_index(
+        corpus_assets.sparkSession, path,
+        lambda root: write_partitioned(
+            banded.repartition("band", "bucket"), f"{root}/frames", "band", "bucket"
+        ),
+        (n_bands, _band_bits(n_bands), n_bands - 1, min_frames, stride, n_buckets,
+         coef_sum, id_col),
         "n_bands int, band_bits int, max_dist int, min_frames int, stride int, "
         "n_buckets int, dct_checksum long, id_col string",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
+    )
 
 
 def video_phash_index_probe(
@@ -986,12 +897,6 @@ def video_phash_index_probe(
     per-pair count. ``routing``: precomputed (band, bucket) keys from
     the fused routing job (superset-safe — the equi-join is exact);
     skips this probe's own eager collect."""
-    from kafka_streams_the_clojure_way_spark.operators.dedup import (
-        _in_literals,
-        _index_meta,
-        index_dataset_root,
-    )
-
     meta = _index_meta(spark, index_path)
     root = index_dataset_root(index_path)  # one snapshot per probe
     dist = meta["max_dist"] if max_dist is None else max_dist
@@ -1078,11 +983,6 @@ def video_phash_index_upsert(
     (band, bucket) directories only. Already-indexed ids are anti-joined
     out by default so at-least-once replays stay idempotent (the shared
     upsert contract)."""
-    from kafka_streams_the_clojure_way_spark.operators.dedup import (
-        _index_meta,
-        index_dataset_root,
-    )
-
     meta = _index_meta(spark, index_path)
     root = index_dataset_root(index_path)  # writers land in the active version
     sigs = video_frame_phashes(
@@ -1116,47 +1016,14 @@ def video_phash_index_upsert(
     ).parquet(f"{root}/frames")
 
 
-def compact_video_phash_index(
-    spark, index_path: str, *, versioned: bool = False
-) -> None:
-    """Fold upsert-appended slivers back to one file per (band, bucket)
-    directory — answers unchanged, scan-planning cost restored.
-    Crash-safe rename-aside swap (complete old or new dataset, never
-    torn — tests/test_compaction_contract.py); the default in-place
-    mode is NOT concurrent-probe safe — single-writer maintenance
-    window: run between probe batches (``video_phash_index_probe_stream``
-    can compact on a cadence, serial with the loop). ``versioned=True``
-    is the snapshot-read mode (the ``compact_minhash_index`` contract):
-    compacted frames into a fresh version dir + atomic CURRENT repoint;
-    reclaim stale versions with :func:`gc_video_phash_index_versions`."""
-    from kafka_streams_the_clojure_way_spark.operators.dedup import (
-        compact_into_version,
-        index_dataset_root,
-    )
-    from kafka_streams_the_clojure_way_spark.sources.files import (
-        compact_partitioned,
-    )
-
-    root = index_dataset_root(index_path)
-    if versioned:
-        compact_into_version(
-            index_path,
-            lambda newroot: compact_partitioned(
-                spark, f"{root}/frames", "band", "bucket",
-                dest=f"{newroot}/frames",
-            ),
-        )
-        return
-    compact_partitioned(spark, f"{root}/frames", "band", "bucket")
+#: ``frames`` one file per (band, bucket) directory, rows unchanged.
+VIDEO_LAYOUT = (IndexDataset("frames", ("band", "bucket")),)
 
 
-def gc_video_phash_index_versions(index_path: str) -> list[str]:
-    """``dedup.gc_index_versions`` for the video pHash family's dataset."""
-    from kafka_streams_the_clojure_way_spark.operators.dedup import (
-        gc_index_versions,
-    )
-
-    return gc_index_versions(index_path, datasets=("frames",))
+def compact_video_phash_index(spark, index_path: str) -> str:
+    """``dedup.compact_index`` over :data:`VIDEO_LAYOUT` (concurrent
+    probes and crashes: see ``dedup.index_dataset_root``)."""
+    return compact_index(spark, index_path, VIDEO_LAYOUT)
 
 
 def video_phash_pairs_between_sql(
@@ -1234,45 +1101,16 @@ def video_phash_index_probe_stream(
     ``audiofp_index_probe_stream`` — with ``upsert=True`` later uploads
     near-dup against every video already admitted, and replays stay
     idempotent via the upsert's id anti-join."""
-    if isinstance(sink, str):
-        out_path = sink
-
-        def sink_fn(pairs: DataFrame, batch_id: int) -> None:
-            pairs.coalesce(1).write.mode("append").parquet(out_path)
-
-    else:
-        sink_fn = sink
-
-    def serve(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        caches: list[DataFrame] = []
-        pairs = video_phash_index_probe(
-            spark,
-            index_path,
-            batch_df,
-            id_col=id_col,
-            max_dist=max_dist,
-            min_frames=min_frames,
-            cache_registry=caches,
-        )
-        try:
-            sink_fn(pairs, batch_id)
-            if upsert:
-                video_phash_index_upsert(
-                    spark,
-                    index_path,
-                    batch_df,
-                    id_col=id_col,
-                    assume_new_ids=assume_new_ids,
-                )
-        finally:
-            for frame in caches:
-                frame.unpersist()
-        if upsert and compact_every and (batch_id + 1) % compact_every == 0:
-            compact_video_phash_index(spark, index_path)
-
-    writer = stream.writeStream.foreachBatch(serve)
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.trigger(**(trigger or {"availableNow": True})).start()
+    return serve_index_stream(
+        spark, index_path, stream, sink,
+        lambda batch, caches: video_phash_index_probe(
+            spark, index_path, batch, id_col=id_col, max_dist=max_dist,
+            min_frames=min_frames, cache_registry=caches,
+        ),
+        lambda batch: video_phash_index_upsert(
+            spark, index_path, batch, id_col=id_col, assume_new_ids=assume_new_ids
+        ),
+        compact_video_phash_index,
+        upsert_batches=upsert, compact_every=compact_every,
+        checkpoint=checkpoint, trigger=trigger,
+    )

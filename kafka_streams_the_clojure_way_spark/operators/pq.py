@@ -96,10 +96,17 @@ def _codebook_by_s(codebook_rows) -> list:
     both index positionally (``lut[s*K + code]``), so code ids must be
     exactly 0..K-1 in every subspace — which the trainer guarantees
     (seed assigns 0..k-1 per subspace and keys never change); verified
-    here so a foreign codebook cannot silently mis-index."""
+    here so a foreign codebook cannot silently mis-index. Subspace ids
+    must likewise be exactly 0..M-1: callers index ``element_at(__cb,
+    s + 1)`` with ``m = 1 + max(s)``, so a gap would mis-align them."""
     by_s: dict[int, list] = {}
     for s, c, v in sorted(codebook_rows):
         by_s.setdefault(s, []).append((c, [float(x) for x in v]))
+    if sorted(by_s) != list(range(len(by_s))):
+        raise ValueError(
+            f"codebook subspace ids {sorted(by_s)} are not 0..M-1; "
+            "rebuild the model with pq_model/ivfpq_model"
+        )
     value = [by_s[s] for s in sorted(by_s)]
     k = len(value[0])
     for cands in value:
@@ -719,6 +726,12 @@ def load_ivfpq_model(spark, path: str):
         .collect()
     ]
     codes = read_static_schema(spark, f"{path}/codes")
+    if "codes" not in codes.columns:
+        # pre-packed layout: one (id, s, code) row per subspace
+        raise ValueError(
+            f"IVF-PQ index at {path} has the old per-subspace codes layout "
+            f"(columns {codes.columns}); rebuild it with ivfpq_model"
+        )
     return cent_rows, codebook, codes
 
 

@@ -26,6 +26,16 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from kafka_streams_the_clojure_way_spark.operators.dedup import (
+    IndexDataset,
+    _read_optional,
+    build_index,
+    compact_index,
+    drop_tombstoned,
+    index_dataset_root,
+    index_delete,
+    serve_index_stream,
+)
 from kafka_streams_the_clojure_way_spark.sources.files import (
     read_static_schema,
     with_min_parallelism,
@@ -659,25 +669,16 @@ def build_ivf_index(
     every probe is a partition-pruned scan of ~n_probe/n_cells of the
     corpus with no assignment work and no full-corpus shuffle. This is
     the build/serve split every production ANN system makes (FAISS
-    train+add vs search)."""
+    train+add vs search). ``path/meta`` records the quantizer parameters
+    and the postings id column (``neighbor_id``) tombstones key on."""
     from kafka_streams_the_clojure_way_spark.operators.relational import top_k_per_key
-    from kafka_streams_the_clojure_way_spark.sources.files import (
-        with_min_parallelism,
-        write_partitioned,
-    )
+    from kafka_streams_the_clojure_way_spark.sources.files import write_partitioned
 
     cents = corpus.filter(F.col(id_col) % centroid_mod == 1).orderBy(id_col).limit(
         n_cells
     ).select(
         F.col(id_col).alias("cent_id"), F.col(vec_col).alias("cent_vec")
     )
-    from kafka_streams_the_clojure_way_spark.sources.files import (
-        invalidate_static_schema,
-    )
-
-    invalidate_static_schema(path)
-    cents.write.mode("overwrite").parquet(f"{path}/centroids")
-
     scored = with_min_parallelism(corpus).join(F.broadcast(cents)).select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("vec"),
@@ -691,7 +692,15 @@ def build_ivf_index(
         k=1,
         rank_col="__r",
     ).select("neighbor_id", "vec", F.col("cent_id").alias("cell"))
-    write_partitioned(postings, f"{path}/postings", "cell")
+
+    def write(root: str) -> None:
+        cents.write.mode("overwrite").parquet(f"{root}/centroids")
+        write_partitioned(postings, f"{root}/postings", "cell")
+
+    build_index(
+        corpus.sparkSession, path, write, (centroid_mod, n_cells, "neighbor_id"),
+        "centroid_mod int, n_cells int, id_col string",
+    )
 
 
 def ivf_index_upsert(
@@ -715,11 +724,7 @@ def ivf_index_upsert(
     Add-only contract as in minhash_index_upsert: duplicate ids would
     shadow-duplicate candidates, so arriving ids are anti-joined against
     the postings id column unless ``assume_new_ids=True``."""
-    from kafka_streams_the_clojure_way_spark.operators.dedup import (
-        index_dataset_root,
-    )
     from kafka_streams_the_clojure_way_spark.operators.relational import top_k_per_key
-    from kafka_streams_the_clojure_way_spark.sources.files import with_min_parallelism
 
     root = index_dataset_root(index_path)  # writers land in the active version
     cents = F.broadcast(
@@ -753,102 +758,22 @@ def ivf_index_upsert(
 
 
 def ivf_index_delete(spark, index_path: str, ids, *, id_col: str = "vec_id") -> None:
-    """LOGICAL delete (tombstone) of vectors from a persisted IVF index
-    — same contract as ``minhash_index_delete``: ids append to
-    ``path/tombstones``, probes anti-join the (broadcast) set,
-    :func:`compact_ivf_index` folds them in physically and clears the
-    set. A tombstoned id stays visible to ``ivf_index_upsert``'s
-    add-only anti-join until compaction (re-add requires a compact
-    first). ``ids``: a DataFrame with ``id_col`` or an iterable."""
-    from pyspark.sql import DataFrame as _DF
-
-    if isinstance(ids, _DF):
-        frame = ids.select(F.col(id_col).cast("long").alias("neighbor_id"))
-    else:
-        frame = spark.createDataFrame([(int(i),) for i in ids], "neighbor_id long")
-    from kafka_streams_the_clojure_way_spark.operators.dedup import (
-        index_dataset_root,
-    )
-
-    frame.coalesce(1).write.mode("append").parquet(
-        f"{index_dataset_root(index_path)}/tombstones"
-    )
+    """``dedup.index_delete`` with the IVF id column default."""
+    index_delete(spark, index_path, ids, id_col=id_col)
 
 
-def _ivf_tombstones(spark, root: str):
-    """``root`` is a RESOLVED dataset root (``dedup.index_dataset_root``)
-    — callers resolve once per call so a versioned repoint mid-call can
-    never mix snapshots."""
-    try:
-        return read_static_schema(spark, f"{root}/tombstones")
-    except Exception:
-        return None
+#: ``postings`` one file per cell directory minus tombstoned vectors; the
+#: frozen quantizer is copied unchanged, so a version root is complete.
+IVF_LAYOUT = (
+    IndexDataset("postings", ("cell",), drop_tombstoned),
+    IndexDataset("centroids"),
+)
 
 
-def compact_ivf_index(spark, index_path: str, *, versioned: bool = False) -> None:
-    """Index maintenance for long-running vector ingestion: restore ONE
-    file per cell directory in ``postings`` after many
-    :func:`ivf_index_upsert` batches have each appended their own file
-    (centroids are write-once and never accrete), folding any
-    :func:`ivf_index_delete` tombstones in physically (rows dropped in
-    the rewrite, tombstone set cleared). Probe answers are
-    byte-identical before/after (tombstoned vectors were already
-    anti-joined away). Crash-safe rename-aside swap; the default
-    in-place mode is NOT concurrent-probe safe — run between probe
-    batches. ``versioned=True`` is the snapshot-read mode (the
-    ``dedup.compact_minhash_index`` contract): compacted postings plus
-    a copy of the (model-sized, write-once) centroid table land in a
-    fresh version dir, then the atomic CURRENT repoint — in-flight
-    top-k/near-dup probes finish on their old version; reclaim stale
-    versions with :func:`gc_ivf_index_versions`."""
-    import shutil
-
-    from kafka_streams_the_clojure_way_spark.operators.dedup import (
-        compact_into_version,
-        index_dataset_root,
-    )
-    from kafka_streams_the_clojure_way_spark.sources.files import compact_partitioned
-
-    root = index_dataset_root(index_path)
-    tomb = _ivf_tombstones(spark, root)
-    drop = None
-    if tomb is not None:
-        dead = F.broadcast(tomb.select("neighbor_id").distinct())
-
-        def drop(df):  # noqa: F811
-            return df.join(dead, "neighbor_id", "left_anti")
-
-    if versioned:
-
-        def write(newroot: str) -> None:
-            compact_partitioned(
-                spark, f"{root}/postings", "cell", transform=drop,
-                dest=f"{newroot}/postings",
-            )
-            # the frozen quantizer travels with its postings: a version
-            # root is complete on its own (GC of the legacy root must
-            # not orphan readers of the current one)
-            spark.read.parquet(f"{root}/centroids").coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(f"{newroot}/centroids")
-
-        compact_into_version(index_path, write)
-        return
-
-    compact_partitioned(spark, f"{root}/postings", "cell", transform=drop)
-    if tomb is not None:
-        shutil.rmtree(f"{root}/tombstones")
-
-
-def gc_ivf_index_versions(index_path: str) -> list[str]:
-    """``dedup.gc_index_versions`` for the IVF family's datasets."""
-    from kafka_streams_the_clojure_way_spark.operators.dedup import (
-        gc_index_versions,
-    )
-
-    return gc_index_versions(
-        index_path, datasets=("centroids", "postings", "tombstones")
-    )
+def compact_ivf_index(spark, index_path: str) -> str:
+    """``dedup.compact_index`` over :data:`IVF_LAYOUT` (concurrent probes
+    and crashes: see ``dedup.index_dataset_root``)."""
+    return compact_index(spark, index_path, IVF_LAYOUT)
 
 
 def ivf_index_topk(
@@ -867,9 +792,6 @@ def ivf_index_topk(
     ON THE PARTITION COLUMN — dynamic partition pruning turns that into
     a scan of only the probed cell directories. Same output contract as
     ``ivf_topk``."""
-    from kafka_streams_the_clojure_way_spark.operators.dedup import (
-        index_dataset_root,
-    )
     from kafka_streams_the_clojure_way_spark.operators.relational import top_k_per_key
 
     root = index_dataset_root(index_path)  # one snapshot per probe
@@ -912,7 +834,7 @@ def ivf_index_topk(
             ),
         )
     )
-    tomb = _ivf_tombstones(spark, root)
+    tomb = _read_optional(spark, f"{root}/tombstones")
     if tomb is not None:
         # logical deletes: tombstoned vectors never reach the top-k
         # (broadcast anti-join bounded by the live tombstone count);
@@ -975,50 +897,24 @@ def ivf_index_topk_stream(
     retrieval. foreachBatch is at-least-once; the default
     ``assume_new_ids=False`` keeps replays idempotent via the upsert's
     anti-join. ``compact_every=N`` runs :func:`compact_ivf_index` after
-    every N-th upserting batch (serial with the loop, so the
-    non-concurrent-safe swap is safe here).
+    every N-th upserting batch.
 
     Returns the started ``StreamingQuery`` (default trigger
     availableNow — drain-what-exists, then stop)."""
-    if isinstance(sink, str):
-        out_path = sink
-
-        def sink_fn(topk: DataFrame, batch_id: int) -> None:
-            topk.coalesce(1).write.mode("append").parquet(out_path)
-
-    else:
-        sink_fn = sink
-
-    def serve(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        topk = ivf_index_topk(
-            spark,
-            index_path,
-            batch_df,
-            k,
-            id_col=id_col,
-            vec_col=vec_col,
-            query_id=query_id,
-            n_probe=n_probe,
-        )
-        sink_fn(topk, batch_id)
-        if upsert:
-            ivf_index_upsert(
-                spark,
-                index_path,
-                batch_df,
-                id_col=id_col,
-                vec_col=vec_col,
-                assume_new_ids=assume_new_ids,
-            )
-            if compact_every and (batch_id + 1) % compact_every == 0:
-                compact_ivf_index(spark, index_path)
-
-    writer = stream.writeStream.foreachBatch(serve)
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.trigger(**(trigger or {"availableNow": True})).start()
+    return serve_index_stream(
+        spark, index_path, stream, sink,
+        lambda batch, caches: ivf_index_topk(
+            spark, index_path, batch, k, id_col=id_col, vec_col=vec_col,
+            query_id=query_id, n_probe=n_probe,
+        ),
+        lambda batch: ivf_index_upsert(
+            spark, index_path, batch, id_col=id_col, vec_col=vec_col,
+            assume_new_ids=assume_new_ids,
+        ),
+        compact_ivf_index,
+        upsert_batches=upsert, compact_every=compact_every,
+        checkpoint=checkpoint, trigger=trigger,
+    )
 
 
 def ivf_index_neardup_pairs(
@@ -1049,9 +945,6 @@ def ivf_index_neardup_pairs(
     duplicate (probe_id != corpus_id). Tombstoned vectors never match.
 
     Output: (probe_id, corpus_id, cosine_r)."""
-    from kafka_streams_the_clojure_way_spark.operators.dedup import (
-        index_dataset_root,
-    )
     from kafka_streams_the_clojure_way_spark.operators.relational import top_k_per_key
 
     root = index_dataset_root(index_path)  # one snapshot per probe
@@ -1095,7 +988,7 @@ def ivf_index_neardup_pairs(
         )
         .filter(F.col("cosine") >= threshold)
     )
-    tomb = _ivf_tombstones(spark, root)
+    tomb = _read_optional(spark, f"{root}/tombstones")
     if tomb is not None:
         scored = scored.join(
             F.broadcast(tomb.select("neighbor_id").distinct()),

@@ -71,6 +71,10 @@ from kafka_streams_the_clojure_way_spark.operators import dedup as D
 from kafka_streams_the_clojure_way_spark.operators import similarity as S
 from kafka_streams_the_clojure_way_spark.operators import text as T
 from kafka_streams_the_clojure_way_spark.plans.spec import Topology
+from kafka_streams_the_clojure_way_spark.streaming.runner import (
+    as_batch_sink,
+    run_foreach_batch,
+)
 
 #: live spool paths awaiting cleanup. ONE process-wide atexit handler
 #: sweeps whatever is left at interpreter exit; the normal path is the
@@ -1073,7 +1077,9 @@ def run_ingestion_stream(
     payloads under each index's meta'd decode codec — survivor-batch-
     sized work; replays stay idempotent via the upserts' id anti-joins.
     ``compact_every=N`` compacts the upserted index(es) after every
-    N-th upserting batch. foreachBatch is at-least-once, so the default
+    N-th upserting batch, first GC-ing the version the previous
+    compaction superseded (probes stay snapshot-safe, disk use stays at
+    two versions). foreachBatch is at-least-once, so the default
     ``assume_new_ids=False`` keeps replayed batches idempotent via the
     upserts' anti-joins.
 
@@ -1129,33 +1135,29 @@ def run_ingestion_stream(
             "psi_ref_counts without psi_sink: the drift monitor would "
             "silently no-op — pass a psi_sink (callable or parquet path)"
         )
-    if isinstance(sink, str):
-        out_path = sink
+    from kafka_streams_the_clojure_way_spark.operators import audiofp as AFP
+    from kafka_streams_the_clojure_way_spark.operators import imagehash as IH
 
-        def sink_fn(curated: DataFrame, batch_id: int) -> None:
-            curated.coalesce(1).write.mode("append").parquet(out_path)
-
-    else:
-        sink_fn = sink
-
-    if isinstance(psi_sink, str):
-        psi_path = psi_sink
-
-        def psi_sink_fn(report: DataFrame, batch_id: int) -> None:
-            report.coalesce(1).write.mode("append").parquet(psi_path)
-
-    else:
-        psi_sink_fn = psi_sink
+    sink_fn, psi_sink_fn = as_batch_sink(sink), as_batch_sink(psi_sink)
+    # (index path, compaction) for every index the loop upserts into
+    maintained = [
+        (path, compact)
+        for path, compact in (
+            (upsert_index_path, D.compact_minhash_index),
+            (upsert_hash_index_path, D.compact_hash_index),
+            (upsert_bloom_index_path, D.compact_bloom_index),
+            (upsert_containment_index_path, D.compact_containment_index),
+            (upsert_ivf_index_path, S.compact_ivf_index),
+            (upsert_image_index_path, IH.compact_phash_index),
+            (upsert_audio_index_path, AFP.compact_audiofp_index),
+            (upsert_video_index_path, IH.compact_video_phash_index),
+        )
+        if path is not None
+    ]
 
     def serve(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():  # availableNow emits empty triggers; skip
-            return
         if psi_ref_counts is not None and psi_sink_fn is not None:
-            from kafka_streams_the_clojure_way_spark.operators.text import (
-                psi_against_reference,
-            )
-
-            report = psi_against_reference(
+            report = T.psi_against_reference(
                 spark, batch_df, psi_ref_counts, text=text,
                 source_col=psi_source_col,
             ).withColumn("batch_id", F.lit(batch_id))
@@ -1214,10 +1216,6 @@ def run_ingestion_stream(
                     assume_new_ids=assume_new_ids,
                 )
             if upsert_image_index_path is not None:
-                from kafka_streams_the_clojure_way_spark.operators import (
-                    imagehash as IH,
-                )
-
                 IH.phash_index_upsert(
                     spark,
                     upsert_image_index_path,
@@ -1228,10 +1226,6 @@ def run_ingestion_stream(
                     assume_new_ids=assume_new_ids,
                 )
             if upsert_audio_index_path is not None:
-                from kafka_streams_the_clojure_way_spark.operators import (
-                    audiofp as AFP,
-                )
-
                 AFP.audiofp_index_upsert(
                     spark,
                     upsert_audio_index_path,
@@ -1242,10 +1236,6 @@ def run_ingestion_stream(
                     assume_new_ids=assume_new_ids,
                 )
             if upsert_video_index_path is not None:
-                from kafka_streams_the_clojure_way_spark.operators import (
-                    imagehash as IH,
-                )
-
                 IH.video_phash_index_upsert(
                     spark,
                     upsert_video_index_path,
@@ -1261,36 +1251,10 @@ def run_ingestion_stream(
                     frame.unpersist()
                 cache_registry.clear()
         if compact_every and (batch_id + 1) % compact_every == 0:
-            if upsert_index_path is not None:
-                D.compact_minhash_index(spark, upsert_index_path)
-            if upsert_hash_index_path is not None:
-                D.compact_hash_index(spark, upsert_hash_index_path)
-            if upsert_bloom_index_path is not None:
-                D.compact_bloom_index(spark, upsert_bloom_index_path)
-            if upsert_containment_index_path is not None:
-                D.compact_containment_index(spark, upsert_containment_index_path)
-            if upsert_ivf_index_path is not None:
-                S.compact_ivf_index(spark, upsert_ivf_index_path)
-            if upsert_image_index_path is not None:
-                from kafka_streams_the_clojure_way_spark.operators import (
-                    imagehash as IH,
-                )
+            for path, compact in maintained:
+                # GC one cycle behind: the version this compaction
+                # supersedes stays readable until the next cycle
+                D.gc_index_versions(path)
+                compact(spark, path)
 
-                IH.compact_phash_index(spark, upsert_image_index_path)
-            if upsert_audio_index_path is not None:
-                from kafka_streams_the_clojure_way_spark.operators import (
-                    audiofp as AFP,
-                )
-
-                AFP.compact_audiofp_index(spark, upsert_audio_index_path)
-            if upsert_video_index_path is not None:
-                from kafka_streams_the_clojure_way_spark.operators import (
-                    imagehash as IH,
-                )
-
-                IH.compact_video_phash_index(spark, upsert_video_index_path)
-
-    writer = stream.writeStream.foreachBatch(serve)
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.trigger(**(trigger or {"availableNow": True})).start()
+    return run_foreach_batch(stream, serve, checkpoint=checkpoint, trigger=trigger)

@@ -2114,9 +2114,9 @@ def meta_phash_index_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     drifted DCT table, band shift, or bucket modulus mis-routes probes
     into silent false negatives). Scan cost: the bands table only
     (9 rows x ~20 bytes per image), never the corpus payloads."""
-    path = _phash_index_path(spark, sf_dir)
+    root = D.index_dataset_root(_phash_index_path(spark, sf_dir))
     return (
-        read_static_schema(spark, f"{path}/bands")
+        read_static_schema(spark, f"{root}/bands")
         .select(
             "doc_id",
             "phash",
@@ -2334,8 +2334,8 @@ def meta_video_phash_index_layout(spark: SparkSession, sf_dir: str) -> DataFrame
     independently (a drifted bucket modulus would silently route probes
     past their postings). Scan cost: the frames table only, never the
     corpus payloads."""
-    path = _video_index_path(spark, sf_dir)
-    return read_static_schema(spark, f"{path}/frames").select(
+    root = D.index_dataset_root(_video_index_path(spark, sf_dir))
+    return read_static_schema(spark, f"{root}/frames").select(
         "doc_id",
         "frame_idx",
         "phash",
@@ -2668,9 +2668,9 @@ def meta_audiofp_index_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-independently (a drifted energy band or a missed drop-list
     entry would mis-match probes silently). Scan cost: the postings +
     drop tables only, never the corpus audio."""
-    path = _audiofp_index_path(spark, sf_dir)
-    postings = AFP._read_postings(spark, path, "doc_id")
-    dropped = read_static_schema(spark, f"{path}/dropped")
+    root = D.index_dataset_root(_audiofp_index_path(spark, sf_dir))
+    postings = AFP._read_postings(spark, root, "doc_id")
+    dropped = read_static_schema(spark, f"{root}/dropped")
     return (
         postings.join(F.broadcast(dropped), ["frame_idx", "fp"], "left_anti")
         .select("doc_id", "frame_idx", F.col("fp").cast("long").alias("fp"))
@@ -5653,9 +5653,9 @@ def meta_bloom_index_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     turns into false negatives (the one failure a Bloom gate must never
     have). Scan cost: the bits table only (~10 bits/doc), never the
     corpus text."""
-    path = _bloom_index_path(spark, sf_dir)
+    root = D.index_dataset_root(_bloom_index_path(spark, sf_dir))
     return (
-        read_static_schema(spark, f"{path}/bits")
+        read_static_schema(spark, f"{root}/bits")
         .groupBy("segment", "word_idx")
         .agg(F.bit_or("word").alias("word"))
         .select(F.col("segment").cast("long").alias("segment"), "word_idx", "word")
@@ -5778,9 +5778,9 @@ def meta_keyset_index_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     failure a decontamination gate must never have (a false positive
     just costs a confirm lookup; a false negative is a silent
     train/test leak). Scan cost: the bits table only (~10 bits/gram)."""
-    path = _bench_keyset_path(spark, sf_dir)
+    root = D.index_dataset_root(_bench_keyset_path(spark, sf_dir))
     return (
-        read_static_schema(spark, f"{path}/bits")
+        read_static_schema(spark, f"{root}/bits")
         .groupBy("segment", "word_idx")
         .agg(F.bit_or("word").alias("word"))
         .select(F.col("segment").cast("long").alias("segment"), "word_idx", "word")

@@ -383,32 +383,23 @@ def overwrite_partitions(df: DataFrame, path: str, *partition_cols: str, **optio
 
 
 def compact_files(
-    spark: SparkSession, path: str, target_file_mb: int = 128, transform=None,
-    dest: str | None = None, **options
+    spark: SparkSession, path: str, *, dest: str, target_file_mb: int = 128,
+    transform=None, **options
 ) -> int:
-    """Compact a parquet dataset's small files toward ``target_file_mb``
-    outputs; returns the new file count. ``transform`` (DataFrame ->
-    DataFrame, e.g. a tombstone anti-join) is applied during the
-    rewrite, letting maintenance fold logical deletes in physically
-    without a second pass.
+    """Write a compacted copy of the parquet dataset at ``path`` to the
+    fresh directory ``dest``, with the small files merged toward
+    ``target_file_mb`` outputs; returns the new file count. ``path`` is
+    never touched, so its readers keep their snapshot — the caller
+    makes ``dest`` visible (an index repoints its CURRENT pointer, see
+    ``dedup.compact_index``). ``transform`` (DataFrame -> DataFrame,
+    e.g. a tombstone anti-join) is applied during the rewrite, folding
+    logical deletes in physically without a second pass.
 
     Small files are the silent killer of long-lived ingest layouts (every
     streaming micro-batch and every backfill adds a few): at 100 TB the
     scan's task count — and the NameNode/listing pressure — follows file
     count, not data size. Sizing from the actual on-disk bytes keeps the
-    rewrite a pure coalesce of row groups. Writes to a temp dir first,
-    renames the old data aside, renames the new data in, THEN deletes the
-    old — a crash at any step leaves either the old or the new complete
-    dataset on disk (the rename-aside window is still not safe for
-    concurrent readers; pause reads or use a table format with atomic
-    commits for that).
-
-    ``dest``: write the compacted layout to a FRESH directory instead
-    of swapping in place — the versioned-compaction write path (the
-    caller repoints its CURRENT pointer afterwards; the source dataset
-    is never touched, so concurrent readers keep their snapshot)."""
-    import shutil
-
+    rewrite a pure coalesce of row groups."""
     total_bytes = sum(
         os.path.getsize(os.path.join(root, f))
         for root, _, fs in os.walk(path)
@@ -416,61 +407,43 @@ def compact_files(
         if f.endswith(".parquet")
     )
     n_files = max(1, round(total_bytes / (target_file_mb * 1024 * 1024)))
-    tmp = dest if dest is not None else path.rstrip("/") + ".__compact_tmp__"
     df = spark.read.parquet(path)
     if transform is not None:
         df = transform(df)
-    (
-        df.repartition(n_files)
-        .write.mode("overwrite")
-        .options(**options)
-        .parquet(tmp)
-    )
-    if dest is None:
-        _swap_dataset(path, tmp)
+    df.repartition(n_files).write.mode("overwrite").options(**options).parquet(dest)
     return n_files
 
 
 def compact_partitioned(
-    spark: SparkSession, path: str, *partition_cols: str, transform=None,
-    dest: str | None = None, **options
+    spark: SparkSession, path: str, *partition_cols: str, dest: str,
+    transform=None, **options
 ) -> None:
-    """Compact a hive-partitioned dataset back to ONE file per partition
-    directory — the layout the partitioned writers produce on first
-    build. Long-running ingestion (``minhash_index_upsert`` /
-    ``ivf_index_upsert`` append one file per touched directory per
-    micro-batch) accretes files until scan PLANNING — directory listing,
-    footer reads, task scheduling — dominates probe cost; this restores
-    the build-time layout without retraining anything.
-
-    Same crash-safety as :func:`compact_files`: writes to a temp dir,
-    rename-aside swap, old deleted last — a crash leaves a complete old
-    or new dataset (still not concurrent-reader safe; pause probes or
-    use a table format with atomic commits for that). ``transform``
-    (DataFrame -> DataFrame, e.g. a tombstone anti-join) is applied
-    during the rewrite — see compact_files. ``dest``: versioned-compact
-    write path (fresh directory, no swap, source untouched) — see
-    compact_files."""
+    """Write a compacted copy of the hive-partitioned dataset at ``path``
+    to ``dest`` with ONE file per partition directory — the layout the
+    partitioned writers produce on first build. Long-running ingestion
+    (``minhash_index_upsert`` / ``ivf_index_upsert`` append one file per
+    touched directory per micro-batch) accretes files until scan
+    PLANNING — directory listing, footer reads, task scheduling —
+    dominates probe cost; this restores the build-time layout without
+    retraining anything. ``transform`` and the untouched source: see
+    :func:`compact_files`."""
     df = spark.read.parquet(path)
     if transform is not None:
         df = transform(df)
-    tmp = dest if dest is not None else path.rstrip("/") + ".__compact_tmp__"
     (
         df.repartition(*partition_cols)
         .write.mode("overwrite")
         .options(**options)
         .partitionBy(*partition_cols)
-        .parquet(tmp)
+        .parquet(dest)
     )
-    if dest is None:
-        _swap_dataset(path, tmp)
 
 
 def _swap_dataset(path: str, tmp: str) -> None:
     """Replace ``path`` with ``tmp`` via rename-aside: old data is moved
     out of the way, new data renamed in, old deleted last — a crash at
     any step leaves a complete dataset (old or new) at ``path``. Not
-    concurrent-reader safe (see compact_files docstring)."""
+    safe for concurrent readers: the rename-aside window hides both."""
     import shutil
 
     old = path.rstrip("/") + ".__swap_old__"

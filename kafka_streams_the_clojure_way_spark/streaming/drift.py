@@ -25,6 +25,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_streams_the_clojure_way_spark.operators.text import psi_against_reference
+from kafka_streams_the_clojure_way_spark.streaming.runner import (
+    as_batch_sink,
+    run_foreach_batch,
+)
 
 
 def run_psi_monitor_stream(
@@ -48,24 +52,12 @@ def run_psi_monitor_stream(
     Alerting is the sink's job on the standard thresholds (PSI >= 0.1
     investigate, >= 0.25 population moved); the monitor stays a pure
     measurement so one run can feed dashboards and gates alike."""
-    if isinstance(sink, str):
-        out_path = sink
-
-        def sink_fn(report: DataFrame, batch_id: int) -> None:
-            report.coalesce(1).write.mode("append").parquet(out_path)
-
-    else:
-        sink_fn = sink
+    sink_fn = as_batch_sink(sink)
 
     def serve(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         report = psi_against_reference(
             spark, batch_df, ref_counts, text=text, source_col=source_col
         ).withColumn("batch_id", F.lit(batch_id))
         sink_fn(report, batch_id)
 
-    writer = stream.writeStream.foreachBatch(serve)
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.trigger(**(trigger or {"availableNow": True})).start()
+    return run_foreach_batch(stream, serve, checkpoint=checkpoint, trigger=trigger)

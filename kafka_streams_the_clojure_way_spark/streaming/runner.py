@@ -87,6 +87,41 @@ def last_observed(query: StreamingQuery, name: str) -> dict | None:
     return dict(row.asDict()) if row is not None else None
 
 
+def as_batch_sink(sink):
+    """A ``foreachBatch`` sink: a callable ``(df, batch_id) -> None``
+    passes through (None stays None); a parquet directory path becomes
+    a callable that appends one file per batch."""
+    if not isinstance(sink, str):
+        return sink
+
+    def append(df: DataFrame, batch_id: int) -> None:
+        df.coalesce(1).write.mode("append").parquet(sink)
+
+    return append
+
+
+def run_foreach_batch(
+    stream: DataFrame,
+    serve: Callable[[DataFrame, int], None],
+    *,
+    checkpoint: str | None = None,
+    trigger: dict | None = None,
+) -> StreamingQuery:
+    """Start ``serve(batch_df, batch_id)`` over every NON-EMPTY
+    micro-batch of ``stream`` (availableNow emits empty triggers; they
+    are skipped), checkpointed at ``checkpoint`` when given. Default
+    trigger is ``availableNow`` (drain-what-exists, then stop)."""
+
+    def run(batch_df: DataFrame, batch_id: int) -> None:
+        if not batch_df.isEmpty():
+            serve(batch_df, batch_id)
+
+    writer = stream.writeStream.foreachBatch(run)
+    if checkpoint is not None:
+        writer = writer.option("checkpointLocation", checkpoint)
+    return writer.trigger(**(trigger or {"availableNow": True})).start()
+
+
 def materialize_table(
     stream: DataFrame,
     path: str,

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import pytest
 
+from kafka_streams_the_clojure_way_spark.operators.dedup import index_dataset_root
 from kafka_streams_the_clojure_way_spark.queries import QUERIES
 
 SF = "/root/testdata/sf0.01"
@@ -374,14 +375,14 @@ def test_ivf_upsert_layout_and_compaction(spark, tmp_path):
     queries = emb.filter(F.col("vec_id") % 97 == 1)
     path = str(tmp_path / "ivf_layout")
     S.build_ivf_index(base, path, n_cells=8)
-    before = _files_per_leaf_dir(f"{path}/postings")
+    before = _files_per_leaf_dir(f"{index_dataset_root(path)}/postings")
     assert before and all(n == 1 for n in before.values()), "build layout broken"
 
     batch = emb.filter(F.col("vec_id") % 4 == 3).withColumn(
         "vec_id", F.col("vec_id") + F.lit(1_000_000)
     )
     S.ivf_index_upsert(spark, path, batch)
-    after = _files_per_leaf_dir(f"{path}/postings")
+    after = _files_per_leaf_dir(f"{index_dataset_root(path)}/postings")
     grown = {d: after[d] - before.get(d, 0) for d in after}
     assert any(g == 1 for g in grown.values()), "upsert touched no cell"
     assert all(g <= 1 for g in grown.values()), {d: g for d, g in grown.items() if g > 1}
@@ -394,7 +395,7 @@ def test_ivf_upsert_layout_and_compaction(spark, tmp_path):
 
     want = rows()
     S.compact_ivf_index(spark, path)
-    compacted = _files_per_leaf_dir(f"{path}/postings")
+    compacted = _files_per_leaf_dir(f"{index_dataset_root(path)}/postings")
     assert compacted and all(n == 1 for n in compacted.values()), compacted
     assert rows() == want and want
 
@@ -470,11 +471,11 @@ def test_ivf_tombstone_delete_then_compact(spark, tmp_path):
     S.compact_ivf_index(spark, path)
     import os
 
-    assert not os.path.exists(f"{path}/tombstones")
+    assert not os.path.exists(f"{index_dataset_root(path)}/tombstones")
     assert rows() == after
     left = {
         r.neighbor_id
-        for r in spark.read.parquet(f"{path}/postings").select("neighbor_id").collect()
+        for r in spark.read.parquet(f"{index_dataset_root(path)}/postings").select("neighbor_id").collect()
     }
     assert victim not in left
 
@@ -547,7 +548,7 @@ def test_ivf_stream_serve_helper_upsert_loop(spark, tmp_path):
     import os
 
     per_dir = {}
-    for dirpath, _, files in os.walk(f"{live}/postings"):
+    for dirpath, _, files in os.walk(f"{index_dataset_root(live)}/postings"):
         n = sum(1 for f in files if f.endswith(".parquet"))
         if n:
             per_dir[dirpath] = n
@@ -591,3 +592,36 @@ def test_ivf_neardup_probe_matches_thresholded_inline_and_tombstones(spark, tmp_
         for r in S.ivf_index_neardup_pairs(spark, path, probes, threshold=th).collect()
     }
     assert after == {t for t in got if t[1] != victim}
+
+
+def test_pq_codebook_with_gapped_subspace_ids_is_rejected():
+    """Subspace ids must be exactly 0..M-1: a gapped codebook would
+    mis-align the positional per-subspace lookups, so it must fail
+    loudly with a rebuild message."""
+    from kafka_streams_the_clojure_way_spark.operators.pq import _codebook_by_s
+
+    ok = [(s, c, [float(c)]) for s in (0, 1) for c in (0, 1)]
+    assert len(_codebook_by_s(ok)) == 2
+    gapped = [(s, c, [float(c)]) for s in (0, 2) for c in (0, 1)]
+    with pytest.raises(ValueError, match="rebuild"):
+        _codebook_by_s(gapped)
+
+
+def test_load_ivfpq_model_rejects_pre_packed_codes_layout(spark, tmp_path):
+    """An IVF-PQ index persisted with the old per-subspace codes rows
+    (no packed ``codes`` column) must fail at load with a rebuild
+    message, not later with an unresolved-column error."""
+    from kafka_streams_the_clojure_way_spark.operators.pq import load_ivfpq_model
+
+    path = str(tmp_path / "old_ivfpq")
+    spark.createDataFrame(
+        [(1, [0.0, 1.0])], "cent_id long, cent_vec array<double>"
+    ).write.parquet(f"{path}/centroids")
+    spark.createDataFrame(
+        [(0, 0, [0.0])], "s int, code int, c array<double>"
+    ).write.parquet(f"{path}/codebook")
+    spark.createDataFrame(
+        [(7, 0, 3, 1)], "vec_id long, s int, code int, cell long"
+    ).write.partitionBy("cell").parquet(f"{path}/codes")
+    with pytest.raises(ValueError, match="rebuild"):
+        load_ivfpq_model(spark, path)

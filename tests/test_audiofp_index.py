@@ -26,6 +26,7 @@ from kafka_streams_the_clojure_way_spark.operators.audiofp import (
 from kafka_streams_the_clojure_way_spark.operators.multimodal import (
     encode_text_assets,
 )
+from kafka_streams_the_clojure_way_spark.operators.dedup import index_dataset_root
 from kafka_streams_the_clojure_way_spark.sources.files import load_table
 
 import pytest
@@ -139,7 +140,7 @@ def test_upsert_equals_rebuild_replay_idempotent_compaction_invisible(
     assert probe_rows(inc) == want
     compact_audiofp_index(spark, inc)
     assert probe_rows(inc) == want
-    postings_root = os.path.join(inc, "postings")
+    postings_root = os.path.join(index_dataset_root(inc), "postings")
     for dirpath, _, files in os.walk(postings_root):
         n = sum(1 for f in files if f.endswith(".parquet"))
         if n:
@@ -187,10 +188,10 @@ def test_upsert_maintains_df_cap_and_compact_removes_hidden(spark, tmp_path):
     schema = "doc_id long, frame_idx long, fp long"
 
     def visible_and_raw(path):
-        raw = spark.read.schema(schema).parquet(f"{path}/postings").count()
-        dropped = spark.read.parquet(f"{path}/dropped")
+        raw = spark.read.schema(schema).parquet(f"{index_dataset_root(path)}/postings").count()
+        dropped = spark.read.parquet(f"{index_dataset_root(path)}/dropped")
         vis = (
-            spark.read.schema(schema).parquet(f"{path}/postings")
+            spark.read.schema(schema).parquet(f"{index_dataset_root(path)}/postings")
             .join(dropped, ["frame_idx", "fp"], "left_anti")
             .count()
         )

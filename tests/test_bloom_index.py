@@ -24,6 +24,7 @@ from kafka_streams_the_clojure_way_spark.operators.dedup import (
     compact_bloom_index,
     exact_pairs_between,
     hash_index_probe,
+    index_dataset_root,
 )
 from kafka_streams_the_clojure_way_spark.sources.files import load_table
 
@@ -153,7 +154,7 @@ def test_upsert_matches_rebuild_and_compaction_is_invisible(spark, tmp_path):
     assert set(_maybe_ids(bloom_index_probe(spark, inc, batch))) == got_full
     compact_bloom_index(spark, inc)
     assert set(_maybe_ids(bloom_index_probe(spark, inc, batch))) == got_full
-    bits_root = os.path.join(inc, "bits")
+    bits_root = os.path.join(index_dataset_root(inc), "bits")
     for dirpath, _, files in os.walk(bits_root):
         n = sum(1 for f in files if f.endswith(".parquet"))
         if n:

@@ -1,13 +1,14 @@
-"""Probe-during-compaction contract (VERDICT r8 #6): every persisted
-index family's compact uses the shared rename-aside swap. The contract
-pinned here:
+"""Probe-during-compaction contract: every persisted index family
+compacts into a fresh version directory and atomically repoints its
+CURRENT pointer (``dedup.compact_index``). The contract pinned here:
 
-- a probe sees a COMPLETE old-or-new dataset, never a torn one — the
-  swap is (rename old aside, rename new in, delete old last), and a
-  crash at any step rolls back or completes;
-- CONCURRENT probes are excluded by design (single-writer maintenance
-  window, run between probe batches) — every compact_* docstring must
-  say so, mechanically enforced below.
+- a probe sees a COMPLETE old-or-new snapshot, never a torn one — a
+  probe planned before the repoint finishes on its version, and a crash
+  before the repoint leaves the index as it was;
+- writers stay single-writer, and every compact_* docstring must state
+  the concurrency and crash contract, mechanically enforced below;
+- the rename-aside dataset swap ``upsert_table`` still uses rolls back
+  or completes on a crash at any step.
 """
 
 from __future__ import annotations
@@ -101,58 +102,10 @@ def test_swap_crash_midway_rolls_back_to_complete_old(tmp_path, monkeypatch):
     assert not old_leftover.exists()
 
 
-def test_minhash_compact_probe_parity_across_crash_and_success(
-    spark, tmp_path, monkeypatch
-):
-    """The template family end to end: build + upsert (slivered
-    layout), then (a) a compact whose swap crashes mid-way leaves the
-    index probing EXACTLY as before, and (b) the retried compact
-    succeeds and still probes identically — old-or-new, never torn."""
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents").select(
-        "doc_id", "text"
-    )
-    corpus_a = docs.filter(F.col("doc_id") % 3 == 1)
-    corpus_b = docs.filter(F.col("doc_id") % 3 == 2)
-    probe = docs.filter(F.col("doc_id") % 3 == 0).select(
-        (F.col("doc_id") + 1_000_000).alias("doc_id"), "text"
-    )
-    path = str(tmp_path / "mh_idx")
-    D.build_minhash_index(corpus_a, path)
-    D.minhash_index_upsert(spark, path, corpus_b)
-
-    def answers():
-        return sorted(
-            (r.probe_id, r.corpus_id, r.jaccard)
-            for r in D.minhash_index_probe(spark, path, probe).collect()
-        )
-
-    before = answers()
-    assert before, "fixture must produce at least one near-dup pair"
-
-    real_rename = os.rename
-    state = {"n": 0}
-
-    def failing_rename(a, b):
-        state["n"] += 1
-        if state["n"] == 2:
-            raise OSError("injected crash mid-swap")
-        real_rename(a, b)
-
-    monkeypatch.setattr(os, "rename", failing_rename)
-    with pytest.raises(OSError, match="injected crash"):
-        D.compact_minhash_index(spark, path)
-    monkeypatch.setattr(os, "rename", real_rename)
-    assert answers() == before, "crashed compact must leave old answers intact"
-
-    D.compact_minhash_index(spark, path)
-    assert answers() == before, "compacted index must answer identically"
-
-
 def test_minhash_versioned_compact_serves_probes_during_compact(
     spark, tmp_path, monkeypatch
 ):
-    """r10 snapshot reads (minhash as the template family): a versioned
-    compact writes a NEW version dir and atomically repoints CURRENT —
+    """Snapshot reads (minhash as the template family): a compact writes a NEW version dir and atomically repoints CURRENT —
     so a probe whose plan was built BEFORE the repoint still collects
     its exact pre-compact answers afterwards (its snapshot's files are
     never touched), a probe built AFTER reads the new version, a crash
@@ -185,6 +138,7 @@ def test_minhash_versioned_compact_serves_probes_during_compact(
     before = answers()
     assert before, "fixture must produce at least one near-dup pair"
     assert all(c != victim for _, c, _ in before)
+    built = D.index_dataset_root(path)
 
     # (a) crash BEFORE the repoint: readers never see the half-built
     # version (CURRENT unchanged), and the retry is clean
@@ -193,18 +147,18 @@ def test_minhash_versioned_compact_serves_probes_during_compact(
 
     monkeypatch.setattr(D, "_repoint_index_version", boom)
     with pytest.raises(OSError, match="injected crash"):
-        D.compact_minhash_index(spark, path, versioned=True)
+        D.compact_minhash_index(spark, path)
     monkeypatch.undo()
-    assert D.index_dataset_root(path) == path  # pointer untouched
+    assert D.index_dataset_root(path) == built  # pointer untouched
     assert answers() == before
 
     # (b) in-flight probe across a successful repoint: plan built on the
     # OLD version, collected AFTER the swap — identical answers, because
     # the old version's files are left in place for it
     inflight = D.minhash_index_probe(spark, path, probe)
-    D.compact_minhash_index(spark, path, versioned=True)
+    D.compact_minhash_index(spark, path)
     root = D.index_dataset_root(path)
-    assert root != path and os.path.basename(root).startswith("v_")
+    assert root != built and os.path.basename(root).startswith("v_")
     assert answers(inflight) == before
 
     # (c) post-repoint probe reads the new version (tombstones folded
@@ -212,13 +166,16 @@ def test_minhash_versioned_compact_serves_probes_during_compact(
     assert not os.path.isdir(os.path.join(root, "tombstones"))
     assert answers() == before
 
-    # (d) a second versioned compact + GC: stale version dirs AND the
-    # legacy in-place datasets are reclaimed; the current version serves
-    D.compact_minhash_index(spark, path, versioned=True)
-    deleted = D.gc_minhash_index_versions(path)
-    assert deleted, "GC must reclaim the stale version and legacy dirs"
-    assert not os.path.isdir(os.path.join(path, "bands"))
-    assert os.path.isdir(os.path.join(D.index_dataset_root(path), "bands"))
+    # (d) a second compact + GC: the built, orphaned and superseded
+    # version dirs are reclaimed; the current version serves
+    D.compact_minhash_index(spark, path)
+    deleted = D.gc_index_versions(path)
+    assert built in deleted and root in deleted, deleted
+    current = D.index_dataset_root(path)
+    assert [n for n in os.listdir(path) if n.startswith("v_")] == [
+        os.path.basename(current)
+    ]
+    assert os.path.isdir(os.path.join(current, "bands"))
     assert answers() == before
 
     # (e) upserts land in the CURRENT version: a new batch probed after
@@ -230,8 +187,7 @@ def test_minhash_versioned_compact_serves_probes_during_compact(
 
 
 def test_hash_versioned_compact_serves_probes_during_compact(spark, tmp_path):
-    """Versioned snapshot reads rolled out to the SECOND family (hash
-    index): same contract as the minhash template — in-flight probe
+    """Snapshot reads on the SECOND family (hash index): same contract as the minhash template — in-flight probe
     finishes on its snapshot across a repoint, post-repoint probes read
     the new version with tombstones folded, GC reclaims stale versions,
     upserts land in the current version."""
@@ -256,16 +212,17 @@ def test_hash_versioned_compact_serves_probes_during_compact(spark, tmp_path):
     before = answers()
     assert before and all(c != victim for _, c in before)
 
+    built = D.index_dataset_root(path)
     inflight = D.hash_index_probe(spark, path, probe)
-    D.compact_hash_index(spark, path, versioned=True)
+    D.compact_hash_index(spark, path)
     root = D.index_dataset_root(path)
-    assert root != path and os.path.basename(root).startswith("v_")
+    assert root != built and os.path.basename(root).startswith("v_")
     assert answers(inflight) == before          # snapshot intact
     assert not os.path.isdir(os.path.join(root, "tombstones"))
     assert answers() == before                  # new version serves
 
-    deleted = D.gc_hash_index_versions(path)
-    assert deleted and not os.path.isdir(os.path.join(path, "hashes"))
+    deleted = D.gc_index_versions(path)
+    assert deleted == [built] and not os.path.isdir(built)
     assert answers() == before
 
     extra = probe.select((F.col("doc_id") + 5_000_000).alias("doc_id"), "text")

@@ -86,10 +86,13 @@ def test_compact_files_reduces_file_count_preserving_rows(spark, tmp_path):
     before = len(glob.glob(f"{path}/part-*.parquet"))
     assert before >= 30
 
-    n = compact_files(spark, path, target_file_mb=128)
-    after = len(glob.glob(f"{path}/part-*.parquet"))
+    dest = str(tmp_path / "compacted")
+    n = compact_files(spark, path, dest=dest, target_file_mb=128)
+    after = len(glob.glob(f"{dest}/part-*.parquet"))
     assert after == n < before
-    assert spark.read.parquet(path).count() == orders.count()
+    assert spark.read.parquet(dest).count() == orders.count()
+    # the source is never touched: its readers keep their snapshot
+    assert len(glob.glob(f"{path}/part-*.parquet")) == before
 
 
 def test_upsert_table_latest_per_key_and_tombstones(spark, tmp_path):

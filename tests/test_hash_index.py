@@ -24,6 +24,7 @@ from kafka_streams_the_clojure_way_spark.operators.dedup import (
     hash_index_probe_stream,
     hash_index_upsert,
 )
+from kafka_streams_the_clojure_way_spark.operators.dedup import index_dataset_root
 from kafka_streams_the_clojure_way_spark.sources.files import load_table
 from kafka_streams_the_clojure_way_spark.sources.memory import drain
 
@@ -145,21 +146,21 @@ def test_upsert_layout_and_compaction(spark, tmp_path):
     )
     path = str(tmp_path / "idx")
     build_hash_index(docs.filter(F.col("doc_id") % 3 == 1), path)
-    before = _files_per_leaf_dir(f"{path}/hashes")
+    before = _files_per_leaf_dir(f"{index_dataset_root(path)}/hashes")
     assert before and all(n == 1 for n in before.values()), "build layout broken"
 
     for m in (2, 0):
         hash_index_upsert(
             spark, path, docs.filter(F.col("doc_id") % 3 == m), assume_new_ids=True
         )
-    after = _files_per_leaf_dir(f"{path}/hashes")
+    after = _files_per_leaf_dir(f"{index_dataset_root(path)}/hashes")
     grown = {d: after[d] - before.get(d, 0) for d in after}
     assert all(g <= 2 for g in grown.values()), {d: g for d, g in grown.items() if g > 2}
     assert any(n > 1 for n in after.values()), "fixture never re-touched a dir"
 
     probe_before = _rows(hash_index_probe(spark, path, batch))
     compact_hash_index(spark, path)
-    compacted = _files_per_leaf_dir(f"{path}/hashes")
+    compacted = _files_per_leaf_dir(f"{index_dataset_root(path)}/hashes")
     assert compacted and all(n == 1 for n in compacted.values()), compacted
     assert _rows(hash_index_probe(spark, path, batch)) == probe_before
     assert probe_before
@@ -179,10 +180,10 @@ def test_tombstone_delete_then_compact_then_readd(spark, tmp_path):
     assert after_del == [r for r in before if r[1] != 1] and after_del
 
     compact_hash_index(spark, path)
-    assert not os.path.exists(f"{path}/tombstones")
+    assert not os.path.exists(f"{index_dataset_root(path)}/tombstones")
     assert _rows(hash_index_probe(spark, path, probe)) == after_del
     live = {
-        r.doc_id for r in spark.read.parquet(f"{path}/hashes").select("doc_id").collect()
+        r.doc_id for r in spark.read.parquet(f"{index_dataset_root(path)}/hashes").select("doc_id").collect()
     }
     assert 1 not in live and {2, 3, 4} <= live
 
@@ -244,7 +245,7 @@ def test_probe_stream_serve_prunes_and_upserts(spark, tmp_path):
     drain(q)
     assert len(ticks) >= 2 and pruned == ticks, (pruned, ticks)
     assert sorted(got) == expected
-    files = _files_per_leaf_dir(f"{path}/hashes")
+    files = _files_per_leaf_dir(f"{index_dataset_root(path)}/hashes")
     assert files and all(n == 1 for n in files.values()), files
 
 

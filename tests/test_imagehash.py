@@ -25,6 +25,7 @@ from kafka_streams_the_clojure_way_spark.operators.imagehash import (
 from kafka_streams_the_clojure_way_spark.operators.multimodal import (
     wrap_binary_assets,
 )
+from kafka_streams_the_clojure_way_spark.operators.dedup import index_dataset_root
 from kafka_streams_the_clojure_way_spark.sources.files import load_table
 
 import pytest
@@ -145,7 +146,7 @@ def test_upsert_equals_rebuild_replay_idempotent_compaction_invisible(
     assert probe_rows(inc) == want
     compact_phash_index(spark, inc)
     assert probe_rows(inc) == want
-    bands_root = os.path.join(inc, "bands")
+    bands_root = os.path.join(index_dataset_root(inc), "bands")
     for dirpath, _, files in os.walk(bands_root):
         n = sum(1 for f in files if f.endswith(".parquet"))
         if n:

@@ -1,0 +1,95 @@
+"""One index lifecycle, fast tier: every persisted index is a versioned
+snapshot (``v_NNNNNN`` + an atomic ``CURRENT`` pointer) maintained
+through one compaction, GC and tombstone core. Pinned here on the two
+text families the exact and near-dup gates serve from, at ~50 rows:
+build -> upsert -> delete -> compact -> GC -> compact -> GC probes
+exactly like a fresh build over the surviving rows, GC leaves only the
+current version, and an index without ``CURRENT`` fails loudly."""
+
+from __future__ import annotations
+
+import os
+
+import pytest
+from pyspark.sql import functions as F
+
+from kafka_streams_the_clojure_way_spark.operators import dedup as D
+from kafka_streams_the_clojure_way_spark.sources.files import load_table
+
+SF = "/root/testdata/sf0.001"
+
+FAMILIES = {
+    "minhash": (
+        D.build_minhash_index,
+        D.minhash_index_upsert,
+        D.minhash_index_probe,
+        D.compact_minhash_index,
+        lambda r: (r.probe_id, r.corpus_id, r.jaccard),
+    ),
+    "hash": (
+        D.build_hash_index,
+        D.hash_index_upsert,
+        D.hash_index_probe,
+        D.compact_hash_index,
+        lambda r: (r.probe_id, r.corpus_id),
+    ),
+}
+
+
+def _versions(path):
+    return sorted(n for n in os.listdir(path) if n.startswith("v_"))
+
+
+@pytest.mark.parametrize("family", sorted(FAMILIES))
+def test_lifecycle_probes_like_a_fresh_build(spark, tmp_path, family):
+    build, upsert, probe, compact, row = FAMILIES[family]
+    docs = (
+        load_table(spark, SF, "documents")
+        .select("doc_id", "text")
+        .orderBy("doc_id")
+        .limit(50)
+        .cache()
+    )
+    # byte-identical re-crawls of every doc under new ids
+    twins = docs.select((F.col("doc_id") + 1_000_000).alias("doc_id"), "text")
+
+    def answers(path):
+        return sorted(row(r) for r in probe(spark, path, twins).collect())
+
+    path = str(tmp_path / "idx")
+    build(docs.filter(F.col("doc_id") % 2 == 0), path)
+    assert _versions(path) == ["v_000000"]
+    assert D.index_dataset_root(path) == os.path.join(path, "v_000000")
+    upsert(spark, path, docs.filter(F.col("doc_id") % 2 == 1))
+    victims = [r.doc_id for r in docs.limit(2).collect()]
+    D.index_delete(spark, path, victims)
+    assert os.path.isdir(os.path.join(D.index_dataset_root(path), "tombstones"))
+
+    for _ in range(2):
+        compact(spark, path)
+        D.gc_index_versions(path)
+        root = D.index_dataset_root(path)
+        assert _versions(path) == [os.path.basename(root)]
+        assert not os.path.exists(os.path.join(root, "tombstones"))
+
+    fresh = str(tmp_path / "fresh")
+    build(docs.filter(~F.col("doc_id").isin(victims)), fresh)
+    got = answers(path)
+    assert got, "fixture must produce probe hits"
+    assert all(c not in victims for _, c, *_ in got)
+    assert got == answers(fresh)
+
+    # an index without its CURRENT pointer is not silently read as one
+    os.remove(os.path.join(path, D.INDEX_CURRENT_POINTER))
+    with pytest.raises(FileNotFoundError, match="no CURRENT pointer; rebuild"):
+        probe(spark, path, twins)
+    docs.unpersist()
+
+
+def test_directory_without_current_pointer_raises_rebuild_error(tmp_path):
+    legacy = tmp_path / "legacy"
+    (legacy / "bands").mkdir(parents=True)
+    with pytest.raises(FileNotFoundError, match="rebuild it with build_"):
+        D.index_dataset_root(str(legacy))
+    with pytest.raises(FileNotFoundError, match="no CURRENT pointer"):
+        D.gc_index_versions(str(legacy))

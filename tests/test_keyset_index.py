@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from kafka_streams_the_clojure_way_spark.operators.dedup import (
     build_keyset_index,
     compact_keyset_index,
+    index_dataset_root,
     keyset_index_probe,
     keyset_index_upsert,
 )
@@ -78,7 +79,7 @@ def test_upsert_equals_rebuild_and_is_idempotent(spark, tmp_path):
     keyset_index_upsert(spark, inc, _df(spark, MEMBERS))  # replay: no-op
     assert _got(spark, inc, probe) == sorted(MEMBERS)
     # keys table stays duplicate-free (upsert anti-joins existing members)
-    n_rows = spark.read.parquet(os.path.join(inc, "keys")).count()
+    n_rows = spark.read.parquet(os.path.join(index_dataset_root(inc), "keys")).count()
     assert n_rows == len(MEMBERS)
 
 
@@ -91,7 +92,7 @@ def test_compaction_is_invisible_and_restores_layout(spark, tmp_path):
     compact_keyset_index(spark, path)
     assert _got(spark, path, MEMBERS + OTHERS) == before == sorted(MEMBERS)
     for leg in ("bits", "keys"):
-        for dirpath, _, files in os.walk(os.path.join(path, leg)):
+        for dirpath, _, files in os.walk(os.path.join(index_dataset_root(path), leg)):
             n = sum(1 for f in files if f.endswith(".parquet"))
             if n:
                 assert n == 1, f"{dirpath} has {n} files after compaction"

@@ -18,6 +18,7 @@ from kafka_streams_the_clojure_way_spark.operators.dedup import (
     minhash_index_probe,
     minhash_lsh_pairs_between,
 )
+from kafka_streams_the_clojure_way_spark.operators.dedup import index_dataset_root
 from kafka_streams_the_clojure_way_spark.sources.files import load_table
 from kafka_streams_the_clojure_way_spark.sources.memory import drain, start_memory_sink
 
@@ -250,19 +251,19 @@ def test_upsert_adds_at_most_one_file_per_directory(spark, tmp_path):
     docs = load_table(spark, SF, "documents")
     path = str(tmp_path / "layout_idx")
     build_minhash_index(docs.filter(F.col("doc_id") % 3 != 0), path)
-    before = _files_per_leaf_dir(f"{path}/bands")
+    before = _files_per_leaf_dir(f"{index_dataset_root(path)}/bands")
     assert before and all(n == 1 for n in before.values()), "build layout broken"
-    shingles_before = sum(_files_per_leaf_dir(f"{path}/shingles").values())
+    shingles_before = sum(_files_per_leaf_dir(f"{index_dataset_root(path)}/shingles").values())
 
     minhash_index_upsert(spark, path, docs.filter(F.col("doc_id") % 3 == 0))
-    after = _files_per_leaf_dir(f"{path}/bands")
+    after = _files_per_leaf_dir(f"{index_dataset_root(path)}/bands")
     grown = {d: after[d] - before.get(d, 0) for d in after}
     assert any(g == 1 for g in grown.values()), "upsert touched no directory"
     assert all(g <= 1 for g in grown.values()), {
         d: g for d, g in grown.items() if g > 1
     }
     # shingles: exactly one new file per upsert batch
-    shingles_after = sum(_files_per_leaf_dir(f"{path}/shingles").values())
+    shingles_after = sum(_files_per_leaf_dir(f"{index_dataset_root(path)}/shingles").values())
     assert shingles_after - shingles_before == 1
 
 
@@ -282,14 +283,14 @@ def test_compact_minhash_index_restores_layout_and_parity(spark, tmp_path):
         minhash_index_upsert(
             spark, path, docs.filter(F.col("doc_id") % 4 == m), assume_new_ids=True
         )
-    files = _files_per_leaf_dir(f"{path}/bands")
+    files = _files_per_leaf_dir(f"{index_dataset_root(path)}/bands")
     assert any(n > 1 for n in files.values()), "fixture never re-touched a dir"
 
     before = _rows(minhash_index_probe(spark, path, probe, threshold=0.8))
     compact_minhash_index(spark, path)
-    after_files = _files_per_leaf_dir(f"{path}/bands")
+    after_files = _files_per_leaf_dir(f"{index_dataset_root(path)}/bands")
     assert after_files and all(n == 1 for n in after_files.values()), after_files
-    assert sum(_files_per_leaf_dir(f"{path}/shingles").values()) == 1
+    assert sum(_files_per_leaf_dir(f"{index_dataset_root(path)}/shingles").values()) == 1
     assert _rows(minhash_index_probe(spark, path, probe, threshold=0.8)) == before
     assert before, "fixture slice must produce pairs"
 
@@ -402,7 +403,7 @@ def test_probe_stream_upsert_loop_with_compaction(spark, tmp_path):
     )
     drain(q)
     assert sorted(got) == expected
-    files = _files_per_leaf_dir(f"{path}/bands")
+    files = _files_per_leaf_dir(f"{index_dataset_root(path)}/bands")
     assert files and all(n == 1 for n in files.values()), files
 
 
@@ -432,10 +433,10 @@ def test_tombstone_delete_then_compact(spark, tmp_path):
     compact_minhash_index(spark, path)
     import os
 
-    assert not os.path.exists(f"{path}/tombstones")
+    assert not os.path.exists(f"{index_dataset_root(path)}/tombstones")
     assert _rows(minhash_index_probe(spark, path, probe, threshold=0.5)) == after_del
     shingle_ids = {
-        r.doc_id for r in spark.read.parquet(f"{path}/shingles").select("doc_id").collect()
+        r.doc_id for r in spark.read.parquet(f"{index_dataset_root(path)}/shingles").select("doc_id").collect()
     }
     assert 1 not in shingle_ids and 2 in shingle_ids
 

@@ -5,6 +5,7 @@ verdict watch item 3). Uses sf0.001 so the retrain cost is trivial."""
 
 from __future__ import annotations
 
+from kafka_streams_the_clojure_way_spark.operators.dedup import index_dataset_root
 from kafka_streams_the_clojure_way_spark.queries import llm_pipeline as L
 
 SF = "/root/testdata/sf0.001"
@@ -26,7 +27,7 @@ def test_ivf_index_cache_retrains_on_param_change(spark):
     assert L._ivf_index_path(spark, SF) == a
     c = L._ivf_index_path(spark, SF, n_cells=4)
     assert c != a
-    assert spark.read.parquet(f"{c}/centroids").count() <= 4
+    assert spark.read.parquet(f"{index_dataset_root(c)}/centroids").count() <= 4
 
 
 def test_kmeans_model_cache_retrains_on_param_change(spark):

@@ -420,13 +420,25 @@ def test_containment_index_delete_compact_readd(spark, tmp_path):
     assert after_del == [r for r in before if r[1] != victim]
 
     D.compact_containment_index(spark, path)
-    assert not os.path.exists(f"{path}/tombstones")
+    assert not os.path.exists(f"{D.index_dataset_root(path)}/tombstones")
     assert rows() == after_del
     live = {
         r.doc_id
-        for r in spark.read.parquet(f"{path}/sets").select("doc_id").collect()
+        for r in spark.read.parquet(f"{D.index_dataset_root(path)}/sets").select("doc_id").collect()
     }
     assert victim not in live
 
     D.containment_index_upsert(spark, path, corpus.filter(F.col("doc_id") == victim))
     assert rows() == before
+
+
+def test_long_array_empty_is_typed_bigint(spark):
+    """An empty ``_long_array`` must stay array<bigint> (a bare
+    ``array()`` types as array<string> and breaks numeric consumers)."""
+    from pyspark.sql.types import LongType
+
+    df = spark.range(1).select(
+        D._long_array([]).alias("e"), D._long_array([1, 2]).alias("a")
+    )
+    assert [f.dataType.elementType for f in df.schema.fields] == [LongType()] * 2
+    assert [tuple(r) for r in df.collect()] == [([], [1, 2])]

@@ -24,6 +24,7 @@ from kafka_streams_the_clojure_way_spark.operators.imagehash import (
 from kafka_streams_the_clojure_way_spark.operators.multimodal import (
     encode_text_assets,
 )
+from kafka_streams_the_clojure_way_spark.operators.dedup import index_dataset_root
 from kafka_streams_the_clojure_way_spark.sources.files import load_table
 
 import pytest
@@ -114,7 +115,7 @@ def test_upsert_equals_rebuild_replay_idempotent_compaction_invisible(
     assert probe_rows(inc) == want
     compact_video_phash_index(spark, inc)
     assert probe_rows(inc) == want
-    frames_root = os.path.join(inc, "frames")
+    frames_root = os.path.join(index_dataset_root(inc), "frames")
     for dirpath, _, files in os.walk(frames_root):
         n = sum(1 for f in files if f.endswith(".parquet"))
         if n:
