@@ -15,6 +15,9 @@ simulation. This package maps those capabilities onto idiomatic PySpark:
 - ``operators``  — relational + LLM-data-pipeline operators (dedup,
                    similarity search, text analysis, multimodal plumbing)
 - ``functions``  — scalar helpers, incl. engine-portable hashing
+- ``artifacts``  — the one memo for built indexes, signature tables and
+                   models (keyed, source-checked) and the scratch dirs
+                   they live in (swept at exit)
 """
 
 from kafka_streams_the_clojure_way_spark.session import get_spark

@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from kafka_streams_the_clojure_way_spark.functions.portable import MERSENNE_31
 from kafka_streams_the_clojure_way_spark.operators.text import tokens_col, tokens_sql
 from kafka_streams_the_clojure_way_spark.sources.files import (
+    change_token,
     compact_files,
     compact_partitioned,
     invalidate_static_schema,
@@ -62,33 +63,12 @@ SHINGLE_K = 3
 _INDEX_META_CACHE: dict[str, object] = {}
 
 
-def _meta_token(index_path: str):
-    """Best-effort change token for the meta dataset: the sorted
-    (name, size) pairs of its data files. A rebuild writes a NEW
-    part-file whose name embeds a fresh task UUID, so the token changes
-    even when the rewrite lands within the filesystem's timestamp
-    granularity (the r7 mtime token missed coarse-mtime mounts). None
-    on non-local filesystems / missing paths — validation degrades to
-    the explicit-invalidation contract there."""
-    try:
-        meta_dir = os.path.join(index_path, "meta")
-        return tuple(
-            sorted(
-                (name, os.path.getsize(os.path.join(meta_dir, name)))
-                for name in os.listdir(meta_dir)
-                if not name.startswith(("_", "."))
-            )
-        )
-    except OSError:
-        return None
-
-
 def _index_meta(spark, index_path: str):
     """The index's one meta row, cached per process (see cache note).
     Keys are normalized (normpath) so a trailing-slash or ``./`` spelling
     variant of the same directory cannot dodge invalidation and serve
     stale routing parameters. On local filesystems a cache hit also
-    validates a content token of the meta files (part-file names embed
+    validates the meta dataset's ``change_token`` (part-file names embed
     task UUIDs, so any rebuild changes it regardless of timestamp
     granularity), so an out-of-process rebuild of the SAME path is
     picked up without a hook call; elsewhere (object stores), call
@@ -97,7 +77,7 @@ def _index_meta(spark, index_path: str):
     follows."""
     key = os.path.normpath(index_path)
     hit = _INDEX_META_CACHE.get(key)
-    token = _meta_token(index_path)
+    token = change_token(os.path.join(index_path, "meta"))
     if hit is not None:
         row, cached_token = hit
         if token is None or cached_token == token:
@@ -1333,13 +1313,12 @@ def minhash_index_probe(
 
 def _read_optional(spark, path: str):
     """Read a parquet dataset that may not exist (e.g. an index's
-    tombstone set before any delete); returns None when absent. Uses
-    the static-schema cache once the dataset exists (a tombstone set's
-    schema never changes after its first append)."""
-    try:
-        return read_static_schema(spark, path)
-    except Exception:
-        return None
+    tombstone set before any delete); returns None when it holds no
+    parquet file, without asking Spark (the index core is local, like
+    its ``CURRENT`` pointer). Uses the static-schema cache once the
+    dataset exists (a tombstone set's schema never changes after its
+    first append); a read error on an existing dataset raises."""
+    return read_static_schema(spark, path) if _has_parquet(path) else None
 
 
 minhash_index_delete = index_delete
@@ -3326,7 +3305,10 @@ def keyset_index_upsert(
             "segment", F.pmod(hash60(F.col("key")), F.lit(meta["n_segments"]))
         )
     )
-    existing = keyset_index_probe(spark, index_path, base)
+    probe_caches: list = []
+    existing = keyset_index_probe(
+        spark, index_path, base, cache_registry=probe_caches
+    )
     fresh = base.join(F.broadcast(existing), "key", "left_anti")
     bits = (
         _bloom_bit_rows(
@@ -3345,6 +3327,8 @@ def keyset_index_upsert(
     fresh.repartition("segment").write.mode("append").partitionBy("segment").parquet(
         f"{root}/keys"
     )
+    for frame in probe_caches:
+        frame.unpersist()
 
 
 #: ``bits`` OR-folded and ``keys`` unchanged (upserts anti-join, so keys

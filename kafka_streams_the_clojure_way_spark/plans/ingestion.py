@@ -67,6 +67,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka_streams_the_clojure_way_spark.artifacts import release_scratch, scratch_dir
 from kafka_streams_the_clojure_way_spark.operators import dedup as D
 from kafka_streams_the_clojure_way_spark.operators import similarity as S
 from kafka_streams_the_clojure_way_spark.operators import text as T
@@ -75,31 +76,6 @@ from kafka_streams_the_clojure_way_spark.streaming.runner import (
     as_batch_sink,
     run_foreach_batch,
 )
-
-#: live spool paths awaiting cleanup. ONE process-wide atexit handler
-#: sweeps whatever is left at interpreter exit; the normal path is the
-#: cache registry's per-trigger ``unpersist``, which also DISCARDS the
-#: path here — so a long-running stream never accumulates per-trigger
-#: atexit callbacks (each used to register its own; the closures leaked
-#: for the life of the process even after the dir was deleted).
-_LIVE_SPOOLS: set[str] = set()
-_SPOOL_ATEXIT_REGISTERED = False
-
-
-def _register_spool(path: str) -> None:
-    global _SPOOL_ATEXIT_REGISTERED
-    _LIVE_SPOOLS.add(path)
-    if not _SPOOL_ATEXIT_REGISTERED:
-        import atexit
-        import shutil
-
-        def _sweep() -> None:
-            for p in list(_LIVE_SPOOLS):
-                shutil.rmtree(p, ignore_errors=True)
-            _LIVE_SPOOLS.clear()
-
-        atexit.register(_sweep)
-        _SPOOL_ATEXIT_REGISTERED = True
 
 
 class _SpoolDir:
@@ -112,10 +88,7 @@ class _SpoolDir:
         self.path = path
 
     def unpersist(self, *_a, **_k):
-        import shutil
-
-        shutil.rmtree(self.path, ignore_errors=True)
-        _LIVE_SPOOLS.discard(self.path)
+        release_scratch(self.path)
         return self
 
 
@@ -378,12 +351,9 @@ def ingestion_topology(
                 # eager=False — measured 3.7 s of the per-trigger
                 # compile). The spool is batch-survivor-sized; its dir
                 # rides the cache registry so the streaming loop deletes
-                # it per trigger (atexit backstops registry-less
+                # it per trigger (the exit sweep backstops registry-less
                 # callers).
-                import tempfile
-
-                spool = tempfile.mkdtemp(prefix="ingest_spool_")
-                _register_spool(spool)
+                spool = scratch_dir("ingest_spool_")
                 # natural partitioning — no coalesce(1): collapsing the
                 # whole gate chain's final stage to one task serializes
                 # the upstream probes (measured 14s -> 34s on a

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka_streams_the_clojure_way_spark.artifacts import artifact
 from kafka_streams_the_clojure_way_spark.operators import dedup as D
 from kafka_streams_the_clojure_way_spark.operators import similarity as S
 from kafka_streams_the_clojure_way_spark.operators import text as T
@@ -26,6 +27,7 @@ from kafka_streams_the_clojure_way_spark.plans.ingestion import (
 )
 from kafka_streams_the_clojure_way_spark.queries.llm_pipeline import (
     _INCR_NEW_MOD,
+    _bench_keyset_path,
     _minhash_index_path,
 )
 from kafka_streams_the_clojure_way_spark.queries.registry import query
@@ -34,21 +36,26 @@ from kafka_streams_the_clojure_way_spark.sources.files import load_table, read_s
 _B = T.DSIR_BUCKETS
 _Q = T.DSIR_Q
 
-#: per-process trained DSIR ratio tables, keyed by every training
-#: parameter (same staleness rule as the model caches in llm_pipeline).
-_INGEST_RATIO_CACHE: dict[tuple, list[float]] = {}
+
+def _corpus_slice(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return load_table(spark, sf_dir, "documents").filter(
+        F.col("doc_id") % _INCR_NEW_MOD != 0
+    )
 
 
 def _ingest_ratios(spark: SparkSession, sf_dir: str) -> list[float]:
-    key = (sf_dir, _INCR_NEW_MOD, _B, "lang=en")
-    ratios = _INGEST_RATIO_CACHE.get(key)
-    if ratios is None:
-        corpus = load_table(spark, sf_dir, "documents").filter(
-            F.col("doc_id") % _INCR_NEW_MOD != 0
-        )
-        ratios = T.dsir_bucket_ratios(corpus, F.col("lang") == "en")
-        _INGEST_RATIO_CACHE[key] = ratios
-    return ratios
+    """The DSIR gate's trained ratio table over the corpus slice."""
+    return artifact(
+        spark,
+        sf_dir,
+        "ingest_ratios",
+        lambda _: T.dsir_bucket_ratios(
+            _corpus_slice(spark, sf_dir), F.col("lang") == "en"
+        ),
+        _INCR_NEW_MOD,
+        _B,
+        "lang=en",
+    )
 
 
 _PROBE_PRED = f"doc_id % {_INCR_NEW_MOD} = 0"
@@ -57,82 +64,46 @@ _PROBE_PRED = f"doc_id % {_INCR_NEW_MOD} = 0"
 _BENCH_SOURCE = "src0"
 _BUILD_PRED = f"doc_id % {_INCR_NEW_MOD} != 0"
 
-#: per-process persisted hash index over the corpus slice (the exact
-#: gate's serve side) — keyed by every build parameter.
-_INGEST_HASH_INDEX_CACHE: dict[tuple, str] = {}
-
 
 def _ingest_hash_index_path(spark: SparkSession, sf_dir: str) -> str:
-    key = (sf_dir, _INCR_NEW_MOD, D.HASH_INDEX_BUCKETS)
-    path = _INGEST_HASH_INDEX_CACHE.get(key)
-    if path is None:
-        import tempfile
+    """The exact gate's serve side: hash index over the corpus slice."""
 
-        path = tempfile.mkdtemp(prefix="ingest_hash_index_")
-        D.build_hash_index(
-            load_table(spark, sf_dir, "documents").filter(
-                F.col("doc_id") % _INCR_NEW_MOD != 0
-            ),
-            path,
-        )
-        _INGEST_HASH_INDEX_CACHE[key] = path
-    return path
+    def build(path: str) -> str:
+        D.build_hash_index(_corpus_slice(spark, sf_dir), path)
+        return path
 
-
-#: per-process Bloom pre-filter over the corpus slice (the exact gate's
-#: negative-probe fast path) — keyed by every build parameter.
-_INGEST_BLOOM_INDEX_CACHE: dict[tuple, str] = {}
+    return artifact(
+        spark, sf_dir, "ingest_hash_index", build, _INCR_NEW_MOD, D.HASH_INDEX_BUCKETS
+    )
 
 
 def _ingest_bloom_index_path(spark: SparkSession, sf_dir: str) -> str:
-    key = (
-        sf_dir,
-        _INCR_NEW_MOD,
-        D.BLOOM_SEGMENTS,
-        D.BLOOM_WORDS_PER_SEGMENT,
-        D.BLOOM_K,
+    """The exact gate's negative-probe fast path: Bloom pre-filter over
+    the corpus slice."""
+
+    def build(path: str) -> str:
+        D.build_bloom_index(_corpus_slice(spark, sf_dir), path)
+        return path
+
+    return artifact(
+        spark, sf_dir, "ingest_bloom_index", build,
+        _INCR_NEW_MOD, D.BLOOM_SEGMENTS, D.BLOOM_WORDS_PER_SEGMENT, D.BLOOM_K,
     )
-    path = _INGEST_BLOOM_INDEX_CACHE.get(key)
-    if path is None:
-        import tempfile
-
-        path = tempfile.mkdtemp(prefix="ingest_bloom_index_")
-        D.build_bloom_index(
-            load_table(spark, sf_dir, "documents").filter(
-                F.col("doc_id") % _INCR_NEW_MOD != 0
-            ),
-            path,
-        )
-        _INGEST_BLOOM_INDEX_CACHE[key] = path
-    return path
-
-
-#: per-process persisted containment index over the corpus slice —
-#: keyed by every build parameter (same staleness rule as the other
-#: model/index caches).
-_CONTAINMENT_INDEX_CACHE: dict[tuple, str] = {}
 
 
 def _containment_index_path(spark: SparkSession, sf_dir: str) -> str:
-    key = (
-        sf_dir,
-        _INCR_NEW_MOD,
-        D.CONTAINMENT_THRESHOLD_NUM,
-        D.CONTAINMENT_THRESHOLD_DEN,
-    )
-    path = _CONTAINMENT_INDEX_CACHE.get(key)
-    if path is None:
-        import tempfile
+    def build(path: str) -> str:
+        D.build_containment_index(_corpus_slice(spark, sf_dir), path)
+        return path
 
-        path = tempfile.mkdtemp(prefix="containment_index_")
-        D.build_containment_index(
-            load_table(spark, sf_dir, "documents").filter(
-                F.col("doc_id") % _INCR_NEW_MOD != 0
-            ),
-            path,
-        )
-        _CONTAINMENT_INDEX_CACHE[key] = path
-    return path
+    return artifact(
+        spark, sf_dir, "containment_index", build,
+        _INCR_NEW_MOD, D.CONTAINMENT_THRESHOLD_NUM, D.CONTAINMENT_THRESHOLD_DEN,
+    )
+
+
+#: the contamination gate serves from the decontamination query's index
+_ingest_keyset_path = _bench_keyset_path
 
 
 @query(
@@ -222,13 +193,6 @@ WHERE dsir_logweight_r >= {INGEST_DSIR_CUTOFF}
 """
 
 
-#: per-process compiled six-gate topology + derived views, keyed by
-#: (session, sf_dir, slice params). DataFrames are session-bound, so the
-#: applicationId is part of the key (unlike the on-disk index-path
-#: caches, which survive session restarts).
-_SHARED_INGEST_CACHE: dict[tuple, dict] = {}
-
-
 def _shared_ingestion(spark: SparkSession, sf_dir: str) -> dict:
     """Compile the FULL six-gate curation topology ONCE per (session,
     sf_dir) and serve every ``pipeline_ingestion_*`` registry query as a
@@ -257,12 +221,20 @@ def _shared_ingestion(spark: SparkSession, sf_dir: str) -> dict:
     verdict set — per-doc independence makes the union identical to
     probing all containment survivors at once.
 
-    Returns {"probe", "compiled", "sem_flagged_surv3", "embeddings"}.
+    Returns {"probe", "paths"}: the probe slice and the parquet path of
+    each materialized gate output.
     """
-    key = (spark.sparkContext.applicationId, sf_dir, _INCR_NEW_MOD)
-    shared = _SHARED_INGEST_CACHE.get(key)
-    if shared is not None:
-        return shared
+    return artifact(
+        spark,
+        sf_dir,
+        "ingest_gates",
+        lambda mat_dir: _compile_ingestion_gates(spark, sf_dir, mat_dir),
+        _INCR_NEW_MOD,
+        sources=("documents", "embeddings"),
+    )
+
+
+def _compile_ingestion_gates(spark: SparkSession, sf_dir: str, mat_dir: str) -> dict:
     from kafka_streams_the_clojure_way_spark.plans.ingestion import compile_ingestion
 
     docs = load_table(spark, sf_dir, "documents")
@@ -322,9 +294,6 @@ def _shared_ingestion(spark: SparkSession, sf_dir: str) -> dict:
     # writes anyway (the streaming runner materializes per batch); here
     # they make the five registry queries true VIEWS over one compile,
     # priced at a small parquet read per call (VERDICT r7 #4).
-    import tempfile
-
-    mat_dir = tempfile.mkdtemp(prefix="ingest_gates_")
     to_persist = {
         "stream/neardup-gate": compiled["stream/neardup-gate"],
         "stream/dsir-gate": compiled["stream/dsir-gate"],
@@ -339,15 +308,12 @@ def _shared_ingestion(spark: SparkSession, sf_dir: str) -> dict:
         p = f"{mat_dir}/{name.replace('/', '__')}"
         frame.coalesce(4).write.mode("overwrite").parquet(p)
         paths[name] = p
-    shared = {"probe": probe, "paths": paths}
-    _SHARED_INGEST_CACHE[key] = shared
-    return shared
+    return {"probe": probe, "paths": paths}
 
 
 def _shared_gate(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """A materialized gate output of the shared six-gate compile, read
-    back through the CURRENT session (parquet-backed, so the shared
-    compile survives clearCache and session turnover)."""
+    back (parquet-backed, so the shared compile survives clearCache)."""
     return read_static_schema(
         spark, _shared_ingestion(spark, sf_dir)["paths"][name]
     )
@@ -436,27 +402,25 @@ def pipeline_ingestion_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return read_static_schema(spark, audit_path)
 
 
-#: per-process persisted IVF index over the CORPUS slice of the
-#: embeddings table (the semantic gate's serve side) — distinct from
-#: llm_pipeline._ivf_index_path, which indexes the whole table.
-_INGEST_IVF_INDEX_CACHE: dict[tuple, str] = {}
-
-
 def _ingest_ivf_index_path(spark: SparkSession, sf_dir: str) -> str:
-    key = (sf_dir, _INCR_NEW_MOD, S.IVF_CENTROID_MOD, S.IVF_N_CELLS)
-    path = _INGEST_IVF_INDEX_CACHE.get(key)
-    if path is None:
-        import tempfile
+    """The semantic gate's serve side: IVF index over the CORPUS slice
+    of the embeddings table (``llm_pipeline._ivf_index_path`` indexes
+    the whole table)."""
 
-        path = tempfile.mkdtemp(prefix="ingest_ivf_index_")
+    def build(path: str) -> str:
         S.build_ivf_index(
             load_table(spark, sf_dir, "embeddings").filter(
                 F.col("vec_id") % _INCR_NEW_MOD != 0
             ),
             path,
         )
-        _INGEST_IVF_INDEX_CACHE[key] = path
-    return path
+        return path
+
+    return artifact(
+        spark, sf_dir, "ingest_ivf_index", build,
+        _INCR_NEW_MOD, S.IVF_CENTROID_MOD, S.IVF_N_CELLS,
+        sources=("embeddings",),
+    )
 
 
 _EMB_PROBE_PRED = f"vec_id % {_INCR_NEW_MOD} = 0"
@@ -553,36 +517,6 @@ WHERE d.doc_id % {_INCR_NEW_MOD} = 0
 query("pipeline_ingestion_audit", oracle=_INGESTION_AUDIT_ORACLE)(
     pipeline_ingestion_audit
 )
-
-
-#: per-process keyset index over the benchmark slice's shingles — the
-#: ingestion decontamination gate's serve side (bench slice = the
-#: held-out 'src0' source, same convention as text_ngram_contamination).
-_INGEST_KEYSET_CACHE: dict[tuple, str] = {}
-
-def _ingest_keyset_path(spark: SparkSession, sf_dir: str) -> str:
-    key = (
-        sf_dir,
-        _BENCH_SOURCE,
-        T.CONTAM_NGRAM,
-        D.BLOOM_SEGMENTS,
-        D.BLOOM_WORDS_PER_SEGMENT,
-        D.BLOOM_K,
-    )
-    path = _INGEST_KEYSET_CACHE.get(key)
-    if path is None:
-        import tempfile
-
-        path = tempfile.mkdtemp(prefix="ingest_keyset_")
-        docs = load_table(spark, sf_dir, "documents")
-        bench = (
-            docs.filter(F.col("source") == _BENCH_SOURCE)
-            .select(F.explode_outer(T.shingles_col(F.col("text"))).alias("key"))
-            .filter(F.col("key").isNotNull())
-        )
-        D.build_keyset_index(bench, path)
-        _INGEST_KEYSET_CACHE[key] = path
-    return path
 
 
 _INGESTION_DECONTAM_ORACLE = f"""

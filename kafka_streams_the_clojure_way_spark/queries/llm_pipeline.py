@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka_streams_the_clojure_way_spark.artifacts import artifact
 from kafka_streams_the_clojure_way_spark.functions import portable as P
 from kafka_streams_the_clojure_way_spark.operators import clustering as C
 from kafka_streams_the_clojure_way_spark.operators import dedup as D
@@ -209,58 +210,26 @@ def dedup_exact_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _JACCARD_THRESHOLD = 0.8
 
-#: per-process materialized MinHash signature table (doc_id, sh, sig)
-#: per sf_dir — the shared upstream of the minhash dedup family
-#: (pairs, between, clustering, keep-best all consume it instead of
-#: re-shingling the corpus per query; VERDICT r8 #4). Values are
-#: (path, source_token): revalidated against the source documents
-#: table like the jsonl fixture cache; tempdirs register for atexit
-#: cleanup. At 100 TB this is the production shape — the signature
-#: table is ~1% of corpus bytes, written once, fed to every consumer.
-_SHARED_SIGS_CACHE: dict[tuple, tuple[str, object]] = {}
-
-
 def _materialized_sigs(
     spark: SparkSession, sf_dir: str, kind: str, builder, *, table: str = "documents"
 ):
-    """Per-(process, sf) materialized signature table with source-token
-    validation and atexit cleanup — the shared-signature convention:
-    ``builder()`` returns the DataFrame to persist; later calls read
-    the parquet back (cheap column-pruned scans, survives clearCache).
-    At corpus scale these ARE the production artifacts — signature
-    tables a few % of corpus bytes, written once, fed to every
-    consumer. ``table`` names the source parquet the change token
-    watches (the table ``builder`` derives from)."""
-    if sf_dir is None:
-        # test seam: property tests monkeypatch load_table with literal
-        # frames and pass sf_dir=None — there is no source path to
-        # token-validate against, so materializing would serve one
-        # example's artifact to the next. Build inline, cache nothing.
-        return builder()
-    token = _source_table_token(sf_dir, table)
-    key = (sf_dir, kind)
-    from kafka_streams_the_clojure_way_spark.sources.files import (
-        read_static_schema,
+    """A shared signature table: ``builder()`` returns the DataFrame,
+    which is written to parquet once as an :func:`artifact` watching
+    the source ``table``; every consumer reads the parquet back
+    (cheap column-pruned scans, survives clearCache). At corpus scale
+    these ARE the production artifacts — signature tables a few % of
+    corpus bytes, written once, fed to every consumer. The read uses
+    the static-schema cache: the table is immutable once written (a
+    rebuild goes to a fresh dir), so it skips the per-consumer
+    footer-inference job (~80 ms x consumers x passes)."""
+
+    def build(path: str) -> str:
+        builder().write.mode("overwrite").parquet(path)
+        return path
+
+    return read_static_schema(
+        spark, artifact(spark, sf_dir, f"{kind}_sigs", build, sources=(table,))
     )
-
-    hit = _SHARED_SIGS_CACHE.get(key)
-    if hit is not None:
-        path, cached_token = hit
-        if token is None or cached_token == token:
-            # schema-cached read: the table is immutable once written
-            # (rebuilds go to a FRESH tempdir, so a per-path schema cache
-            # can never serve a stale schema) — skips the per-consumer
-            # footer-inference job (~80 ms x consumers x passes).
-            return read_static_schema(spark, path)
-    import atexit
-    import shutil
-    import tempfile
-
-    path = tempfile.mkdtemp(prefix=f"{kind}_sigs_")
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    builder().write.mode("overwrite").parquet(path)
-    _SHARED_SIGS_CACHE[key] = (path, token)
-    return read_static_schema(spark, path)
 
 
 def _shared_minhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -396,49 +365,32 @@ def dedup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: shared verified-pair table and its connected-components labeling
-#: (r11): THREE queries (pairs / cluster assignments / keep-best) each
-#: re-ran the banded candidate join + exact-Jaccard verify — and two of
-#: them the union-find on top — over the shared signature table. Both
-#: artifacts are RESULT-sized (near-dup pairs and one label per doc),
-#: so they are pinned once per (process, sf_dir) like the kmeans model
-#: and the DSIR scored table.
-_LSH_PAIRS_CACHE: dict[tuple, DataFrame] = {}
-_LSH_CLUSTERS_CACHE: dict[tuple, DataFrame] = {}
-
-
-def _session_key(spark: SparkSession, *parts) -> tuple:
-    """Cache key for module-level DataFrame pins: a cached DataFrame's
-    plan is bound to the SparkSession that built it, so the session's
-    applicationId rides in every key — a process that restarts its
-    session re-derives instead of serving a stale/broken plan
-    (ADVICE r11)."""
-    return (spark.sparkContext.applicationId, *parts)
-
-
 def _shared_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = _session_key(spark, sf_dir)
-    pairs = _LSH_PAIRS_CACHE.get(key)
-    if pairs is None:
-        pairs = D.minhash_lsh_pairs_from_sigs(
+    """The verified near-dup pair table, pinned once: the pairs,
+    cluster-assignment and keep-best queries all start from it (r11).
+    Result-sized, like the cluster labels below."""
+    return artifact(
+        spark,
+        sf_dir,
+        "lsh_pairs",
+        lambda _: D.minhash_lsh_pairs_from_sigs(
             _shared_minhash_sigs(spark, sf_dir), threshold=_JACCARD_THRESHOLD
-        ).cache()
-        _LSH_PAIRS_CACHE[key] = pairs
-    return pairs
+        ).cache(),
+    )
 
 
 def _shared_lsh_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = _session_key(spark, sf_dir)
-    clusters = _LSH_CLUSTERS_CACHE.get(key)
-    if clusters is None:
-        from kafka_streams_the_clojure_way_spark.operators import graph as G
+    from kafka_streams_the_clojure_way_spark.operators import graph as G
 
-        docs = load_table(spark, sf_dir, "documents")
-        clusters = G.cluster_assignments(
-            docs.select("doc_id"), _shared_lsh_pairs(spark, sf_dir)
-        ).cache()
-        _LSH_CLUSTERS_CACHE[key] = clusters
-    return clusters
+    return artifact(
+        spark,
+        sf_dir,
+        "lsh_clusters",
+        lambda _: G.cluster_assignments(
+            load_table(spark, sf_dir, "documents").select("doc_id"),
+            _shared_lsh_pairs(spark, sf_dir),
+        ).cache(),
+    )
 
 
 @query(
@@ -493,16 +445,6 @@ def dedup_incremental_new_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: per-process cache of built MinHash indexes: the build/serve split
-#: means the corpus is signed/banded ONCE and every probe after that
-#: pays only its own batch — exactly the production ingestion contract
-#: (and what the bench measures after first touch). KEYED BY EVERY
-#: build parameter, not just sf_dir, so a hyperparameter edit can never
-#: silently serve a model trained under the old parameters (same rule
-#: for all the model caches below).
-_MINHASH_INDEX_CACHE: dict[tuple, str] = {}
-
-
 def _minhash_index_path(
     spark: SparkSession,
     sf_dir: str,
@@ -511,12 +453,11 @@ def _minhash_index_path(
     bands: int = D.LSH_BANDS,
     n_buckets: int = D.MINHASH_INDEX_BUCKETS,
 ) -> str:
-    key = (sf_dir, _INCR_NEW_MOD, n_hashes, bands, n_buckets)
-    path = _MINHASH_INDEX_CACHE.get(key)
-    if path is None:
-        import tempfile
+    """The corpus slice's MinHash band index: the corpus is signed and
+    banded once, and every probe after that pays only its own batch —
+    the production ingestion contract."""
 
-        path = tempfile.mkdtemp(prefix="minhash_index_")
+    def build(path: str) -> str:
         docs = load_table(spark, sf_dir, "documents")
         D.build_minhash_index(
             docs.filter(F.col("doc_id") % _INCR_NEW_MOD != 0),
@@ -525,8 +466,12 @@ def _minhash_index_path(
             bands=bands,
             n_buckets=n_buckets,
         )
-        _MINHASH_INDEX_CACHE[key] = path
-    return path
+        return path
+
+    return artifact(
+        spark, sf_dir, "minhash_index", build,
+        _INCR_NEW_MOD, n_hashes, bands, n_buckets,
+    )
 
 
 @query(
@@ -561,25 +506,16 @@ def dedup_incremental_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
 _EXACT_PROBE_MOD = 50
 _EXACT_PROBE_ID_SHIFT = 1_000_000
 
-#: per-process hash-index cache, keyed by every build parameter (same
-#: stale-model rule as the MinHash/k-means/PQ caches).
-_HASH_INDEX_CACHE: dict[tuple, str] = {}
-
-
 def _hash_index_path(
     spark: SparkSession, sf_dir: str, *, n_buckets: int = D.HASH_INDEX_BUCKETS
 ) -> str:
-    key = (sf_dir, n_buckets)
-    path = _HASH_INDEX_CACHE.get(key)
-    if path is None:
-        import tempfile
-
-        path = tempfile.mkdtemp(prefix="hash_index_")
+    def build(path: str) -> str:
         D.build_hash_index(
             load_table(spark, sf_dir, "documents"), path, n_buckets=n_buckets
         )
-        _HASH_INDEX_CACHE[key] = path
-    return path
+        return path
+
+    return artifact(spark, sf_dir, "hash_index", build, n_buckets)
 
 
 @query(
@@ -612,26 +548,15 @@ def dedup_incremental_exact_indexed(spark: SparkSession, sf_dir: str) -> DataFra
     return D.hash_index_probe(spark, path, batch)
 
 
-#: per-process Bloom-filter cache, keyed by every build parameter (same
-#: stale-model rule as the hash/MinHash/k-means/PQ caches).
-_BLOOM_INDEX_CACHE: dict[tuple, str] = {}
-
-
 def _bloom_index_path(spark: SparkSession, sf_dir: str) -> str:
-    key = (
-        sf_dir,
-        D.BLOOM_SEGMENTS,
-        D.BLOOM_WORDS_PER_SEGMENT,
-        D.BLOOM_K,
-    )
-    path = _BLOOM_INDEX_CACHE.get(key)
-    if path is None:
-        import tempfile
-
-        path = tempfile.mkdtemp(prefix="bloom_index_")
+    def build(path: str) -> str:
         D.build_bloom_index(load_table(spark, sf_dir, "documents"), path)
-        _BLOOM_INDEX_CACHE[key] = path
-    return path
+        return path
+
+    return artifact(
+        spark, sf_dir, "bloom_index", build,
+        D.BLOOM_SEGMENTS, D.BLOOM_WORDS_PER_SEGMENT, D.BLOOM_K,
+    )
 
 
 @query(
@@ -672,22 +597,18 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.simhash_pairs(load_table(spark, sf_dir, "documents"))
 
 
-#: shared maximal-duplicated-span table (r11): the span query and its
-#: per-doc stats consumer compute the IDENTICAL spans from the shared
-#: gram postings. Merged spans are a result-sized table (per-doc
-#: maximal intervals), pinned once per (process, sf_dir).
-_NGRAM_SPANS_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _shared_ngram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = _session_key(spark, sf_dir)
-    spans = _NGRAM_SPANS_CACHE.get(key)
-    if spans is None:
-        spans = D.duplicate_ngram_spans(
+    """Maximal duplicated spans, pinned once: the span query and its
+    per-doc stats consumer compute the identical result-sized table
+    from the shared gram postings (r11)."""
+    return artifact(
+        spark,
+        sf_dir,
+        "ngram_spans",
+        lambda _: D.duplicate_ngram_spans(
             None, postings=_shared_gram_postings(spark, sf_dir)
-        ).cache()
-        _NGRAM_SPANS_CACHE[key] = spans
-    return spans
+        ).cache(),
+    )
 
 
 @query("dedup_ngram_span_documents", oracle=D.duplicate_ngram_spans_sql())
@@ -859,12 +780,6 @@ def sim_ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: per-process persisted IVF index (build_ivf_index artifact) — the
-#: disk-backed serve path registered right next to the inline query so
-#: the driver's correctness sample exercises the index itself.
-_IVF_INDEX_CACHE: dict[tuple, str] = {}
-
-
 def _ivf_index_path(
     spark: SparkSession,
     sf_dir: str,
@@ -872,20 +787,22 @@ def _ivf_index_path(
     centroid_mod: int = S.IVF_CENTROID_MOD,
     n_cells: int = S.IVF_N_CELLS,
 ) -> str:
-    key = (sf_dir, centroid_mod, n_cells)
-    path = _IVF_INDEX_CACHE.get(key)
-    if path is None:
-        import tempfile
+    """The persisted IVF index, registered right next to the inline
+    query so the oracle checks exercise the index itself."""
 
-        path = tempfile.mkdtemp(prefix="ivf_index_")
+    def build(path: str) -> str:
         S.build_ivf_index(
             load_table(spark, sf_dir, "embeddings"),
             path,
             centroid_mod=centroid_mod,
             n_cells=n_cells,
         )
-        _IVF_INDEX_CACHE[key] = path
-    return path
+        return path
+
+    return artifact(
+        spark, sf_dir, "ivf_index", build, centroid_mod, n_cells,
+        sources=("embeddings",),
+    )
 
 
 @query(
@@ -911,16 +828,10 @@ def sim_ivf_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: shipped SFs is NOT required (frozen-quantizer semantics keep a
 #: deleted vector's centroid), matching exclude_sql in the oracle.
 _IVF_TOMB_MOD, _IVF_TOMB_REM = 40, 3
-_IVF_TOMB_INDEX_CACHE: dict[tuple, str] = {}
 
 
 def _ivf_tomb_index_path(spark: SparkSession, sf_dir: str) -> str:
-    key = (sf_dir, S.IVF_CENTROID_MOD, S.IVF_N_CELLS, _IVF_TOMB_MOD, _IVF_TOMB_REM)
-    path = _IVF_TOMB_INDEX_CACHE.get(key)
-    if path is None:
-        import tempfile
-
-        path = tempfile.mkdtemp(prefix="ivf_tomb_index_")
+    def build(path: str) -> str:
         emb = load_table(spark, sf_dir, "embeddings")
         S.build_ivf_index(emb, path)
         S.ivf_index_delete(
@@ -930,8 +841,13 @@ def _ivf_tomb_index_path(spark: SparkSession, sf_dir: str) -> str:
                 "vec_id"
             ),
         )
-        _IVF_TOMB_INDEX_CACHE[key] = path
-    return path
+        return path
+
+    return artifact(
+        spark, sf_dir, "ivf_tomb_index", build,
+        S.IVF_CENTROID_MOD, S.IVF_N_CELLS, _IVF_TOMB_MOD, _IVF_TOMB_REM,
+        sources=("embeddings",),
+    )
 
 
 @query(
@@ -991,50 +907,45 @@ def sim_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return S.quantized_topk(emb, _queries_frame(spark, sf_dir), k=10)
 
 
-#: per-process cache of the ONE trained k-means model per sf_dir: every
-#: k-means consumer (assignments query, SemDeDup, cluster-balanced
-#: sampling) assigns against the same persisted quantizer instead of
-#: re-running the Lloyd chain — train once, serve everywhere. Assignment
-#: against the model is bit-equal to inline training (kmeans_fit
-#: persists exactly the post-n_iter centroids), so the unrolled-CTE
-#: oracles are untouched.
-_KMEANS_MODEL_CACHE: dict[tuple, DataFrame] = {}
-#: same build/serve split for the quantization indexes: PQ codebooks +
-#: codes and the IVF-PQ (centroids, codebooks, codes) triple are trained
-#: once per (process, sf_dir) and every probe serves against them —
-#: training is deterministic, so cached-model results are bit-identical
-#: to inline training and the oracles are untouched.
-_PQ_MODEL_CACHE: dict[tuple, tuple] = {}
-_IVFPQ_MODEL_CACHE: dict[tuple, tuple] = {}
-#: and for the inline-IVF coarse quantizer: the deterministic centroid
-#: subset is THE model (n_cells rows); collect it once per (process,
-#: sf_dir) so each probe query routes row-locally without paying a
-#: model-collect job per call (r11 — same train/serve split as above).
-_IVF_CENT_CACHE: dict[tuple, list] = {}
-
-
 def _ivf_cent_rows(spark: SparkSession, sf_dir: str) -> list:
-    key = (sf_dir, S.IVF_CENTROID_MOD, S.IVF_N_CELLS)
-    rows = _IVF_CENT_CACHE.get(key)
-    if rows is None:
-        rows = S.ivf_centroid_rows(load_table(spark, sf_dir, "embeddings"))
-        _IVF_CENT_CACHE[key] = rows
-    return rows
+    """The inline-IVF coarse quantizer: the deterministic centroid
+    subset is THE model (n_cells rows), collected once so each probe
+    query routes row-locally without a model-collect job per call
+    (r11)."""
+    return artifact(
+        spark,
+        sf_dir,
+        "ivf_cent_rows",
+        lambda _: S.ivf_centroid_rows(load_table(spark, sf_dir, "embeddings")),
+        S.IVF_CENTROID_MOD,
+        S.IVF_N_CELLS,
+        sources=("embeddings",),
+    )
 
 
 def _kmeans_model(
     spark: SparkSession, sf_dir: str, *, k: int = 8, n_iter: int = 3
 ) -> DataFrame:
-    key = _session_key(spark, sf_dir, k, n_iter)
-    model = _KMEANS_MODEL_CACHE.get(key)
-    if model is None:
-        import tempfile
-
-        path = tempfile.mkdtemp(prefix="kmeans_model_") + "/centroids"
-        emb = load_table(spark, sf_dir, "embeddings")
-        model = C.kmeans_fit(emb, k=k, n_iter=n_iter, path=path)
-        _KMEANS_MODEL_CACHE[key] = model
-    return model
+    """The ONE trained k-means model: every k-means consumer
+    (assignments query, SemDeDup, cluster-balanced sampling) assigns
+    against the same persisted quantizer — train once, serve
+    everywhere. Assignment against the model is bit-equal to inline
+    training (kmeans_fit persists exactly the post-n_iter centroids),
+    so the unrolled-CTE oracles are untouched."""
+    return artifact(
+        spark,
+        sf_dir,
+        "kmeans_model",
+        lambda path: C.kmeans_fit(
+            load_table(spark, sf_dir, "embeddings"),
+            k=k,
+            n_iter=n_iter,
+            path=f"{path}/centroids",
+        ),
+        k,
+        n_iter,
+        sources=("embeddings",),
+    )
 
 
 @query("cluster_kmeans_embeddings", oracle=C.kmeans_sql())
@@ -1332,14 +1243,15 @@ def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         pq_model,
     )
 
-    key = _session_key(spark, sf_dir, PQ_M, PQ_K, PQ_ITERS)
-    got = _PQ_MODEL_CACHE.get(key)
-    if got is None:
+    def build(_) -> tuple:
         emb = load_table(spark, sf_dir, "embeddings")
         codebook, codes = pq_model(emb, m=PQ_M, k=PQ_K, n_iter=PQ_ITERS)
-        got = (codebook, codes.cache())
-        _PQ_MODEL_CACHE[key] = got
-    codebook, codes = got
+        return codebook, codes.cache()
+
+    codebook, codes = artifact(
+        spark, sf_dir, "pq_model", build, PQ_M, PQ_K, PQ_ITERS,
+        sources=("embeddings",),
+    )
     return adc_topk(codes, codebook, _queries_frame(spark, sf_dir))
 
 
@@ -1369,16 +1281,18 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivfpq_serve,
     )
 
-    key = _session_key(spark, sf_dir, 17, PQ_M, PQ_K, PQ_ITERS, S.IVF_N_CELLS)
-    got = _IVFPQ_MODEL_CACHE.get(key)
-    if got is None:
-        emb = load_table(spark, sf_dir, "embeddings")
-        got = ivfpq_model(
-            emb, centroid_mod=17, m=PQ_M, k=PQ_K, n_iter=PQ_ITERS,
+    cent_rows, codebook, codes = artifact(
+        spark,
+        sf_dir,
+        "ivfpq_model",
+        lambda _: ivfpq_model(
+            load_table(spark, sf_dir, "embeddings"),
+            centroid_mod=17, m=PQ_M, k=PQ_K, n_iter=PQ_ITERS,
             n_cells=S.IVF_N_CELLS,
-        )
-        _IVFPQ_MODEL_CACHE[key] = got
-    cent_rows, codebook, codes = got
+        ),
+        17, PQ_M, PQ_K, PQ_ITERS, S.IVF_N_CELLS,
+        sources=("embeddings",),
+    )
     return ivfpq_serve(cent_rows, codebook, codes, _queries_frame(spark, sf_dir))
 
 
@@ -2016,18 +1930,8 @@ def dedup_image_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return IH.phash_pairs(None, sigs=_shared_image_phashes(spark, sf_dir))
 
 
-#: per-process persisted pHash band index over the corpus slice — same
-#: staleness key convention as the other index caches.
-_PHASH_INDEX_CACHE: dict[tuple, str] = {}
-
-
 def _phash_index_path(spark: SparkSession, sf_dir: str) -> str:
-    key = (sf_dir, _INCR_NEW_MOD, IH.PHASH_BANDS, "png")
-    path = _PHASH_INDEX_CACHE.get(key)
-    if path is None:
-        import tempfile
-
-        path = tempfile.mkdtemp(prefix="phash_index_")
+    def build(path: str) -> str:
         IH.build_phash_index(
             _image_assets(spark, sf_dir).filter(
                 F.col("doc_id") % _INCR_NEW_MOD != 0
@@ -2035,8 +1939,11 @@ def _phash_index_path(spark: SparkSession, sf_dir: str) -> str:
             path,
             decode="png",
         )
-        _PHASH_INDEX_CACHE[key] = path
-    return path
+        return path
+
+    return artifact(
+        spark, sf_dir, "phash_index", build, _INCR_NEW_MOD, IH.PHASH_BANDS, "png"
+    )
 
 
 #: the probe slice: re-encoded copies of docs already IN the corpus
@@ -2227,25 +2134,20 @@ def dedup_video_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return IH.video_phash_pairs(None, sigs=_shared_video_sigs(spark, sf_dir))
 
 
-#: per-process persisted video frame index over the corpus slice.
-_VIDEO_INDEX_CACHE: dict[tuple, str] = {}
-
-
 def _video_index_path(spark: SparkSession, sf_dir: str) -> str:
-    key = (sf_dir, _INCR_NEW_MOD, IH.VIDEO_BANDS, IH.VIDEO_INDEX_BUCKETS, "y4m_mixed")
-    path = _VIDEO_INDEX_CACHE.get(key)
-    if path is None:
-        import tempfile
-
-        path = tempfile.mkdtemp(prefix="video_phash_index_")
+    def build(path: str) -> str:
         corpus = (
             load_table(spark, sf_dir, "documents")
             .select("doc_id", "text")
             .filter(F.col("doc_id") % _INCR_NEW_MOD != 0)
         )
         IH.build_video_phash_index(_encode_video_mixed(corpus), path)
-        _VIDEO_INDEX_CACHE[key] = path
-    return path
+        return path
+
+    return artifact(
+        spark, sf_dir, "video_phash_index", build,
+        _INCR_NEW_MOD, IH.VIDEO_BANDS, IH.VIDEO_INDEX_BUCKETS, "y4m_mixed",
+    )
 
 
 _VIDEO_INDEXED_ORACLE = IH.video_phash_pairs_between_sql(
@@ -2570,28 +2472,20 @@ def dedup_audio_fp_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return AFP.audio_fp_pairs(None, fps=_shared_audio_fps(spark, sf_dir))
 
 
-#: per-process persisted audio fingerprint index over the corpus slice —
-#: same staleness-key convention as the other index caches.
-_AUDIOFP_INDEX_CACHE: dict[tuple, str] = {}
-
-
 def _audiofp_index_path(spark: SparkSession, sf_dir: str) -> str:
-    key = (sf_dir, _INCR_NEW_MOD, AFP.AUDIO_DF_CAP, AFP.AUDIO_MIN_SHARED, "wav")
-    path = _AUDIOFP_INDEX_CACHE.get(key)
-    if path is None:
-        import tempfile
-
-        path = tempfile.mkdtemp(prefix="audiofp_index_")
+    def build(path: str) -> str:
         corpus = (
             load_table(spark, sf_dir, "documents")
             .select("doc_id", "text")
             .filter(F.col("doc_id") % _INCR_NEW_MOD != 0)
         )
-        AFP.build_audiofp_index(
-            _audio_assets_from(corpus), path, decode="wav"
-        )
-        _AUDIOFP_INDEX_CACHE[key] = path
-    return path
+        AFP.build_audiofp_index(_audio_assets_from(corpus), path, decode="wav")
+        return path
+
+    return artifact(
+        spark, sf_dir, "audiofp_index", build,
+        _INCR_NEW_MOD, AFP.AUDIO_DF_CAP, AFP.AUDIO_MIN_SHARED, "wav",
+    )
 
 
 _AUDIO_INDEXED_ORACLE = AFP.audio_fp_pairs_between_sql(
@@ -4191,20 +4085,16 @@ def sample_dsir_logweights(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: shared DSIR scorer (r11): logweights and resample-topk run the
-#: IDENTICAL two-pass scoring pipeline; its OUTPUT is one row per doc
-#: (doc_id, n_tokens, w) — document-count-sized, NOT token-scale, so
-#: unlike the rejected (doc, lang, bucket) cache this pin is the
-#: model/result-sized artifact both consumers serve from. One frame per
-#: (process, sf_dir), same family-shared pattern as the kmeans model.
-_DSIR_SCORED_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _dsir_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = _session_key(spark, sf_dir)
-    scored = _DSIR_SCORED_CACHE.get(key)
-    if scored is not None:
-        return scored
+    """The shared DSIR scorer (r11): logweights and resample-topk run
+    the identical two-pass scoring pipeline, whose OUTPUT is one row
+    per doc (doc_id, n_tokens, w) — document-count-sized, NOT
+    token-scale, so unlike the rejected (doc, lang, bucket) cache this
+    pin is the model/result-sized artifact both consumers serve from."""
+    return artifact(spark, sf_dir, "dsir_scored", lambda _: _dsir_score(spark, sf_dir))
+
+
+def _dsir_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = _shared_tokens(spark, sf_dir).select(
         "doc_id",
         "lang",
@@ -4241,7 +4131,7 @@ def _dsir_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_buckets = bucketed.groupBy("doc_id", "bucket").agg(
         F.count(F.lit(1)).alias("cnt")
     )
-    scored = (
+    return (
         doc_buckets.join(F.broadcast(ratio), "bucket")
         .groupBy("doc_id")
         .agg(
@@ -4250,8 +4140,6 @@ def _dsir_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cache()
     )
-    _DSIR_SCORED_CACHE[key] = scored
-    return scored
 
 
 _BIGRAM_HEAD_K = 64  # Zipf-head broadcast size, same policy as the unigram LM
@@ -4969,30 +4857,23 @@ def eval_ann_quantized_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ann_quality_frame(spark, sf_dir, approx)
 
 
-#: shared exact ground truth for the ANN evals (r11): both eval queries
-#: grade against the SAME brute-force top-10 — an n_queries x 10 RESULT
-#: table, pinned once per (process, sf_dir) like the other model-sized
-#: shared artifacts (it already had an in-query cache for its two
-#: consumers; this lifts it to the family).
-_ANN_TRUTH_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _ann_truth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = _session_key(spark, sf_dir)
-    truth = _ANN_TRUTH_CACHE.get(key)
-    if truth is None:
-        truth = (
-            S.brute_force_topk(
-                load_table(spark, sf_dir, "embeddings"),
-                _queries_frame(spark, sf_dir),
-                k=10,
-                assume_bounded=True,
-            )
-            .select("query_id", "neighbor_id")
-            .cache()
+    """Exact brute-force top-10, the shared ground truth both ANN eval
+    queries grade against (r11) — an n_queries x 10 result table."""
+    return artifact(
+        spark,
+        sf_dir,
+        "ann_truth",
+        lambda _: S.brute_force_topk(
+            load_table(spark, sf_dir, "embeddings"),
+            _queries_frame(spark, sf_dir),
+            k=10,
+            assume_bounded=True,
         )
-        _ANN_TRUTH_CACHE[key] = truth
-    return truth
+        .select("query_id", "neighbor_id")
+        .cache(),
+        sources=("embeddings",),
+    )
 
 
 def _ann_quality_frame(
@@ -5662,25 +5543,12 @@ def meta_bloom_index_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: per-process keyset index over the benchmark slice's shingles (the
-#: decontamination gate's serve side) — keyed by every build parameter.
-_KEYSET_INDEX_CACHE: dict[tuple, str] = {}
-
-
 def _bench_keyset_path(spark: SparkSession, sf_dir: str) -> str:
-    key = (
-        sf_dir,
-        _BENCH_SOURCE,
-        T.CONTAM_NGRAM,
-        D.BLOOM_SEGMENTS,
-        D.BLOOM_WORDS_PER_SEGMENT,
-        D.BLOOM_K,
-    )
-    path = _KEYSET_INDEX_CACHE.get(key)
-    if path is None:
-        import tempfile
+    """Keyset index over the benchmark slice's shingles: the serve side
+    of the decontamination query here and of the ingestion topology's
+    contamination gate."""
 
-        path = tempfile.mkdtemp(prefix="bench_keyset_")
+    def build(path: str) -> str:
         docs = load_table(spark, sf_dir, "documents")
         bench_grams = (
             docs.filter(F.col("source") == _BENCH_SOURCE)
@@ -5688,8 +5556,13 @@ def _bench_keyset_path(spark: SparkSession, sf_dir: str) -> str:
             .filter(F.col("key").isNotNull())
         )
         D.build_keyset_index(bench_grams, path)
-        _KEYSET_INDEX_CACHE[key] = path
-    return path
+        return path
+
+    return artifact(
+        spark, sf_dir, "bench_keyset", build,
+        _BENCH_SOURCE, T.CONTAM_NGRAM,
+        D.BLOOM_SEGMENTS, D.BLOOM_WORDS_PER_SEGMENT, D.BLOOM_K,
+    )
 
 
 @query("text_contamination_bloom_gated", oracle=ORACLES["text_ngram_contamination"])
@@ -6082,62 +5955,22 @@ def source_warc_records(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Compressed JSON-lines ingestion (the other arrival container)
 # --------------------------------------------------------------------------
 
-#: per-process materialized jsonl.gz copy of each sf_dir's documents —
-#: the fixture side of the ingestion seam, written once per (process,
-#: sf), exactly like the persisted index builds. Values are
-#: (path, source_token): the cache revalidates a content token of the
-#: SOURCE documents table (the _index_meta convention) so an in-process
-#: rewrite of the table can never serve a stale fixture; the temp dirs
-#: register for atexit removal so a long-lived process doesn't leak one
-#: gzip corpus copy per sf_dir (ADVICE r8).
-_JSONL_CACHE: dict[str, tuple[str, object]] = {}
-
-
-def _source_table_token(sf_dir: str, table: str = "documents"):
-    """Best-effort change token for a source parquet table: sorted
-    (name, size, mtime_ns) of its data files (file or directory layout).
-    None when unreadable — validation degrades to cache-by-path."""
-    import os
-
-    root = os.path.join(sf_dir, f"{table}.parquet")
-    try:
-        if os.path.isdir(root):
-            names = sorted(
-                n for n in os.listdir(root) if not n.startswith(("_", "."))
-            )
-            return tuple(
-                (n, os.path.getsize(os.path.join(root, n)),
-                 os.stat(os.path.join(root, n)).st_mtime_ns)
-                for n in names
-            )
-        st = os.stat(root)
-        return ((os.path.basename(root), st.st_size, st.st_mtime_ns),)
-    except OSError:
-        return None
-
 
 def _jsonl_gz_path(spark: SparkSession, sf_dir: str) -> str:
-    token = _source_table_token(sf_dir)
-    hit = _JSONL_CACHE.get(sf_dir)
-    if hit is not None:
-        path, cached_token = hit
-        if token is None or cached_token == token:
-            return path
-    import atexit
-    import shutil
-    import tempfile
+    """The documents table as gzip JSON lines — the fixture side of the
+    ingestion seam."""
 
-    path = tempfile.mkdtemp(prefix="docs_jsonl_")
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "source", "lang", "text")
-        .write.mode("overwrite")
-        .option("compression", "gzip")
-        .json(path)
-    )
-    _JSONL_CACHE[sf_dir] = (path, token)
-    return path
+    def build(path: str) -> str:
+        (
+            load_table(spark, sf_dir, "documents")
+            .select("doc_id", "source", "lang", "text")
+            .write.mode("overwrite")
+            .option("compression", "gzip")
+            .json(path)
+        )
+        return path
+
+    return artifact(spark, sf_dir, "docs_jsonl", build)
 
 
 @query(

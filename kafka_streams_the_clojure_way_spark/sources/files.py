@@ -170,32 +170,43 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
 #: invalidate below).
 _SCHEMA_CACHE: dict[str, object] = {}
 
-#: listing-token-validated DataFrame cache for the same datasets
+#: change-token-validated DataFrame cache for the same datasets
 #: (r11): ``spark.read.parquet`` builds a fresh InMemoryFileIndex per
 #: call — a driver-side LISTING of the dataset tree (~0.1-0.25 s for a
 #: partitioned index's hundreds of leaf dirs), repeated for every probe
 #: of every query and ~10x per streaming trigger. A cached DataFrame is
-#: reused ONLY while the dataset's (relative-path, size) file token is
-#: unchanged — any append/compact/rebuild writes part-files with fresh
-#: task-UUID names, so the token flips and the next read lists fresh
-#: (the `_meta_token` convention). On filesystems where the local walk
-#: fails (object stores) the token is None and every read stays fresh —
-#: the pre-r11 behavior. Metadata caching only: every query still
-#: computes from the parquet bytes.
+#: reused ONLY while the dataset's :func:`change_token` is unchanged —
+#: any append/compact/rebuild writes part-files with fresh task-UUID
+#: names, and an in-place rewrite of a single-file table changes its
+#: size or mtime, so the token flips and the next read lists fresh. On
+#: filesystems where the local walk fails (object stores) the token is
+#: None and every read stays fresh. Metadata caching only: every query
+#: still computes from the parquet bytes.
 _DF_CACHE: dict[tuple, tuple[object, DataFrame]] = {}
 
 
-def _listing_token(path: str):
+def change_token(path: str):
+    """The engine's one "has this dataset changed?" test: sorted
+    ``(relpath, name, size, mtime_ns)`` over the data files of ``path``
+    (a single file or a directory tree; names starting with ``_`` or
+    ``.`` are not data). Part-file names embed task UUIDs, so a rewrite
+    changes the token even within the filesystem's timestamp
+    granularity. None when ``path`` is missing or unreadable — callers
+    then fall back to their explicit-invalidation contract."""
     try:
+        if os.path.isfile(path):
+            st = os.stat(path)
+            return ((".", os.path.basename(path), st.st_size, st.st_mtime_ns),)
+        if not os.path.isdir(path):
+            return None
         entries = []
         for root, _dirs, files in os.walk(path):
             rel = os.path.relpath(root, path)
             for f in files:
                 if f.startswith(("_", ".")):
                     continue
-                entries.append(
-                    (rel, f, os.path.getsize(os.path.join(root, f)))
-                )
+                st = os.stat(os.path.join(root, f))
+                entries.append((rel, f, st.st_size, st.st_mtime_ns))
         return tuple(sorted(entries))
     except OSError:
         return None
@@ -214,7 +225,7 @@ def read_static_schema(spark: SparkSession, path: str) -> DataFrame:
     root (the index build_* functions do, via their meta invalidation
     hook)."""
     key = os.path.normpath(path)
-    token = _listing_token(key)
+    token = change_token(key)
     dkey = (key, id(spark))
     if token is not None:
         hit = _DF_CACHE.get(dkey)

@@ -93,3 +93,60 @@ def test_directory_without_current_pointer_raises_rebuild_error(tmp_path):
         D.index_dataset_root(str(legacy))
     with pytest.raises(FileNotFoundError, match="no CURRENT pointer"):
         D.gc_index_versions(str(legacy))
+
+
+def test_keyset_upsert_leaves_no_persisted_frames(spark, tmp_path):
+    """The upsert's membership probe caches its key frames; they are
+    released after the appends, so a long-running loop does not grow
+    the persistent-RDD set by two per upsert."""
+    path = str(tmp_path / "keyset")
+    D.build_keyset_index(
+        spark.createDataFrame([(f"k{i}",) for i in range(20)], "key string"), path
+    )
+    def persistent():
+        # ids, not a count: the context cleaner may release other tests'
+        # frames while this one runs
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    before = persistent()
+    for wave in range(3):
+        new = spark.createDataFrame(
+            [(f"k{i}",) for i in range(wave, wave + 3)]
+            + [(f"w{wave}_{i}",) for i in range(2)],
+            "key string",
+        )
+        D.keyset_index_upsert(spark, path, new)
+        assert persistent() <= before, "the upsert left persisted frames"
+    probe_caches: list = []
+    hits = D.keyset_index_probe(
+        spark,
+        path,
+        spark.createDataFrame([("w2_1",), ("k19",), ("nope",)], "key string"),
+        cache_registry=probe_caches,
+    )
+    assert sorted(r.key for r in hits.collect()) == ["k19", "w2_1"]
+    for frame in probe_caches:
+        frame.unpersist()
+
+
+def test_probe_without_tombstones_never_reads_them(spark, tmp_path, monkeypatch):
+    """An index without a tombstone set is probed without asking Spark
+    to read the missing ``tombstones`` dataset (a failed analysis and a
+    logged FileNotFoundException per probe)."""
+    docs = spark.createDataFrame(
+        [(1, "the cat sat down"), (2, "a dog ran off")], "doc_id long, text string"
+    )
+    path = str(tmp_path / "hash")
+    D.build_hash_index(docs, path)
+    read = []
+    real = D.read_static_schema
+
+    def spy(spark, p):
+        read.append(p)
+        return real(spark, p)
+
+    monkeypatch.setattr(D, "read_static_schema", spy)
+    twins = docs.select((F.col("doc_id") + 10).alias("doc_id"), "text")
+    assert len(D.hash_index_probe(spark, path, twins).collect()) == 2
+    assert read, "the probe reads the index through read_static_schema"
+    assert not any(p.rstrip("/").endswith("tombstones") for p in read)

@@ -237,17 +237,15 @@ def test_batch_routing_tolerates_null_text(spark):
 
 
 def test_spool_atexit_registry_deregisters():
+    from kafka_streams_the_clojure_way_spark import artifacts as A
     from kafka_streams_the_clojure_way_spark.plans import ingestion as I
 
-    before = set(I._LIVE_SPOOLS)
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix="ingest_spool_test_")
-    I._register_spool(d)
-    assert d in I._LIVE_SPOOLS
+    before = set(A._LIVE_SCRATCH)
+    d = A.scratch_dir("ingest_spool_test_")
+    assert d in A._LIVE_SCRATCH
     I._SpoolDir(d).unpersist()
-    assert d not in I._LIVE_SPOOLS
-    assert I._LIVE_SPOOLS == before
+    assert d not in A._LIVE_SCRATCH
+    assert A._LIVE_SCRATCH == before
 
 
 # ---------------------------------------------------------------------------

@@ -88,30 +88,30 @@ def test_bloom_gated_exact_probe_forwards_cache_registry(spark, tmp_path):
         frame.unpersist()
 
 
-def test_jsonl_gz_cache_revalidates_and_registers_cleanup(tmp_path):
+def test_jsonl_gz_cache_revalidates_and_registers_cleanup(tmp_path, sf_dir):
     """ADVICE r8: the jsonl.gz fixture cache keys on a content token of
     the source documents table (a rewrite invalidates it) and temp dirs
-    register for atexit cleanup instead of leaking."""
+    register for atexit cleanup instead of leaking. Both now live in the
+    artifact core: ``sources.files.change_token`` and the exit sweep of
+    ``artifacts.scratch_dir``."""
     import os
 
-    from kafka_streams_the_clojure_way_spark.queries.llm_pipeline import (
-        _source_table_token,
-    )
+    from kafka_streams_the_clojure_way_spark.sources.files import change_token
 
     sf = tmp_path / "sf_fake"
     sf.mkdir()
     doc = sf / "documents.parquet"
     doc.write_bytes(b"one")
-    t1 = _source_table_token(str(sf))
+    t1 = change_token(str(doc))
     assert t1 is not None
     # same content -> same token
-    assert _source_table_token(str(sf)) == t1
+    assert change_token(str(doc)) == t1
     # rewrite -> token changes (size differs; mtime_ns covers same-size)
     doc.write_bytes(b"rewritten")
-    assert _source_table_token(str(sf)) != t1
+    assert change_token(str(doc)) != t1
     # unreadable -> None (degrade to cache-by-path)
-    assert _source_table_token(str(tmp_path / "missing")) is None
+    assert change_token(str(tmp_path / "missing" / "documents.parquet")) is None
 
     # real sf_dir resolves a token (directory or file layout)
-    assert _source_table_token("/root/testdata/sf0.001") is not None
+    assert change_token(os.path.join(sf_dir, "documents.parquet")) is not None
     assert os.path.exists("/root/testdata/sf0.001")
