@@ -40,18 +40,6 @@ def hash60_sql(expr: str) -> str:
     return f"(('0x' || substring(md5({expr}), 1, 15))::BIGINT)"
 
 
-def hash31(col: Column, seed_a: int, seed_b: int) -> Column:
-    """Portable 31-bit universal hash: ((a * h60 + b) mod M31), where h60 is
-    folded to 31 bits first so a*x never overflows int64 in either engine."""
-    folded = hash60(col) % F.lit(MERSENNE_31)
-    return (F.lit(seed_a) * folded + F.lit(seed_b)) % F.lit(MERSENNE_31)
-
-
-def hash31_sql(expr: str, seed_a: int, seed_b: int) -> str:
-    folded = f"({hash60_sql(expr)} % {MERSENNE_31})"
-    return f"(({seed_a} * {folded} + {seed_b}) % {MERSENNE_31})"
-
-
 # -- expression-level let binding -------------------------------------------
 
 def let_col(value: Column, body) -> Column:

@@ -46,6 +46,7 @@ from kafka_streams_the_clojure_way_spark.operators.dedup import (
     build_index,
     compact_index,
     index_dataset_root,
+    index_upsert,
     serve_index_stream,
 )
 from kafka_streams_the_clojure_way_spark.sources.files import (
@@ -289,6 +290,24 @@ def audio_fp_pairs_sql(
 # Persisted audio fingerprint index: build / probe / upsert / compact
 # --------------------------------------------------------------------------
 
+
+def anti_drop_list(spark, df: DataFrame, root: str, meta) -> DataFrame:
+    """Rewrite rule: physically remove postings on keys in the drop list
+    (the logical deletes the upsert path accrues)."""
+    dropped = read_static_schema(spark, f"{root}/dropped")
+    return df.join(F.broadcast(dropped), ["frame_idx", "fp"], "left_anti")
+
+
+#: ``postings`` (the add-only anti-join's key) one file per fp
+#: directory, minus the dropped keys at compaction; the drop list itself
+#: is copied unchanged — unlike tombstones it is a permanent df-cap
+#: artifact that probes and upserts keep consulting.
+AUDIOFP_LAYOUT = (
+    IndexDataset("postings", ("fp",), anti_drop_list),
+    IndexDataset("dropped"),
+)
+
+
 def build_audiofp_index(
     corpus_assets: DataFrame,
     path: str,
@@ -320,26 +339,18 @@ def build_audiofp_index(
 
     Fingerprinting the corpus runs ONCE; after this, per-batch probe
     cost is O(batch + matching postings) regardless of corpus size."""
-    from kafka_streams_the_clojure_way_spark.sources.files import write_partitioned
-
-    fps = audio_fingerprints(
-        with_min_parallelism(corpus_assets), id_col, decode
-    ).cache()
-    keys = fps.groupBy("frame_idx", "fp").agg(F.count(F.lit(1)).alias("df"))
-    dropped = keys.filter(F.col("df") > df_cap).select("frame_idx", "fp")
-    kept = fps.join(dropped, ["frame_idx", "fp"], "left_anti")
-
-    def write(root: str) -> None:
-        write_partitioned(kept.repartition("fp"), f"{root}/postings", "fp")
-        dropped.coalesce(1).write.mode("overwrite").parquet(f"{root}/dropped")
+    def derive(clips: DataFrame, pin) -> tuple:
+        fps = pin(audio_fingerprints(clips, id_col, decode))
+        keys = fps.groupBy("frame_idx", "fp").agg(F.count(F.lit(1)).alias("df"))
+        dropped = keys.filter(F.col("df") > df_cap).select("frame_idx", "fp")
+        return fps.join(dropped, ["frame_idx", "fp"], "left_anti"), dropped
 
     build_index(
-        corpus_assets.sparkSession, path, write,
+        corpus_assets, path, AUDIOFP_LAYOUT, derive,
         (FRAME_W, N_BANDS, FP_BITS, df_cap, min_shared, id_col, decode or ""),
         "frame_w int, n_bands int, fp_bits int, df_cap int, min_shared int, "
         "id_col string, decode string",
     )
-    fps.unpersist()
 
 
 def _read_postings(spark, root: str, id_col: str):
@@ -435,91 +446,66 @@ def audiofp_index_upsert(
     id_col: str = "doc_id",
     assume_new_ids: bool = False,
 ) -> None:
-    """Add clips to the index, MAINTAINING the df-cap invariant so a
-    probe after any number of upserts returns exactly what a probe of a
-    fresh rebuild over (corpus + batches) would:
+    """Add clips to the index (``dedup.index_upsert`` states the
+    contract), MAINTAINING the df-cap invariant so a probe after any
+    number of upserts returns exactly what a probe of a fresh rebuild
+    over (corpus + batches) would. After the core's id anti-join, the
+    batch is fingerprinted with the index's own codec, then:
 
-    1. fingerprint the batch (with the index's own codec/geometry);
-       anti-join already-indexed ids unless ``assume_new_ids`` (the
-       replay-idempotence contract shared by every index family);
-    2. drop postings on already-dropped keys (they're invisible anyway);
-    3. count existing postings for the batch's keys — partition-pruned
-       to the batch's <= 128 fp directories — and add the batch's own
-       per-key counts; keys whose TOTAL df crosses the cap go into the
-       persisted drop list (logical delete of their existing postings;
-       physical removal happens at the next compact), and the batch's
-       postings on those keys are never written;
-    4. append the surviving postings, one file per touched fp directory.
+    1. postings on already-dropped keys are dropped (they're invisible
+       anyway);
+    2. existing postings for the batch's keys are counted — partition-
+       pruned to the batch's <= 128 fp directories — and the batch's
+       own per-key counts added; keys whose TOTAL df crosses the cap go
+       into the persisted drop list (logical delete of their existing
+       postings; physical removal happens at the next compact), and the
+       batch's postings on those keys are never written;
+    3. the core appends the surviving postings.
 
-    Crash-retry contract: the drop-list append (step 3) commits BEFORE
-    the postings append (step 4), so a crash between them leaves keys
+    Crash-retry contract: the drop-list append (step 2) commits BEFORE
+    the postings append (step 3), so a crash between them leaves keys
     dropped without their batch postings — probes stay cap-correct
     (stricter, never looser), and the retry's id anti-join skips the
     half-added docs; a rebuild restores them. The reverse order would
     leave over-cap keys SERVING quadratic fanout until the retry."""
-    meta = _index_meta(spark, index_path)
-    root = index_dataset_root(index_path)  # writers land in the active version
-    fps = audio_fingerprints(
-        with_min_parallelism(new_assets), id_col, meta["decode"] or None
-    )
-    if not assume_new_ids:
-        existing_ids = (
+
+    def derive(clips: DataFrame, meta, root: str, pin) -> tuple:
+        dropped = read_static_schema(spark, f"{root}/dropped")
+        fps = pin(audio_fingerprints(clips, meta["id_col"], meta["decode"] or None))
+        fps = fps.join(F.broadcast(dropped), ["frame_idx", "fp"], "left_anti")
+        batch_keys = fps.groupBy("frame_idx", "fp").agg(
+            F.count(F.lit(1)).alias("new_df")
+        )
+        fp_keys = [r["fp"] for r in batch_keys.select("fp").distinct().collect()]
+        if not fp_keys:
+            return None, None
+        existing_df = (
             _read_postings(spark, root, meta["id_col"])
-            .select(meta["id_col"])
-            .distinct()
+            .filter(_in_literals("fp", fp_keys))
+            .groupBy("frame_idx", "fp")
+            .agg(F.count(F.lit(1)).alias("old_df"))
         )
-        fps = fps.join(existing_ids, id_col, "left_anti")
-    # Eager localCheckpoint: the cap arithmetic below reads the postings
-    # path this function then appends to — truncate lineage so the
-    # append can't recompute the batch against itself (the
-    # minhash_index_upsert lesson).
-    fps = fps.localCheckpoint(eager=True)
-    dropped = read_static_schema(spark, f"{root}/dropped")
-    fps = fps.join(F.broadcast(dropped), ["frame_idx", "fp"], "left_anti")
-    batch_keys = fps.groupBy("frame_idx", "fp").agg(
-        F.count(F.lit(1)).alias("new_df")
-    )
-    fp_keys = [r["fp"] for r in batch_keys.select("fp").distinct().collect()]
-    if not fp_keys:
-        return
-    existing_df = (
-        _read_postings(spark, root, meta["id_col"])
-        .filter(_in_literals("fp", fp_keys))
-        .groupBy("frame_idx", "fp")
-        .agg(F.count(F.lit(1)).alias("old_df"))
-    )
-    totals = batch_keys.join(existing_df, ["frame_idx", "fp"], "left").select(
-        "frame_idx",
-        "fp",
-        (F.col("new_df") + F.coalesce(F.col("old_df"), F.lit(0))).alias("df"),
-    )
-    newly_dropped = totals.filter(F.col("df") > meta["df_cap"]).select(
-        "frame_idx", "fp"
-    ).localCheckpoint(eager=True)
-    if newly_dropped.count() > 0:
-        newly_dropped.coalesce(1).write.mode("append").parquet(
-            f"{root}/dropped"
+        totals = batch_keys.join(existing_df, ["frame_idx", "fp"], "left").select(
+            "frame_idx",
+            "fp",
+            (F.col("new_df") + F.coalesce(F.col("old_df"), F.lit(0))).alias("df"),
         )
-        fps = fps.join(F.broadcast(newly_dropped), ["frame_idx", "fp"], "left_anti")
-    fps.repartition("fp").write.mode("append").partitionBy("fp").parquet(
-        f"{root}/postings"
+        newly_dropped = pin(
+            totals.filter(F.col("df") > meta["df_cap"]).select("frame_idx", "fp")
+        )
+        if newly_dropped.count() > 0:
+            newly_dropped.coalesce(1).write.mode("append").parquet(
+                f"{root}/dropped"
+            )
+            fps = fps.join(
+                F.broadcast(newly_dropped), ["frame_idx", "fp"], "left_anti"
+            )
+        return fps, None
+
+    index_upsert(
+        spark, index_path, new_assets, AUDIOFP_LAYOUT, derive,
+        id_col=id_col, assume_new_ids=assume_new_ids,
     )
-
-
-def anti_drop_list(spark, df: DataFrame, root: str, meta) -> DataFrame:
-    """Rewrite rule: physically remove postings on keys in the drop list
-    (the logical deletes the upsert path accrues)."""
-    dropped = read_static_schema(spark, f"{root}/dropped")
-    return df.join(F.broadcast(dropped), ["frame_idx", "fp"], "left_anti")
-
-
-#: ``postings`` one file per fp directory minus the dropped keys; the
-#: drop list itself is copied unchanged — unlike tombstones it is a
-#: permanent df-cap artifact that probes and upserts keep consulting.
-AUDIOFP_LAYOUT = (
-    IndexDataset("postings", ("fp",), anti_drop_list),
-    IndexDataset("dropped"),
-)
 
 
 def compact_audiofp_index(spark, index_path: str) -> str:

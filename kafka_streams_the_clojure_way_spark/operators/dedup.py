@@ -31,12 +31,17 @@ from __future__ import annotations
 import os
 import shutil
 from collections.abc import Callable
+from contextlib import contextmanager
 from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from kafka_streams_the_clojure_way_spark.functions.portable import MERSENNE_31
+from kafka_streams_the_clojure_way_spark.functions.portable import (
+    MERSENNE_31,
+    hash60,
+    let_col,
+)
 from kafka_streams_the_clojure_way_spark.operators.text import tokens_col, tokens_sql
 from kafka_streams_the_clojure_way_spark.sources.files import (
     change_token,
@@ -45,7 +50,6 @@ from kafka_streams_the_clojure_way_spark.sources.files import (
     invalidate_static_schema,
     read_static_schema,
     with_min_parallelism,
-    write_partitioned,
 )
 from kafka_streams_the_clojure_way_spark.streaming.runner import (
     as_batch_sink,
@@ -193,17 +197,154 @@ def compact_into_version(index_path: str, write_fn) -> str:
     return newroot
 
 
-def build_index(spark, path: str, write_fn, meta: tuple, meta_schema: str) -> None:
-    """Write a fresh index at ``path``: ``write_fn(root)`` writes the
-    datasets into a new version directory (``v_000000`` on a fresh
+class IndexDataset(NamedTuple):
+    """One dataset of an index layout: its directory name, its hive
+    partition columns (empty = size-targeted files), and the rewrite
+    rule compaction applies to its rows — ``rewrite(spark, df, root,
+    meta)`` with ``root`` the version being compacted; None keeps the
+    rows unchanged. A family's layout tuple is the one declaration of
+    its datasets: builds write them, upserts append them and compaction
+    rewrites them, always in layout order."""
+
+    name: str
+    partition_by: tuple[str, ...] = ()
+    rewrite: Callable | None = None
+
+
+def _write_dataset(df: DataFrame, root: str, ds: IndexDataset, mode: str) -> None:
+    """The one dataset writer. A partitioned dataset is shuffled onto
+    its partition columns first: one file per directory a write
+    touches, where every upstream task would otherwise write a sliver
+    into every directory and probes would pay the listing bill forever.
+    An appended unpartitioned dataset is one file per batch."""
+    if ds.partition_by:
+        df = df.repartition(*ds.partition_by)
+    elif mode == "append":
+        df = df.coalesce(1)
+    df.write.mode(mode).partitionBy(*ds.partition_by).parquet(f"{root}/{ds.name}")
+
+
+@contextmanager
+def _pins(persist, release):
+    """``pin(df)`` for a row derivation: ``persist``s the frame its
+    datasets share, and every pinned frame is ``release``d on exit,
+    written or failed."""
+    pinned: list[DataFrame] = []
+
+    def pin(df: DataFrame) -> DataFrame:
+        pinned.append(persist(df))
+        return pinned[-1]
+
+    try:
+        yield pin
+    finally:
+        for df in pinned:
+            release(df)
+
+
+def _release_checkpoint(df: DataFrame) -> None:
+    # a local checkpoint is a persisted RDD that DataFrame.unpersist
+    # does not reach: release its blocks now, not at some later GC
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
+def build_index(
+    corpus: DataFrame, path: str, layout, derive, meta: tuple, meta_schema: str
+) -> None:
+    """Write a fresh index at ``path``. ``derive(corpus, pin)`` is the
+    family's row derivation — the one its upsert runs too — returning
+    its datasets in ``layout`` order; it passes the one frame they share
+    through ``pin``, here a ``.cache()`` released after the writes. The
+    corpus arrives parallelism-guarded (``with_min_parallelism``). The
+    datasets land in a new version directory (``v_000000`` on a fresh
     path; a rebuild leaves the old versions to GC) through
     :func:`compact_into_version`, then the one ``meta`` row (typed by
     ``meta_schema``) lands at the index root."""
+    def write(root: str) -> None:
+        with _pins(lambda df: df.cache(), lambda df: df.unpersist()) as pin:
+            for ds, df in zip(layout, derive(with_min_parallelism(corpus), pin)):
+                _write_dataset(df, root, ds, "overwrite")
+
     _invalidate_index_meta(path)
-    compact_into_version(path, write_fn)
-    spark.createDataFrame([meta], meta_schema).coalesce(1).write.mode(
+    compact_into_version(path, write)
+    corpus.sparkSession.createDataFrame([meta], meta_schema).coalesce(1).write.mode(
         "overwrite"
     ).parquet(f"{path}/meta")
+
+
+def index_upsert(
+    spark,
+    index_path: str,
+    batch: DataFrame,
+    layout,
+    derive,
+    *,
+    id_col: str | None = None,
+    assume_new_ids: bool = False,
+) -> None:
+    """ADD a batch to a persisted index without rebuilding it — the one
+    write path behind every family's ``*_upsert`` (FAISS's ``add`` to
+    the build's ``train``): the corpus is never re-signed, so keeping an
+    index current costs O(batch) per ingestion cycle. In order:
+
+    1. read meta and resolve the active version once (upserts land in
+       the current version; single-writer contract: see
+       :func:`index_dataset_root`);
+    2. **add-only anti-join**: with ``id_col``, the batch's ids are
+       anti-joined against ``meta.id_col`` of the key dataset,
+       ``layout[0]``, unless ``assume_new_ids`` (which saves that one
+       id-column scan when the caller guarantees disjoint ids). An id
+       already present would duplicate its rows and double-count verify
+       joins; this anti-join is what makes an at-least-once replay (a
+       re-run ``foreachBatch``) idempotent — the idempotent sink that
+       exactly-once streaming rests on. It runs before any signing, so
+       replayed ids never reach a codec;
+    3. the batch's ``id_col`` is renamed to ``meta.id_col``: a batch
+       keyed differently from the build lands under the build's column;
+    4. ``with_min_parallelism`` guards the codec stage (after the
+       anti-join, whose shuffle would otherwise undo it);
+    5. ``derive(batch, meta, root, pin)`` — the family's row derivation,
+       the one its build runs — returns the datasets in layout order
+       (None = nothing to append), passing the frame they share
+       through ``pin``, here an EAGER ``localCheckpoint``. Not a
+       ``.cache()``: the anti-join reads the key dataset the first
+       append mutates, an append refreshes every cached plan over its
+       path, and the later appends would recompute against the
+       just-appended rows, anti-joining the whole batch away;
+    6. every dataset is appended in layout order through the one
+       dataset writer: at most ONE file per touched partition directory
+       per batch, and one file per unpartitioned dataset. Compaction
+       restores the build's file layout after many batches
+       (:func:`compact_index`). The checkpoint is released after the
+       last append, so a serve loop keeps no batch pinned.
+
+    **Write order is the crash-retry contract**, so a layout lists its
+    key dataset first. A crash between two appends leaves key rows
+    without their later datasets; the retry's anti-join skips those ids,
+    so they stop matching until a rebuild, but no row is ever
+    duplicated. The reverse order would let every retry re-add the
+    orphan rows of a later dataset, and every later probe would pay for
+    them. For exactly-once adds under crashes, wrap upserts in an
+    external commit marker.
+
+    ``id_col=None`` skips steps 2-3, for families whose batches carry
+    no ids to anti-join: the Bloom filter (bit-OR is idempotent) and
+    the keyset index (its membership probe hands over fresh keys)."""
+    meta = _index_meta(spark, index_path)
+    root = index_dataset_root(index_path)
+    if id_col is not None:
+        existing = None if assume_new_ids else _read_optional(
+            spark, f"{root}/{layout[0].name}"
+        )
+        if existing is not None:
+            batch = batch.join(
+                existing.select(F.col(meta["id_col"]).alias(id_col)), id_col, "left_anti"
+            )
+        batch = batch.withColumnRenamed(id_col, meta["id_col"])
+    with _pins(lambda df: df.localCheckpoint(), _release_checkpoint) as pin:
+        for ds, df in zip(layout, derive(with_min_parallelism(batch), meta, root, pin)):
+            if df is not None:
+                _write_dataset(df, root, ds, "append")
 
 
 def gc_index_versions(index_path: str) -> list[str]:
@@ -223,26 +364,23 @@ def gc_index_versions(index_path: str) -> list[str]:
     return deleted
 
 
-class IndexDataset(NamedTuple):
-    """One dataset of an index layout: its directory name, its hive
-    partition columns (empty = size-targeted files), and the rewrite
-    rule compaction applies to its rows — ``rewrite(spark, df, root,
-    meta)`` with ``root`` the version being compacted; None keeps the
-    rows unchanged."""
-
-    name: str
-    partition_by: tuple[str, ...] = ()
-    rewrite: Callable | None = None
-
-
-def drop_tombstoned(spark, df: DataFrame, root: str, meta) -> DataFrame:
-    """Rewrite rule: drop rows whose ``meta.id_col`` is tombstoned. The
-    tombstone set is not carried into the new version — folded in."""
+def drop_tombstoned(
+    spark, df: DataFrame, root: str, meta, key: str | None = None
+) -> DataFrame:
+    """The one tombstone anti-join: drop the rows of ``df`` whose
+    ``key`` column (default ``meta.id_col``) holds an id tombstoned in
+    the version at ``root`` — broadcast and distinct, so it is bounded
+    by the live tombstone count. Probes call it on their candidates
+    (``key`` naming the corpus-id column); as a compaction rewrite rule
+    it folds the tombstones in, so the set is not carried into the new
+    version. Without tombstones ``df`` comes back unchanged, and Spark
+    is never asked to read the missing set."""
     tomb = _read_optional(spark, f"{root}/tombstones")
     if tomb is None:
         return df
-    dead = F.broadcast(tomb.select(meta["id_col"]).distinct())
-    return df.join(dead, meta["id_col"], "left_anti")
+    key = key or meta["id_col"]
+    dead = F.broadcast(tomb.select(F.col(meta["id_col"]).alias(key)).distinct())
+    return df.join(dead, key, "left_anti")
 
 
 def or_fold_bits(spark, df: DataFrame, root: str, meta) -> DataFrame:
@@ -256,6 +394,16 @@ def _has_parquet(path: str) -> bool:
     return any(
         f.endswith(".parquet") for _, _, files in os.walk(path) for f in files
     )
+
+
+def _read_optional(spark, path: str):
+    """Read a parquet dataset that may not exist (e.g. an index's
+    tombstone set before any delete); returns None when it holds no
+    parquet file, without asking Spark (the index core is local, like
+    its ``CURRENT`` pointer). Uses the static-schema cache once the
+    dataset exists (a tombstone set's schema never changes after its
+    first append); a read error on an existing dataset raises."""
+    return read_static_schema(spark, path) if _has_parquet(path) else None
 
 
 def compact_index(spark, index_path: str, layout) -> str:
@@ -398,8 +546,6 @@ def shingle_hashes(text: Column) -> Column:
     token string as a single shingle. The token array is let-bound so the
     per-window lambda slices a bound attribute instead of re-splitting the
     text per element (portable.let_col — the inline form is O(len^2))."""
-    from kafka_streams_the_clojure_way_spark.functions.portable import let_col
-
     def body(toks: Column) -> Column:
         n = F.array_size(toks)
         windows = F.transform(
@@ -947,6 +1093,59 @@ def minhash_lsh_pairs_between_sql(
 #: prunes to the buckets its keys actually hash into.
 MINHASH_INDEX_BUCKETS = 16
 
+#: ``shingles`` (the add-only anti-join's key) size-targeted, then
+#: ``bands`` one file per (band, bucket) directory; both drop
+#: tombstoned ids.
+MINHASH_LAYOUT = (
+    IndexDataset("shingles", (), drop_tombstoned),
+    IndexDataset("bands", ("band", "bucket"), drop_tombstoned),
+)
+
+
+def _minhash_bands(
+    sigs: DataFrame, id_col: str, bands: int, rows: int, n_buckets: int,
+    *, alias: str | None = None, carry: list | tuple = (),
+) -> DataFrame:
+    """(id, *carry, band, bkey, bucket): one row per (signature, band),
+    ``bucket = pmod(bkey, n_buckets)`` naming its partition directory —
+    the band explode the index build, upsert and probe share. ``alias``
+    renames the id column."""
+    out = alias or id_col
+    return sigs.select(
+        F.col(id_col).alias(out),
+        *carry,
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(b).alias("band"),
+                        _band_key(F.col("sig"), b, rows).alias("bkey"),
+                    )
+                    for b in range(bands)
+                ]
+            )
+        ).alias("bk"),
+    ).select(
+        out,
+        *carry,
+        F.col("bk.band").alias("band"),
+        F.col("bk.bkey").alias("bkey"),
+        F.pmod(F.col("bk.bkey"), F.lit(n_buckets)).alias("bucket"),
+    )
+
+
+def _minhash_datasets(docs, id_col, text, n_hashes, bands, n_buckets, pin):
+    """:data:`MINHASH_LAYOUT`'s (shingles, bands) rows for ``docs``,
+    both from one pinned signature frame."""
+    sigs = pin(
+        docs.select(F.col(id_col), shingle_hashes(F.col(text)).alias("sh"))
+        .withColumn("sig", minhash_from_hashes(F.col("sh"), minhash_seeds(n_hashes)))
+    )
+    return (
+        sigs.select(id_col, "sh"),
+        _minhash_bands(sigs, id_col, bands, n_hashes // bands, n_buckets),
+    )
+
 
 def build_minhash_index(
     corpus: DataFrame,
@@ -980,48 +1179,14 @@ def build_minhash_index(
     ``minhash_lsh_pairs_between`` does) would dominate every batch."""
     if n_hashes % bands:
         raise ValueError(f"n_hashes={n_hashes} must divide evenly into bands={bands}")
-    rows = n_hashes // bands
-    sigs = (
-        with_min_parallelism(corpus)
-        .select(F.col(id_col), shingle_hashes(F.col(text)).alias("sh"))
-        .withColumn("sig", minhash_from_hashes(F.col("sh"), minhash_seeds(n_hashes)))
-        .cache()
-    )
-    banded = sigs.select(
-        id_col,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        _band_key(F.col("sig"), b, rows).alias("bkey"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select(
-        id_col,
-        F.col("bk.bkey").alias("bkey"),
-        F.col("bk.band").alias("band"),
-        F.pmod(F.col("bk.bkey"), F.lit(n_buckets)).alias("bucket"),
-    )
-
-    def write(root: str) -> None:
-        # one shuffle into the partition layout = ONE file per (band,
-        # bucket) directory — without it every upstream task writes a
-        # sliver into every directory (tasks x 64 tiny files) and
-        # probe-side scan planning pays the file-listing bill forever
-        write_partitioned(
-            banded.repartition("band", "bucket"), f"{root}/bands", "band", "bucket"
-        )
-        sigs.select(id_col, "sh").write.mode("overwrite").parquet(f"{root}/shingles")
-
     build_index(
-        corpus.sparkSession, path, write, (n_hashes, bands, n_buckets, id_col),
+        corpus, path, MINHASH_LAYOUT,
+        lambda docs, pin: _minhash_datasets(
+            docs, id_col, text, n_hashes, bands, n_buckets, pin
+        ),
+        (n_hashes, bands, n_buckets, id_col),
         "n_hashes int, bands int, n_buckets int, id_col string",
     )
-    sigs.unpersist()
 
 
 def minhash_index_upsert(
@@ -1033,89 +1198,17 @@ def minhash_index_upsert(
     id_col: str = "doc_id",
     assume_new_ids: bool = False,
 ) -> None:
-    """ADD a document batch to a persisted MinHash index without
-    rebuilding it (FAISS's ``add`` to :func:`build_minhash_index`'s
-    ``train``): sign the batch with the index's own parameters and
-    APPEND its banding rows into the existing (band, bucket) partition
-    directories plus its shingle sets — the corpus is never re-signed,
-    so keeping the index current costs O(batch) per ingestion cycle.
-
-    Add-only contract: an id already present would duplicate its
-    shingle row and double-count verify joins, so by default arriving
-    ids are anti-joined against the index's id column (one column scan);
-    pass ``assume_new_ids=True`` to skip that scan when the caller
-    guarantees disjoint ids (e.g. monotonically assigned).
-
-    Crash-retry contract: shingles are written BEFORE bands so the
-    add-only anti-join key (the shingles id column) only ever reflects
-    fully-attempted docs — a failure between the two writes leaves
-    shingle rows without banding rows, and the retry (with the default
-    anti-join) skips them, leaving those docs shingle-listed but
-    unbanded (they stop matching as corpus candidates until a rebuild).
-    The reverse order would be worse: orphan BANDING rows are re-added
-    by a retry (the anti-join keys on shingles), permanently duplicating
-    postings so every later probe pays for them. For exactly-once adds
-    under crashes, wrap upserts in an external commit marker.
-
-    File hygiene: each append is repartitioned onto the partition
-    columns first, so a micro-batch adds at most ONE file per touched
-    (band, bucket) directory — without that, every upstream task writes
-    a sliver into every directory and a long-running ingestion loop
-    regresses to the tiny-file listing cost the build path avoids.
-    After many batches, run :func:`compact_minhash_index` to restore
-    the one-file-per-directory build layout."""
-    meta = _index_meta(spark, index_path)
-    # writers resolve the root too: upserts land in the ACTIVE version
-    # (single-writer contract — upsert and compact never run
-    # concurrently, so the root cannot move mid-upsert).
-    root = index_dataset_root(index_path)
-    n_hashes, bands, n_buckets = meta["n_hashes"], meta["bands"], meta["n_buckets"]
-    rows = n_hashes // bands
-    if not assume_new_ids:
-        existing = read_static_schema(spark, f"{root}/shingles").select(
-            F.col(meta["id_col"]).alias(id_col)
-        )
-        batch = batch.join(existing, id_col, "left_anti")
-    # EAGER localCheckpoint, not cache: the anti-join reads the shingles
-    # path, and the first append below refreshes every cached plan that
-    # references it — a mere .cache() would be invalidated mid-upsert and
-    # the bands write would recompute against the just-appended shingles,
-    # anti-joining the whole batch away. Truncating the lineage pins the
-    # anti-joined batch before either write runs. Batch-sized.
-    sigs = (
-        with_min_parallelism(batch)
-        .select(F.col(id_col), shingle_hashes(F.col(text)).alias("sh"))
-        .withColumn("sig", minhash_from_hashes(F.col("sh"), minhash_seeds(n_hashes)))
-        .localCheckpoint()
+    """ADD a document batch to a persisted MinHash index: sign it with
+    the index's own parameters and append its shingle sets, then its
+    banding rows (:func:`index_upsert` states the contract)."""
+    index_upsert(
+        spark, index_path, batch, MINHASH_LAYOUT,
+        lambda docs, meta, root, pin: _minhash_datasets(
+            docs, meta["id_col"], text, meta["n_hashes"], meta["bands"],
+            meta["n_buckets"], pin,
+        ),
+        id_col=id_col, assume_new_ids=assume_new_ids,
     )
-    banded = sigs.select(
-        F.col(id_col).alias(meta["id_col"]),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        _band_key(F.col("sig"), b, rows).alias("bkey"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select(
-        meta["id_col"],
-        F.col("bk.bkey").alias("bkey"),
-        F.col("bk.band").alias("band"),
-        F.pmod(F.col("bk.bkey"), F.lit(n_buckets)).alias("bucket"),
-    )
-    # shingles FIRST (see crash-retry contract above), one file per batch
-    sigs.select(F.col(id_col).alias(meta["id_col"]), "sh").coalesce(1).write.mode(
-        "append"
-    ).parquet(f"{root}/shingles")
-    # one shuffle onto the partition layout = at most one file per touched
-    # (band, bucket) directory per batch (same layout rule as the build)
-    banded.repartition("band", "bucket").write.mode("append").partitionBy(
-        "band", "bucket"
-    ).parquet(f"{root}/bands")
 
 
 def minhash_index_probe(
@@ -1212,26 +1305,8 @@ def minhash_index_probe(
             psigs = psigs.cache()
             if cache_registry is not None:
                 cache_registry.append(psigs)
-    pband = psigs.select(
-        F.col(id_col).alias("probe_id"),
-        *carry,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        _band_key(F.col("sig"), b, rows).alias("bkey"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select(
-        "probe_id",
-        *carry,
-        F.col("bk.band").alias("band"),
-        F.col("bk.bkey").alias("bkey"),
-        F.pmod(F.col("bk.bkey"), F.lit(n_buckets)).alias("bucket"),
+    pband = _minhash_bands(
+        psigs, id_col, bands, rows, n_buckets, alias="probe_id", carry=carry
     )
     postings = read_static_schema(spark, f"{root}/bands")
     if batch.isStreaming:
@@ -1276,16 +1351,8 @@ def minhash_index_probe(
             *([F.col(ts_col), F.col("sh").alias("sh_a")] if wm_streaming else []),
         )
     )
-    tomb = _read_optional(spark, f"{root}/tombstones")
-    if tomb is not None:
-        # logical deletes: candidates against tombstoned corpus docs are
-        # dropped here (broadcast anti-join, bounded by the live tombstone
-        # count); compact_minhash_index folds them in physically.
-        cand = cand.join(
-            F.broadcast(tomb.select(F.col(meta["id_col"]).alias("corpus_id"))),
-            "corpus_id",
-            "left_anti",
-        )
+    # logical deletes; compact_minhash_index folds them in physically
+    cand = drop_tombstoned(spark, cand, root, meta, "corpus_id")
     if wm_streaming:
         cand = cand.dropDuplicatesWithinWatermark(["probe_id", "corpus_id"]).drop(
             ts_col
@@ -1311,24 +1378,7 @@ def minhash_index_probe(
     )
 
 
-def _read_optional(spark, path: str):
-    """Read a parquet dataset that may not exist (e.g. an index's
-    tombstone set before any delete); returns None when it holds no
-    parquet file, without asking Spark (the index core is local, like
-    its ``CURRENT`` pointer). Uses the static-schema cache once the
-    dataset exists (a tombstone set's schema never changes after its
-    first append); a read error on an existing dataset raises."""
-    return read_static_schema(spark, path) if _has_parquet(path) else None
-
-
 minhash_index_delete = index_delete
-
-#: ``bands`` one file per (band, bucket) directory, ``shingles``
-#: size-targeted; both drop tombstoned ids.
-MINHASH_LAYOUT = (
-    IndexDataset("bands", ("band", "bucket"), drop_tombstoned),
-    IndexDataset("shingles", (), drop_tombstoned),
-)
 
 
 def compact_minhash_index(spark, index_path: str) -> str:
@@ -1412,6 +1462,21 @@ def minhash_index_probe_stream(
 
 HASH_INDEX_BUCKETS = 64
 
+#: ``hashes`` one file per bucket directory, tombstoned ids dropped.
+HASH_LAYOUT = (IndexDataset("hashes", ("bucket",), drop_tombstoned),)
+
+
+def _hashed(
+    docs: DataFrame, id_col: str, text: str, n_buckets: int, alias: str | None = None
+) -> DataFrame:
+    """(id, content_hash, bucket = pmod(content_hash, n_buckets)) per
+    doc — the hash index's build, upsert and probe rows. ``alias``
+    renames the id column."""
+    return docs.select(
+        F.col(id_col).alias(alias or id_col),
+        content_hash(F.col(text)).alias("content_hash"),
+    ).withColumn("bucket", F.pmod(F.col("content_hash"), F.lit(n_buckets)))
+
 
 def build_hash_index(
     corpus: DataFrame,
@@ -1439,15 +1504,9 @@ def build_hash_index(
     probed 1/``n_buckets`` slices per batch, vs re-hashing the full
     corpus per batch without the index. One file per bucket directory
     (same layout rule as build_minhash_index)."""
-    hashed = with_min_parallelism(corpus).select(
-        F.col(id_col),
-        content_hash(F.col(text)).alias("content_hash"),
-    ).withColumn("bucket", F.pmod(F.col("content_hash"), F.lit(n_buckets)))
     build_index(
-        corpus.sparkSession, path,
-        lambda root: write_partitioned(
-            hashed.repartition("bucket"), f"{root}/hashes", "bucket"
-        ),
+        corpus, path, HASH_LAYOUT,
+        lambda docs, pin: (pin(_hashed(docs, id_col, text, n_buckets)),),
         (n_buckets, id_col), "n_buckets int, id_col string",
     )
 
@@ -1461,40 +1520,15 @@ def hash_index_upsert(
     id_col: str = "doc_id",
     assume_new_ids: bool = False,
 ) -> None:
-    """ADD a document batch to a persisted hash index without rebuilding
-    it: hash the batch and APPEND into the existing bucket directories —
-    the corpus is never re-hashed, so keeping the index current costs
-    O(batch) per cycle. Add-only contract as in
-    :func:`minhash_index_upsert`: arriving ids are anti-joined against
-    the index id column unless ``assume_new_ids=True`` (one column scan
-    saved). Single-table index, so there is no multi-write atomicity
-    seam: a crashed upsert either landed its one append or did not, and
-    a retry with the default anti-join is idempotent. Each append is
-    repartitioned onto the bucket column first — at most ONE file per
-    touched directory per batch; run :func:`compact_hash_index` on a
-    cadence to restore the build layout."""
-    meta = _index_meta(spark, index_path)
-    root = index_dataset_root(index_path)  # writers land in the active version
-    n_buckets = meta["n_buckets"]
-    if not assume_new_ids:
-        existing = read_static_schema(spark, f"{root}/hashes").select(
-            F.col(meta["id_col"]).alias(id_col)
-        )
-        batch = batch.join(existing, id_col, "left_anti")
-    # eager localCheckpoint for the same reason as minhash_index_upsert:
-    # the anti-join reads the path the append below mutates; pin the
-    # anti-joined batch before writing. Batch-sized.
-    hashed = (
-        with_min_parallelism(batch)
-        .select(
-            F.col(id_col).alias(meta["id_col"]),
-            content_hash(F.col(text)).alias("content_hash"),
-        )
-        .withColumn("bucket", F.pmod(F.col("content_hash"), F.lit(n_buckets)))
-        .localCheckpoint()
-    )
-    hashed.repartition("bucket").write.mode("append").partitionBy("bucket").parquet(
-        f"{root}/hashes"
+    """ADD a document batch to a persisted hash index: hash it and append
+    into the touched bucket directories (:func:`index_upsert` states the
+    contract)."""
+    index_upsert(
+        spark, index_path, batch, HASH_LAYOUT,
+        lambda docs, meta, root, pin: (
+            pin(_hashed(docs, meta["id_col"], text, meta["n_buckets"])),
+        ),
+        id_col=id_col, assume_new_ids=assume_new_ids,
     )
 
 
@@ -1540,10 +1574,7 @@ def hash_index_probe(
         if (batch.isStreaming or buckets is not None)
         else with_min_parallelism(batch)
     )
-    probe = base.select(
-        F.col(id_col).alias("probe_id"),
-        content_hash(F.col(text)).alias("content_hash"),
-    ).withColumn("bucket", F.pmod(F.col("content_hash"), F.lit(n_buckets)))
+    probe = _hashed(base, id_col, text, n_buckets, alias="probe_id")
     hashes = read_static_schema(spark, f"{root}/hashes")
     if batch.isStreaming:
         probe_side = probe
@@ -1569,20 +1600,10 @@ def hash_index_probe(
             "content_hash",
         )
     )
-    tomb = _read_optional(spark, f"{root}/tombstones")
-    if tomb is not None:
-        cand = cand.join(
-            F.broadcast(tomb.select(F.col(meta["id_col"]).alias("corpus_id"))),
-            "corpus_id",
-            "left_anti",
-        )
-    return cand
+    return drop_tombstoned(spark, cand, root, meta, "corpus_id")
 
 
 hash_index_delete = index_delete
-
-#: ``hashes`` one file per bucket directory, tombstoned ids dropped.
-HASH_LAYOUT = (IndexDataset("hashes", ("bucket",), drop_tombstoned),)
 
 
 def compact_hash_index(spark, index_path: str) -> str:
@@ -1827,8 +1848,6 @@ def _gram_postings(
     position, built scan-side (narrow explode, no shuffle). Token array
     let-bound — the per-position lambda slices a bound attribute, never
     re-splitting the text per gram (portable.let_col)."""
-    from kafka_streams_the_clojure_way_spark.functions.portable import let_col
-
     def body(toks: Column) -> Column:
         ntok = F.array_size(toks)
         starts = F.when(ntok >= n, F.sequence(F.lit(0), ntok - n)).otherwise(
@@ -2539,6 +2558,49 @@ def containment_pairs_between_sql(
 # Persisted containment index: shingle the corpus once, probe batches forever
 # --------------------------------------------------------------------------
 
+#: ``sets`` (the add-only anti-join's key), then the ``full`` and
+#: ``prefix`` postings, all size-targeted with tombstoned ids dropped.
+#: Compaction preserves rows, it does not re-derive them: a doc left
+#: partially posted by a crashed upsert is healed by a rebuild.
+CONTAINMENT_LAYOUT = tuple(
+    IndexDataset(leg, (), drop_tombstoned) for leg in ("sets", "full", "prefix")
+)
+
+
+def _containment_sets(docs: DataFrame, id_col: str, text: str) -> DataFrame:
+    """(id, shingle set, size) per doc."""
+    return docs.select(
+        F.col(id_col), shingle_hashes(F.col(text)).alias("sh")
+    ).withColumn("size", F.array_size("sh"))
+
+
+def _containment_postings(
+    sets: DataFrame, id_col: str, t_num: int, t_den: int, alias: str | None = None
+) -> tuple[DataFrame, DataFrame]:
+    """The (full, prefix) posting rows (id, h) of shingle ``sets``: every
+    shingle, and the hash-ordered prefix that keeps the threshold
+    ``t_num / t_den`` lossless — shared by the index build, upsert and
+    probe. ``alias`` renames the id column."""
+    pid = F.col(id_col).alias(alias or id_col)
+    prefix_len = (
+        F.col("size")
+        - F.expr(f"(size * {t_num} + {t_den} - 1) div {t_den}")
+        + 1
+    )
+    return (
+        sets.select(pid, F.explode("sh").alias("h")),
+        sets.select(
+            pid, F.explode(F.slice(F.sort_array(F.col("sh")), 1, prefix_len)).alias("h")
+        ),
+    )
+
+
+def _containment_datasets(docs, id_col, text, t_num, t_den, pin):
+    """:data:`CONTAINMENT_LAYOUT`'s (sets, full, prefix) rows for
+    ``docs``, the postings from the pinned sets."""
+    sets = pin(_containment_sets(docs, id_col, text))
+    return (sets, *_containment_postings(sets, id_col, t_num, t_den))
+
 
 def build_containment_index(
     corpus: DataFrame,
@@ -2568,31 +2630,10 @@ def build_containment_index(
     incremental gate) — any fixed total order keeps the pigeonhole
     guarantee; corpus-frequency order would go stale as batches arrive.
     """
-    spark = corpus.sparkSession
-    sets = (
-        with_min_parallelism(corpus)
-        .select(F.col(id_col), shingle_hashes(F.col(text)).alias("sh"))
-        .withColumn("size", F.array_size("sh"))
-    )
-    prefix_len = (
-        F.col("size")
-        - F.expr(f"(size * {t_num} + {t_den} - 1) div {t_den}")
-        + 1
-    )
-
-    def write(root: str) -> None:
-        sets.write.mode("overwrite").parquet(f"{root}/sets")
-        sets_r = spark.read.parquet(f"{root}/sets")  # reuse the materialized table
-        sets_r.select(
-            F.col(id_col), F.explode("sh").alias("h")
-        ).write.mode("overwrite").parquet(f"{root}/full")
-        sets_r.select(
-            F.col(id_col),
-            F.explode(F.slice(F.sort_array(F.col("sh")), 1, prefix_len)).alias("h"),
-        ).write.mode("overwrite").parquet(f"{root}/prefix")
-
     build_index(
-        spark, path, write, (t_num, t_den, id_col), "t_num int, t_den int, id_col string"
+        corpus, path, CONTAINMENT_LAYOUT,
+        lambda docs, pin: _containment_datasets(docs, id_col, text, t_num, t_den, pin),
+        (t_num, t_den, id_col), "t_num int, t_den int, id_col string",
     )
 
 
@@ -2625,26 +2666,13 @@ def containment_index_probe(
         if (batch.isStreaming or ensured_parallelism)
         else with_min_parallelism(batch)
     )
-    psets = (
-        base
-        .select(F.col(id_col), shingle_hashes(F.col(text)).alias("sh"))
-        .withColumn("size", F.array_size("sh"))
-    )
+    psets = _containment_sets(base, id_col, text)
     if not batch.isStreaming:
         psets = psets.cache()
         if cache_registry is not None:
             cache_registry.append(psets)
-    prefix_len = (
-        F.col("size")
-        - F.expr(f"(size * {t_num} + {t_den} - 1) div {t_den}")
-        + 1
-    )
-    p_prefix = psets.select(
-        F.col(id_col).alias("probe_id"),
-        F.explode(F.slice(F.sort_array(F.col("sh")), 1, prefix_len)).alias("h"),
-    )
-    p_full = psets.select(
-        F.col(id_col).alias("probe_id"), F.explode("sh").alias("h")
+    p_full, p_prefix = _containment_postings(
+        psets, id_col, t_num, t_den, alias="probe_id"
     )
     cid = meta["id_col"]
     c_full = read_static_schema(spark, f"{root}/full").select(
@@ -2671,17 +2699,8 @@ def containment_index_probe(
         F.col("sh").alias("sh_c"),
         F.col("size").alias("sz_c"),
     )
-    tomb = _read_optional(spark, f"{root}/tombstones")
-    if tomb is not None:
-        # logical deletes, same contract as the other indexes: tombstoned
-        # corpus docs drop out of candidates via a broadcast anti-join
-        # bounded by the live tombstone count; compact_containment_index
-        # folds them in physically.
-        cand = cand.join(
-            F.broadcast(tomb.select(F.col(cid).alias("corpus_id")).distinct()),
-            "corpus_id",
-            "left_anti",
-        )
+    # logical deletes; compact_containment_index folds them in physically
+    cand = drop_tombstoned(spark, cand, root, meta, "corpus_id")
     inter = F.array_size(F.array_intersect("sh_p", "sh_c"))
     c = F.round(inter.cast("double") / F.least("sz_p", "sz_c").cast("double"), 6)
     return (
@@ -2708,64 +2727,22 @@ def containment_index_upsert(
     id_col: str = "doc_id",
     assume_new_ids: bool = False,
 ) -> None:
-    """ADD a document batch to a persisted containment index without
-    rebuilding — completes the lifecycle parity with the other three
-    persisted indexes (hash, MinHash band, IVF): shingle the batch with
-    the index's own threshold and APPEND its sets row plus full/prefix
-    posting rows; the corpus is never re-shingled, so keeping the index
-    current costs O(batch) per cycle. Prefixes stay hash-ordered, which
-    is what makes incremental adds sound — a frequency-ordered prefix
-    scheme would need re-sorting the whole corpus as frequencies drift.
-
-    Add-only contract as in :func:`minhash_index_upsert`: arriving ids
-    are anti-joined against the index's sets id column unless
-    ``assume_new_ids=True``. Crash-retry contract (three appends): the
-    anti-join keys on ``sets``, which is written FIRST — a crash before
-    the posting appends leaves the doc listed but partially posted (it
-    verifies but stops surfacing as a candidate until a rebuild or
-    compact), and the retry skips it rather than double-appending
-    postings, the same orphan-direction choice as the MinHash index.
-    Each append is one file per batch; run
-    :func:`compact_containment_index` on a cadence."""
-    meta = _index_meta(spark, index_path)
-    root = index_dataset_root(index_path)  # writers land in the active version
-    t_num, t_den, cid = meta["t_num"], meta["t_den"], meta["id_col"]
-    if not assume_new_ids:
-        existing = read_static_schema(spark, f"{root}/sets").select(
-            F.col(cid).alias(id_col)
-        )
-        batch = batch.join(existing, id_col, "left_anti")
-    # eager localCheckpoint: the anti-join reads the sets path the first
-    # append below mutates (see minhash_index_upsert).
-    sets = (
-        with_min_parallelism(batch)
-        .select(F.col(id_col).alias(cid), shingle_hashes(F.col(text)).alias("sh"))
-        .withColumn("size", F.array_size("sh"))
-        .localCheckpoint()
+    """ADD a document batch to a persisted containment index: shingle it
+    with the index's own threshold and append its sets row, then its
+    full and prefix postings (:func:`index_upsert` states the contract).
+    Prefixes stay hash-ordered, which is what makes incremental adds
+    sound — a frequency-ordered prefix scheme would need re-sorting the
+    whole corpus as frequencies drift."""
+    index_upsert(
+        spark, index_path, batch, CONTAINMENT_LAYOUT,
+        lambda docs, meta, root, pin: _containment_datasets(
+            docs, meta["id_col"], text, meta["t_num"], meta["t_den"], pin
+        ),
+        id_col=id_col, assume_new_ids=assume_new_ids,
     )
-    sets.coalesce(1).write.mode("append").parquet(f"{root}/sets")
-    prefix_len = (
-        F.col("size")
-        - F.expr(f"(size * {t_num} + {t_den} - 1) div {t_den}")
-        + 1
-    )
-    sets.select(F.col(cid), F.explode("sh").alias("h")).coalesce(1).write.mode(
-        "append"
-    ).parquet(f"{root}/full")
-    sets.select(
-        F.col(cid),
-        F.explode(F.slice(F.sort_array(F.col("sh")), 1, prefix_len)).alias("h"),
-    ).coalesce(1).write.mode("append").parquet(f"{root}/prefix")
 
 
 containment_index_delete = index_delete
-
-#: ``sets``/``full``/``prefix`` size-targeted, tombstoned ids dropped.
-#: Compaction preserves rows, it does not re-derive them: a doc left
-#: partially posted by a crashed upsert is healed by a rebuild.
-CONTAINMENT_LAYOUT = tuple(
-    IndexDataset(leg, (), drop_tombstoned) for leg in ("sets", "full", "prefix")
-)
 
 
 def compact_containment_index(spark, index_path: str) -> str:
@@ -2810,8 +2787,6 @@ def _bloom_bit_rows(
     non-negative BIGINT column expression (content hash for the doc
     filter, hash60 of the raw key for the keyset index); ``keep`` is a
     list of aliased Columns to carry through (probe shape)."""
-    from kafka_streams_the_clojure_way_spark.functions.portable import let_col
-
     if k > len(BLOOM_SEEDS):
         raise ValueError(f"k={k} exceeds the fixed seed family ({len(BLOOM_SEEDS)})")
     m_bits = words_per_segment * BLOOM_BITS_PER_WORD
@@ -2845,6 +2820,29 @@ def _bloom_bit_rows(
         F.floor(F.col("pos") / F.lit(BLOOM_BITS_PER_WORD)).cast("long").alias("word_idx"),
         F.expr(f"shiftleft(CAST(1 AS BIGINT), CAST(pos % {BLOOM_BITS_PER_WORD} AS INT))").alias("mask"),
     )
+
+
+def _bloom_words(
+    df: DataFrame, hash_expr: Column, n_segments: int, words_per_segment: int, k: int
+) -> DataFrame:
+    """(segment, word_idx, word): the member bits of every ``df`` row
+    OR-folded per filter word — the rows the Bloom and keyset builds
+    write and their upserts append."""
+    return (
+        _bloom_bit_rows(
+            df,
+            hash_expr=hash_expr,
+            n_segments=n_segments,
+            words_per_segment=words_per_segment,
+            k=k,
+        )
+        .groupBy("segment", "word_idx")
+        .agg(F.bit_or("mask").alias("word"))
+    )
+
+
+#: ``bits`` one file per segment directory, bit rows OR-folded.
+BLOOM_LAYOUT = (IndexDataset("bits", ("segment",), or_fold_bits),)
 
 
 def build_bloom_index(
@@ -2885,22 +2883,11 @@ def build_bloom_index(
     honors its tombstones); a deleted doc only costs a false positive
     here until the next rebuild. That is the standard production
     trade (RocksDB/Cassandra SSTable filters behave identically)."""
-    bits = (
-        _bloom_bit_rows(
-            with_min_parallelism(corpus),
-            hash_expr=content_hash(F.col(text)),
-            n_segments=n_segments,
-            words_per_segment=words_per_segment,
-            k=k,
-        )
-        .groupBy("segment", "word_idx")
-        .agg(F.bit_or("mask").alias("word"))
-    )
     build_index(
-        corpus.sparkSession, path,
-        lambda root: write_partitioned(
-            bits.repartition("segment"), f"{root}/bits", "segment"
-        ),
+        corpus, path, BLOOM_LAYOUT,
+        lambda docs, pin: (pin(_bloom_words(
+            docs, content_hash(F.col(text)), n_segments, words_per_segment, k
+        )),),
         (n_segments, words_per_segment, k, id_col, text),
         "n_segments int, words_per_segment int, k int, id_col string, text_col string",
     )
@@ -3006,31 +2993,17 @@ def bloom_index_upsert(
     text: str = "text",
 ) -> None:
     """OR the batch's bits into the filter: append (word_idx, word) rows
-    to the touched segment directories only (one file per touched
-    partition per batch, same append discipline as the other index
-    upserts). Bit-OR is associative and commutative, so upsert-then-
-    probe is bit-identical to rebuild-then-probe, and replayed batches
-    are naturally idempotent (at-least-once safe with no anti-join)."""
-    meta = _index_meta(spark, index_path)
-    root = index_dataset_root(index_path)  # writers land in the active version
-    bits = (
-        _bloom_bit_rows(
-            with_min_parallelism(batch),
-            hash_expr=content_hash(F.col(text)),
-            n_segments=meta["n_segments"],
-            words_per_segment=meta["words_per_segment"],
-            k=meta["k"],
-        )
-        .groupBy("segment", "word_idx")
-        .agg(F.bit_or("mask").alias("word"))
+    to the touched segment directories (:func:`index_upsert` states the
+    contract). Bit-OR is associative, commutative and idempotent, so
+    upsert-then-probe is bit-identical to rebuild-then-probe and a
+    replayed batch needs no id anti-join."""
+    index_upsert(
+        spark, index_path, batch, BLOOM_LAYOUT,
+        lambda docs, meta, root, pin: (pin(_bloom_words(
+            docs, content_hash(F.col(text)), meta["n_segments"],
+            meta["words_per_segment"], meta["k"],
+        )),),
     )
-    bits.repartition("segment").write.mode("append").partitionBy("segment").parquet(
-        f"{root}/bits"
-    )
-
-
-#: ``bits`` one file per segment directory, bit rows OR-folded.
-BLOOM_LAYOUT = (IndexDataset("bits", ("segment",), or_fold_bits),)
 
 
 def compact_bloom_index(spark, index_path: str) -> str:
@@ -3095,6 +3068,35 @@ def bloom_gated_exact_probe(
 # Keyset index: bloom-fronted exact-membership set over arbitrary keys
 # --------------------------------------------------------------------------
 
+#: ``bits`` before ``keys``: a crash between the two appends leaves
+#: bits without their keys, which the retry's membership probe re-adds
+#: (the reverse order would leave keys the filter rules out: Bloom
+#: false negatives). ``bits`` OR-folded and ``keys`` unchanged (upserts
+#: append only fresh keys, so they are duplicate-free), one file per
+#: segment directory each.
+KEYSET_LAYOUT = (
+    IndexDataset("bits", ("segment",), or_fold_bits),
+    IndexDataset("keys", ("segment",)),
+)
+
+
+def _keyset_base(keys: DataFrame, key_col: str, n_segments: int) -> DataFrame:
+    """Distinct (key, segment = pmod(hash60(key), n_segments)) rows."""
+    return (
+        keys.select(F.col(key_col).alias("key"))
+        .distinct()
+        .withColumn("segment", F.pmod(hash60(F.col("key")), F.lit(n_segments)))
+    )
+
+
+def _keyset_datasets(keys, n_segments, words_per_segment, k, pin):
+    """:data:`KEYSET_LAYOUT`'s (bits, keys) rows for distinct (key,
+    segment) rows, both from the pinned keys."""
+    keys = pin(keys)
+    bits = _bloom_words(keys, hash60(F.col("key")), n_segments, words_per_segment, k)
+    return bits, keys
+
+
 def build_keyset_index(
     keys: DataFrame,
     path: str,
@@ -3125,32 +3127,13 @@ def build_keyset_index(
     Deletes: drop rows from ``keys`` and rebuild ``bits`` — bits alone
     cannot unset; until then a deleted key costs a confirm lookup, never
     a wrong answer (membership truth lives in ``keys``)."""
-    from kafka_streams_the_clojure_way_spark.functions.portable import hash60
-
-    base = (
-        with_min_parallelism(keys)
-        .select(F.col(key_col).alias("key"))
-        .distinct()
-        .withColumn("segment", F.pmod(hash60(F.col("key")), F.lit(n_segments)))
-    )
-    bits = (
-        _bloom_bit_rows(
-            base,
-            hash_expr=hash60(F.col("key")),
-            n_segments=n_segments,
-            words_per_segment=words_per_segment,
-            k=k,
-        )
-        .groupBy("segment", "word_idx")
-        .agg(F.bit_or("mask").alias("word"))
-    )
-
-    def write(root: str) -> None:
-        write_partitioned(bits.repartition("segment"), f"{root}/bits", "segment")
-        write_partitioned(base.repartition("segment"), f"{root}/keys", "segment")
-
     build_index(
-        keys.sparkSession, path, write, (n_segments, words_per_segment, k, key_col),
+        keys, path, KEYSET_LAYOUT,
+        lambda rows, pin: _keyset_datasets(
+            _keyset_base(rows, key_col, n_segments), n_segments,
+            words_per_segment, k, pin,
+        ),
+        (n_segments, words_per_segment, k, key_col),
         "n_segments int, words_per_segment int, k int, key_col string",
     )
 
@@ -3193,8 +3176,6 @@ def keyset_index_probe(
     adaptive maybe-collect (the confirm join is still exact on
     (key, segment)). An EMPTY list asserts the probe provably has no
     keys and short-circuits to an empty result."""
-    from kafka_streams_the_clojure_way_spark.functions.portable import hash60
-
     meta = _index_meta(spark, index_path)
     root = index_dataset_root(index_path)  # one snapshot per probe
     base = probe if segments is not None else with_min_parallelism(probe)
@@ -3289,54 +3270,26 @@ def keyset_index_upsert(
     *,
     key_col: str = "key",
 ) -> None:
-    """Add keys to the set: OR their bits into the filter and append
-    them (anti-joined against existing members, so replays and re-adds
-    are idempotent and the keys table stays duplicate-free) to the
-    touched segment directories only."""
-    from kafka_streams_the_clojure_way_spark.functions.portable import hash60
-
+    """Add keys to the set: OR their bits into the filter and append the
+    keys to the touched segment directories (:func:`index_upsert` states
+    the contract). Instead of an id anti-join, a membership probe of the
+    index picks the fresh keys, so replays and re-adds are idempotent
+    and the keys table stays duplicate-free."""
     meta = _index_meta(spark, index_path)
-    root = index_dataset_root(index_path)  # writers land in the active version
-    base = (
-        with_min_parallelism(new_keys)
-        .select(F.col(key_col).alias("key"))
-        .distinct()
-        .withColumn(
-            "segment", F.pmod(hash60(F.col("key")), F.lit(meta["n_segments"]))
-        )
-    )
+    base = _keyset_base(new_keys, key_col, meta["n_segments"])
     probe_caches: list = []
     existing = keyset_index_probe(
         spark, index_path, base, cache_registry=probe_caches
     )
-    fresh = base.join(F.broadcast(existing), "key", "left_anti")
-    bits = (
-        _bloom_bit_rows(
-            fresh,
-            hash_expr=hash60(F.col("key")),
-            n_segments=meta["n_segments"],
-            words_per_segment=meta["words_per_segment"],
-            k=meta["k"],
-        )
-        .groupBy("segment", "word_idx")
-        .agg(F.bit_or("mask").alias("word"))
-    )
-    bits.repartition("segment").write.mode("append").partitionBy("segment").parquet(
-        f"{root}/bits"
-    )
-    fresh.repartition("segment").write.mode("append").partitionBy("segment").parquet(
-        f"{root}/keys"
+    index_upsert(
+        spark, index_path, base.join(F.broadcast(existing), "key", "left_anti"),
+        KEYSET_LAYOUT,
+        lambda fresh, meta, root, pin: _keyset_datasets(
+            fresh, meta["n_segments"], meta["words_per_segment"], meta["k"], pin
+        ),
     )
     for frame in probe_caches:
         frame.unpersist()
-
-
-#: ``bits`` OR-folded and ``keys`` unchanged (upserts anti-join, so keys
-#: are already duplicate-free), one file per segment directory each.
-KEYSET_LAYOUT = (
-    IndexDataset("bits", ("segment",), or_fold_bits),
-    IndexDataset("keys", ("segment",)),
-)
 
 
 def compact_keyset_index(spark, index_path: str) -> str:
@@ -3372,8 +3325,6 @@ def line_occurrences(
     Pure per-row HOFs into one posexplode; no shuffle. Word array
     let-bound — the per-line lambda slices a bound attribute, never
     re-splitting the text per line (portable.let_col)."""
-    from kafka_streams_the_clojure_way_spark.functions.portable import let_col
-
     def body(words: Column) -> Column:
         # greatest(n_lines, 1): sequence(0, -1) would DESCEND and
         # fabricate two phantom lines for an empty token array — today

@@ -53,6 +53,7 @@ from kafka_streams_the_clojure_way_spark.operators.dedup import (
     build_index,
     compact_index,
     index_dataset_root,
+    index_upsert,
     serve_index_stream,
 )
 from kafka_streams_the_clojure_way_spark.sources.files import (
@@ -351,45 +352,6 @@ def phash_pairs(
     )
 
 
-def phash_pairs_sql(
-    table: str = "documents",
-    id_col: str = "doc_id",
-    text: str = "text",
-    max_dist: int = PHASH_MAX_DIST,
-) -> str:
-    """DuckDB twin of :func:`phash_pairs` — the ALL-PAIRS definition
-    (banding is lossless at this distance, so the two agree exactly;
-    the oracle states the semantics, the engine earns the plan)."""
-    return f"""
-    WITH sigs AS (SELECT {id_col}, phash FROM {phash_sql(table, id_col, text)} s)
-    SELECT a.{id_col} AS id_a, b.{id_col} AS id_b,
-           CAST(bit_count(xor(a.phash, b.phash)) AS BIGINT) AS hamming
-    FROM sigs a JOIN sigs b ON a.{id_col} < b.{id_col}
-    WHERE bit_count(xor(a.phash, b.phash)) <= {max_dist}
-    """
-
-
-def phash_pairs_between_sql(
-    probe_pred: str,
-    corpus_pred: str,
-    table: str = "documents",
-    id_col: str = "doc_id",
-    text: str = "text",
-    max_dist: int = PHASH_MAX_DIST,
-) -> str:
-    """Oracle for the incremental (probe x corpus) form: (probe_id,
-    corpus_id, hamming) for every probe/corpus pair within distance."""
-    return f"""
-    WITH sigs AS (SELECT {id_col}, phash FROM {phash_sql(table, id_col, text)} s)
-    SELECT p.{id_col} AS probe_id, c.{id_col} AS corpus_id,
-           CAST(bit_count(xor(p.phash, c.phash)) AS BIGINT) AS hamming
-    FROM sigs p JOIN sigs c ON p.{id_col} != c.{id_col}
-    WHERE p.{id_col} IN (SELECT {id_col} FROM {table} WHERE {probe_pred})
-      AND c.{id_col} IN (SELECT {id_col} FROM {table} WHERE {corpus_pred})
-      AND bit_count(xor(p.phash, c.phash)) <= {max_dist}
-    """
-
-
 # --------------------------------------------------------------------------
 # Video near-dup: per-frame pHash over the demuxed PGM container
 # --------------------------------------------------------------------------
@@ -582,6 +544,17 @@ def video_phash_pairs_sql(
 # Persisted pHash band index: build / probe / upsert / compact
 # --------------------------------------------------------------------------
 
+#: ``bands`` one file per (band, bucket) directory, rows unchanged.
+PHASH_LAYOUT = (IndexDataset("bands", ("band", "bucket")),)
+
+
+def _phash_datasets(assets, id_col, n_bands, n_buckets, decode, pin):
+    """:data:`PHASH_LAYOUT`'s bands rows for ``assets``: (id, phash,
+    band, bkey, bucket = pmod(bkey, n_buckets)) per (image, band)."""
+    banded = _banded(phash_assets(assets, id_col, decode), id_col, n_bands)
+    return (pin(banded.withColumn("bucket", F.pmod(F.col("bkey"), F.lit(n_buckets)))),)
+
+
 def build_phash_index(
     corpus_assets: DataFrame,
     path: str,
@@ -607,20 +580,14 @@ def build_phash_index(
 
     Signing the corpus runs ONCE; after this, per-batch probe cost is
     O(batch + matching postings) regardless of corpus size."""
-    from kafka_streams_the_clojure_way_spark.sources.files import write_partitioned
-
-    sigs = phash_assets(with_min_parallelism(corpus_assets), id_col, decode)
-    banded = _banded(sigs, id_col, n_bands).withColumn(
-        "bucket", F.pmod(F.col("bkey"), F.lit(n_buckets))
-    )
     coef_sum = sum(c for row in DCT_COEF for c in row)
     # decode is a SIGNATURE PARAMETER: probing a real-pixel index with
     # raw-byte signatures (or vice versa) would silently miss — the meta
     # row pins it so every probe/upsert hashes the way the build did.
     build_index(
-        corpus_assets.sparkSession, path,
-        lambda root: write_partitioned(
-            banded.repartition("band", "bucket"), f"{root}/bands", "band", "bucket"
+        corpus_assets, path, PHASH_LAYOUT,
+        lambda assets, pin: _phash_datasets(
+            assets, id_col, n_bands, n_buckets, decode, pin
         ),
         (n_bands, _band_bits(n_bands), n_bands - 1, n_buckets, coef_sum, id_col,
          decode or ""),
@@ -724,33 +691,17 @@ def phash_index_upsert(
     id_col: str = "doc_id",
     assume_new_ids: bool = False,
 ) -> None:
-    """Add images to the index: sign the new batch and append its band
-    rows to the touched (band, bkey) directories only. With the default
-    ``assume_new_ids=False``, already-indexed ids are anti-joined out
-    first so at-least-once replays stay idempotent (the
-    ``minhash_index_upsert`` contract)."""
-    meta = _index_meta(spark, index_path)
-    root = index_dataset_root(index_path)  # writers land in the active version
-    sigs = phash_assets(
-        with_min_parallelism(new_assets), id_col, meta["decode"] or None
+    """Add images to the index: sign the new batch with the index's own
+    codec and append its band rows to the touched (band, bucket)
+    directories (``dedup.index_upsert`` states the contract)."""
+    index_upsert(
+        spark, index_path, new_assets, PHASH_LAYOUT,
+        lambda assets, meta, root, pin: _phash_datasets(
+            assets, meta["id_col"], meta["n_bands"], meta["n_buckets"],
+            meta["decode"] or None, pin,
+        ),
+        id_col=id_col, assume_new_ids=assume_new_ids,
     )
-    banded = _banded(sigs, id_col, meta["n_bands"]).withColumn(
-        "bucket", F.pmod(F.col("bkey"), F.lit(meta["n_buckets"]))
-    )
-    if not assume_new_ids:
-        existing = (
-            read_static_schema(spark, f"{root}/bands")
-            .select(meta["id_col"])
-            .distinct()
-        )
-        banded = banded.join(existing, id_col, "left_anti")
-    banded.repartition("band", "bucket").write.mode("append").partitionBy(
-        "band", "bucket"
-    ).parquet(f"{root}/bands")
-
-
-#: ``bands`` one file per (band, bucket) directory, rows unchanged.
-PHASH_LAYOUT = (IndexDataset("bands", ("band", "bucket")),)
 
 
 def compact_phash_index(spark, index_path: str) -> str:
@@ -814,6 +765,33 @@ def phash_index_probe_stream(
 #: PartitionFilter, and the exact bkey resolves in the equi-join.
 VIDEO_INDEX_BUCKETS = 64
 
+#: ``frames`` one file per (band, bucket) directory, rows unchanged.
+VIDEO_LAYOUT = (IndexDataset("frames", ("band", "bucket")),)
+
+
+def _video_bands(
+    sigs: DataFrame, id_col: str, n_bands: int, n_buckets: int
+) -> DataFrame:
+    """(id, frame_idx, phash, band, bkey, bucket = pmod(bkey, n_buckets))
+    per (sampled frame, band) — the rows the video index build and
+    upsert write and its probe joins."""
+    return sigs.select(
+        id_col, "frame_idx", "phash", _band_structs("phash", n_bands).alias("bk")
+    ).select(
+        id_col,
+        "frame_idx",
+        "phash",
+        F.col("bk.band").alias("band"),
+        F.col("bk.bkey").alias("bkey"),
+        F.pmod(F.col("bk.bkey"), F.lit(n_buckets)).alias("bucket"),
+    )
+
+
+def _video_datasets(assets, id_col, stride, n_bands, n_buckets, pin):
+    """:data:`VIDEO_LAYOUT`'s frames rows for video ``assets``."""
+    sigs = video_frame_phashes(assets, id_col, stride=stride)
+    return (pin(_video_bands(sigs, id_col, n_bands, n_buckets)),)
+
 
 def build_video_phash_index(
     corpus_assets: DataFrame,
@@ -840,32 +818,11 @@ def build_video_phash_index(
     matching postings) regardless of corpus size — re-encoded uploads
     of already-ingested footage are caught without ever re-decoding the
     archive."""
-    from kafka_streams_the_clojure_way_spark.sources.files import write_partitioned
-
-    sigs = video_frame_phashes(
-        with_min_parallelism(corpus_assets), id_col, stride=stride
-    )
-    banded = (
-        sigs.select(
-            id_col,
-            "frame_idx",
-            "phash",
-            _band_structs("phash", n_bands).alias("bk"),
-        )
-        .select(
-            id_col,
-            "frame_idx",
-            "phash",
-            F.col("bk.band").alias("band"),
-            F.col("bk.bkey").alias("bkey"),
-        )
-        .withColumn("bucket", F.pmod(F.col("bkey"), F.lit(n_buckets)))
-    )
     coef_sum = sum(c for row in DCT_COEF for c in row)
     build_index(
-        corpus_assets.sparkSession, path,
-        lambda root: write_partitioned(
-            banded.repartition("band", "bucket"), f"{root}/frames", "band", "bucket"
+        corpus_assets, path, VIDEO_LAYOUT,
+        lambda assets, pin: _video_datasets(
+            assets, id_col, stride, n_bands, n_buckets, pin
         ),
         (n_bands, _band_bits(n_bands), n_bands - 1, min_frames, stride, n_buckets,
          coef_sum, id_col),
@@ -913,21 +870,8 @@ def video_phash_index_probe(
             sigs = sigs.cache()
             if cache_registry is not None:
                 cache_registry.append(sigs)
-    probe = (
-        sigs.select(
-            F.col(id_col).alias("probe_id"),
-            F.col("frame_idx").alias("p_frame_idx"),
-            F.col("phash").alias("probe_phash"),
-            _band_structs("phash", meta["n_bands"]).alias("bk"),
-        )
-        .select(
-            "probe_id",
-            "p_frame_idx",
-            "probe_phash",
-            F.col("bk.band").alias("p_band"),
-            F.col("bk.bkey").alias("p_bkey"),
-        )
-        .withColumn("p_bucket", F.pmod(F.col("p_bkey"), F.lit(meta["n_buckets"])))
+    probe = _video_bands(sigs, id_col, meta["n_bands"], meta["n_buckets"]).toDF(
+        "probe_id", "p_frame_idx", "probe_phash", "p_band", "p_bkey", "p_bucket"
     )
     frames = read_static_schema(spark, f"{root}/frames")
     if not batch_assets.isStreaming:
@@ -980,44 +924,16 @@ def video_phash_index_upsert(
 ) -> None:
     """Add videos to the index: demux + hash the new batch with the
     index's own parameters and append its band rows to the touched
-    (band, bucket) directories only. Already-indexed ids are anti-joined
-    out by default so at-least-once replays stay idempotent (the shared
-    upsert contract)."""
-    meta = _index_meta(spark, index_path)
-    root = index_dataset_root(index_path)  # writers land in the active version
-    sigs = video_frame_phashes(
-        with_min_parallelism(new_assets), id_col, stride=meta["stride"]
+    (band, bucket) directories (``dedup.index_upsert`` states the
+    contract)."""
+    index_upsert(
+        spark, index_path, new_assets, VIDEO_LAYOUT,
+        lambda assets, meta, root, pin: _video_datasets(
+            assets, meta["id_col"], meta["stride"], meta["n_bands"],
+            meta["n_buckets"], pin,
+        ),
+        id_col=id_col, assume_new_ids=assume_new_ids,
     )
-    banded = (
-        sigs.select(
-            id_col,
-            "frame_idx",
-            "phash",
-            _band_structs("phash", meta["n_bands"]).alias("bk"),
-        )
-        .select(
-            id_col,
-            "frame_idx",
-            "phash",
-            F.col("bk.band").alias("band"),
-            F.col("bk.bkey").alias("bkey"),
-        )
-        .withColumn("bucket", F.pmod(F.col("bkey"), F.lit(meta["n_buckets"])))
-    )
-    if not assume_new_ids:
-        existing = (
-            read_static_schema(spark, f"{root}/frames")
-            .select(meta["id_col"])
-            .distinct()
-        )
-        banded = banded.join(existing, id_col, "left_anti")
-    banded.repartition("band", "bucket").write.mode("append").partitionBy(
-        "band", "bucket"
-    ).parquet(f"{root}/frames")
-
-
-#: ``frames`` one file per (band, bucket) directory, rows unchanged.
-VIDEO_LAYOUT = (IndexDataset("frames", ("band", "bucket")),)
 
 
 def compact_video_phash_index(spark, index_path: str) -> str:

@@ -28,12 +28,13 @@ from pyspark.sql import functions as F
 
 from kafka_streams_the_clojure_way_spark.operators.dedup import (
     IndexDataset,
-    _read_optional,
+    _index_meta,
     build_index,
     compact_index,
     drop_tombstoned,
     index_dataset_root,
     index_delete,
+    index_upsert,
     serve_index_stream,
 )
 from kafka_streams_the_clojure_way_spark.sources.files import (
@@ -653,6 +654,38 @@ def cosine_topk_pandas(
 # Persisted IVF index: build once, probe with partition pruning
 # --------------------------------------------------------------------------
 
+#: ``postings`` (the add-only anti-join's key) one file per cell
+#: directory minus tombstoned vectors; the frozen quantizer is copied
+#: unchanged, so a version root is complete.
+IVF_LAYOUT = (
+    IndexDataset("postings", ("cell",), drop_tombstoned),
+    IndexDataset("centroids"),
+)
+
+
+def _ivf_postings(
+    vectors: DataFrame, cents: DataFrame, id_col: str, vec_col: str
+) -> DataFrame:
+    """(neighbor_id, vec, cell): every vector assigned to its nearest
+    (cent_id, cent_vec) centroid, ties to the lower cent_id — the cell
+    assignment the IVF build and upsert share."""
+    from kafka_streams_the_clojure_way_spark.operators.relational import top_k_per_key
+
+    scored = vectors.join(F.broadcast(cents)).select(
+        F.col(id_col).alias("neighbor_id"),
+        F.col(vec_col).alias("vec"),
+        F.col("cent_id"),
+        cosine(F.col(vec_col), F.col("cent_vec")).alias("__cos"),
+    )
+    return top_k_per_key(
+        scored,
+        keys=["neighbor_id"],
+        order_by=[F.col("__cos").desc(), F.col("cent_id")],
+        k=1,
+        rank_col="__r",
+    ).select("neighbor_id", "vec", F.col("cent_id").alias("cell"))
+
+
 def build_ivf_index(
     corpus: DataFrame,
     path: str,
@@ -671,34 +704,17 @@ def build_ivf_index(
     the build/serve split every production ANN system makes (FAISS
     train+add vs search). ``path/meta`` records the quantizer parameters
     and the postings id column (``neighbor_id``) tombstones key on."""
-    from kafka_streams_the_clojure_way_spark.operators.relational import top_k_per_key
-    from kafka_streams_the_clojure_way_spark.sources.files import write_partitioned
-
     cents = corpus.filter(F.col(id_col) % centroid_mod == 1).orderBy(id_col).limit(
         n_cells
     ).select(
         F.col(id_col).alias("cent_id"), F.col(vec_col).alias("cent_vec")
     )
-    scored = with_min_parallelism(corpus).join(F.broadcast(cents)).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("vec"),
-        F.col("cent_id"),
-        cosine(F.col(vec_col), F.col("cent_vec")).alias("__cos"),
-    )
-    postings = top_k_per_key(
-        scored,
-        keys=["neighbor_id"],
-        order_by=[F.col("__cos").desc(), F.col("cent_id")],
-        k=1,
-        rank_col="__r",
-    ).select("neighbor_id", "vec", F.col("cent_id").alias("cell"))
-
-    def write(root: str) -> None:
-        cents.write.mode("overwrite").parquet(f"{root}/centroids")
-        write_partitioned(postings, f"{root}/postings", "cell")
-
     build_index(
-        corpus.sparkSession, path, write, (centroid_mod, n_cells, "neighbor_id"),
+        corpus, path, IVF_LAYOUT,
+        lambda vectors, pin: (
+            pin(_ivf_postings(vectors, cents, id_col, vec_col)), cents,
+        ),
+        (centroid_mod, n_cells, "neighbor_id"),
         "centroid_mod int, n_cells int, id_col string",
     )
 
@@ -712,62 +728,33 @@ def ivf_index_upsert(
     vec_col: str = "embedding",
     assume_new_ids: bool = False,
 ) -> None:
-    """ADD vectors to a persisted IVF index without rebuilding (FAISS
-    ``add`` vs ``train``): route the batch against the EXISTING
-    (broadcast) centroid table and append each vector's posting into its
-    cell's partition directory. The quantizer is frozen — identical to
-    every production IVF: adds route through the trained centroids, and
-    a periodic re-train/rebuild handles drift. Per-cycle cost is
-    O(batch x n_cells) scoring + one batch-sized append, corpus
-    untouched.
-
-    Add-only contract as in minhash_index_upsert: duplicate ids would
-    shadow-duplicate candidates, so arriving ids are anti-joined against
-    the postings id column unless ``assume_new_ids=True``."""
-    from kafka_streams_the_clojure_way_spark.operators.relational import top_k_per_key
-
-    root = index_dataset_root(index_path)  # writers land in the active version
-    cents = F.broadcast(
-        read_static_schema(spark, f"{root}/centroids").select("cent_id", "cent_vec")
-    )
-    if not assume_new_ids:
-        existing = read_static_schema(spark, f"{root}/postings").select(
-            F.col("neighbor_id").alias(id_col)
-        )
-        batch = batch.join(existing, id_col, "left_anti")
-    scored = with_min_parallelism(batch).join(cents).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("vec"),
-        F.col("cent_id"),
-        cosine(F.col(vec_col), F.col("cent_vec")).alias("__cos"),
-    )
-    postings = top_k_per_key(
-        scored,
-        keys=["neighbor_id"],
-        order_by=[F.col("__cos").desc(), F.col("cent_id")],
-        k=1,
-        rank_col="__r",
-    ).select("neighbor_id", "vec", F.col("cent_id").alias("cell"))
-    # one shuffle onto the partition column = at most one file per touched
-    # cell directory per batch; without it every task slivers every cell
-    # and a long-running add loop regresses to tiny-file listing cost.
-    # After many batches, compact_ivf_index restores the build layout.
-    postings.repartition("cell").write.mode("append").partitionBy("cell").parquet(
-        f"{root}/postings"
+    """ADD vectors to a persisted IVF index: route the batch against the
+    EXISTING centroid table and append each vector's posting into its
+    cell's partition directory (``dedup.index_upsert`` states the
+    contract). The quantizer is frozen, as in every production IVF:
+    adds route through the trained centroids, and a periodic
+    re-train/rebuild handles drift. Per-cycle cost is O(batch x n_cells)
+    scoring + one batch-sized append, corpus untouched."""
+    index_upsert(
+        spark, index_path, batch, IVF_LAYOUT,
+        lambda vectors, meta, root, pin: (
+            pin(_ivf_postings(
+                vectors,
+                read_static_schema(spark, f"{root}/centroids").select(
+                    "cent_id", "cent_vec"
+                ),
+                meta["id_col"],
+                vec_col,
+            )),
+            None,
+        ),
+        id_col=id_col, assume_new_ids=assume_new_ids,
     )
 
 
 def ivf_index_delete(spark, index_path: str, ids, *, id_col: str = "vec_id") -> None:
     """``dedup.index_delete`` with the IVF id column default."""
     index_delete(spark, index_path, ids, id_col=id_col)
-
-
-#: ``postings`` one file per cell directory minus tombstoned vectors; the
-#: frozen quantizer is copied unchanged, so a version root is complete.
-IVF_LAYOUT = (
-    IndexDataset("postings", ("cell",), drop_tombstoned),
-    IndexDataset("centroids"),
-)
 
 
 def compact_ivf_index(spark, index_path: str) -> str:
@@ -834,17 +821,9 @@ def ivf_index_topk(
             ),
         )
     )
-    tomb = _read_optional(spark, f"{root}/tombstones")
-    if tomb is not None:
-        # logical deletes: tombstoned vectors never reach the top-k
-        # (broadcast anti-join bounded by the live tombstone count);
-        # applied ABOVE the cell join so the scan keeps its dynamic
-        # partition pruning. compact_ivf_index folds them in physically.
-        scored = scored.join(
-            F.broadcast(tomb.select("neighbor_id").distinct()),
-            "neighbor_id",
-            "left_anti",
-        )
+    # logical deletes, ABOVE the cell join so the scan keeps its dynamic
+    # partition pruning; compact_ivf_index folds them in physically
+    scored = drop_tombstoned(spark, scored, root, _index_meta(spark, index_path))
     return top_k_per_key(
         scored.select(query_id, "neighbor_id", "cosine"),
         keys=[query_id],
@@ -988,13 +967,7 @@ def ivf_index_neardup_pairs(
         )
         .filter(F.col("cosine") >= threshold)
     )
-    tomb = _read_optional(spark, f"{root}/tombstones")
-    if tomb is not None:
-        scored = scored.join(
-            F.broadcast(tomb.select("neighbor_id").distinct()),
-            "neighbor_id",
-            "left_anti",
-        )
+    scored = drop_tombstoned(spark, scored, root, _index_meta(spark, index_path))
     return scored.select(
         "probe_id",
         F.col("neighbor_id").alias("corpus_id"),

@@ -94,15 +94,6 @@ def merge(*others: DataFrame) -> Pipeline:
     return stage
 
 
-def cents_to_units(cents: Column | str, *, alias: str = "amount") -> Column:
-    """Integer cents -> whole currency units with the reference's integer
-    division semantics (core.clj:118: ``(int (/ 15000 100)) = 150``).
-    ``floor`` not ``cast`` — Spark's double->int cast truncates toward zero
-    but other engines round; floor is explicit and portable."""
-    col = F.col(cents) if isinstance(cents, str) else cents
-    return F.floor(col / F.lit(100)).cast("long").alias(alias)
-
-
 # ---------------------------------------------------------------------------
 # The reference's two concrete pipelines (core.clj:100-105 and 112-118),
 # expressed over the driver's `events` table:

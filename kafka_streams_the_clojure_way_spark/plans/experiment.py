@@ -50,12 +50,3 @@ def run_experiment(
     # with the injected records); every entity is collected.
     return {name: [row.asDict(recursive=True) for row in df.collect()] for name, df in compiled.items()}
 
-
-def entity_outputs(
-    compiled: dict[str, DataFrame], *parts: str
-) -> dict[str, list[dict[str, Any]]]:
-    """Collect a subset of compiled entities (convenience for tests)."""
-    return {
-        name: [row.asDict(recursive=True) for row in compiled[name].collect()]
-        for name in parts
-    }

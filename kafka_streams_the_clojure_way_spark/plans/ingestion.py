@@ -1109,18 +1109,44 @@ def run_ingestion_stream(
     from kafka_streams_the_clojure_way_spark.operators import imagehash as IH
 
     sink_fn, psi_sink_fn = as_batch_sink(sink), as_batch_sink(psi_sink)
-    # (index path, compaction) for every index the loop upserts into
+    keyed = {"id_col": id_col, "assume_new_ids": assume_new_ids}
+
+    def of_mime(batch: DataFrame, mime: str) -> DataFrame:
+        # each multimodal index takes the admitted assets of its modality
+        return batch.filter(F.col("asset").getField("mime") == mime)
+
+    def vectors(batch: DataFrame) -> DataFrame:
+        # the IVF index takes the admitted docs' embeddings
+        return batch.select(F.col(id_col)).join(
+            embeddings.select(F.col("vec_id").alias(id_col), F.col("embedding")),
+            id_col,
+        ).select(F.col(id_col).alias("vec_id"), F.col("embedding"))
+
+    # (index path, upsert(path, curated), compaction) for every index the
+    # loop maintains, in upsert order. The Bloom filter takes no ids:
+    # replays are idempotent by bit-or.
     maintained = [
-        (path, compact)
-        for path, compact in (
-            (upsert_index_path, D.compact_minhash_index),
-            (upsert_hash_index_path, D.compact_hash_index),
-            (upsert_bloom_index_path, D.compact_bloom_index),
-            (upsert_containment_index_path, D.compact_containment_index),
-            (upsert_ivf_index_path, S.compact_ivf_index),
-            (upsert_image_index_path, IH.compact_phash_index),
-            (upsert_audio_index_path, AFP.compact_audiofp_index),
-            (upsert_video_index_path, IH.compact_video_phash_index),
+        (path, upsert, compact)
+        for path, upsert, compact in (
+            (upsert_index_path, lambda p, b: D.minhash_index_upsert(
+                spark, p, b, text=text, **keyed), D.compact_minhash_index),
+            (upsert_hash_index_path, lambda p, b: D.hash_index_upsert(
+                spark, p, b, text=text, **keyed), D.compact_hash_index),
+            (upsert_bloom_index_path, lambda p, b: D.bloom_index_upsert(
+                spark, p, b, text=text), D.compact_bloom_index),
+            (upsert_containment_index_path, lambda p, b: D.containment_index_upsert(
+                spark, p, b, text=text, **keyed), D.compact_containment_index),
+            (upsert_ivf_index_path, lambda p, b: S.ivf_index_upsert(
+                spark, p, vectors(b), assume_new_ids=assume_new_ids),
+             S.compact_ivf_index),
+            (upsert_image_index_path, lambda p, b: IH.phash_index_upsert(
+                spark, p, of_mime(b, "image/png"), **keyed), IH.compact_phash_index),
+            (upsert_audio_index_path, lambda p, b: AFP.audiofp_index_upsert(
+                spark, p, of_mime(b, "audio/wav"), **keyed),
+             AFP.compact_audiofp_index),
+            (upsert_video_index_path, lambda p, b: IH.video_phash_index_upsert(
+                spark, p, of_mime(b, "video/x-yuv4mpeg"), **keyed),
+             IH.compact_video_phash_index),
         )
         if path is not None
     ]
@@ -1138,90 +1164,15 @@ def run_ingestion_stream(
         )
         try:
             sink_fn(curated, batch_id)
-            if upsert_index_path is not None:
-                D.minhash_index_upsert(
-                    spark,
-                    upsert_index_path,
-                    curated,
-                    text=text,
-                    id_col=id_col,
-                    assume_new_ids=assume_new_ids,
-                )
-            if upsert_hash_index_path is not None:
-                D.hash_index_upsert(
-                    spark,
-                    upsert_hash_index_path,
-                    curated,
-                    text=text,
-                    id_col=id_col,
-                    assume_new_ids=assume_new_ids,
-                )
-            if upsert_bloom_index_path is not None:
-                # OR-in admitted docs' bits; replays are idempotent by
-                # bit-or, no anti-join needed.
-                D.bloom_index_upsert(
-                    spark, upsert_bloom_index_path, curated, text=text
-                )
-            if upsert_containment_index_path is not None:
-                D.containment_index_upsert(
-                    spark,
-                    upsert_containment_index_path,
-                    curated,
-                    text=text,
-                    id_col=id_col,
-                    assume_new_ids=assume_new_ids,
-                )
-            if upsert_ivf_index_path is not None:
-                S.ivf_index_upsert(
-                    spark,
-                    upsert_ivf_index_path,
-                    curated.select(F.col(id_col)).join(
-                        embeddings.select(
-                            F.col("vec_id").alias(id_col), F.col("embedding")
-                        ),
-                        id_col,
-                    ).select(
-                        F.col(id_col).alias("vec_id"), F.col("embedding")
-                    ),
-                    assume_new_ids=assume_new_ids,
-                )
-            if upsert_image_index_path is not None:
-                IH.phash_index_upsert(
-                    spark,
-                    upsert_image_index_path,
-                    curated.filter(
-                        F.col("asset").getField("mime") == "image/png"
-                    ),
-                    id_col=id_col,
-                    assume_new_ids=assume_new_ids,
-                )
-            if upsert_audio_index_path is not None:
-                AFP.audiofp_index_upsert(
-                    spark,
-                    upsert_audio_index_path,
-                    curated.filter(
-                        F.col("asset").getField("mime") == "audio/wav"
-                    ),
-                    id_col=id_col,
-                    assume_new_ids=assume_new_ids,
-                )
-            if upsert_video_index_path is not None:
-                IH.video_phash_index_upsert(
-                    spark,
-                    upsert_video_index_path,
-                    curated.filter(
-                        F.col("asset").getField("mime") == "video/x-yuv4mpeg"
-                    ),
-                    id_col=id_col,
-                    assume_new_ids=assume_new_ids,
-                )
+            for path, upsert, _ in maintained:
+                upsert(path, curated)
         finally:
             if cache_registry is not None:
                 for frame in cache_registry:
                     frame.unpersist()
                 cache_registry.clear()
         if compact_every and (batch_id + 1) % compact_every == 0:
-            for path, compact in maintained:
+            for path, _, compact in maintained:
                 # GC one cycle behind: the version this compaction
                 # supersedes stays readable until the next cycle
                 D.gc_index_versions(path)

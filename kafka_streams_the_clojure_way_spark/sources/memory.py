@@ -5,22 +5,8 @@ read-everything idiom at core.clj:67-74).
 
 from __future__ import annotations
 
-from typing import Any
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.types import StructType
-
-
-def frame_from_records(
-    spark: SparkSession,
-    records: list[dict[str, Any]],
-    schema: StructType | str | None = None,
-) -> DataFrame:
-    """Literal rows -> DataFrame (≙ experiment inputs, core.clj:226-234)."""
-    if schema is not None:
-        return spark.createDataFrame(records, schema)
-    return spark.createDataFrame(records)
 
 
 def start_memory_sink(df: DataFrame, name: str, *, complete: bool = False) -> StreamingQuery:

@@ -1,10 +1,13 @@
 """One index lifecycle, fast tier: every persisted index is a versioned
-snapshot (``v_NNNNNN`` + an atomic ``CURRENT`` pointer) maintained
-through one compaction, GC and tombstone core. Pinned here on the two
-text families the exact and near-dup gates serve from, at ~50 rows:
-build -> upsert -> delete -> compact -> GC -> compact -> GC probes
-exactly like a fresh build over the surviving rows, GC leaves only the
-current version, and an index without ``CURRENT`` fails loudly."""
+snapshot (``v_NNNNNN`` + an atomic ``CURRENT`` pointer) written
+through one upsert core and maintained through one compaction, GC and
+tombstone core. Pinned here on the two text families the exact and
+near-dup gates serve from, at ~50 rows: build -> upsert -> delete ->
+compact -> GC -> compact -> GC probes exactly like a fresh build over
+the surviving rows, GC leaves only the current version, and an index
+without ``CURRENT`` fails loudly. The other upserting families (bloom,
+keyset, pHash, video, audio) pin build-half -> upsert -> replay against
+a fresh build at 40 rows."""
 
 from __future__ import annotations
 
@@ -13,7 +16,13 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from kafka_streams_the_clojure_way_spark.operators import audiofp as AFP
 from kafka_streams_the_clojure_way_spark.operators import dedup as D
+from kafka_streams_the_clojure_way_spark.operators import imagehash as IH
+from kafka_streams_the_clojure_way_spark.operators.multimodal import (
+    encode_text_assets,
+    wrap_binary_assets,
+)
 from kafka_streams_the_clojure_way_spark.sources.files import load_table
 
 SF = "/root/testdata/sf0.001"
@@ -83,6 +92,117 @@ def test_lifecycle_probes_like_a_fresh_build(spark, tmp_path, family):
     os.remove(os.path.join(path, D.INDEX_CURRENT_POINTER))
     with pytest.raises(FileNotFoundError, match="no CURRENT pointer; rebuild"):
         probe(spark, path, twins)
+    docs.unpersist()
+
+
+def _png(df):
+    return wrap_binary_assets(
+        df.withColumn("payload", F.encode(F.col("text"), "UTF-8")),
+        "payload",
+        "image/png",
+    )
+
+
+def _keyed(df):
+    # each row's doc_id as a string key, for the keyset family
+    return df.select(F.concat(F.lit("k"), F.col("doc_id")).alias("key"))
+
+
+def _asset_family(encode, build, upsert, probe, key_dataset, **build_kw):
+    """Build/upsert/probe for a family keyed on asset ids: the upsert
+    batch carries its ids as ``asset_id`` against a ``doc_id`` build."""
+    return (
+        lambda df, path: build(encode(df), path, **build_kw),
+        lambda spark, path, df: upsert(
+            spark, path, encode(df).withColumnRenamed("doc_id", "asset_id"),
+            id_col="asset_id",
+        ),
+        lambda spark, path, df, caches: [
+            tuple(r) for r in probe(spark, path, encode(df), cache_registry=caches)
+            .collect()
+        ],
+        key_dataset,
+    )
+
+
+#: (build(df, path), upsert(spark, path, df), probe(spark, path, df,
+#: caches) -> rows, the dataset the add-only anti-join keys on or None)
+UPSERT_FAMILIES = {
+    "bloom": (
+        lambda df, path: D.build_bloom_index(df, path),
+        lambda spark, path, df: D.bloom_index_upsert(spark, path, df),
+        lambda spark, path, df, caches: [
+            tuple(r) for r in D.bloom_index_probe(
+                spark, path, df, cache_registry=caches
+            ).collect()
+        ],
+        None,
+    ),
+    "keyset": (
+        lambda df, path: D.build_keyset_index(_keyed(df), path),
+        lambda spark, path, df: D.keyset_index_upsert(spark, path, _keyed(df)),
+        lambda spark, path, df, caches: [
+            (r.key,) for r in D.keyset_index_probe(
+                # the copies' own ids are misses, their source ids hits
+                spark, path, _keyed(df).union(
+                    _keyed(df.select((F.col("doc_id") % 1_000_000).alias("doc_id")))
+                ),
+                cache_registry=caches,
+            ).collect()
+        ],
+        "keys",
+    ),
+    "phash": _asset_family(
+        _png, IH.build_phash_index, IH.phash_index_upsert, IH.phash_index_probe,
+        "bands",
+    ),
+    "video": _asset_family(
+        lambda df: encode_text_assets(df, "pgm"), IH.build_video_phash_index,
+        IH.video_phash_index_upsert, IH.video_phash_index_probe, "frames",
+    ),
+    "audiofp": _asset_family(
+        lambda df: encode_text_assets(df, "wav"), AFP.build_audiofp_index,
+        AFP.audiofp_index_upsert, AFP.audiofp_index_probe, "postings",
+        decode="wav",
+    ),
+}
+
+
+@pytest.mark.parametrize("family", sorted(UPSERT_FAMILIES))
+def test_upsert_probes_like_a_fresh_build(spark, tmp_path, family):
+    """Build half, upsert the rest, replay the upsert: the probe answers
+    (and the anti-join's key dataset) equal a fresh build over all rows."""
+    build, upsert, probe, key_dataset = UPSERT_FAMILIES[family]
+    docs = (
+        load_table(spark, SF, "documents")
+        .select("doc_id", "text")
+        .orderBy("doc_id")
+        .limit(40)
+        .cache()
+    )
+    copies = docs.select((F.col("doc_id") + 1_000_000).alias("doc_id"), "text")
+    caches: list = []
+
+    def answers(path):
+        return sorted(probe(spark, path, copies, caches))
+
+    def key_rows(path):
+        root = D.index_dataset_root(path)
+        return spark.read.parquet(os.path.join(root, key_dataset)).count()
+
+    path, fresh = str(tmp_path / "idx"), str(tmp_path / "fresh")
+    build(docs.filter(F.col("doc_id") % 2 == 0), path)
+    rest = docs.filter(F.col("doc_id") % 2 == 1)
+    upsert(spark, path, rest)
+    upsert(spark, path, rest)  # an at-least-once replay adds nothing
+    build(docs, fresh)
+    want = answers(fresh)
+    assert want, "fixture must produce probe hits"
+    assert answers(path) == want
+    if key_dataset is not None:
+        assert key_rows(path) == key_rows(fresh)
+    for frame in caches:
+        frame.unpersist()
     docs.unpersist()
 
 
