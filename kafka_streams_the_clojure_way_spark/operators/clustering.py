@@ -85,14 +85,8 @@ def _vec_frame(corpus: DataFrame, id_col: str, vec_col: str) -> DataFrame:
         with_min_parallelism,
     )
 
-    # cached: every Lloyd round re-reads this frame (assign + mean agg),
-    # and without the cache each round pays the parquet scan + array cast
-    # again. The frame is id + vector only — the working-set a k-means
-    # job holds in memory by design at any scale.
-    return (
-        with_min_parallelism(corpus)
-        .select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("__v"))
-        .cache()
+    return with_min_parallelism(corpus).select(
+        F.col(id_col), F.col(vec_col).cast("array<double>").alias("__v")
     )
 
 
@@ -139,32 +133,39 @@ def kmeans_train(
     model=...)`` against this list reproduces inline training bit for
     bit, which is what lets SemDeDup / cluster-balanced sampling / IVF
     share one trained quantizer instead of each re-running Lloyd."""
-    vecs = _vec_frame(corpus, id_col, vec_col)
-    dim = len(vecs.select("__v").first()["__v"])
+    # cached for the loop: every Lloyd round re-reads this frame (assign +
+    # mean agg), and without the cache each round pays the parquet scan +
+    # array cast again. The frame is id + vector only — the working-set a
+    # k-means job holds in memory by design at any scale.
+    vecs = _vec_frame(corpus, id_col, vec_col).cache()
+    try:
+        dim = len(vecs.select("__v").first()["__v"])
 
-    # init: k lowest-id vectors, cluster ids assigned in id order
-    centroids = [row["__v"] for row in vecs.orderBy(id_col).limit(k).collect()]
+        # init: k lowest-id vectors, cluster ids assigned in id order
+        centroids = [row["__v"] for row in vecs.orderBy(id_col).limit(k).collect()]
 
-    for _ in range(n_iter):
-        assigned = _assign(vecs, centroids, id_col)
-        units = F.floor(F.col("__x") * MEAN_UNITS + F.lit(0.5)).cast("long")
-        sums = (
-            assigned.select("cluster", F.posexplode("__v").alias("__dim", "__x"))
-            .withColumn("__u", units)
-            .groupBy("cluster", "__dim")
-            .agg(F.sum("__u").alias("__su"), F.count(F.lit(1)).alias("__n"))
-            .collect()
-        )
-        by_cluster: dict[int, dict[int, float]] = {}
-        for row in sums:
-            by_cluster.setdefault(row["cluster"], {})[row["__dim"]] = (
-                float(row["__su"]) / MEAN_UNITS / row["__n"]
+        for _ in range(n_iter):
+            assigned = _assign(vecs, centroids, id_col)
+            units = F.floor(F.col("__x") * MEAN_UNITS + F.lit(0.5)).cast("long")
+            sums = (
+                assigned.select("cluster", F.posexplode("__v").alias("__dim", "__x"))
+                .withColumn("__u", units)
+                .groupBy("cluster", "__dim")
+                .agg(F.sum("__u").alias("__su"), F.count(F.lit(1)).alias("__n"))
+                .collect()
             )
-        # empty clusters keep their previous centroid (deterministic)
-        centroids = [
-            [by_cluster[ci][d] for d in range(dim)] if ci in by_cluster else centroids[ci]
-            for ci in range(k)
-        ]
+            by_cluster: dict[int, dict[int, float]] = {}
+            for row in sums:
+                by_cluster.setdefault(row["cluster"], {})[row["__dim"]] = (
+                    float(row["__su"]) / MEAN_UNITS / row["__n"]
+                )
+            # empty clusters keep their previous centroid (deterministic)
+            centroids = [
+                [by_cluster[ci][d] for d in range(dim)] if ci in by_cluster else centroids[ci]
+                for ci in range(k)
+            ]
+    finally:
+        vecs.unpersist()
     return centroids
 
 
@@ -193,13 +194,13 @@ def kmeans_assignments(
     when the model came from ``kmeans_train``/``kmeans_fit`` with the
     same (k, n_iter), so consumers can swap in the shared model without
     touching their oracles."""
-    vecs = _vec_frame(corpus, id_col, vec_col)
     if model is None:
         centroids = kmeans_train(
             corpus, k=k, n_iter=n_iter, id_col=id_col, vec_col=vec_col
         )
     else:
         centroids = _model_to_list(model)
+    vecs = _vec_frame(corpus, id_col, vec_col)
     return _assign(vecs, centroids, id_col).select(id_col, "cluster")
 
 

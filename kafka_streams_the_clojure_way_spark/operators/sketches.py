@@ -62,6 +62,9 @@ def _mg_partition(k: int):
             if not arrs:
                 continue
             flat = np.concatenate(arrs)
+            # null tokens are neither counted nor candidates, so the
+            # total and the counters count the same tokens
+            flat = flat[pd.notna(flat)]
             total += len(flat)
             counters = counters.add(
                 pd.Series(flat).value_counts(), fill_value=0
@@ -119,7 +122,8 @@ def exact_heavy_hitters_sql(
 ) -> str:
     """DuckDB twin: the plain two-CTE group-by the sketch path avoids."""
     return f"""
-    WITH tok AS (SELECT unnest({items_sql}) AS token FROM {table}),
+    WITH tok AS (SELECT * FROM (SELECT unnest({items_sql}) AS token FROM {table})
+                 WHERE token IS NOT NULL),
     tot AS (SELECT CAST(count(*) AS BIGINT) AS n FROM tok),
     cnt AS (SELECT token, CAST(count(*) AS BIGINT) AS freq FROM tok GROUP BY token)
     SELECT c.token, c.freq

@@ -17,15 +17,30 @@ The compiler walks the validated DAG in topological order:
 Scale note: nothing here adds a shuffle — merges are unions and xforms are
 whatever the pipeline does; Catalyst sees one logical plan per entity and
 optimizes across the whole chain (fusion, pushdown, pruning).
+
+Sibling fusion: Catalyst keeps one scan per union leg, so a fan-in whose
+parents all filter and project one shared source (the flagship topology's
+two topics over one ``events`` stream) would read it once per parent.
+When every parent is, after optimization, an optional deterministic
+``Project`` over an optional ``Filter`` over one identical leaf, with the
+same (name, type) column sequence, the merge is one pass instead:
+``leaf.filter(c1 | … | ck)`` then ``inline`` of one ``struct(ci AS keep,
+pi…)`` per branch, filtered on ``keep``. The multiset is the union's (a
+row kept by two branches is emitted twice), and a streaming query keeps
+one source. Every other fan-in is a ``unionByName``.
 """
 
 from __future__ import annotations
 
 import itertools
+import operator
 import re
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.classic.column import Column
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 
 from kafka_streams_the_clojure_way_spark.plans.spec import (
     Topology,
@@ -48,7 +63,81 @@ def _merge_parents(name: str, frames: list[DataFrame]) -> DataFrame:
                 f"merge into {name!r} has incompatible schemas: "
                 f"{sorted(first_cols)} vs {sorted(frame.columns)}"
             )
-    return reduce(DataFrame.unionByName, frames)
+    fused = _fuse_siblings(frames)
+    return fused if fused is not None else reduce(DataFrame.unionByName, frames)
+
+
+#: the struct field carrying a fused branch's condition
+_KEEP = "__fanin_keep"
+_ROW_LOCAL = ("Project", "Filter", "SubqueryAlias")
+
+
+def _row_local_leaf(plan):
+    """The leaf under a chain of row-local nodes of an analyzed plan, or
+    None — the cheap test that decides whether the optimizer runs."""
+    while plan.nodeName() in _ROW_LOCAL:
+        plan = plan.child()
+    return plan if plan.children().isEmpty() else None
+
+
+def _branch(plan):
+    """``(leaf, condition or None, projection)`` of an optimized
+    ``Project? -> Filter? -> leaf`` with deterministic expressions only,
+    or None."""
+    proj = cond = None
+    if plan.nodeName() == "Project":
+        proj, plan = plan.projectList(), plan.child()
+    if plan.nodeName() == "Filter":
+        cond, plan = plan.condition(), plan.child()
+    if not plan.children().isEmpty():
+        return None
+    proj = plan.output() if proj is None else proj
+    exprs = [proj.apply(i) for i in range(proj.size())]
+    if not all(e.deterministic() for e in exprs + [cond] if e is not None):
+        return None
+    return plan, cond, exprs
+
+
+def _fuse_siblings(frames: list[DataFrame]) -> DataFrame | None:
+    """The fan-in as one pass over the parents' shared leaf (see the
+    module docstring), or None when a parent does not qualify."""
+    schema = [(f.name, f.dataType) for f in frames[0].schema]
+    if any(name == _KEEP for name, _ in schema) or any(
+        [(f.name, f.dataType) for f in df.schema] != schema for df in frames[1:]
+    ):
+        return None
+    analyzed = [df._jdf.queryExecution().analyzed() for df in frames]
+    leaves = [_row_local_leaf(plan) for plan in analyzed]
+    if any(leaf is None or not leaf.equals(leaves[0]) for leaf in leaves):
+        return None
+    spark = frames[0].sparkSession
+    # optimizedPlan() refuses streaming frames outside writeStream.start()
+    optimizer = spark._jsparkSession.sessionState().optimizer()
+    branches = [_branch(optimizer.execute(plan)) for plan in analyzed]
+    if any(b is None or not b[0].equals(branches[0][0]) for b in branches):
+        return None
+    classic = spark._jvm.org.apache.spark.sql.classic
+
+    def col(expr) -> Column:
+        return Column(classic.ExpressionUtils.column(expr))
+
+    conds, structs = [], []
+    for _, cond, exprs in branches:
+        keep = F.lit(True) if cond is None else col(cond)
+        # A computed column is evaluated only on its branch's rows, as in
+        # the union: a projection that fails elsewhere (an ANSI divide by
+        # zero the branch filters out) must not fail on a sibling's rows.
+        fields = [
+            (F.when(keep, col(e.child())) if cond is not None and e.nodeName() == "Alias"
+             else col(e)).alias(name)
+            for e, (name, _) in zip(exprs, schema)
+        ]
+        conds.append(keep)
+        structs.append(F.struct(keep.alias(_KEEP), *fields))
+    leaf = ClassicDataFrame(classic.Dataset.ofRows(spark._jsparkSession, branches[0][0]), spark)
+    if all(cond is not None for _, cond, _ in branches):
+        leaf = leaf.filter(reduce(operator.or_, conds))
+    return leaf.select(F.inline(F.array(*structs))).filter(F.col(_KEEP)).drop(_KEEP)
 
 
 def compile_topology(

@@ -21,32 +21,34 @@ from kafka_streams_the_clojure_way_spark.queries.registry import query
 from kafka_streams_the_clojure_way_spark.sources.files import load_table
 
 
-def purchases_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """≙ the purchase-made topic (core.clj:29-34): key=user_id, value
-    {id, amount}. amount is whole currency units (integer-valued)."""
-    return (
-        load_table(spark, sf_dir, "events")
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id"),
-            F.floor(F.col("value")).cast("long").alias("amount"),
-        )
+def purchases_of(events: DataFrame) -> DataFrame:
+    """≙ the purchase-made topic (core.clj:29-34) over an ``events``
+    frame, batch or streaming: key=user_id, value {id, amount}. amount
+    is whole currency units (integer-valued)."""
+    return events.filter(F.col("event_type") == "purchase").select(
+        F.col("event_id").alias("purchase_id"),
+        F.col("user_id"),
+        F.floor(F.col("value")).cast("long").alias("amount"),
     )
+
+
+def donations_of(events: DataFrame) -> DataFrame:
+    """≙ the humble-donation-made topic (core.clj:36-41) over an
+    ``events`` frame: value {user-id, donation-amount-cents,
+    donation-date}."""
+    return events.filter(F.col("event_type") == "view").select(
+        F.col("user_id"),
+        F.floor(F.col("value") * F.lit(100)).cast("long").alias("donation_amount_cents"),
+        F.date_format(F.col("ts"), "yyyy-MM-dd").alias("donation_date"),
+    )
+
+
+def purchases_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return purchases_of(load_table(spark, sf_dir, "events"))
 
 
 def donations_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """≙ the humble-donation-made topic (core.clj:36-41): value
-    {user-id, donation-amount-cents, donation-date}."""
-    return (
-        load_table(spark, sf_dir, "events")
-        .filter(F.col("event_type") == "view")
-        .select(
-            F.col("user_id"),
-            F.floor(F.col("value") * F.lit(100)).cast("long").alias("donation_amount_cents"),
-            F.date_format(F.col("ts"), "yyyy-MM-dd").alias("donation_date"),
-        )
-    )
+    return donations_of(load_table(spark, sf_dir, "events"))
 
 
 _PURCHASES_SQL = """

@@ -77,6 +77,28 @@ def test_kmeans_fit_persists_centroid_table(spark, tmp_path):
     assert reread.count() == 4 and set(reread.columns) == {"cent_id", "cent_vec"}
 
 
+def test_kmeans_train_and_assign_leave_no_persisted_frames(spark):
+    """Training caches its vector frame for the Lloyd loop and releases
+    it; the single assignment pass caches nothing."""
+    from kafka_streams_the_clojure_way_spark.operators.clustering import kmeans_train
+
+    def persistent():
+        # ids, not a count: the context cleaner may release other tests'
+        # frames while this one runs
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    # a corpus no other test caches: a cache entry left by an earlier
+    # caller of the same plan would hide a new one
+    emb = spark.createDataFrame(
+        [(i, [float(i % 3), float(i)]) for i in range(12)], "vec_id long, embedding array<float>"
+    )
+    before = persistent()
+    cents = kmeans_train(emb, k=4, n_iter=2)
+    assert persistent() <= before, "kmeans_train left its vector frame cached"
+    assert kmeans_assignments(emb, k=4, model=cents).count() == emb.count()
+    assert persistent() <= before, "kmeans_assignments cached a frame"
+
+
 def test_semdedup_keeps_lowest_id_per_near_pair(spark):
     """Within a cluster, every near-dup pair keeps the LOWER id; vectors
     with no sufficiently-similar lower-id cluster-mate survive."""

@@ -61,3 +61,20 @@ def test_heavy_hitters_null_text_skipped(spark):
     }
     # 6 non-null tokens, threshold ceil(6/3)=2 -> only 'hot' (4)
     assert got == {("hot", 4)}
+
+
+def test_heavy_hitters_null_tokens_not_counted(spark):
+    """Null elements inside a token array count neither as tokens nor in
+    the total N. Counted in N, the 3 nulls would raise the threshold
+    from ceil(3/2)=2 to ceil(6/2)=3 and drop 'a'. The DuckDB twin agrees."""
+    import duckdb
+
+    rows = [(["a", None, "a"],), ([None, "b", None],)]
+    df = spark.createDataFrame(rows, "toks array<string>")
+    got = {(r.token, r.freq) for r in SK.exact_heavy_hitters(df, F.col("toks"), k=2).collect()}
+    assert got == {("a", 2)}
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE t AS SELECT * FROM (VALUES (['a', NULL, 'a']), ([NULL, 'b', NULL])) v(toks)"
+    )
+    assert set(con.sql(SK.exact_heavy_hitters_sql("t", "toks", k=2)).fetchall()) == got

@@ -4,6 +4,8 @@ rejecting bad topologies (core.clj:246-252)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -17,8 +19,11 @@ from kafka_streams_the_clojure_way_spark.plans import (
 )
 from kafka_streams_the_clojure_way_spark.plans.compiler import sink_entities
 from kafka_streams_the_clojure_way_spark.queries.reference_queries import (
+    donations_of,
     flagship_topology,
+    purchases_of,
 )
+from kafka_streams_the_clojure_way_spark.sources.files import load_table
 
 
 def test_run_experiment_flagship(spark):
@@ -407,3 +412,129 @@ def test_sql_on_join_or_table_entity_rejected():
     }
     with pytest.raises(TopologyError, match="must not carry an xform/sql"):
         validate_topology(topo)
+
+
+# ------------------------------------------------------------ sibling fusion
+
+_FAN_IN = {
+    "entities": {
+        "topic/a": {"type": "topic"},
+        "topic/b": {"type": "topic"},
+        "topic/out": {"type": "topic"},
+    },
+    "workflow": [["topic/a", "topic/out"], ["topic/b", "topic/out"]],
+}
+
+
+def _flagship_inputs(events):
+    return {
+        "topic/purchase-made": purchases_of(events),
+        "topic/humble-donation-made": donations_of(events),
+    }
+
+
+def _optimized(df):
+    return df._jdf.queryExecution().optimizedPlan()
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
+def _fan_in(spark, a, b):
+    return compile_topology(spark, _FAN_IN, {"topic/a": a, "topic/b": b})["topic/out"]
+
+
+def test_flagship_fan_in_fuses_into_one_scan(spark, sf_dir):
+    """Both flagship topics filter one events relation: the fan-in reads
+    it once (one leaf, no Union) and keeps the union's multiset."""
+    events = load_table(spark, sf_dir, "events")
+    out = compile_topology(spark, flagship_topology(), _flagship_inputs(events))[
+        "topic/large-transaction-made"
+    ]
+    plan = _optimized(out)
+    assert plan.collectLeaves().size() == 1
+    assert "Union" not in plan.treeString()
+    union = purchases_of(events).transform(P.large_purchases).unionByName(
+        donations_of(events).transform(P.large_donations)
+    )
+    assert _rows(out) == _rows(union) and len(_rows(out)) > 0
+
+
+def _range(spark, rows, **cols):
+    """A non-local leaf (``range``): the optimizer folds filters over a
+    ``createDataFrame`` relation into new local relations, which then no
+    longer share a leaf."""
+    return spark.range(rows).select(*(c.alias(name) for name, c in cols.items()))
+
+
+def test_fused_fan_in_emits_a_row_once_per_branch(spark):
+    i = F.col("id")
+    base = _range(spark, 3, k=i + 1, v=F.when(i < 2, F.pow(10, i) * 5).cast("int"))
+    out = _fan_in(spark, base.filter("v > 1").select("k"), base.filter("v > 10").select("k"))
+    assert "Union" not in _optimized(out).treeString()
+    assert _rows(out) == [(1,), (2,), (2,)]
+
+
+def test_fused_branch_projection_runs_only_on_its_rows(spark):
+    """Under ANSI a division the branch filters away must not fail on
+    the sibling branch's rows."""
+    i = F.col("id")
+    base = _range(spark, 2, n=F.when(i == 0, 1).otherwise(6), d=(i * 3).cast("int"))
+    a = base.filter("d != 0").select((F.col("n") / F.col("d")).alias("q"))
+    b = base.filter("d = 0").select(F.lit(-1.0).alias("q"))
+    out = _fan_in(spark, a, b)
+    assert "Union" not in _optimized(out).treeString()
+    assert _rows(out) == [(-1.0,), (2.0,)]
+
+
+def test_fan_in_falls_back_to_union(spark):
+    """Parents that are not row-local branches over one leaf with one
+    column sequence keep the unionByName plan and its rows."""
+    i = F.col("id")
+    base = _range(spark, 4, k=i, v=i * 10)
+    other = _range(spark, 3, k=i, v=i * 20)
+    a = base.filter("v > 1").select("k", "v")
+    cases = {
+        "different leaves": (a, other.filter("v > 1")),
+        "column order": (a, base.select("v", "k")),
+        "column type": (a, base.select("k", F.col("v").cast("int").alias("v"))),
+        "nondeterministic": (a, base.filter(F.rand(7) > 0.5).select("k", "v")),
+        "join": (a, base.join(other.select("k"), "k").select("k", "v")),
+        "aggregate": (a, base.groupBy("k").agg(F.max("v").alias("v"))),
+    }
+    for case, (x, y) in cases.items():
+        out = _fan_in(spark, x, y)
+        assert "Union" in _optimized(out).treeString(), case
+        if case != "nondeterministic":
+            assert _rows(out) == _rows(x.unionByName(y)), case
+
+
+def test_streaming_flagship_reads_each_file_once(spark, sf_dir, tmp_path):
+    """Over a file-source stream the fused fan-in keeps one source, each
+    trigger reads each row once, and the sink equals the oracle."""
+    import duckdb
+
+    from kafka_streams_the_clojure_way_spark.queries import ORACLES
+
+    src, ckpt, sink = (str(tmp_path / d) for d in ("src", "ckpt", "sink"))
+    load_table(spark, sf_dir, "events").repartition(2).write.parquet(src)
+    n_rows = spark.read.parquet(src).count()
+    events = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
+    out = compile_topology(spark, flagship_topology(), _flagship_inputs(events))[
+        "topic/large-transaction-made"
+    ]
+    q = (
+        out.writeStream.format("parquet")
+        .option("path", sink)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    assert sum(p.numInputRows for p in q.recentProgress) == n_rows
+    assert sorted(os.listdir(os.path.join(ckpt, "sources"))) == ["0"]
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM '{src}/*.parquet'")
+    want = sorted(con.sql(ORACLES["ref_topology_large_transactions"]).fetchall())
+    assert _rows(spark.read.parquet(sink).select("user_id", "amount")) == want
