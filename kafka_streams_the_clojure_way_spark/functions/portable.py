@@ -17,6 +17,9 @@ truth):
 
 from __future__ import annotations
 
+from collections.abc import Callable, Hashable
+
+from pyspark import SparkContext
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -61,6 +64,34 @@ def let_col(value: Column, body) -> Column:
     never the original subtree. Result values are bit-identical (same
     expression tree modulo binding), so SQL oracles need no change."""
     return F.transform(F.array(value), body).getItem(0)
+
+
+# -- build-once expression kernels -------------------------------------------
+
+#: (build, column name, params) -> (JVM gateway, Column) — see kernel().
+_KERNELS: dict[tuple, tuple] = {}
+
+
+def kernel(build: Callable[..., Column], column: str, *params: Hashable) -> Column:
+    """``build(F.col(column), *params)``, constructed ONCE per process:
+    later calls with the same builder, column name and parameters return
+    the same Column object. Every ``F.*`` call in a builder is a py4j
+    round trip, and the hot kernels (shingle hashes, minhash signatures,
+    band keys, content hash) cost tens to hundreds of them — paid again
+    by every probe, build, upsert and router that constructs them. A
+    Column is an unresolved expression tree, so one object can sit in
+    any number of plans; each plan's analysis binds it afresh, and the
+    expression is the one ``build`` returns on a fresh call. The entry
+    is keyed on the live JVM gateway too: a relaunched JVM rebuilds.
+    ``params`` must be hashable (ints, tuples)."""
+    gateway = SparkContext._gateway
+    key = (build, column, params)
+    hit = _KERNELS.get(key)
+    if hit is not None and hit[0] is gateway:
+        return hit[1]
+    col = build(F.col(column), *params)
+    _KERNELS[key] = (gateway, col)
+    return col
 
 
 # -- tokenization -----------------------------------------------------------

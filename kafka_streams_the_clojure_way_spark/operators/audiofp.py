@@ -47,6 +47,7 @@ from kafka_streams_the_clojure_way_spark.operators.dedup import (
     compact_index,
     index_dataset_root,
     index_upsert,
+    routing_keys,
     serve_index_stream,
 )
 from kafka_streams_the_clojure_way_spark.sources.files import (
@@ -409,10 +410,11 @@ def audiofp_index_probe(
         # ``routing``: precomputed fp keys from the fused routing job
         # (superset-safe — the (frame_idx, fp) equi-join is exact);
         # skips this probe's own eager collect.
+        # the batch's own fps are batch-bounded: they broadcast below
         fp_keys = (
             [int(x) for x in routing]
             if routing is not None
-            else [r["p_fp"] for r in probe.select("p_fp").distinct().collect()]
+            else routing_keys(probe, "p_fp")
         )
         if not fp_keys:
             return spark.createDataFrame(
@@ -476,7 +478,9 @@ def audiofp_index_upsert(
         batch_keys = fps.groupBy("frame_idx", "fp").agg(
             F.count(F.lit(1)).alias("new_df")
         )
-        fp_keys = [r["fp"] for r in batch_keys.select("fp").distinct().collect()]
+        # from the pinned batch fps, not their per-key counts: the same
+        # fp set, read without the aggregate's shuffle
+        fp_keys = routing_keys(fps, "fp")
         if not fp_keys:
             return None, None
         existing_df = (

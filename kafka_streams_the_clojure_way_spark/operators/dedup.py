@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 from kafka_streams_the_clojure_way_spark.functions.portable import (
     MERSENNE_31,
     hash60,
+    kernel,
     let_col,
 )
 from kafka_streams_the_clojure_way_spark.operators.text import tokens_col, tokens_sql
@@ -117,6 +118,48 @@ def _in_literals(expr_sql: str, values) -> "F.Column":
     forced through ``int()`` — never string-interpolate anything else."""
     vals = ",".join(str(int(v)) for v in values)
     return F.expr(f"{expr_sql} IN ({vals})")
+
+
+def routing_keys(frame: DataFrame, key: str | Column, tag: str | None = None):
+    """A probe's partition-routing keys: the distinct non-null values of
+    ``key`` over ``frame``, as a sorted int list — or, with ``tag``, a
+    dict of such lists per tag value (the fused routers' tagged union of
+    per-probe legs).
+
+    ONE job of one shuffle-free stage: the key column is collected raw
+    and deduplicated on the driver. A ``.distinct()`` would add an
+    exchange, which AQE runs as a job of its own, for a result the
+    driver dedupes in microseconds. ``frame`` MUST be batch-bounded:
+    every caller already broadcasts it (or the frame it derives from)
+    into its candidate join, so its rows fit the driver. A NULL key can
+    name no partition directory, so dropping it prunes nothing away."""
+    cols = [key] if tag is None else [key, tag]
+    rows = frame.select(*cols).collect()
+    if tag is None:
+        return sorted({int(r[0]) for r in rows if r[0] is not None})
+    keys: dict = {}
+    for k, t in rows:
+        if k is not None:
+            keys.setdefault(t, set()).add(int(k))
+    return {t: sorted(v) for t, v in keys.items()}
+
+
+def cache_once(df: DataFrame, cache_registry: list | None = None) -> DataFrame:
+    """``df.cache()``, appended to ``cache_registry`` for release —
+    unless the session already caches the same plan. Two consumers can
+    build one batch's frame: the fused router and a standalone minhash
+    probe both sign the same arriving slice, and that probe's cache
+    lives for the process. The second ``.cache()`` was a no-op with a
+    "cached already" warning, and registering the frame would let this
+    caller's drain unpersist an entry the first consumer still reads;
+    here the later consumer just reads the cached data."""
+    cached = df.sparkSession._jsparkSession.sharedState().cacheManager()
+    if cached.lookupCachedData(df._jdf).isDefined():
+        return df
+    df = df.cache()
+    if cache_registry is not None:
+        cache_registry.append(df)
+    return df
 
 
 # --------------------------------------------------------------------------
@@ -545,7 +588,12 @@ def shingle_hashes(text: Column) -> Column:
     shingles of ``text``. Documents shorter than K tokens hash their whole
     token string as a single shingle. The token array is let-bound so the
     per-window lambda slices a bound attribute instead of re-splitting the
-    text per element (portable.let_col — the inline form is O(len^2))."""
+    text per element (portable.let_col — the inline form is O(len^2)).
+
+    Engine paths build it once per process through
+    :func:`~kafka_streams_the_clojure_way_spark.functions.portable.kernel`
+    (``kernel(shingle_hashes, "text")``: its py4j round trips are paid
+    once); a direct call builds a fresh, identical tree."""
     def body(toks: Column) -> Column:
         n = F.array_size(toks)
         windows = F.transform(
@@ -587,7 +635,8 @@ def shingle_hashes_sql(text: str) -> str:
 def content_hash(text: Column) -> Column:
     """60-bit content hash (md5 prefix), the exact-dedup key. 15 hex
     digits keep the value strictly positive in a signed BIGINT on both
-    engines (same rule as the simhash signature)."""
+    engines (same rule as the simhash signature). Engine paths take it
+    through ``kernel(content_hash, text)``, built once per process."""
     return F.conv(F.substring(F.md5(text), 1, 15), 16, 10).cast("long")
 
 
@@ -599,7 +648,7 @@ def content_hash_sql(text: str) -> str:
 def exact_dedup_groups(df: DataFrame, text: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Group identical content by 60-bit hash; keep the lowest id as the
     canonical representative. One shuffle on the content hash."""
-    h = content_hash(F.col(text))
+    h = kernel(content_hash, text)
     return (
         df.select(F.col(id_col), h.alias("content_hash"))
         .groupBy("content_hash")
@@ -629,11 +678,11 @@ def exact_pairs_between(
     probed hash buckets; this inline form is its oracle twin."""
     probe = new.select(
         F.col(id_col).alias("probe_id"),
-        content_hash(F.col(text)).alias("content_hash"),
+        kernel(content_hash, text).alias("content_hash"),
     )
     corp = corpus.select(
         F.col(id_col).alias("corpus_id"),
-        content_hash(F.col(text)).alias("content_hash"),
+        kernel(content_hash, text).alias("content_hash"),
     )
     return (
         corp.join(F.broadcast(probe), "content_hash")
@@ -658,7 +707,9 @@ def minhash_from_hashes(
     would md5 every shingle k times (measured 7x slowdown at sf0.1).
 
     Seeds are array literals folded with one nested zip_with/transform —
-    constant plan depth (see simhash_from_hashes for why that matters)."""
+    constant plan depth (see simhash_from_hashes for why that matters).
+    Engine paths take it through ``kernel(minhash_from_hashes, "sh",
+    seeds)``, built once per process."""
     seeds_a = _long_array(a for a, _ in seeds)
     seeds_b = _long_array(b for _, b in seeds)
     return F.zip_with(
@@ -689,13 +740,29 @@ def minhash_signature_sql(
 
 def _band_key(sig: Column, band: int, rows: int = LSH_ROWS) -> Column:
     """Fold one band of the signature into a single join key. Polynomial
-    fold mod M31 — portable, and cheap enough to compute inline."""
+    fold mod M31 — portable, and cheap enough to compute inline. Built
+    once per process as part of :func:`_minhash_band_structs`."""
     key = F.lit(0).cast("long")
     for r in range(rows):
         key = (key * F.lit(1_000_0007) + F.element_at(sig, band * rows + r + 1)) % F.lit(
             MERSENNE_31
         )
     return key
+
+
+def _minhash_band_structs(sig: Column, bands: int, rows: int) -> Column:
+    """array<struct<band, bkey>>: one :func:`_band_key` per band — the
+    band array the LSH join, the index build, upsert and probe and the
+    fused ingestion router explode. Callers take it through
+    :func:`~kafka_streams_the_clojure_way_spark.functions.portable.kernel`
+    (``kernel(_minhash_band_structs, "sig", bands, rows)``): the band
+    folds' hundreds of py4j round trips are paid once per process."""
+    return F.array(
+        *[
+            F.struct(F.lit(b).alias("band"), _band_key(sig, b, rows).alias("bkey"))
+            for b in range(bands)
+        ]
+    )
 
 
 def _band_key_sql(sig: str, band: int, rows: int = LSH_ROWS) -> str:
@@ -722,8 +789,8 @@ def minhash_signatures(
     persists it per (process, sf) exactly like the index builds."""
     return (
         with_min_parallelism(df)
-        .select(F.col(id_col), shingle_hashes(F.col(text)).alias("sh"))
-        .withColumn("sig", minhash_from_hashes(F.col("sh"), minhash_seeds(n_hashes)))
+        .select(F.col(id_col), kernel(shingle_hashes, text).alias("sh"))
+        .withColumn("sig", kernel(minhash_from_hashes, "sh", minhash_seeds(n_hashes)))
     )
 
 
@@ -750,15 +817,7 @@ def minhash_lsh_pairs_from_sigs(
     banded = sigs.select(
         id_col,
         F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        _band_key(F.col("sig"), b, rows).alias("bkey"),
-                    )
-                    for b in range(bands)
-                ]
-            )
+            kernel(_minhash_band_structs, "sig", bands, rows)
         ).alias("bk"),
     ).select(id_col, F.col("bk.band").alias("band"), F.col("bk.bkey").alias("bkey"))
 
@@ -943,9 +1002,9 @@ def minhash_lsh_pairs_between(
         base = df if df.isStreaming else with_min_parallelism(df)
         return (
             base
-            .select(F.col(id_col), *keep, shingle_hashes(F.col(text)).alias("sh"))
+            .select(F.col(id_col), *keep, kernel(shingle_hashes, text).alias("sh"))
             .withColumn(
-                "sig", minhash_from_hashes(F.col("sh"), minhash_seeds(n_hashes))
+                "sig", kernel(minhash_from_hashes, "sh", minhash_seeds(n_hashes))
             )
         )
 
@@ -958,15 +1017,7 @@ def minhash_lsh_pairs_between(
             id_col,
             *keep,
             F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band"),
-                            _band_key(F.col("sig"), b, rows).alias("bkey"),
-                        )
-                        for b in range(bands)
-                    ]
-                )
+                kernel(_minhash_band_structs, "sig", bands, rows)
             ).alias("bk"),
         ).select(
             id_col, *keep, F.col("bk.band").alias("band"), F.col("bk.bkey").alias("bkey")
@@ -1115,15 +1166,7 @@ def _minhash_bands(
         F.col(id_col).alias(out),
         *carry,
         F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        _band_key(F.col("sig"), b, rows).alias("bkey"),
-                    )
-                    for b in range(bands)
-                ]
-            )
+            kernel(_minhash_band_structs, "sig", bands, rows)
         ).alias("bk"),
     ).select(
         out,
@@ -1138,8 +1181,8 @@ def _minhash_datasets(docs, id_col, text, n_hashes, bands, n_buckets, pin):
     """:data:`MINHASH_LAYOUT`'s (shingles, bands) rows for ``docs``,
     both from one pinned signature frame."""
     sigs = pin(
-        docs.select(F.col(id_col), shingle_hashes(F.col(text)).alias("sh"))
-        .withColumn("sig", minhash_from_hashes(F.col("sh"), minhash_seeds(n_hashes)))
+        docs.select(F.col(id_col), kernel(shingle_hashes, text).alias("sh"))
+        .withColumn("sig", kernel(minhash_from_hashes, "sh", minhash_seeds(n_hashes)))
     )
     return (
         sigs.select(id_col, "sh"),
@@ -1272,7 +1315,9 @@ def minhash_index_probe(
     for its routing collect and verify join; by default it stays cached
     for the process lifetime (fine for one-shot queries, a leak for
     long-running probe loops). Pass a list and the cached frame is
-    appended to it instead — unpersist after materializing results."""
+    appended to it instead — unpersist after materializing results. A
+    signature plan the session already caches is read as it is, never
+    registered (:func:`cache_once`)."""
     meta = _index_meta(spark, index_path)
     # snapshot the dataset root ONCE: every dataset this probe reads
     # comes from the same index version even if a compaction
@@ -1299,12 +1344,10 @@ def minhash_index_probe(
         base = batch if batch.isStreaming else with_min_parallelism(batch)
         psigs = base.select(
             F.col(id_col), *([ts_col] if wm_streaming else []),
-            shingle_hashes(F.col(text)).alias("sh"),
-        ).withColumn("sig", minhash_from_hashes(F.col("sh"), minhash_seeds(n_hashes)))
+            kernel(shingle_hashes, text).alias("sh"),
+        ).withColumn("sig", kernel(minhash_from_hashes, "sh", minhash_seeds(n_hashes)))
         if not batch.isStreaming:
-            psigs = psigs.cache()
-            if cache_registry is not None:
-                cache_registry.append(psigs)
+            psigs = cache_once(psigs, cache_registry)
     pband = _minhash_bands(
         psigs, id_col, bands, rows, n_buckets, alias="probe_id", carry=carry
     )
@@ -1320,23 +1363,24 @@ def minhash_index_probe(
         # <= bands * n_buckets values no matter the batch size — become a
         # literal static PartitionFilter on the postings scan, so only the
         # probed directories are ever read. Deterministic at any scale,
-        # unlike the DPP cost heuristic. The tiny eager job reuses the
-        # cached batch signatures; a caller-supplied ``routing`` superset
-        # (the fused ingestion router) skips the job entirely.
-        if routing is None:
-            pairs = pband.select("band", "bucket").distinct().collect()
-            # ONE flat packed-key IN-list instead of an OR-chain of
-            # (band = b AND bucket = k) terms: the chain costs a py4j round
-            # trip per operator plus Catalyst analysis of a tree hundreds of
-            # nodes deep — measured ~2.6 s of the probe's 3.45 s plan time
-            # at 256 keys (r9). band * n_buckets + bucket is injective, the
-            # expression references only partition columns, and Spark prunes
-            # it identically (PartitionFilters: ((band * N) + bucket) IN ...).
-            packed = sorted(
-                {int(r["band"]) * n_buckets + int(r["bucket"]) for r in pairs}
-            )
-        else:
-            packed = sorted({int(p) for p in routing})
+        # unlike the DPP cost heuristic. The keys come from routing_keys:
+        # one job, one stage, over the batch's band rows — the same rows
+        # this probe broadcasts below — and its first pass fills the
+        # signature cache the verify join reads. A caller-supplied
+        # ``routing`` superset (the fused ingestion router) skips it.
+        #
+        # ONE flat packed-key IN-list instead of an OR-chain of
+        # (band = b AND bucket = k) terms: the chain costs a py4j round
+        # trip per operator plus Catalyst analysis of a tree hundreds of
+        # nodes deep — measured ~2.6 s of the probe's 3.45 s plan time at
+        # 256 keys (r9). band * n_buckets + bucket is injective, the
+        # expression references only partition columns, and Spark prunes
+        # it identically (PartitionFilters: ((band * N) + bucket) IN ...).
+        packed = (
+            routing_keys(pband, F.col("band") * n_buckets + F.col("bucket"))
+            if routing is None
+            else sorted({int(p) for p in routing})
+        )
         if packed:
             postings = postings.filter(
                 _in_literals(f"(band * {int(n_buckets)} + bucket)", packed)
@@ -1474,7 +1518,7 @@ def _hashed(
     renames the id column."""
     return docs.select(
         F.col(id_col).alias(alias or id_col),
-        content_hash(F.col(text)).alias("content_hash"),
+        kernel(content_hash, text).alias("content_hash"),
     ).withColumn("bucket", F.pmod(F.col("content_hash"), F.lit(n_buckets)))
 
 
@@ -1567,8 +1611,7 @@ def hash_index_probe(
     root = index_dataset_root(index_path)  # one snapshot per probe
     n_buckets = meta["n_buckets"]
     # precomputed routing implies a fused caller that already
-    # parallelism-guarded the raw batch — skip the .rdd probe here (it
-    # costs a full analysis of the batch's lineage per call).
+    # parallelism-guarded the raw batch — skip the plan walk here.
     base = (
         batch
         if (batch.isStreaming or buckets is not None)
@@ -1582,12 +1625,13 @@ def hash_index_probe(
         # explicit partition routing, same contract as minhash_index_probe:
         # the distinct probed buckets become a literal IN-filter on the
         # partition column — deterministic pruning at any scale, no DPP
-        # cost-heuristic dependence. The routing collect is bounded by
-        # n_buckets values; a caller-supplied superset skips it.
+        # cost-heuristic dependence. routing_keys hashes the RAW batch —
+        # the rows this probe broadcasts — in one job of one stage; the
+        # parallelism-guarded ``base`` would add its round-robin shuffle
+        # to a job that only reads one hash per doc. A caller-supplied
+        # superset skips it.
         if buckets is None:
-            buckets = [
-                r["bucket"] for r in probe.select("bucket").distinct().collect()
-            ]
+            buckets = routing_keys(_hashed(batch, id_col, text, n_buckets), "bucket")
         if buckets:
             hashes = hashes.filter(_in_literals("bucket", buckets))
         probe_side = F.broadcast(probe)
@@ -2287,7 +2331,7 @@ def containment_pairs(
     else:
         sh_sets = (
             with_min_parallelism(df)
-            .select(F.col(id_col), shingle_hashes(F.col(text)).alias("sh"))
+            .select(F.col(id_col), kernel(shingle_hashes, text).alias("sh"))
             .withColumn("size", F.array_size("sh"))
             .cache()
         )
@@ -2431,7 +2475,7 @@ def containment_pairs_between(
         base = df if df.isStreaming else with_min_parallelism(df)
         return (
             base.select(
-                F.col(id_col), *keep, shingle_hashes(F.col(text)).alias("sh")
+                F.col(id_col), *keep, kernel(shingle_hashes, text).alias("sh")
             )
             .withColumn("size", F.array_size("sh"))
         )
@@ -2570,7 +2614,7 @@ CONTAINMENT_LAYOUT = tuple(
 def _containment_sets(docs: DataFrame, id_col: str, text: str) -> DataFrame:
     """(id, shingle set, size) per doc."""
     return docs.select(
-        F.col(id_col), shingle_hashes(F.col(text)).alias("sh")
+        F.col(id_col), kernel(shingle_hashes, text).alias("sh")
     ).withColumn("size", F.array_size("sh"))
 
 
@@ -2886,7 +2930,7 @@ def build_bloom_index(
     build_index(
         corpus, path, BLOOM_LAYOUT,
         lambda docs, pin: (pin(_bloom_words(
-            docs, content_hash(F.col(text)), n_segments, words_per_segment, k
+            docs, kernel(content_hash, text), n_segments, words_per_segment, k
         )),),
         (n_segments, words_per_segment, k, id_col, text),
         "n_segments int, words_per_segment int, k int, id_col string, text_col string",
@@ -2934,7 +2978,7 @@ def bloom_index_probe(
     # stages, or the pre-test can rule out docs the confirm join would
     # have matched (silent false negatives). meta["text_col"] records
     # the build-time column for audits; it is not a probe-time default.
-    h = content_hash(F.col(text))
+    h = kernel(content_hash, text)
     need = (
         _bloom_bit_rows(
             base,
@@ -2957,12 +3001,12 @@ def bloom_index_probe(
             cache_registry.append(need)
     bits = read_static_schema(spark, f"{root}/bits")
     if not batch.isStreaming:
-        if segments is None:
-            segs = [
-                r["segment"] for r in need.select("segment").distinct().collect()
-            ]
-        else:
-            segs = sorted({int(s) for s in segments})
+        # need is batch-bounded: it broadcasts into the hits join below
+        segs = (
+            routing_keys(need, "segment")
+            if segments is None
+            else sorted({int(s) for s in segments})
+        )
         if not segs:
             return need.select("probe_id", "content_hash").limit(0)
         bits = bits.filter(_in_literals("segment", segs))
@@ -3000,7 +3044,7 @@ def bloom_index_upsert(
     index_upsert(
         spark, index_path, batch, BLOOM_LAYOUT,
         lambda docs, meta, root, pin: (pin(_bloom_words(
-            docs, content_hash(F.col(text)), meta["n_segments"],
+            docs, kernel(content_hash, text), meta["n_segments"],
             meta["words_per_segment"], meta["k"],
         )),),
     )
@@ -3208,6 +3252,10 @@ def keyset_index_probe(
     bits = read_static_schema(spark, f"{root}/bits")
     if not probe.isStreaming:
         if segments is None:
+            # the one routing collect that keeps its .distinct(): need is
+            # |distinct probe keys| x k rows — corpus-vocabulary-sized
+            # for a whole-corpus decontamination sweep, never broadcast
+            # (see below) — so its keys are deduplicated on the cluster.
             segs = [
                 r["segment"] for r in need.select("segment").distinct().collect()
             ]
@@ -3247,9 +3295,8 @@ def keyset_index_probe(
             maybe = maybe.cache()
             if cache_registry is not None:
                 cache_registry.append(maybe)
-            msegs = [
-                r["segment"] for r in maybe.select("segment").distinct().collect()
-            ]
+            # maybe is batch-bounded: it broadcasts into the confirm
+            msegs = routing_keys(maybe, "segment")
         else:
             # caller-supplied superset (one segment per key, so probe-key
             # segments always cover the Bloom-positives'): no adaptive

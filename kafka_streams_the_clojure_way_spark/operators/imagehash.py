@@ -54,6 +54,7 @@ from kafka_streams_the_clojure_way_spark.operators.dedup import (
     compact_index,
     index_dataset_root,
     index_upsert,
+    routing_keys,
     serve_index_stream,
 )
 from kafka_streams_the_clojure_way_spark.sources.files import (
@@ -643,12 +644,16 @@ def phash_index_probe(
     )
     bands = read_static_schema(spark, f"{root}/bands")
     if not batch_assets.isStreaming:
+        nb = meta["n_buckets"]
+        # (band, bucket) packed into one key; probe broadcasts below
         keys = (
             [(int(b), int(k)) for b, k in routing]
             if routing is not None
             else [
-                (r["band"], int(r["bkey"]) % meta["n_buckets"])
-                for r in probe.select("band", "bkey").distinct().collect()
+                divmod(v, nb)
+                for v in routing_keys(
+                    probe, F.col("band") * nb + F.pmod(F.col("bkey"), F.lit(nb))
+                )
             ]
         )
         if not keys:
@@ -875,12 +880,14 @@ def video_phash_index_probe(
     )
     frames = read_static_schema(spark, f"{root}/frames")
     if not batch_assets.isStreaming:
+        nb = meta["n_buckets"]
+        # (band, bucket) packed into one key; probe broadcasts below
         keys = (
             [(int(b), int(k)) for b, k in routing]
             if routing is not None
             else [
-                (r["p_band"], r["p_bucket"])
-                for r in probe.select("p_band", "p_bucket").distinct().collect()
+                divmod(v, nb)
+                for v in routing_keys(probe, F.col("p_band") * nb + F.col("p_bucket"))
             ]
         )
         if not keys:

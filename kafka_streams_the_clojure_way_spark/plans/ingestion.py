@@ -688,7 +688,7 @@ def compute_batch_routing(
     spec = topology.get("routing")
     if spec is None or batch.isStreaming:
         return {}
-    from kafka_streams_the_clojure_way_spark.functions.portable import hash60
+    from kafka_streams_the_clojure_way_spark.functions.portable import hash60, kernel
     from kafka_streams_the_clojure_way_spark.operators import text as TX
     from kafka_streams_the_clojure_way_spark.sources.files import (
         with_min_parallelism,
@@ -696,7 +696,7 @@ def compute_batch_routing(
 
     id_col, text = spec["id_col"], spec["text"]
     base = with_min_parallelism(batch)
-    h = D.content_hash(F.col(text))
+    h = kernel(D.content_hash, text)
     legs: list[DataFrame] = []
     expected: list[str] = []
     out: dict = {}
@@ -731,26 +731,19 @@ def compute_batch_routing(
         n_hashes, bands = meta["n_hashes"], meta["bands"]
         n_buckets, rows = meta["n_buckets"], meta["n_hashes"] // meta["bands"]
         sigs = base.select(
-            F.col(id_col), D.shingle_hashes(F.col(text)).alias("sh")
+            F.col(id_col), kernel(D.shingle_hashes, text).alias("sh")
         ).withColumn(
-            "sig", D.minhash_from_hashes(F.col("sh"), D.minhash_seeds(n_hashes))
-        ).cache()
-        if cache_registry is not None:
-            cache_registry.append(sigs)
+            "sig", kernel(D.minhash_from_hashes, "sh", D.minhash_seeds(n_hashes))
+        )
+        sigs = D.cache_once(sigs, cache_registry)
         out["minhash_sigs"] = sigs
         leg(
             sigs.select(
-                F.explode(
-                    F.array(
-                        *[
-                            F.lit(b) * n_buckets
-                            + F.pmod(
-                                D._band_key(F.col("sig"), b, rows),
-                                F.lit(n_buckets),
-                            )
-                            for b in range(bands)
-                        ]
-                    )
+                F.explode(kernel(D._minhash_band_structs, "sig", bands, rows)).alias("bk")
+            ).select(
+                (
+                    F.col("bk.band") * n_buckets
+                    + F.pmod(F.col("bk.bkey"), F.lit(n_buckets))
                 ).alias("key")
             ),
             "minhash_routing",
@@ -771,15 +764,10 @@ def compute_batch_routing(
     union = legs[0]
     for frame in legs[1:]:
         union = union.unionByName(frame)
-    # Driver-side dedupe instead of .distinct(): the union is a pure
-    # projection of the batch (plus the sigs cache), so collecting it
-    # raw keeps the ONE routing job a single shuffle-free stage — the
-    # distinct's exchange was pure per-trigger stage latency. Row count
-    # is batch-bounded (ids + grams), never corpus-bounded.
-    keys: dict[str, set[int]] = {tag: set() for tag in expected}
-    for r in union.collect():  # the ONE routing job
-        keys[r["tag"]].add(int(r["key"]))
-    out.update({tag: sorted(vals) for tag, vals in keys.items()})
+    # the union is a pure projection of the batch (plus the sigs
+    # cache): batch-bounded (ids + grams), never corpus-bounded
+    keys = D.routing_keys(union, "key", "tag")  # the ONE routing job
+    out.update({tag: keys.get(tag, []) for tag in expected})
     return out
 
 
@@ -842,16 +830,17 @@ def compute_asset_routing(spark: SparkSession, topology: Topology) -> dict:
     union = legs[0]
     for frame in legs[1:]:
         union = union.unionByName(frame)
-    keys: dict[str, list[int]] = {tag: [] for tag in metas}
-    for r in union.distinct().collect():  # the ONE routing job
-        keys[r["tag"]].append(int(r["key"]))
+    # the legs project the probes' own signature frames, which each
+    # probe broadcasts: batch-bounded
+    keys = D.routing_keys(union, "key", "tag")  # the ONE routing job
     out: dict = {}
-    for tag, vals in keys.items():
+    for tag in metas:
+        vals = keys.get(tag, [])
         if tag == "audio":
-            out[tag] = sorted(vals)
+            out[tag] = vals
         else:
             nb = metas[tag]["n_buckets"]
-            out[tag] = sorted((v // nb, v % nb) for v in vals)
+            out[tag] = [divmod(v, nb) for v in vals]
     return out
 
 

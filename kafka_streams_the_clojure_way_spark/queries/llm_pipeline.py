@@ -5122,7 +5122,7 @@ def agg_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # measured SLOWER (materialization cost on top of the same single
     # pass) — r11.
     posts = docs.select(
-        "source", F.explode(D.shingle_hashes(F.col("text"))).alias("h")
+        "source", F.explode(P.kernel(D.shingle_hashes, "text")).alias("h")
     ).distinct()
     tot = posts.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
     srcs = posts.groupBy("h").agg(
@@ -5200,7 +5200,7 @@ def agg_source_curation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         "lang",
         F.array_size(T.tokens_col(F.col("text"))).cast("long").alias("n_toks"),
-        D.content_hash(F.col("text")).alias("h"),
+        P.kernel(D.content_hash, "text").alias("h"),
         F.round(F.col("quality_score") * 10000, 0).cast("long").alias("qmicro"),
     )
     return per_doc.groupBy("source").agg(

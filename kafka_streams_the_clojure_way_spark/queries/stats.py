@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka_streams_the_clojure_way_spark.functions.portable import kernel
 from kafka_streams_the_clojure_way_spark.operators.dedup import shingle_hashes, shingle_hashes_sql
 from kafka_streams_the_clojure_way_spark.queries.registry import query
 from kafka_streams_the_clojure_way_spark.sources.files import load_table, with_min_parallelism
@@ -151,7 +152,7 @@ def text_top_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingles — the 'boilerplate detector' of a dedup pipeline (exactly the
     skewed keys that LSH banding must survive)."""
     docs = with_min_parallelism(load_table(spark, sf_dir, "documents"))
-    sh = docs.select(F.explode(shingle_hashes(F.col("text"))).alias("shingle_hash"))
+    sh = docs.select(F.explode(kernel(shingle_hashes, "text")).alias("shingle_hash"))
     return (
         sh.groupBy("shingle_hash")
         .agg(F.count(F.lit(1)).alias("n_docs"))

@@ -40,6 +40,13 @@ ENGINE_CONF: dict[str, str] = {
     # Progress bars write \r-control lines that corrupt stdout capture
     # (the driver parses bench.py's single JSON stdout line).
     "spark.ui.showConsoleProgress": "false",
+    # PySpark 4 captures the Python call site of every DataFrame and
+    # Column call for analysis-error messages: about four extra py4j
+    # round trips per API call, which Spark documents as "non-trivial
+    # performance overhead". Plan construction pays it on every probe.
+    # Off, an analysis error loses only its Python call-site block.
+    # Static conf: only sessions built by get_spark carry it.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 

@@ -83,27 +83,76 @@ def with_min_parallelism(df: DataFrame, min_partitions: int | None = None) -> Da
     single-row-group test parquet files, which Spark cannot split below
     row-group granularity — measured 5x on the signature stage at sf0.1).
 
+    **It runs nothing.** The partition count is read off ``df``'s
+    physical plan (:func:`_planned_partitions`): scan splits come from
+    the file listing the planner already did, and a post-shuffle count
+    is estimated from the plan's size statistics the way AQE coalesces.
+    Asking Spark for the RDD instead finalises the adaptive plan, which
+    runs its broadcast and shuffle stages — jobs the caller's own action
+    then repeats.
+
     Cheap relational plans (scan -> partial agg -> shuffle) must NOT use
     this: partial aggregation exists precisely to avoid shuffling the
     fact table.
     """
-    import pyspark
-
-    target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
-    try:
-        # JVM-side probe: ~4x cheaper than df.rdd (which builds the whole
-        # Python-serializer RDD conversion just to read a partition count).
-        # PRIVATE API, validated on pyspark 3.x/4.x (`Dataset.rdd` exists
-        # on both); gated so an incompatible future major version degrades
-        # to the public path instead of surprising.
-        if int(pyspark.__version__.split(".")[0]) > 4:
-            raise AttributeError("unvalidated Spark major; use public path")
-        current = df._jdf.rdd().getNumPartitions()
-    except Exception:  # pragma: no cover - private-API fallback
-        current = df.rdd.getNumPartitions()
-    if current >= target:
+    spark = df.sparkSession
+    target = min_partitions or spark.sparkContext.defaultParallelism
+    qe = df._jdf.queryExecution()
+    current = _planned_partitions(spark, qe, qe.executedPlan())
+    if current is None or current >= target:
         return df
     return df.repartition(target)
+
+
+def _planned_partitions(spark: SparkSession, qe, node) -> int | None:
+    """Partitions the physical plan ``node`` (of query execution
+    ``qe``) yields, without running it; None when a leaf's count cannot
+    be read off the plan. Follows the side that carries the rows: the
+    streamed side of a broadcast join, every input of a union. A shuffle
+    that AQE coalesces yields about one partition per
+    ``coalescePartitions.minPartitionSize`` of the plan's estimated
+    output (the ``parallelismFirst`` rule, capped by the shuffle's
+    width); an explicit ``repartition(n)``, or any shuffle without AQE,
+    keeps its width. A cached
+    frame reports its materialised partitions, or its plan's before
+    first use."""
+    from py4j.protocol import Py4JError
+
+    name = node.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":  # not yet executed: the initial plan
+        return _planned_partitions(spark, qe, node.executedPlan())
+    if name == "InMemoryTableScanExec":
+        cache = node.relation().cacheBuilder()
+        if cache.isCachedColumnBuffersLoaded():
+            return cache.cachedColumnBuffers().getNumPartitions()
+        return _planned_partitions(spark, qe, node.relation().cachedPlan())
+    if name == "ShuffleExchangeExec":
+        # the declared partitioning: numPartitions() would build the
+        # shuffle dependency, which executes the child
+        width = node.outputPartitioning().numPartitions()
+        adaptive = qe.executedPlan().getClass().getSimpleName() == "AdaptiveSparkPlanExec"
+        if not adaptive or node.shuffleOrigin().toString() == "REPARTITION_BY_NUM":
+            return width
+        jvm = spark.sparkContext._jvm
+        per_part = jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+            spark.conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1MB")
+        )
+        size = int(str(qe.optimizedPlan().stats().sizeInBytes()))
+        return min(width, max(1, -(-size // per_part)))
+    kids = node.children()
+    if kids.size() == 0:
+        try:
+            rdds = node.inputRDDs()
+        except Py4JError:
+            return None
+        return sum(rdds.apply(i).getNumPartitions() for i in range(rdds.size()))
+    if name in ("BroadcastHashJoinExec", "BroadcastNestedLoopJoinExec"):
+        streamed = 0 if node.buildSide().toString() == "BuildRight" else 1
+        return _planned_partitions(spark, qe, kids.apply(streamed))
+    if name == "UnionExec":
+        parts = [_planned_partitions(spark, qe, kids.apply(i)) for i in range(kids.size())]
+        return None if None in parts else sum(parts)
+    return _planned_partitions(spark, qe, kids.apply(0))
 
 
 def load_tables(

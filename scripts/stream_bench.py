@@ -25,16 +25,18 @@ Usage:
 from __future__ import annotations
 
 import json
+import os
 import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.1"
-TMP = "/root/repo/.bench_tmp"
+TMP = os.path.join(ROOT, ".bench_tmp")
 
 EVENT_SCHEMA = (
     "event_id long, ts long, user_id long, event_type string, "

@@ -114,3 +114,47 @@ def test_exit_sweep_removes_every_scratch_dir(tmp_path):
 
 def test_keyset_helpers_share_one_build(spark):
     assert QI._ingest_keyset_path(spark, SF) == L._bench_keyset_path(spark, SF)
+
+
+def test_ingestion_queries_cache_no_frame_twice(spark, monkeypatch):
+    """The pipeline_ingestion_* queries after dedup_incremental_indexed,
+    whose probe keeps the arriving slice's minhash signatures cached for
+    the process: the six-gate compile's router signs the same slice,
+    and must read that entry instead of caching the plan a second time
+    (the CacheManager's "cached already" warning) — and must not release
+    the probe's cached frame."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from kafka_streams_the_clojure_way_spark.queries import QUERIES
+
+    def persisted():
+        # ids, not a count: the context cleaner may release other tests'
+        # frames while this one runs
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    # one fresh compile in a session holding no earlier compile's frames
+    spark.catalog.clearCache()
+    monkeypatch.setattr(
+        A, "_ARTIFACTS", {k: v for k, v in A._ARTIFACTS.items() if k[2] != "ingest_gates"}
+    )
+    L._minhash_index_path(spark, SF)  # built before the RDDs are counted
+    before = persisted()
+    QUERIES["dedup_incremental_indexed"](spark, SF).collect()
+    held = persisted() - before  # the probe's signature cache
+    assert held, "the probe cached nothing"
+
+    manager = spark._jsparkSession.sharedState().cacheManager()
+    twice = []
+    cache = DataFrame.cache
+
+    def checked(df):
+        if manager.lookupCachedData(df._jdf).isDefined():
+            twice.append(df._jdf.queryExecution().analyzed().toString())
+        return cache(df)
+
+    monkeypatch.setattr(DataFrame, "cache", checked)
+    for name in sorted(QUERIES):
+        if name.startswith("pipeline_ingestion_"):
+            QUERIES[name](spark, SF).collect()
+    assert not twice, "cached twice:\n" + "\n".join(twice)
+    assert held <= persisted(), "released the probe's cached frame"
