@@ -49,6 +49,13 @@ ENGINE_CONF: dict[str, str] = {
     "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
+#: The checkpoint file manager ``get_spark`` gives local sessions (Spark 4.x
+#: package; Spark 3.5 had it one package up, without ``checkpointing``).
+LOCAL_CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
 
 def get_spark(
     app_name: str = "kstcw-spark",
@@ -77,6 +84,25 @@ def get_spark(
     builder = builder.config(
         "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
     )
+    if master.startswith("local"):
+        # Every trigger writes four metadata logs (offsets, sources/0, the
+        # file sink's _spark_metadata, commits), and stateful queries write
+        # state-store files, each as create-temp-then-rename. Without
+        # libhadoop, Spark's default FileContext manager forks `readlink`
+        # four times per local rename (RawLocalFileSystem.getFileLinkStatus):
+        # 32 process starts a trigger. The FileSystem manager forks none.
+        # On file: paths the guarantee is the same: FileContext's local
+        # rename is itself stat-then-rename, and this manager refuses an
+        # existing batch file with FileAlreadyExistsException, which
+        # HDFSMetadataLog reports as a concurrent writer. Checksums (.crc)
+        # and the file layout stay, so old checkpoints restart. Each file
+        # create still forks one `chmod` (RawLocalFileSystem.setPermission).
+        # Cluster masters keep the default: on HDFS the FileContext rename
+        # is the atomic no-clobber rename the logs rely on.
+        builder = builder.config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            LOCAL_CHECKPOINT_FILE_MANAGER,
+        )
     for key, value in ENGINE_CONF.items():
         builder = builder.config(key, value)
     builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))

@@ -17,6 +17,11 @@ output in topology order; the compiler's per-gate caches make each
 marginal time that gate's own cost). Numbers land in BASELINE.md next
 to the 6.3M rows/s reference-pipeline row.
 
+Both modes print each stream's per-trigger p50/max next to the median
+per-trigger ``durationMs`` split (``PHASES``): the fixed part of a
+trigger (offset and commit logs, planning) against the per-data part
+(``addBatch``).
+
 Usage:
   python scripts/stream_bench.py [replication=20]
   python scripts/stream_bench.py ingestion [n_batches=8] [replication=4] [out_json]
@@ -27,6 +32,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import statistics
 import sys
 import time
 
@@ -63,6 +69,27 @@ def pipeline(df):
 
 
 DOC_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
+
+#: the progress feed's per-trigger ``durationMs`` phases reported per stream
+PHASES = ("latestOffset", "walCommit", "queryPlanning", "addBatch", "commitOffsets")
+
+
+def trigger_stats(query) -> dict:
+    """p50/max seconds and the median ``durationMs`` of each phase over the
+    query's triggers that read rows (``recentProgress`` keeps the last 100)."""
+    trig = [p for p in (query.recentProgress or []) if p.get("numInputRows", 0) > 0]
+    dur = sorted(p["batchDuration"] / 1000.0 for p in trig)
+    return {
+        "n_triggers": len(trig),
+        "per_trigger_s": {
+            "p50": round(dur[len(dur) // 2], 3) if dur else None,
+            "max": round(dur[-1], 3) if dur else None,
+        },
+        "median_duration_ms": {
+            k: statistics.median(p["durationMs"].get(k, 0) for p in trig) if trig else None
+            for k in PHASES
+        },
+    }
 
 #: topology order of the six gate outputs (compile entity names).
 GATE_ORDER = [
@@ -240,22 +267,14 @@ def ingestion_main() -> None:
             q.awaitTermination(5)
         wall_s = time.time() - t0
         survivors = spark.read.parquet(f"{TMP}/curated_out").count()
-        trig = sorted(
-            p["batchDuration"] / 1000.0
-            for p in (q.recentProgress or [])
-            if p.get("numInputRows", 0) > 0
-        )
+        stats = trigger_stats(q)
         runs.append(
             {
                 "config": label,
-                "n_triggers": len(trig),
-                "rows_per_trigger": round(n_rows / max(len(trig), 1)),
+                "rows_per_trigger": round(n_rows / max(stats["n_triggers"], 1)),
                 "wall_s": round(wall_s, 2),
                 "rows_per_sec": round(n_rows / wall_s),
-                "per_trigger_s": {
-                    "p50": round(trig[len(trig) // 2], 2) if trig else None,
-                    "max": round(trig[-1], 2) if trig else None,
-                },
+                **stats,
                 "survivors": survivors,
             }
         )
@@ -335,6 +354,7 @@ def main() -> None:
                 "batch_rows_per_sec": round(n_rows / batch_s),
                 "stream_rows_per_sec": round(n_rows / stream_s),
                 "stream_rows_per_sec_per_core": round(n_rows / stream_s / cores),
+                **trigger_stats(q),
                 "cores": cores,
                 "unit": "rows/sec",
             }
