@@ -4,8 +4,8 @@ The registry queries share expensive derived data — persisted indexes,
 materialized signature tables, trained models, pinned DataFrames — and
 build each one once per process. :func:`artifact` is the one memo they
 all go through, and :func:`scratch_dir` is the one place the engine
-makes temporary directories (artifacts and the ingestion loop's
-per-trigger spools), all removed by a single sweep at interpreter exit.
+makes temporary directories, all removed by a single sweep at
+interpreter exit.
 """
 
 from __future__ import annotations
@@ -33,17 +33,10 @@ atexit.register(_sweep)
 
 
 def scratch_dir(prefix: str) -> str:
-    """A fresh temporary directory, removed at interpreter exit unless
-    :func:`release_scratch` removes it first."""
+    """A fresh temporary directory, removed at interpreter exit."""
     path = tempfile.mkdtemp(prefix=prefix)
     _LIVE_SCRATCH.add(path)
     return path
-
-
-def release_scratch(path: str) -> None:
-    """Remove a scratch directory now and drop it from the exit sweep."""
-    shutil.rmtree(path, ignore_errors=True)
-    _LIVE_SCRATCH.discard(path)
 
 
 def artifact(spark, sf_dir, kind, build, *params, sources=("documents",)):

@@ -123,8 +123,8 @@ def _in_literals(expr_sql: str, values) -> "F.Column":
 def routing_keys(frame: DataFrame, key: str | Column, tag: str | None = None):
     """A probe's partition-routing keys: the distinct non-null values of
     ``key`` over ``frame``, as a sorted int list — or, with ``tag``, a
-    dict of such lists per tag value (the fused routers' tagged union of
-    per-probe legs).
+    dict of such lists per tag value (the multimodal router's tagged
+    union of per-probe legs).
 
     ONE job of one shuffle-free stage: the key column is collected raw
     and deduplicated on the driver. A ``.distinct()`` would add an
@@ -147,12 +147,13 @@ def routing_keys(frame: DataFrame, key: str | Column, tag: str | None = None):
 def cache_once(df: DataFrame, cache_registry: list | None = None) -> DataFrame:
     """``df.cache()``, appended to ``cache_registry`` for release —
     unless the session already caches the same plan. Two consumers can
-    build one batch's frame: the fused router and a standalone minhash
-    probe both sign the same arriving slice, and that probe's cache
-    lives for the process. The second ``.cache()`` was a no-op with a
-    "cached already" warning, and registering the frame would let this
-    caller's drain unpersist an entry the first consumer still reads;
-    here the later consumer just reads the cached data."""
+    build one batch's frame: the curation topology's near-dup probe and
+    a standalone minhash probe both sign the same arriving slice, and
+    the first probe's cache lives for the process. The second
+    ``.cache()`` was a no-op with a "cached already" warning, and
+    registering the frame would let this caller's drain unpersist an
+    entry the first consumer still reads; here the later consumer just
+    reads the cached data."""
     cached = df.sparkSession._jsparkSession.sharedState().cacheManager()
     if cached.lookupCachedData(df._jdf).isDefined():
         return df
@@ -752,8 +753,8 @@ def _band_key(sig: Column, band: int, rows: int = LSH_ROWS) -> Column:
 
 def _minhash_band_structs(sig: Column, bands: int, rows: int) -> Column:
     """array<struct<band, bkey>>: one :func:`_band_key` per band — the
-    band array the LSH join, the index build, upsert and probe and the
-    fused ingestion router explode. Callers take it through
+    band array the LSH join and the index build, upsert and probe
+    explode. Callers take it through
     :func:`~kafka_streams_the_clojure_way_spark.functions.portable.kernel`
     (``kernel(_minhash_band_structs, "sig", bands, rows)``): the band
     folds' hundreds of py4j round trips are paid once per process."""
@@ -1264,8 +1265,6 @@ def minhash_index_probe(
     threshold: float = 0.8,
     watermark: tuple[str, str] | None = None,
     cache_registry: list | None = None,
-    routing: list[int] | None = None,
-    sigs: DataFrame | None = None,
 ) -> DataFrame:
     """Probe a persisted MinHash band index with an arriving batch: sign
     the BATCH ONLY, route its distinct (band, bucket) keys into a static
@@ -1273,20 +1272,6 @@ def minhash_index_probe(
     are read), equi-join on (band, bucket, bkey), then exact-Jaccard
     verify candidates against ``path/shingles``. Banding parameters come
     from ``path/meta``, so probe signatures always match the index.
-
-    ``routing`` (batch-only): precomputed packed partition keys
-    (``band * n_buckets + bucket``) to use INSTEAD of this probe's own
-    eager routing collect. MUST cover every (band, bucket) the batch's
-    signatures can land in — a SUPERSET is safe (extra directories are
-    read and filtered by the equi-join; nothing new can match), a
-    missing key silently loses pairs. The fused ingestion router
-    (``plans.ingestion.compute_batch_routing``) derives supersets from
-    the raw trigger batch so the whole topology pays ONE routing job
-    instead of one per gate. ``sigs`` (batch-only): a precomputed
-    ``(id_col, sh, sig)`` frame — signed with THIS index's meta
-    parameters — covering at least the batch's ids; the probe
-    semi-joins it down to the batch and skips re-signing (sign the
-    batch once per trigger, not once per consumer).
 
     Output contract is identical to :func:`minhash_lsh_pairs_between`:
     (probe_id, corpus_id, jaccard) with jaccard >= threshold, self-pairs
@@ -1330,24 +1315,13 @@ def minhash_index_probe(
         ts_col, delay = watermark
         batch = batch.withWatermark(ts_col, delay)
     carry = ([ts_col, "sh"] if wm_streaming else [])
-    if sigs is not None or routing is not None:
-        if batch.isStreaming:
-            raise ValueError("precomputed sigs/routing are batch-only")
-    if sigs is not None:
-        # caller-signed frame (superset of the batch's ids, same meta
-        # parameters): narrow to this batch, skip the per-probe signing
-        # and its cache — the caller owns the shared frame's lifecycle.
-        psigs = sigs.select(F.col(id_col), "sh", "sig").join(
-            batch.select(F.col(id_col)), id_col, "left_semi"
-        )
-    else:
-        base = batch if batch.isStreaming else with_min_parallelism(batch)
-        psigs = base.select(
-            F.col(id_col), *([ts_col] if wm_streaming else []),
-            kernel(shingle_hashes, text).alias("sh"),
-        ).withColumn("sig", kernel(minhash_from_hashes, "sh", minhash_seeds(n_hashes)))
-        if not batch.isStreaming:
-            psigs = cache_once(psigs, cache_registry)
+    base = batch if batch.isStreaming else with_min_parallelism(batch)
+    psigs = base.select(
+        F.col(id_col), *([ts_col] if wm_streaming else []),
+        kernel(shingle_hashes, text).alias("sh"),
+    ).withColumn("sig", kernel(minhash_from_hashes, "sh", minhash_seeds(n_hashes)))
+    if not batch.isStreaming:
+        psigs = cache_once(psigs, cache_registry)
     pband = _minhash_bands(
         psigs, id_col, bands, rows, n_buckets, alias="probe_id", carry=carry
     )
@@ -1366,8 +1340,7 @@ def minhash_index_probe(
         # unlike the DPP cost heuristic. The keys come from routing_keys:
         # one job, one stage, over the batch's band rows — the same rows
         # this probe broadcasts below — and its first pass fills the
-        # signature cache the verify join reads. A caller-supplied
-        # ``routing`` superset (the fused ingestion router) skips it.
+        # signature cache the verify join reads.
         #
         # ONE flat packed-key IN-list instead of an OR-chain of
         # (band = b AND bucket = k) terms: the chain costs a py4j round
@@ -1376,11 +1349,7 @@ def minhash_index_probe(
         # 256 keys (r9). band * n_buckets + bucket is injective, the
         # expression references only partition columns, and Spark prunes
         # it identically (PartitionFilters: ((band * N) + bucket) IN ...).
-        packed = (
-            routing_keys(pband, F.col("band") * n_buckets + F.col("bucket"))
-            if routing is None
-            else sorted({int(p) for p in routing})
-        )
+        packed = routing_keys(pband, F.col("band") * n_buckets + F.col("bucket"))
         if packed:
             postings = postings.filter(
                 _in_literals(f"(band * {int(n_buckets)} + bucket)", packed)
@@ -1583,7 +1552,6 @@ def hash_index_probe(
     *,
     text: str = "text",
     id_col: str = "doc_id",
-    buckets: list[int] | None = None,
 ) -> DataFrame:
     """Probe a persisted hash index with an arriving batch: hash the
     BATCH ONLY, route its distinct buckets — bounded by the index's
@@ -1592,13 +1560,6 @@ def hash_index_probe(
     (bucket, content_hash) with the batch side broadcast. Output
     contract identical to :func:`exact_pairs_between`:
     (probe_id, corpus_id, content_hash), self-pairs dropped.
-
-    ``buckets`` (batch-only): precomputed routing — a SUPERSET of the
-    batch's ``pmod(content_hash, n_buckets)`` values — used instead of
-    this probe's own eager routing collect (superset-safe: the
-    equi-join filters the extra directories; a missing bucket loses
-    matches). The fused ingestion router derives it from the raw
-    trigger batch, which strictly covers any gated slice of it.
 
     STREAMING: ``batch`` may be a streaming frame — every probe
     transform is stateless, so the gate degrades to a stream-static
@@ -1610,13 +1571,7 @@ def hash_index_probe(
     meta = _index_meta(spark, index_path)
     root = index_dataset_root(index_path)  # one snapshot per probe
     n_buckets = meta["n_buckets"]
-    # precomputed routing implies a fused caller that already
-    # parallelism-guarded the raw batch — skip the plan walk here.
-    base = (
-        batch
-        if (batch.isStreaming or buckets is not None)
-        else with_min_parallelism(batch)
-    )
+    base = batch if batch.isStreaming else with_min_parallelism(batch)
     probe = _hashed(base, id_col, text, n_buckets, alias="probe_id")
     hashes = read_static_schema(spark, f"{root}/hashes")
     if batch.isStreaming:
@@ -1628,10 +1583,8 @@ def hash_index_probe(
         # cost-heuristic dependence. routing_keys hashes the RAW batch —
         # the rows this probe broadcasts — in one job of one stage; the
         # parallelism-guarded ``base`` would add its round-robin shuffle
-        # to a job that only reads one hash per doc. A caller-supplied
-        # superset skips it.
-        if buckets is None:
-            buckets = routing_keys(_hashed(batch, id_col, text, n_buckets), "bucket")
+        # to a job that only reads one hash per doc.
+        buckets = routing_keys(_hashed(batch, id_col, text, n_buckets), "bucket")
         if buckets:
             hashes = hashes.filter(_in_literals("bucket", buckets))
         probe_side = F.broadcast(probe)
@@ -2689,7 +2642,6 @@ def containment_index_probe(
     text: str = "text",
     id_col: str = "doc_id",
     cache_registry: list | None = None,
-    ensured_parallelism: bool = False,
 ) -> DataFrame:
     """Probe a persisted containment index with an arriving batch —
     output contract identical to :func:`containment_pairs_between`
@@ -2705,11 +2657,7 @@ def containment_index_probe(
     meta = _index_meta(spark, index_path)
     root = index_dataset_root(index_path)  # one snapshot per probe
     t_num, t_den = meta["t_num"], meta["t_den"]
-    base = (
-        batch
-        if (batch.isStreaming or ensured_parallelism)
-        else with_min_parallelism(batch)
-    )
+    base = batch if batch.isStreaming else with_min_parallelism(batch)
     psets = _containment_sets(base, id_col, text)
     if not batch.isStreaming:
         psets = psets.cache()
@@ -2945,18 +2893,9 @@ def bloom_index_probe(
     text: str = "text",
     id_col: str = "doc_id",
     cache_registry: list | None = None,
-    segments: list[int] | None = None,
 ) -> DataFrame:
     """Membership pre-test for an arriving batch: (probe_id,
     content_hash) for every batch doc the filter CANNOT rule out.
-
-    ``segments`` (batch-only): precomputed routing — a SUPERSET of the
-    batch's ``pmod(content_hash, n_segments)`` values — used instead of
-    the probe's own eager segment collect (superset-safe: the bits join
-    is on (segment, word_idx); extra segments add scan bytes, never
-    rows). An EMPTY list asserts the batch provably produces no keys
-    and short-circuits to an empty result, exactly like the collected
-    path.
     Guarantees: no false negatives (every true exact-dup survives);
     false positives bounded by the build-time bits/key. The batch
     hashes ONLY itself; its distinct segments — bounded by the index's
@@ -2968,11 +2907,7 @@ def bloom_index_probe(
     of its needed words has all needed bits set."""
     meta = _index_meta(spark, index_path)
     root = index_dataset_root(index_path)  # one snapshot per probe
-    base = (
-        batch
-        if (batch.isStreaming or segments is not None)
-        else with_min_parallelism(batch)
-    )
+    base = batch if batch.isStreaming else with_min_parallelism(batch)
     # hash the CALLER's text column, exactly like hash_index_probe: the
     # composed bloom->hash exact gate must hash the same column in both
     # stages, or the pre-test can rule out docs the confirm join would
@@ -3002,11 +2937,7 @@ def bloom_index_probe(
     bits = read_static_schema(spark, f"{root}/bits")
     if not batch.isStreaming:
         # need is batch-bounded: it broadcasts into the hits join below
-        segs = (
-            routing_keys(need, "segment")
-            if segments is None
-            else sorted({int(s) for s in segments})
-        )
+        segs = routing_keys(need, "segment")
         if not segs:
             return need.select("probe_id", "content_hash").limit(0)
         bits = bits.filter(_in_literals("segment", segs))
@@ -3065,8 +2996,6 @@ def bloom_gated_exact_probe(
     text: str = "text",
     id_col: str = "doc_id",
     cache_registry: list | None = None,
-    segments: list[int] | None = None,
-    buckets: list[int] | None = None,
 ) -> DataFrame:
     """The composed exact gate a production ingestion loop runs: Bloom
     pre-test first (ZERO false negatives, so nothing true is lost),
@@ -3081,17 +3010,10 @@ def bloom_gated_exact_probe(
     batch path caches its probe-need frame — a per-micro-batch loop
     (the documented foreachBatch pattern) must pass a registry and
     unpersist after each batch, or cached frames accrete for the life
-    of the process (the keyset_index_probe lifecycle contract).
-
-    ``segments`` / ``buckets``: precomputed routing supersets forwarded
-    to the Bloom pre-test and the hash confirm respectively (see those
-    probes' contracts). With both supplied the composed gate runs ZERO
-    eager routing jobs — the fused ingestion router computes them from
-    the raw trigger batch in one job, and raw-batch buckets strictly
-    cover the gated slice's."""
+    of the process (the keyset_index_probe lifecycle contract)."""
     maybe = bloom_index_probe(
         spark, bloom_path, batch, text=text, id_col=id_col,
-        cache_registry=cache_registry, segments=segments,
+        cache_registry=cache_registry,
     ).select(F.col("probe_id").alias(id_col))
     gated = batch.join(F.broadcast(maybe), id_col, "left_semi")
     if not batch.isStreaming:
@@ -3103,9 +3025,7 @@ def bloom_gated_exact_probe(
         gated = gated.cache()
         if cache_registry is not None:
             cache_registry.append(gated)
-    return hash_index_probe(
-        spark, hash_index_path, gated, text=text, id_col=id_col, buckets=buckets
-    )
+    return hash_index_probe(spark, hash_index_path, gated, text=text, id_col=id_col)
 
 
 # --------------------------------------------------------------------------
@@ -3215,10 +3135,9 @@ def keyset_index_probe(
     n_segments)`` values for the bits scan and the keys-table confirm
     scan respectively. A key lives in exactly ONE segment, so the
     Bloom-positive keys' confirm segments are always a subset of the
-    probe keys' — the fused ingestion router passes the SAME superset
-    for both, trading a few extra keys-table directories for the
-    adaptive maybe-collect (the confirm join is still exact on
-    (key, segment)). An EMPTY list asserts the probe provably has no
+    probe keys' — a caller may pass the SAME superset for both,
+    trading a few extra keys-table directories for the adaptive
+    maybe-collect (the confirm join is still exact on (key, segment)). An EMPTY list asserts the probe provably has no
     keys and short-circuits to an empty result."""
     meta = _index_meta(spark, index_path)
     root = index_dataset_root(index_path)  # one snapshot per probe

@@ -148,9 +148,13 @@ def compile_topology(
     """Compile a validated topology into a DataFrame per entity.
 
     ``inputs`` maps each *source* entity name (no in-edges) to its
-    DataFrame. Returns ``{entity_name: DataFrame}`` for every entity, so
-    callers can run/inspect any node — the property ``run-experiment``
-    relies on (core.clj:224-234, outputs read per entity at 240-244).
+    DataFrame. An entity WITH in-edges may be bound too: its frame is
+    taken as given (no merge, join or xform), which lets a caller build
+    some entities itself — ``plans.ingestion.compile_ingestion``
+    constructs its flag entities concurrently. Returns
+    ``{entity_name: DataFrame}`` for every entity, so callers can
+    run/inspect any node — the property ``run-experiment`` relies on
+    (core.clj:224-234, outputs read per entity at 240-244).
     """
     validate_topology(topology)
     entities = topology["entities"]
@@ -160,6 +164,9 @@ def compile_topology(
     for name in topo_order(topology):
         ent = entities[name]
         ups = parents[name]
+        if ups and name in inputs:
+            compiled[name] = inputs[name]
+            continue
         if not ups:
             if name not in inputs:
                 raise TopologyError(

@@ -10,16 +10,14 @@ must pass before it joins the training corpus:
     topic/raw-docs
         │
     stream/exact-gate        (optional) persisted hash-index probe —
-        │                    drop byte-identical re-crawls before any
-        │                    near-dup work. SEMANTICALLY a no-op given
-        │                    the near-dup gate (an exact dup has
-        │                    Jaccard 1.0 >= any sane threshold), which
-        │                    is exactly why it exists: it removes the
-        │                    certain drops for the cost of one md5 +
-        │                    bucket-routed scan, so the expensive
-        │                    signature/verify path never sees them —
-        │                    and the composed oracle is unchanged by
-        │                    construction (operators/dedup.py)
+        │                    drop byte-identical re-crawls. SEMANTICALLY
+        │                    a no-op given the near-dup gate (an exact
+        │                    dup has Jaccard 1.0 >= any sane threshold),
+        │                    so the composed oracle is unchanged by
+        │                    construction. Every gate's flags probe the
+        │                    whole raw batch, so its drops save no later
+        │                    gate any work: it only adds a probe per
+        │                    batch (operators/dedup.py)
     stream/neardup-gate      MinHash band-index probe (persisted index,
         │                    static (band,bucket) partition routing) —
         │                    drop docs with a near-duplicate already in
@@ -31,22 +29,41 @@ must pass before it joins the training corpus:
     stream/containment-gate  asymmetric shingle containment — drop
         │                    docs already covered by (or swallowing) a
         │                    corpus doc (operators/dedup.py)
+    stream/contamination-gate (optional) keyset-index probe of the
+        │                    doc's 5-grams — drop train/test leaks of a
+        │                    protected benchmark (operators/dedup.py)
     stream/semantic-gate     (optional) persisted IVF-index probe over
         │                    the docs' EMBEDDINGS (SemDeDup as a serve
         │                    path) — drop docs whose vector has a
         │                    cosine-near corpus vector in its probed
-        │                    cells; the one gate that sees
-        │                    paraphrase-class duplicates with zero
-        │                    shingle overlap (operators/similarity.py)
+        │                    cells (operators/similarity.py)
     topic/curated-docs
 
-Because every gate is a ``DataFrame -> DataFrame`` xform, the SAME
-topology dict compiles in batch mode (offline simulation / backfill /
-the registered oracle-checked query) and runs per micro-batch inside
-``foreachBatch`` via :func:`run_ingestion_stream` — the streaming serve
-loop that keeps the index probe's partition routing (a static join side
-cannot take a stream-derived literal filter, so the probe MUST see a
-batch frame; see ``minhash_index_probe_stream``).
+Each gate is two entities. Its FLAGS (``stream/<gate>-flags``; the
+DSIR gate's is ``stream/dsir-keep``) is a stream whose only parent is
+``topic/raw-docs``: the ids the gate drops (or, for DSIR, the ids it
+keeps with their scores), derived from the raw batch alone. The gate
+itself is a ``join`` of the previous gate's survivors with its flags —
+``left_anti`` on the id column, ``inner`` for DSIR. Deriving flags from
+the raw batch instead of the previous gate's survivors gives the same
+survivors at every gate: each verdict depends only on the document
+versus its index or corpus, never on the other documents in the batch,
+so the raw flags add only rows an earlier gate already dropped, and the
+joins erase them. What the form buys is independence: the six flag
+subtrees hang off the shallow raw batch, so one sink force runs them as
+concurrent stages instead of a long sequential chain, and no plan grows
+deep enough to need a lineage cut. The cost is that a gate probes rows
+an earlier gate would have dropped — the batch's duplicate fraction
+times that gate's per-row probe cost, which is small for mostly-new
+steady-state batches.
+
+Because every flag and gate is an entity, the SAME topology dict
+compiles in batch mode (offline simulation / backfill / the registered
+oracle-checked queries) and runs per micro-batch inside ``foreachBatch``
+via :func:`run_ingestion_stream` — the streaming serve loop that keeps
+the index probes' partition routing (a static join side cannot take a
+stream-derived literal filter, so a probe MUST see a batch frame; see
+``minhash_index_probe_stream``).
 
 Scale design (the 100 TB contract):
 - per-batch cost is O(batch + probed partitions), independent of corpus
@@ -64,32 +81,21 @@ Scale design (the 100 TB contract):
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kafka_streams_the_clojure_way_spark.artifacts import release_scratch, scratch_dir
 from kafka_streams_the_clojure_way_spark.operators import dedup as D
 from kafka_streams_the_clojure_way_spark.operators import similarity as S
 from kafka_streams_the_clojure_way_spark.operators import text as T
-from kafka_streams_the_clojure_way_spark.plans.spec import Topology
+from kafka_streams_the_clojure_way_spark.plans.compiler import compile_topology
+from kafka_streams_the_clojure_way_spark.plans.spec import Topology, parents_of
+from kafka_streams_the_clojure_way_spark.sources.files import with_min_parallelism
 from kafka_streams_the_clojure_way_spark.streaming.runner import (
     as_batch_sink,
     run_foreach_batch,
 )
-
-
-class _SpoolDir:
-    """Registry shim for a per-trigger spool directory: quacks like a
-    cached DataFrame for the drain loop (``unpersist()`` deletes the
-    dir), so gate spools share the cache registry's per-batch
-    lifecycle."""
-
-    def __init__(self, path: str):
-        self.path = path
-
-    def unpersist(self, *_a, **_k):
-        release_scratch(self.path)
-        return self
 
 
 #: default gate thresholds — module constants so the registered query
@@ -130,7 +136,7 @@ def ingestion_topology(
     semantic_n_probe: int = S.IVF_NPROBE,
     keyset_index_path: str | None = None,
     cache_registry: list | None = None,
-    raw_verdicts: bool = False,
+    raw_verdicts: bool = True,
 ) -> Topology:
     """Build the curation-loop topology dict. ``index_path`` is a
     persisted MinHash band index (``build_minhash_index``); ``corpus``
@@ -145,313 +151,153 @@ def ingestion_topology(
     t_num/t_den arguments are ignored in favor of the index meta).
     ``hash_index_path`` (a ``build_hash_index`` artifact) prepends the
     exact gate: byte-identical re-crawls are dropped by one md5 +
-    bucket-routed hash join before the near-dup gate ever signs them.
-    Curated output is identical with or without it (exact dup =>
-    Jaccard 1.0 => the near-dup gate drops the same docs) — the gate
-    buys per-batch cost, not semantics, which also means enabling it
-    never changes the composed pipeline's oracle.
-    ``bloom_index_path`` (a ``build_bloom_index`` artifact; requires
-    ``hash_index_path``) puts the filter's negative-probe fast path in
-    FRONT of the exact gate's confirm join: only maybe-duplicates touch
-    the hash index, so a steady-state mostly-new batch resolves the
-    exact gate from ~10 bits/doc of probed filter segments alone. Zero
-    false negatives structurally; false positives die in the confirm —
-    a third layer of the same cost-not-semantics contract.
+    bucket-routed hash join. Curated output is identical with or
+    without it (exact dup => Jaccard 1.0 => the near-dup gate drops the
+    same docs), so enabling it never changes the composed pipeline's
+    oracle. It removes no downstream work either: every gate's flags
+    probe the whole raw batch, so the exact gate only adds its probe to
+    each batch. ``bloom_index_path`` (a ``build_bloom_index`` artifact;
+    requires ``hash_index_path``) puts the filter's negative-probe fast
+    path in FRONT of the exact gate's confirm join: only
+    maybe-duplicates touch the hash index. Zero false negatives
+    structurally; false positives die in the confirm, so the curated
+    set is again unchanged. ``keyset_index_path`` (a
+    ``build_keyset_index`` artifact over a benchmark's 5-grams) adds
+    the contamination gate.
 
     ``ivf_index_path`` + ``embeddings`` append the SEMANTIC gate (the
-    SemDeDup idea as a serve path): survivors of the lexical gates look
-    up their embedding in ``embeddings`` (an id->vector side table —
-    the stand-in for "embed the batch"; docs with no embedding pass
-    through un-probed) and probe the persisted IVF index
-    (``build_ivf_index`` over the corpus vectors); any probe with
-    cosine >= ``semantic_threshold`` to a corpus vector within its
-    ``semantic_n_probe`` best cells is dropped. This catches the
-    paraphrase/translation/re-render duplicates that share no shingles
-    — the one duplicate class the lexical gates cannot see.
+    SemDeDup idea as a serve path): batch docs look up their embedding
+    in ``embeddings`` (an id->vector side table — the stand-in for
+    "embed the batch"; docs with no embedding are never flagged) and
+    probe the persisted IVF index (``build_ivf_index`` over the corpus
+    vectors); any probe with cosine >= ``semantic_threshold`` to a
+    corpus vector within its ``semantic_n_probe`` best cells is
+    dropped. This catches the paraphrase/translation/re-render
+    duplicates that share no shingles — the one duplicate class the
+    lexical gates cannot see.
 
-    Gate outputs: the near-dup and containment gates pass survivor rows
-    through unchanged (anti-join on flagged probe ids); the DSIR gate
-    adds ``n_tokens`` and ``dsir_logweight_r`` columns to survivors —
-    the curated sink therefore carries the batch schema plus those two.
+    Gate outputs: the anti-join gates pass survivor rows through
+    unchanged; the DSIR gate adds ``n_tokens`` and ``dsir_logweight_r``
+    columns to survivors — the curated sink therefore carries the batch
+    schema plus those two.
 
-    ``cache_registry``: forwarded to the index probe (its batch path
-    caches probe signatures) and holds each gate's cached output;
+    ``cache_registry``: forwarded to the index probes (their batch
+    paths cache probe-side frames) and, through
+    :func:`compile_ingestion`, holds each gate's cached output;
     long-running callers drain and unpersist it per batch —
     :func:`run_ingestion_stream` does this automatically.
 
-    Every gate's output is CACHED (survivor-batch-sized): each gate
-    both derives its verdict from its input and joins the verdict back
-    to it, so without the cache the upstream chain re-evaluates once
-    per branch — the index probe and its verify join would run ~4x by
-    the containment gate. With it, each gate runs exactly once.
-
-    ``raw_verdicts`` (r11, the serve-latency mode — guide §2.6
-    "overlap independent work"): compute every gate's FLAG set from the
-    RAW trigger batch instead of the previous gate's survivors. Output
-    is identical BY CONSTRUCTION: every gate's verdict depends only on
-    the individual document versus its index/corpus (never on other
-    batch docs' fates), so flags-from-raw is a superset of
-    flags-from-survivors whose extra members are exactly rows an
-    earlier gate already dropped — the anti-join cascade makes those
-    no-ops (pinned per-gate in tests/test_raw_verdicts.py). What it
-    buys: the six flag subtrees become INDEPENDENT plans hanging off
-    the shallow raw batch, so (a) one sink force runs them as
-    concurrent stages instead of a ~20-stage sequential chain — the
-    measured 250-row-trigger floor was stage latency, not bytes — and
-    (b) the contamination gate needs no lineage-truncation spool (its
-    grams explode off the raw batch, depth 1). Cost: a gate probes
-    rows an earlier gate would have dropped — bounded by the batch's
-    duplicate fraction × that gate's per-row probe cost, the right
-    trade for latency-bound triggers (steady-state batches are
-    mostly-new). Batch-mode compiles of the chained form (the
-    registered queries) are unaffected unless opted in.
-    """
-
-    #: per-batch precomputed routing (filled by compile_ingestion /
-    #: compute_batch_routing, read by the gate closures at compile time,
-    #: cleared after compile — the literals are baked into the plan).
-    #: Empty box => every probe falls back to its own routing collect.
-    routing_box: dict = {}
-
-    def _pin(df: DataFrame) -> DataFrame:
-        if df.isStreaming:  # streaming frames can't cache; foreachBatch
-            return df       # hands the gates batch frames anyway
-        df = df.cache()
-        if cache_registry is not None:
-            cache_registry.append(df)
-        return df
-
-    def _flag_src(batch: DataFrame) -> DataFrame:
-        # raw-verdict mode: derive this gate's FLAGS from the raw trigger
-        # batch (set by compile_ingestion for the compile's duration);
-        # the anti-join below still runs on the chained input, so the
-        # output is identical (see the raw_verdicts contract above).
-        if raw_verdicts:
-            return routing_box.get("raw_batch", batch)
-        return batch
-
-    def _prebuilt(name: str):
-        # raw-verdict compile pre-constructs every gate's flag frame in
-        # a thread pool (plan CONSTRUCTION is py4j/Catalyst-bound and
-        # each flag plan depends only on the raw batch — overlapping the
-        # six builds cuts the per-trigger construction wall).
-        return routing_box.get("flags", {}).get(name)
-
-    def _exact_flags(src: DataFrame) -> DataFrame:
-        if bloom_index_path is not None:
-            pairs = D.bloom_gated_exact_probe(
-                spark, bloom_index_path, hash_index_path, src,
-                text=text, id_col=id_col, cache_registry=cache_registry,
-                segments=routing_box.get("bloom_segments"),
-                buckets=routing_box.get("hash_buckets"),
-            )
-        else:
-            pairs = D.hash_index_probe(
-                spark, hash_index_path, src, text=text, id_col=id_col,
-                buckets=routing_box.get("hash_buckets"),
-            )
-        return pairs.select(F.col("probe_id").alias(id_col)).distinct()
-
-    def exact_gate(batch: DataFrame) -> DataFrame:
-        flagged = _prebuilt("exact")
-        if flagged is None:
-            flagged = _exact_flags(_flag_src(batch))
-        return _pin(batch.join(flagged, id_col, "left_anti"))
-
-    def _neardup_flags(src: DataFrame) -> DataFrame:
-        pairs = D.minhash_index_probe(
-            spark,
-            index_path,
-            src,
-            text=text,
-            id_col=id_col,
-            threshold=jaccard_threshold,
-            cache_registry=cache_registry,
-            routing=routing_box.get("minhash_routing"),
-            sigs=routing_box.get("minhash_sigs"),
+    ``raw_verdicts`` has one legal value, ``True`` (every gate's flags
+    derive from the raw batch — the module docstring's form); ``False``
+    named the removed chained form and raises."""
+    if not raw_verdicts:
+        raise ValueError(
+            "raw_verdicts=False asked for the chained compile (flags derived "
+            "from the previous gate's survivors), which is removed: every "
+            "gate's flags derive from the raw batch"
         )
-        return pairs.select(F.col("probe_id").alias(id_col)).distinct()
-
-    def neardup_gate(batch: DataFrame) -> DataFrame:
-        flagged = _prebuilt("neardup")
-        if flagged is None:
-            flagged = _neardup_flags(_flag_src(batch))
-        # anti-join on a probe-sized key set: AQE broadcasts it.
-        return _pin(batch.join(flagged, id_col, "left_anti"))
-
-    def _dsir_keep(src: DataFrame) -> DataFrame:
-        scored = T.dsir_score_stateless(
-            src, ratios, text=text, id_col=id_col, quantize=True
-        )
-        return scored.filter(F.col("dsir_logweight_r") >= dsir_cutoff)
-
-    def dsir_gate(batch: DataFrame) -> DataFrame:
-        keep = _prebuilt("dsir")
-        if keep is None:
-            keep = _dsir_keep(_flag_src(batch))
-        return _pin(batch.join(keep, id_col))
-
-    def _containment_flags(src: DataFrame) -> DataFrame:
-        if containment_index_path is not None:
-            pairs = D.containment_index_probe(
-                spark,
-                containment_index_path,
-                src,
-                text=text,
-                id_col=id_col,
-                cache_registry=cache_registry,
-                # fused compile pre-guards the raw batch's parallelism
-                # once; skip the probe's own .rdd analysis of the
-                # gate-deep lineage.
-                ensured_parallelism=bool(routing_box),
-            )
-        else:
-            pairs = D.containment_pairs_between(
-                src, corpus, text=text, id_col=id_col, t_num=t_num, t_den=t_den
-            )
-        return pairs.select(F.col("probe_id").alias(id_col)).distinct()
-
-    def containment_gate(batch: DataFrame) -> DataFrame:
-        flagged = _prebuilt("containment")
-        if flagged is None:
-            flagged = _containment_flags(_flag_src(batch))
-        return _pin(batch.join(flagged, id_col, "left_anti"))
-
-    def contamination_gate(batch: DataFrame) -> DataFrame:
-        # a doc sharing ANY protected 5-gram with the benchmark is a
-        # train/test leak — absolute drop, no threshold. Non-protected
-        # grams (the overwhelming majority) resolve from the keyset
-        # index's bloom segments; only bloom-positives confirm against
-        # the exact keys table by raw string.
-        from kafka_streams_the_clojure_way_spark.operators import text as TX
-
-        flagged = _prebuilt("contamination")
-        if flagged is not None:
-            return _pin(batch.join(flagged, id_col, "left_anti"))
-        src = _flag_src(batch)
-        if raw_verdicts and src is not batch:
-            # flags hang off the raw batch (depth-1 lineage): no plan
-            # explosion, so no spool/checkpoint truncation needed.
-            return _pin(
-                batch.join(_contamination_flags(src), id_col, "left_anti")
-            )
-        if not batch.isStreaming:
-            # five gates of verdict-derive-and-join-back lineage feed this
-            # point, and the keyset probe references its input several
-            # times (need/totals/hits + the confirm and flag joins) — on
-            # the RAW lineage that duplication makes the ANALYZED plan
-            # tree exponentially large (observed: plan stringification
-            # alone OOMs the driver). Truncate it.
-            if routing_box:
-                # fused path: SPOOL the survivors to a tiny parquet and
-                # read back — the same truncation, but the Catalyst
-                # planning of the deep chain happens once inside the
-                # write job instead of at plan CONSTRUCTION
-                # (localCheckpoint builds the RDD eagerly even with
-                # eager=False — measured 3.7 s of the per-trigger
-                # compile). The spool is batch-survivor-sized; its dir
-                # rides the cache registry so the streaming loop deletes
-                # it per trigger (the exit sweep backstops registry-less
-                # callers).
-                spool = scratch_dir("ingest_spool_")
-                # natural partitioning — no coalesce(1): collapsing the
-                # whole gate chain's final stage to one task serializes
-                # the upstream probes (measured 14s -> 34s on a
-                # 2000-row trigger); the spool dir dies with the
-                # trigger, so its file count is irrelevant.
-                batch.write.parquet(f"{spool}/survivors")
-                batch = spark.read.parquet(f"{spool}/survivors")
-                if cache_registry is not None:
-                    cache_registry.append(_SpoolDir(spool))
-            else:
-                # unfused (per-probe collect) path: lazy RDD truncation,
-                # nothing materializes before the sink runs.
-                batch = batch.localCheckpoint(eager=False)
-        return _pin(batch.join(_contamination_flags(batch), id_col, "left_anti"))
-
-    def _contamination_flags(src: DataFrame) -> DataFrame:
-        from kafka_streams_the_clojure_way_spark.operators import text as TX
-
-        grams = src.select(
-            F.col(id_col),
-            F.explode_outer(TX.shingles_col(F.col(text))).alias("key"),
-        ).filter(F.col("key").isNotNull())
-        members = D.keyset_index_probe(
-            spark, keyset_index_path, grams, cache_registry=cache_registry,
-            segments=routing_box.get("keyset_segments"),
-            # one segment per key, so the raw batch's gram segments cover
-            # the Bloom-positives' — the same superset routes the confirm
-            # scan and kills the probe's second adaptive collect.
-            confirm_segments=routing_box.get("keyset_segments"),
-        )
-        return grams.join(members, "key", "left_semi").select(id_col).distinct()
-
-    def _semantic_flags(src: DataFrame) -> DataFrame:
-        # batch ids -> vectors via the side table (inner join: a doc
-        # with no embedding has no semantic signal and passes through),
-        # then one partition-pruned probe of the persisted IVF index.
-        probes = src.select(F.col(id_col)).join(
-            embeddings.select(
-                F.col("vec_id").alias(id_col), F.col("embedding")
-            ),
-            id_col,
-        )
-        pairs = S.ivf_index_neardup_pairs(
-            spark,
-            ivf_index_path,
-            probes,
-            threshold=semantic_threshold,
-            id_col=id_col,
-            vec_col="embedding",
-            n_probe=semantic_n_probe,
-        )
-        return pairs.select(F.col("probe_id").alias(id_col)).distinct()
-
-    def semantic_gate(batch: DataFrame) -> DataFrame:
-        flagged = _prebuilt("semantic")
-        if flagged is None:
-            flagged = _semantic_flags(_flag_src(batch))
-        return _pin(batch.join(flagged, id_col, "left_anti"))
-
-    entities = {
-        "topic/raw-docs": {"type": "topic", "name": "raw-docs"},
-        "stream/neardup-gate": {"type": "stream", "xform": neardup_gate},
-        "stream/dsir-gate": {"type": "stream", "xform": dsir_gate},
-        "stream/containment-gate": {"type": "stream", "xform": containment_gate},
-        "topic/curated-docs": {"type": "topic", "name": "curated-docs"},
-    }
-    head = "topic/raw-docs"
-    workflow = []
     if bloom_index_path is not None and hash_index_path is None:
         raise ValueError(
             "bloom_index_path requires hash_index_path — the filter is a "
             "pre-test for the exact gate's confirm join, not a gate itself "
             "(its false positives must die somewhere)"
         )
+    if ivf_index_path is not None and embeddings is None:
+        raise ValueError("ivf_index_path requires an embeddings side table")
+
+    def flagged(pairs: DataFrame) -> DataFrame:
+        return pairs.select(F.col("probe_id").alias(id_col)).distinct()
+
+    def exact_flags(raw: DataFrame) -> DataFrame:
+        if bloom_index_path is not None:
+            return flagged(D.bloom_gated_exact_probe(
+                spark, bloom_index_path, hash_index_path, raw,
+                text=text, id_col=id_col, cache_registry=cache_registry,
+            ))
+        return flagged(
+            D.hash_index_probe(spark, hash_index_path, raw, text=text, id_col=id_col)
+        )
+
+    def neardup_flags(raw: DataFrame) -> DataFrame:
+        return flagged(D.minhash_index_probe(
+            spark, index_path, raw, text=text, id_col=id_col,
+            threshold=jaccard_threshold, cache_registry=cache_registry,
+        ))
+
+    def dsir_keep(raw: DataFrame) -> DataFrame:
+        scored = T.dsir_score_stateless(
+            raw, ratios, text=text, id_col=id_col, quantize=True
+        )
+        return scored.filter(F.col("dsir_logweight_r") >= dsir_cutoff)
+
+    def containment_flags(raw: DataFrame) -> DataFrame:
+        if containment_index_path is not None:
+            return flagged(D.containment_index_probe(
+                spark, containment_index_path, raw, text=text, id_col=id_col,
+                cache_registry=cache_registry,
+            ))
+        return flagged(D.containment_pairs_between(
+            raw, corpus, text=text, id_col=id_col, t_num=t_num, t_den=t_den
+        ))
+
+    def contamination_flags(raw: DataFrame) -> DataFrame:
+        # a doc sharing ANY protected 5-gram with the benchmark is a
+        # train/test leak — absolute drop, no threshold. Non-protected
+        # grams (the overwhelming majority) resolve from the keyset
+        # index's bloom segments; only bloom-positives confirm against
+        # the exact keys table by raw string.
+        grams = raw.select(
+            F.col(id_col),
+            F.explode_outer(T.shingles_col(F.col(text))).alias("key"),
+        ).filter(F.col("key").isNotNull())
+        members = D.keyset_index_probe(
+            spark, keyset_index_path, grams, cache_registry=cache_registry
+        )
+        return grams.join(members, "key", "left_semi").select(id_col).distinct()
+
+    def semantic_flags(raw: DataFrame) -> DataFrame:
+        # batch ids -> vectors via the side table (inner join: a doc
+        # with no embedding has no semantic signal and passes through),
+        # then one partition-pruned probe of the persisted IVF index.
+        probes = raw.select(F.col(id_col)).join(
+            embeddings.select(F.col("vec_id").alias(id_col), F.col("embedding")),
+            id_col,
+        )
+        return flagged(S.ivf_index_neardup_pairs(
+            spark, ivf_index_path, probes, threshold=semantic_threshold,
+            id_col=id_col, vec_col="embedding", n_probe=semantic_n_probe,
+        ))
+
+    # (gate, flags entity, flags derivation, join), topology order
+    stages = []
     if hash_index_path is not None:
-        entities["stream/exact-gate"] = {"type": "stream", "xform": exact_gate}
-        workflow.append(["topic/raw-docs", "stream/exact-gate"])
-        head = "stream/exact-gate"
-    workflow += [
-        [head, "stream/neardup-gate"],
-        ["stream/neardup-gate", "stream/dsir-gate"],
-        ["stream/dsir-gate", "stream/containment-gate"],
+        stages.append(("exact", "stream/exact-flags", exact_flags, "left_anti"))
+    stages += [
+        ("neardup", "stream/neardup-flags", neardup_flags, "left_anti"),
+        ("dsir", "stream/dsir-keep", dsir_keep, "inner"),
+        ("containment", "stream/containment-flags", containment_flags, "left_anti"),
     ]
-    tail = "stream/containment-gate"
     if keyset_index_path is not None:
-        entities["stream/contamination-gate"] = {
-            "type": "stream",
-            "xform": contamination_gate,
-        }
-        workflow.append([tail, "stream/contamination-gate"])
-        tail = "stream/contamination-gate"
+        stages.append(
+            ("contamination", "stream/contamination-flags", contamination_flags,
+             "left_anti")
+        )
     if ivf_index_path is not None:
-        if embeddings is None:
-            raise ValueError("ivf_index_path requires an embeddings side table")
-        entities["stream/semantic-gate"] = {"type": "stream", "xform": semantic_gate}
-        workflow.append([tail, "stream/semantic-gate"])
-        tail = "stream/semantic-gate"
-    workflow.append([tail, "topic/curated-docs"])
+        stages.append(("semantic", "stream/semantic-flags", semantic_flags, "left_anti"))
+    entities = {
+        "topic/raw-docs": {"type": "topic", "name": "raw-docs"},
+        "topic/curated-docs": {"type": "topic", "name": "curated-docs"},
+    }
+    workflow = []
+    prev = "topic/raw-docs"
+    for gate, flags, derive, how in stages:
+        name = f"stream/{gate}-gate"
+        entities[flags] = {"type": "stream", "xform": derive}
+        entities[name] = {"type": "join", "on": [id_col], "how": how}
+        # parent order decides the join sides: survivors left, flags right
+        workflow += [["topic/raw-docs", flags], [prev, name], [flags, name]]
+        prev = name
+    workflow.append([prev, "topic/curated-docs"])
     # gate metadata (extra keys are ignored by validate_topology/compile):
     # lets run_ingestion_stream check upsert pairings against the gates
     # this topology actually has.
@@ -461,40 +307,11 @@ def ingestion_topology(
         "contamination": keyset_index_path is not None,
         "semantic": ivf_index_path is not None,
     }
-    # routing spec + box: lets compile_ingestion/compute_batch_routing
-    # derive EVERY gate's partition-routing keys from the raw batch in
-    # ONE driver job and hand them to the probes (extra keys are
-    # ignored by validate_topology/compile, like "gates").
-    routing = {
-        "id_col": id_col,
-        "text": text,
-        "index_path": index_path,
-        "hash_index_path": hash_index_path,
-        "bloom_index_path": bloom_index_path,
-        "keyset_index_path": keyset_index_path,
-    }
-    # raw-verdict flag builders, topology order (only the gates present):
-    # compile_ingestion constructs these concurrently off the raw batch.
-    flag_fns: dict = {}
-    if raw_verdicts:
-        if hash_index_path is not None:
-            flag_fns["exact"] = _exact_flags
-        flag_fns["neardup"] = _neardup_flags
-        flag_fns["dsir"] = _dsir_keep
-        flag_fns["containment"] = _containment_flags
-        if keyset_index_path is not None:
-            flag_fns["contamination"] = _contamination_flags
-        if ivf_index_path is not None:
-            flag_fns["semantic"] = _semantic_flags
     return {
         "entities": entities,
         "workflow": workflow,
         "gates": gates,
-        "routing": routing,
-        "routing_box": routing_box,
         "cache_registry": cache_registry,
-        "raw_verdicts": raw_verdicts,
-        "flag_fns": flag_fns,
     }
 
 
@@ -527,11 +344,11 @@ def multimodal_ingestion_topology(
             │                 content near-duplicates the corpus
         topic/curated-assets
 
-    Mirrors :func:`ingestion_topology`'s contract: every gate is a
-    ``DataFrame -> DataFrame`` xform, so the SAME dict compiles in
-    batch mode (the registered oracle-checked query) and serves
-    streaming micro-batches through :func:`run_ingestion_stream` with
-    identical output (foreachBatch hands the gates batch frames, so the
+    Each gate is a ``DataFrame -> DataFrame`` xform, and as with
+    :func:`ingestion_topology` the SAME dict compiles in batch mode
+    (the registered oracle-checked query) and serves streaming
+    micro-batches through :func:`run_ingestion_stream` with identical
+    output (foreachBatch hands the gates batch frames, so the
     probes keep their literal partition routing). Per-batch cost is
     O(batch + probed partitions), independent of corpus size; the
     curated sink carries (id, asset, n_pix, pix_sum) — content-pinned
@@ -542,19 +359,15 @@ def multimodal_ingestion_topology(
     (id, frame_idx, phash)}`` frames covering AT LEAST the batch's ids
     (the shared materialized signature tables are exactly this shape)
     — forwarded to the index probes so the near-dup gate never
-    re-decodes what was already signed. Superset frames are safe:
-    flags for non-batch ids are no-ops in the anti-join."""
+    re-decodes what was already signed, and routed in ONE job
+    (:func:`compute_asset_routing`) instead of one eager collect per
+    probe. Superset frames are safe: flags for non-batch ids are no-ops
+    in the anti-join."""
     from kafka_streams_the_clojure_way_spark.operators import audiofp as AFP
     from kafka_streams_the_clojure_way_spark.operators import imagehash as IH
     from kafka_streams_the_clojure_way_spark.operators.multimodal import (
         asset_decode_gate,
     )
-
-    #: per-batch precomputed probe routing (filled by compile_ingestion /
-    #: compute_asset_routing, read by the neardup gate at compile time,
-    #: cleared after compile). Empty box => each probe falls back to its
-    #: own routing collect.
-    routing_box: dict = {}
 
     def _pin(df: DataFrame) -> DataFrame:
         if df.isStreaming:
@@ -590,12 +403,21 @@ def multimodal_ingestion_topology(
 
     def neardup_gate(batch: DataFrame) -> DataFrame:
         sigs = probe_sigs or {}
+        routing = (
+            compute_asset_routing(spark, sigs, {
+                "image": image_index_path,
+                "audio": audio_index_path,
+                "video": video_index_path,
+            })
+            if sigs
+            else {}
+        )
         flags = (
             IH.phash_index_probe(
                 spark, image_index_path, batch.filter(mime == "image/png"),
                 cache_registry=cache_registry,
                 sigs=sigs.get("image"),
-                routing=routing_box.get("image"),
+                routing=routing.get("image"),
             )
             .select("probe_id")
             .unionByName(
@@ -603,7 +425,7 @@ def multimodal_ingestion_topology(
                     spark, audio_index_path, batch.filter(mime == "audio/wav"),
                     cache_registry=cache_registry,
                     fps=sigs.get("audio"),
-                    routing=routing_box.get("audio"),
+                    routing=routing.get("audio"),
                 ).select("probe_id")
             )
             .unionByName(
@@ -613,7 +435,7 @@ def multimodal_ingestion_topology(
                     batch.filter(mime == "video/x-yuv4mpeg"),
                     cache_registry=cache_registry,
                     sigs=sigs.get("video"),
-                    routing=routing_box.get("video"),
+                    routing=routing.get("video"),
                 ).select("probe_id")
             )
             .select(F.col("probe_id").alias(id_col))
@@ -632,153 +454,24 @@ def multimodal_ingestion_topology(
         ["stream/decode-gate", "stream/neardup-gate"],
         ["stream/neardup-gate", "topic/curated-assets"],
     ]
-    # asset-routing spec + box: when probe_sigs cover the batch,
-    # compile_ingestion derives ALL three probes' partition-routing
-    # keys in ONE driver job (compute_asset_routing) — without it each
-    # probe pays its own eager collect at compile (3 serial jobs,
-    # measured 2.6 s of a 3.5 s compile at sf0.1).
-    asset_routing = (
-        {
-            "probe_sigs": probe_sigs,
-            "image_index_path": image_index_path,
-            "audio_index_path": audio_index_path,
-            "video_index_path": video_index_path,
-        }
-        if probe_sigs
-        else None
-    )
     return {
         "entities": entities,
         "workflow": workflow,
         "cache_registry": cache_registry,
-        "asset_routing": asset_routing,
-        "routing_box": routing_box,
     }
 
 
-def compute_batch_routing(
-    spark: SparkSession,
-    topology: Topology,
-    batch: DataFrame,
-    *,
-    cache_registry: list | None = None,
+def compute_asset_routing(
+    spark: SparkSession, probe_sigs: dict, index_paths: dict
 ) -> dict:
-    """ONE driver job for EVERY gate's partition-routing keys — the
-    per-trigger compile floor killer (r9's one measured latency floor:
-    ~10.8 s/trigger of serial eager routing collects, one per probe,
-    `ingest_bench_r9.json`).
-
-    Derives, from the RAW batch, supersets of each probe's routing keys
-    (superset pruning is output-identical — every probe's join is exact
-    on its full key; see the probes' routing contracts):
-
-    - ``hash_buckets``: pmod(content_hash, n_buckets) per doc;
-    - ``bloom_segments``: pmod(content_hash, n_segments) per doc;
-    - ``minhash_routing``: packed band*n_buckets+bucket per (doc, band),
-      from signatures computed ONCE here and shared with the probe via
-      ``minhash_sigs`` (sign the batch once per trigger);
-    - ``keyset_segments``: pmod(hash60(gram), n_segments) per 5-gram —
-      one segment per key, so it also routes the confirm scan.
-
-    All four legs are row-local projections unioned into one tiny
-    distinct (tag, key) frame and collected in a single job. Returns
-    the dict `compile_ingestion` feeds the topology's routing box;
-    empty when the batch is streaming (foreachBatch hands gates batch
-    frames — the streaming serve loop routes per micro-batch)."""
-    spec = topology.get("routing")
-    if spec is None or batch.isStreaming:
-        return {}
-    from kafka_streams_the_clojure_way_spark.functions.portable import hash60, kernel
-    from kafka_streams_the_clojure_way_spark.operators import text as TX
-    from kafka_streams_the_clojure_way_spark.sources.files import (
-        with_min_parallelism,
-    )
-
-    id_col, text = spec["id_col"], spec["text"]
-    base = with_min_parallelism(batch)
-    h = kernel(D.content_hash, text)
-    legs: list[DataFrame] = []
-    expected: list[str] = []
-    out: dict = {}
-
-    def leg(df: DataFrame, tag: str) -> None:
-        legs.append(
-            df.select(F.col("key").cast("long").alias("key"))
-            # a NULL text column yields NULL hash/pmod keys; a None
-            # bucket can never match a real partition, so dropping it
-            # here is output-identical (the unfused per-probe path
-            # degrades the same way) — and int(None) would crash the
-            # fused collect below.
-            .filter(F.col("key").isNotNull())
-            .withColumn("tag", F.lit(tag))
-        )
-        expected.append(tag)
-
-    if spec.get("hash_index_path"):
-        meta = D._index_meta(spark, spec["hash_index_path"])
-        leg(
-            base.select(F.pmod(h, F.lit(meta["n_buckets"])).alias("key")),
-            "hash_buckets",
-        )
-    if spec.get("bloom_index_path"):
-        meta = D._index_meta(spark, spec["bloom_index_path"])
-        leg(
-            base.select(F.pmod(h, F.lit(meta["n_segments"])).alias("key")),
-            "bloom_segments",
-        )
-    if spec.get("index_path"):
-        meta = D._index_meta(spark, spec["index_path"])
-        n_hashes, bands = meta["n_hashes"], meta["bands"]
-        n_buckets, rows = meta["n_buckets"], meta["n_hashes"] // meta["bands"]
-        sigs = base.select(
-            F.col(id_col), kernel(D.shingle_hashes, text).alias("sh")
-        ).withColumn(
-            "sig", kernel(D.minhash_from_hashes, "sh", D.minhash_seeds(n_hashes))
-        )
-        sigs = D.cache_once(sigs, cache_registry)
-        out["minhash_sigs"] = sigs
-        leg(
-            sigs.select(
-                F.explode(kernel(D._minhash_band_structs, "sig", bands, rows)).alias("bk")
-            ).select(
-                (
-                    F.col("bk.band") * n_buckets
-                    + F.pmod(F.col("bk.bkey"), F.lit(n_buckets))
-                ).alias("key")
-            ),
-            "minhash_routing",
-        )
-    if spec.get("keyset_index_path"):
-        meta = D._index_meta(spark, spec["keyset_index_path"])
-        grams = base.select(
-            F.explode_outer(TX.shingles_col(F.col(text))).alias("g")
-        ).filter(F.col("g").isNotNull())
-        leg(
-            grams.select(
-                F.pmod(hash60(F.col("g")), F.lit(meta["n_segments"])).alias("key")
-            ),
-            "keyset_segments",
-        )
-    if not legs:
-        return out
-    union = legs[0]
-    for frame in legs[1:]:
-        union = union.unionByName(frame)
-    # the union is a pure projection of the batch (plus the sigs
-    # cache): batch-bounded (ids + grams), never corpus-bounded
-    keys = D.routing_keys(union, "key", "tag")  # the ONE routing job
-    out.update({tag: keys.get(tag, []) for tag in expected})
-    return out
-
-
-def compute_asset_routing(spark: SparkSession, topology: Topology) -> dict:
     """ONE driver job for all three modality probes' partition-routing
-    keys — the multimodal twin of :func:`compute_batch_routing` (each
-    probe otherwise pays its own eager routing collect at compile: 3
-    serial jobs, 2.6 s of the 3.5 s multimodal compile at sf0.1).
+    keys (each probe otherwise pays its own eager routing collect at
+    compile: 3 serial jobs, 2.6 s of the 3.5 s multimodal compile at
+    sf0.1).
 
-    Derives, from the topology's precomputed probe signature frames
-    (never from payloads — nothing is re-decoded):
+    Derives, from the precomputed probe signature frames ``probe_sigs``
+    (never from payloads — nothing is re-decoded), with each modality's
+    index meta read from ``index_paths``:
 
     - ``image``: distinct (band, bucket) of the image pHash bands;
     - ``audio``: distinct fingerprint values;
@@ -788,43 +481,22 @@ def compute_asset_routing(spark: SparkSession, topology: Topology) -> dict:
     ``band * n_buckets + bucket`` long and unpack on the driver.
     Supersets are output-identical — every probe's candidate join is
     exact on its full key; the routing only prunes directories."""
-    spec = topology.get("asset_routing")
-    if not spec:
-        return {}
     from kafka_streams_the_clojure_way_spark.operators import imagehash as IH
-    from kafka_streams_the_clojure_way_spark.operators.dedup import _index_meta
 
-    sigs = spec["probe_sigs"]
     legs: list[DataFrame] = []
     metas: dict[str, dict] = {}
-
-    def banded_leg(tag: str, frame: DataFrame, meta: dict) -> None:
-        nb = meta["n_buckets"]
-        legs.append(
-            frame.select(
-                IH._band_structs("phash", meta["n_bands"]).alias("bk")
-            )
-            .select(
-                (
-                    F.col("bk.band") * nb + F.pmod(F.col("bk.bkey"), F.lit(nb))
-                ).cast("long").alias("key")
-            )
-            .withColumn("tag", F.lit(tag))
-        )
-
-    if sigs.get("image") is not None:
-        metas["image"] = _index_meta(spark, spec["image_index_path"])
-        banded_leg("image", sigs["image"], metas["image"])
-    if sigs.get("audio") is not None:
-        metas["audio"] = _index_meta(spark, spec["audio_index_path"])
-        legs.append(
-            sigs["audio"]
-            .select(F.col("fp").cast("long").alias("key"))
-            .withColumn("tag", F.lit("audio"))
-        )
-    if sigs.get("video") is not None:
-        metas["video"] = _index_meta(spark, spec["video_index_path"])
-        banded_leg("video", sigs["video"], metas["video"])
+    for tag in ("image", "audio", "video"):
+        frame = probe_sigs.get(tag)
+        if frame is None:
+            continue
+        metas[tag] = meta = D._index_meta(spark, index_paths[tag])
+        if tag == "audio":
+            key = F.col("fp").cast("long")
+        else:
+            nb = meta["n_buckets"]
+            frame = frame.select(IH._band_structs("phash", meta["n_bands"]).alias("bk"))
+            key = (F.col("bk.band") * nb + F.pmod(F.col("bk.bkey"), F.lit(nb))).cast("long")
+        legs.append(frame.select(key.alias("key"), F.lit(tag).alias("tag")))
     if not legs:
         return {}
     union = legs[0]
@@ -834,13 +506,9 @@ def compute_asset_routing(spark: SparkSession, topology: Topology) -> dict:
     # probe broadcasts: batch-bounded
     keys = D.routing_keys(union, "key", "tag")  # the ONE routing job
     out: dict = {}
-    for tag in metas:
+    for tag, meta in metas.items():
         vals = keys.get(tag, [])
-        if tag == "audio":
-            out[tag] = vals
-        else:
-            nb = metas[tag]["n_buckets"]
-            out[tag] = [divmod(v, nb) for v in vals]
+        out[tag] = vals if tag == "audio" else [divmod(v, meta["n_buckets"]) for v in vals]
     return out
 
 
@@ -849,82 +517,52 @@ def compile_ingestion(
     topology: Topology,
     batch: DataFrame,
     *,
-    fuse_routing: bool = True,
     cache_registry: list | None = None,
 ) -> dict:
-    """Compile the curation topology against one batch frame and return
-    the full compiled entity dict. With ``fuse_routing`` (default) every
-    probe's partition-routing keys come from ONE
-    :func:`compute_batch_routing` job instead of one eager collect per
-    gate — same curated set by the superset-routing contract, compile
-    cost independent of gate count. The box is cleared after compile:
-    the literals are already baked into the returned plans.
-    ``cache_registry`` owns the router's shared signature cache;
-    defaults to the registry the topology was built with."""
-    from kafka_streams_the_clojure_way_spark.plans.compiler import compile_topology
+    """Compile a curation topology against one batch frame and return
+    the full compiled entity dict.
 
-    box = topology.get("routing_box")
-    if box is not None:
-        box.clear()
-    try:
-        if fuse_routing and box is not None and not batch.isStreaming:
-            # parallelism-guard the RAW batch exactly once (shallow
-            # lineage, cheap .rdd probe); the probes skip their own
-            # guards when handed precomputed routing, so the fused
-            # compile never re-analyzes gate-deep lineage for a
-            # partition count.
-            from kafka_streams_the_clojure_way_spark.sources.files import (
-                with_min_parallelism,
-            )
-
-            batch = with_min_parallelism(batch)
-            box.update(
-                compute_batch_routing(
-                    spark,
-                    topology,
-                    batch,
-                    cache_registry=(
-                        cache_registry
-                        if cache_registry is not None
-                        else topology.get("cache_registry")
-                    ),
-                )
-            )
-            box.update(compute_asset_routing(spark, topology))
-        if (
-            topology.get("raw_verdicts")
-            and box is not None
-            and not batch.isStreaming
-        ):
-            # raw-verdict gates read their flag source here for the
-            # compile's duration (cleared with the box below).
-            box["raw_batch"] = batch
-            flag_fns = topology.get("flag_fns") or {}
-            if flag_fns:
-                # Construct every gate's flag plan CONCURRENTLY: plan
-                # construction is py4j/Catalyst-bound (~3 s serial per
-                # trigger measured at sf0.1) and each flag plan depends
-                # only on the raw batch + the routing box filled above,
-                # so the builds overlap safely (plan construction is
-                # thread-safe; JVM calls release the GIL). In unfused
-                # mode each probe's own routing collect rides its
-                # thread, so those jobs overlap too (guide §2.6).
-                from concurrent.futures import ThreadPoolExecutor
-
-                with ThreadPoolExecutor(max_workers=len(flag_fns)) as pool:
-                    futs = {
-                        name: pool.submit(fn, batch)
-                        for name, fn in flag_fns.items()
-                    }
-                    box["flags"] = {
-                        name: fut.result() for name, fut in futs.items()
-                    }
-        return compile_topology(
-            spark, topology, {source_topic(topology): batch}
-        )
-    finally:
-        if box is not None:
-            box.clear()
+    A batch frame is parallelism-guarded once (``with_min_parallelism``:
+    a 250-row micro-batch is one partition), so every probe's own guard
+    is a no-op and no probe adds a repartition of its own. The stream
+    entities whose only parent is the source topic (the text topology's
+    six flag derivations) are then constructed CONCURRENTLY off that
+    batch and handed to :func:`compile_topology` as bound inputs.
+    Plan construction is py4j/Catalyst-bound (JVM calls release the
+    GIL), and each probe's own routing collect rides its thread, so
+    those jobs overlap too. Then every ``join`` entity's output (a
+    gate) is cached into ``cache_registry`` (default: the registry the
+    topology was built with): a gate feeds the next gate and any reader
+    of its entity, and without the cache each forced entity re-runs
+    every gate above it. Called directly, :func:`compile_topology`
+    builds the same plans serially and uncached, with the same
+    answers."""
+    source = source_topic(topology)
+    parents = parents_of(topology)
+    if not batch.isStreaming:
+        batch = with_min_parallelism(batch)
+    derived = {
+        name: ent["xform"]
+        for name, ent in topology["entities"].items()
+        if ent["type"] == "stream"
+        and ent.get("xform") is not None
+        and parents[name] == [source]
+    }
+    inputs = {source: batch}
+    if derived:
+        with ThreadPoolExecutor(max_workers=len(derived)) as pool:
+            futs = {name: pool.submit(fn, batch) for name, fn in derived.items()}
+            inputs.update({name: fut.result() for name, fut in futs.items()})
+    compiled = compile_topology(spark, topology, inputs)
+    if not batch.isStreaming:  # streaming frames cannot cache
+        if cache_registry is None:
+            cache_registry = topology.get("cache_registry")
+        for name, ent in topology["entities"].items():
+            if ent["type"] == "join":
+                compiled[name].cache()
+                if cache_registry is not None:
+                    cache_registry.append(compiled[name])
+    return compiled
 
 
 def source_topic(topology: Topology) -> str:
@@ -952,18 +590,13 @@ def run_ingestion_batch(
     topology: Topology,
     batch: DataFrame,
     *,
-    fuse_routing: bool = True,
     cache_registry: list | None = None,
 ) -> DataFrame:
     """Compile the topology against one batch frame and return the
     curated sink — the offline-simulation shape (≙ run-experiment,
-    core.clj:224-234) and what the registered oracle-checked query
-    runs. ``fuse_routing=False`` restores the per-probe routing
-    collects (the A/B lever the parity tests pin)."""
-    compiled = compile_ingestion(
-        spark, topology, batch,
-        fuse_routing=fuse_routing, cache_registry=cache_registry,
-    )
+    core.clj:224-234) and what the registered oracle-checked queries
+    run."""
+    compiled = compile_ingestion(spark, topology, batch, cache_registry=cache_registry)
     return compiled[sink_topic(topology)]
 
 
@@ -992,7 +625,6 @@ def run_ingestion_stream(
     assume_new_ids: bool = False,
     checkpoint: str | None = None,
     trigger: dict | None = None,
-    fuse_routing: bool | None = None,
 ):
     """Run the curation topology CONTINUOUSLY: each micro-batch of
     ``stream`` is bound as ``topic/raw-docs``, the topology compiles
@@ -1059,20 +691,8 @@ def run_ingestion_stream(
     :func:`ingestion_topology` — cached frames the gates create are
     unpersisted after every batch (no per-trigger cache leak).
 
-    ``fuse_routing``: ``None`` (default) resolves by topology mode —
-    per-probe routing for ``raw_verdicts`` topologies, the fused
-    one-job router otherwise. Rationale (r11, measured at sf0.1): the
-    raw-verdict compile constructs every gate's flag plan in a thread
-    pool, so each probe's own routing collect OVERLAPS the other
-    gates' construction (250-row-trigger p50 5.1 s vs 8.0 s with the
-    serial fused job in front); a chained topology constructs gates
-    sequentially, where six serial collects are exactly what the fused
-    router exists to kill.
-
     Returns the started ``StreamingQuery``; default trigger is
     ``availableNow`` (drain-what-exists, then stop)."""
-    if fuse_routing is None:
-        fuse_routing = not topology.get("raw_verdicts")
     gates = topology.get("gates", {})
     if (
         upsert_hash_index_path is not None
@@ -1148,8 +768,7 @@ def run_ingestion_stream(
             ).withColumn("batch_id", F.lit(batch_id))
             psi_sink_fn(report, batch_id)
         curated = run_ingestion_batch(
-            spark, topology, batch_df,
-            fuse_routing=fuse_routing, cache_registry=cache_registry,
+            spark, topology, batch_df, cache_registry=cache_registry
         )
         try:
             sink_fn(curated, batch_id)

@@ -205,21 +205,11 @@ def _shared_ingestion(spark: SparkSession, sf_dir: str) -> dict:
     persisted index or a fixed ratio table, never against its
     batch-mates — so admit/drop for any doc is independent of which
     other docs flow beside it, and any gate-subset query is a selection
-    over the six verdict sets. The gates still run sequentially inside
-    the topology (later gates see fewer docs — the cost design), but the
-    registry no longer pays the exact+neardup+DSIR+containment prefix
-    once per registered query: the compiler's per-gate caches make the
-    second through fifth queries batch-sized joins over materialized
-    survivor frames.
-
-    The one verdict set the sequential compile lacks: the five-gate
-    (no-decontamination) view needs SEMANTIC verdicts for all
-    containment survivors, but the compiled semantic gate only probed
-    the contamination survivors. The missing docs are exactly the
-    contamination gate's drops (batch-small by construction), so one
-    extra probe of the same IVF index over just those ids completes the
-    verdict set — per-doc independence makes the union identical to
-    probing all containment survivors at once.
+    over the six verdict sets. Each gate's flag set is its own entity
+    derived from the whole probe slice, so the five-gate
+    (no-decontamination) view reads the semantic flags entity directly:
+    it already holds the semantic verdicts of every containment
+    survivor, including those the contamination gate dropped.
 
     Returns {"probe", "paths"}: the probe slice and the parquet path of
     each materialized gate output.
@@ -241,7 +231,6 @@ def _compile_ingestion_gates(spark: SparkSession, sf_dir: str, mat_dir: str) -> 
     probe = docs.filter(F.col("doc_id") % _INCR_NEW_MOD == 0)
     corpus = docs.filter(F.col("doc_id") % _INCR_NEW_MOD != 0)
     embeddings = load_table(spark, sf_dir, "embeddings")
-    ivf_path = _ingest_ivf_index_path(spark, sf_dir)
     topo = ingestion_topology(
         spark,
         index_path=_minhash_index_path(spark, sf_dir),
@@ -251,40 +240,10 @@ def _compile_ingestion_gates(spark: SparkSession, sf_dir: str, mat_dir: str) -> 
         hash_index_path=_ingest_hash_index_path(spark, sf_dir),
         bloom_index_path=_ingest_bloom_index_path(spark, sf_dir),
         keyset_index_path=_ingest_keyset_path(spark, sf_dir),
-        ivf_index_path=ivf_path,
+        ivf_index_path=_ingest_ivf_index_path(spark, sf_dir),
         embeddings=embeddings,
     )
     compiled = compile_ingestion(spark, topo, probe)
-    surv3 = compiled["stream/containment-gate"]
-    surv4 = compiled["stream/contamination-gate"]
-    surv5 = compiled["stream/semantic-gate"]
-    # semantic verdicts over ALL containment survivors: the compiled
-    # gate's flags (surv4 \ surv5) plus one extra probe over the
-    # contamination drops (surv3 \ surv4).
-    contam_dropped = surv3.join(surv4.select("doc_id"), "doc_id", "left_anti")
-    extra_probes = contam_dropped.select("doc_id").join(
-        embeddings.select(F.col("vec_id").alias("doc_id"), F.col("embedding")),
-        "doc_id",
-    )
-    extra_flagged = (
-        S.ivf_index_neardup_pairs(
-            spark,
-            ivf_path,
-            extra_probes,
-            threshold=INGEST_SEMANTIC_COS,
-            id_col="doc_id",
-            vec_col="embedding",
-            n_probe=S.IVF_NPROBE,
-        )
-        .select(F.col("probe_id").alias("doc_id"))
-        .distinct()
-    )
-    sem_flagged_surv3 = (
-        surv4.select("doc_id")
-        .join(surv5.select("doc_id"), "doc_id", "left_anti")
-        .unionByName(extra_flagged)
-        .distinct()
-    )
     # MATERIALIZE the gate verdict sets to parquet (batch-sized frames:
     # the probe slice and its survivors) instead of .cache(): executor
     # cache blocks die with clearCache()/the session, so every later
@@ -297,11 +256,11 @@ def _compile_ingestion_gates(spark: SparkSession, sf_dir: str, mat_dir: str) -> 
     to_persist = {
         "stream/neardup-gate": compiled["stream/neardup-gate"],
         "stream/dsir-gate": compiled["stream/dsir-gate"],
-        "stream/containment-gate": surv3,
-        "stream/contamination-gate": surv4,
-        "stream/semantic-gate": surv5,
+        "stream/containment-gate": compiled["stream/containment-gate"],
+        "stream/contamination-gate": compiled["stream/contamination-gate"],
+        "stream/semantic-gate": compiled["stream/semantic-gate"],
         "topic/curated-docs": compiled["topic/curated-docs"],
-        "sem_flagged_surv3": sem_flagged_surv3,
+        "stream/semantic-flags": compiled["stream/semantic-flags"],
     }
     paths: dict[str, str] = {}
     for name, frame in to_persist.items():
@@ -338,8 +297,8 @@ def pipeline_ingestion_curated(spark: SparkSession, sf_dir: str) -> DataFrame:
     frames), so the ENTIRE composed pipeline is oracle-checked, not
     just each gate in isolation. The oracle has no exact-gate CTE
     ON PURPOSE: an exact dup has Jaccard 1.0, so the near-dup CTE
-    subsumes every exact drop — the gate changes per-batch cost, never
-    the curated set (pinned by test_exact_gate_is_semantic_noop)."""
+    subsumes every exact drop — the gate never changes the curated set
+    (pinned by test_exact_gate_is_semantic_noop)."""
     return _shared_gate(spark, sf_dir, "stream/containment-gate").select(
         "doc_id", "n_tokens", "dsir_logweight_r"
     )
@@ -468,7 +427,7 @@ def pipeline_ingestion_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared semantic flag set — no second topology compile, no re-probe
     of the lexical gates."""
     surv3 = _shared_gate(spark, sf_dir, "stream/containment-gate")
-    flagged = _shared_gate(spark, sf_dir, "sem_flagged_surv3")
+    flagged = _shared_gate(spark, sf_dir, "stream/semantic-flags")
     return surv3.join(flagged, "doc_id", "left_anti").select(
         "doc_id", "n_tokens", "dsir_logweight_r"
     )

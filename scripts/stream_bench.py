@@ -151,14 +151,7 @@ def ingestion_main() -> None:
         embeddings=embeddings,
     )
     caches: list = []
-    # raw_verdicts: the serve-latency mode (r11) — identical curated
-    # output (pinned in tests/test_raw_verdicts.py), flag subtrees run
-    # as concurrent stages instead of a sequential gate chain. The
-    # chained A/B leg below rebuilds the classic topology.
-    topo = ingestion_topology(
-        spark, cache_registry=caches, raw_verdicts=True, **topo_kw
-    )
-    topo_chained = ingestion_topology(spark, cache_registry=caches, **topo_kw)
+    topo = ingestion_topology(spark, cache_registry=caches, **topo_kw)
 
     # replayed arriving stream: replication copies with re-keyed ids
     # (kept off the corpus id space AND off each other), one parquet
@@ -194,11 +187,9 @@ def ingestion_main() -> None:
         fr.unpersist()
     caches.clear()
 
-    # per-trigger cost decomposition over ONE full replica batch, on the
-    # FUSED serve path (r10): COMPILE = one fused routing job + plan
-    # construction + the contamination spool (which executes the first
-    # four gates — so part of the work the r9 split billed to EXECUTE
-    # now lands here); EXECUTE split = marginal force time per gate
+    # per-trigger cost decomposition over ONE full replica batch:
+    # COMPILE = the concurrent flag-plan construction with each probe's
+    # routing collect; EXECUTE split = marginal force time per gate
     # output over the compiled plan. At corpus scale the
     # construction/routing part is per-TRIGGER and amortizes with batch
     # size — the two batch-size configs below make that visible.
@@ -229,21 +220,13 @@ def ingestion_main() -> None:
         ).save()
         canary = min(canary, time.time() - t0)
 
-    # the streaming loop at TWO trigger sizes plus an UNFUSED A/B leg:
-    # all files per trigger amortizes the per-trigger compile cost; one
-    # file per trigger prices the low-latency end; the unfused leg runs
-    # the same small triggers with per-probe routing collects in the
-    # SAME process, so the fused/unfused ratio cancels host drift.
+    # the streaming loop at TWO trigger sizes: all files per trigger
+    # amortizes the per-trigger compile cost; one file per trigger
+    # prices the low-latency end.
     runs = []
-    # fuse=None resolves per topology mode (raw_verdicts -> per-probe
-    # routing overlapped by the threaded flag construction; chained ->
-    # the fused one-job router). The explicit fused/chained legs are the
-    # same-process A/Bs that cancel host drift.
-    for label, files_per_trigger, fuse, run_topo in (
-        ("all_files_per_trigger", n_batches, None, topo),
-        ("one_file_per_trigger", 1, None, topo),
-        ("one_file_per_trigger_fused", 1, True, topo),
-        ("one_file_per_trigger_chained", 1, True, topo_chained),
+    for label, files_per_trigger in (
+        ("all_files_per_trigger", n_batches),
+        ("one_file_per_trigger", 1),
     ):
         shutil.rmtree(f"{TMP}/curated_out", ignore_errors=True)
         shutil.rmtree(f"{TMP}/ckpt_ingest", ignore_errors=True)
@@ -255,13 +238,12 @@ def ingestion_main() -> None:
         t0 = time.time()
         q = run_ingestion_stream(
             spark,
-            run_topo,
+            topo,
             stream,
             f"{TMP}/curated_out",
             cache_registry=caches,
             checkpoint=f"{TMP}/ckpt_ingest",
             trigger={"availableNow": True},
-            fuse_routing=fuse,
         )
         while q.isActive:
             q.awaitTermination(5)

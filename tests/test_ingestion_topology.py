@@ -215,8 +215,9 @@ def test_to_dot_renders_ingestion_dataflow(spark, tmp_path):
 
 def test_exact_gate_drops_recrawls_before_neardup(spark, tmp_path):
     """With a hash_index_path the topology prepends the exact gate: a
-    byte-identical re-crawl must die there — the near-dup gate (the
-    expensive signature/verify path) never sees it."""
+    byte-identical re-crawl must die there, so it is already gone from
+    the exact gate's survivors (the near-dup gate's flags, derived from
+    the raw batch, flag it too)."""
     from kafka_streams_the_clojure_way_spark.operators.dedup import build_hash_index
     from kafka_streams_the_clojure_way_spark.plans.compiler import compile_topology
     from kafka_streams_the_clojure_way_spark.operators.text import dsir_bucket_ratios
@@ -538,8 +539,8 @@ def test_stream_ivf_upsert_catches_later_semantic_twin(spark, tmp_path):
 
 
 def test_bloom_pretest_is_cost_only_and_requires_confirm(spark, tmp_path):
-    """The Bloom pre-filter is a third layer of the cost-not-semantics
-    contract: curated output with bloom+hash must be IDENTICAL to
+    """The Bloom pre-filter never changes the curated set: curated
+    output with bloom+hash must be IDENTICAL to
     hash-only and to no-exact-gate-at-all, re-crawls included. And a
     bloom without a confirming hash index must be rejected — its false
     positives would have nowhere to die."""
@@ -704,12 +705,10 @@ def test_contamination_gate_drops_benchmark_leak(spark, tmp_path):
     assert curated == set(SURVIVOR_IDS)
 
 
-def test_six_gate_stream_matches_batch(spark, tmp_path):
-    """The COMPLETE production topology — exact (bloom+hash), near-dup,
-    DSIR, containment, decontamination, semantic — must serve streaming
-    micro-batches with output identical to the one-shot batch compile,
-    while each specialized drop (re-crawl, benchmark leak, semantic
-    twin) dies at its own gate."""
+def _six_gate_kwargs(spark, tmp_path):
+    """ingestion_topology keywords for the COMPLETE production topology
+    — exact (bloom+hash), near-dup, DSIR, containment, decontamination,
+    semantic — over the module's corpus and embeddings."""
     from kafka_streams_the_clojure_way_spark.operators.dedup import (
         build_bloom_index,
         build_hash_index,
@@ -718,57 +717,105 @@ def test_six_gate_stream_matches_batch(spark, tmp_path):
     from kafka_streams_the_clojure_way_spark.operators.similarity import (
         build_ivf_index,
     )
-    from kafka_streams_the_clojure_way_spark.operators.text import (
-        dsir_bucket_ratios,
-        shingles_col,
-    )
+    from kafka_streams_the_clojure_way_spark.operators.text import shingles_col
 
     corpus = spark.createDataFrame(CORPUS, SCHEMA)
-    mh_path = str(tmp_path / "mh")
-    build_minhash_index(corpus, mh_path)
-    hx_path = str(tmp_path / "hx")
-    build_hash_index(corpus, hx_path)
-    bf_path = str(tmp_path / "bf")
-    build_bloom_index(corpus, bf_path)
+    mh, hx, bf, ks, ivf = (str(tmp_path / p) for p in ("mh", "hx", "bf", "ks", "ivf"))
+    build_minhash_index(corpus, mh)
+    build_hash_index(corpus, hx)
+    build_bloom_index(corpus, bf)
     bench = spark.createDataFrame(
         [(900, "the benchmark evaluation suite holds this exact protected sentence", "en")],
         SCHEMA,
     )
-    ks_path = str(tmp_path / "ks")
     build_keyset_index(
-        bench.select(F.explode(shingles_col(F.col("text"))).alias("key")), ks_path
+        bench.select(F.explode(shingles_col(F.col("text"))).alias("key")), ks
     )
     emb = spark.createDataFrame(EMB_ROWS, EMB_SCHEMA)
-    ivf_path = str(tmp_path / "ivf")
-    build_ivf_index(emb.filter(F.col("vec_id") <= 3), ivf_path)
-    caches: list = []
-    topo = ingestion_topology(
-        spark,
-        index_path=mh_path,
+    build_ivf_index(emb.filter(F.col("vec_id") <= 3), ivf)
+    return dict(
+        index_path=mh,
         corpus=corpus,
         ratios=dsir_bucket_ratios(corpus, F.col("lang") == "en"),
         dsir_cutoff=0.0,
         jaccard_threshold=0.5,
-        hash_index_path=hx_path,
-        bloom_index_path=bf_path,
-        keyset_index_path=ks_path,
-        ivf_index_path=ivf_path,
+        hash_index_path=hx,
+        bloom_index_path=bf,
+        keyset_index_path=ks,
+        ivf_index_path=ivf,
         embeddings=emb,
-        cache_registry=caches,
     )
-    leak = (
-        106,
-        "the data pipeline runs and suite holds this exact protected sentence too",
-        "en",
+
+
+#: the six-gate fixture batch: ARRIVING plus one specialized drop per
+#: late gate — the semantic twin, a benchmark leak (106) and a
+#: byte-identical re-crawl of corpus doc 2 (201)
+SIX_GATE_ROWS = ARRIVING + [
+    SEM_TWIN,
+    (106, "the data pipeline runs and suite holds this exact protected sentence too", "en"),
+    (201, CORPUS[1][1], "en"),
+]
+
+#: survivor ids of SIX_GATE_ROWS at every gate entity. Recorded once
+#: from the chained compile (each gate's flags derived from the previous
+#: gate's survivors) that the raw-batch flags replaced.
+SIX_GATE_SURVIVORS = {
+    "stream/exact-gate": {101, 102, 103, 104, 105, 106},
+    "stream/neardup-gate": {102, 103, 104, 105, 106},
+    "stream/dsir-gate": {102, 104, 105, 106},
+    "stream/containment-gate": {102, 105, 106},
+    "stream/contamination-gate": {102, 105},
+    "stream/semantic-gate": {102},
+    "topic/curated-docs": {102},
+}
+
+
+def test_six_gate_survivors_at_every_gate(spark, tmp_path):
+    """The six-gate compile's survivor ids at EVERY gate entity equal
+    the literals the chained compile gave — through compile_ingestion
+    (concurrent flag construction, cached gates) and through a direct
+    compile_topology (serial, uncached) alike."""
+    from kafka_streams_the_clojure_way_spark.plans.compiler import compile_topology
+    from kafka_streams_the_clojure_way_spark.plans.ingestion import compile_ingestion
+
+    caches: list = []
+    topo = ingestion_topology(
+        spark, cache_registry=caches, **_six_gate_kwargs(spark, tmp_path)
     )
-    recrawl = (201, CORPUS[1][1], "en")
-    rows = ARRIVING + [SEM_TWIN, leak, recrawl]
+    batch = spark.createDataFrame(SIX_GATE_ROWS, SCHEMA)
+    for compiled in (
+        compile_ingestion(spark, topo, batch),
+        compile_topology(spark, topo, {"topic/raw-docs": batch}),
+    ):
+        got = {
+            name: {r.doc_id for r in compiled[name].select("doc_id").collect()}
+            for name in SIX_GATE_SURVIVORS
+        }
+        assert got == SIX_GATE_SURVIVORS
+    # compile_ingestion cached the six gates into the topology's registry
+    assert len(caches) >= 6
+    for frame in caches:
+        frame.unpersist()
+
+
+def test_six_gate_stream_matches_batch(spark, tmp_path):
+    """The COMPLETE production topology must serve streaming
+    micro-batches with output identical to the one-shot batch compile,
+    whose curated set is the pinned one."""
+    caches: list = []
+    topo = ingestion_topology(
+        spark, cache_registry=caches, **_six_gate_kwargs(spark, tmp_path)
+    )
+    rows = SIX_GATE_ROWS
     batch = spark.createDataFrame(rows, SCHEMA)
     expected = sorted(
         (r.doc_id, r.n_tokens, r.dsir_logweight_r)
         for r in run_ingestion_batch(spark, topo, batch).collect()
     )
-    assert [d for d, _, _ in expected] == [102], expected
+    assert {d for d, _, _ in expected} == SIX_GATE_SURVIVORS["topic/curated-docs"]
+    for frame in caches:
+        frame.unpersist()
+    caches.clear()
 
     in_dir = tmp_path / "arriving"
     for i, row in enumerate(rows):
@@ -858,57 +905,22 @@ def test_stream_upsert_pairing_and_psi_sink_validation(spark, tmp_path):
 
 
 def test_six_gate_analyzed_plan_stays_bounded(spark, tmp_path):
-    """Pin WHY the contamination gate lazily localCheckpoints its input
-    (plans/ingestion.py): five gates of verdict-derive-and-join-back
-    lineage, each referencing its input 2-3x, make the raw analyzed
-    plan tree grow ~exponentially with gate count — before the cut was
-    added, merely STRINGIFYING the six-gate sink's plan OOMed the
-    driver. With the cut, the full plan must stringify quickly and stay
-    bounded. If a future refactor removes the cut and this still
-    passes, the cut is no longer needed and may be dropped — the test
-    is the decision record either way."""
-    from kafka_streams_the_clojure_way_spark.operators.dedup import (
-        build_bloom_index,
-        build_hash_index,
-        build_keyset_index,
-    )
-    from kafka_streams_the_clojure_way_spark.operators.similarity import (
-        build_ivf_index,
-    )
-    from kafka_streams_the_clojure_way_spark.operators.text import (
-        dsir_bucket_ratios,
-        shingles_col,
-    )
+    """The decision record for the lineage cut the contamination gate
+    once carried. When each gate derived its flags from the previous
+    gate's survivors and joined them back, every gate referenced its
+    input 2-3x and the analyzed plan grew ~exponentially with gate
+    count: merely STRINGIFYING the six-gate sink's plan OOMed the
+    driver, so a lazy localCheckpoint (later a parquet spool) cut the
+    lineage. The cut is gone because the raw-verdict plan stays bounded
+    without it: every flag subtree hangs off the raw batch (depth 1)
+    and each gate is one join, so the plan grows linearly. Compiled
+    here with no cut, the full sink plan must stay under the same
+    bound."""
     from kafka_streams_the_clojure_way_spark.plans.compiler import (
         compile_topology,
     )
 
-    corpus = spark.createDataFrame(CORPUS, SCHEMA)
-    mh_path, hx_path, bf_path, ks_path, ivf_path = (
-        str(tmp_path / p) for p in ("mh", "hx", "bf", "ks", "ivf")
-    )
-    build_minhash_index(corpus, mh_path)
-    build_hash_index(corpus, hx_path)
-    build_bloom_index(corpus, bf_path)
-    build_keyset_index(
-        corpus.limit(1).select(
-            F.explode(shingles_col(F.col("text"))).alias("key")
-        ),
-        ks_path,
-    )
-    emb = spark.createDataFrame(EMB_ROWS, EMB_SCHEMA)
-    build_ivf_index(emb.filter(F.col("vec_id") <= 3), ivf_path)
-    topo = ingestion_topology(
-        spark,
-        index_path=mh_path,
-        corpus=corpus,
-        ratios=dsir_bucket_ratios(corpus, F.col("lang") == "en"),
-        hash_index_path=hx_path,
-        bloom_index_path=bf_path,
-        keyset_index_path=ks_path,
-        ivf_index_path=ivf_path,
-        embeddings=emb,
-    )
+    topo = ingestion_topology(spark, **_six_gate_kwargs(spark, tmp_path))
     batch = spark.createDataFrame(ARRIVING, SCHEMA)
     sink = compile_topology(spark, topo, {"topic/raw-docs": batch})[
         "topic/curated-docs"

@@ -111,3 +111,33 @@ def test_bloom_gated_contamination_matches_broadcast_form(spark):
     want = sorted(map(tuple, text_ngram_contamination(spark, sf).collect()))
     assert got == want and len(got) > 0
     assert any(r[2] > 0 for r in got), "fixture has no contaminated doc — weak test"
+
+
+def test_probe_precomputed_segments(spark, tmp_path):
+    """Superset segments are output-identical; the same superset routes
+    the confirm scan (one segment per key); an empty list asserts
+    no-keys and returns empty."""
+    from kafka_streams_the_clojure_way_spark.functions.portable import hash60
+    from kafka_streams_the_clojure_way_spark.operators.dedup import _index_meta
+
+    path = str(tmp_path / "ks")
+    build_keyset_index(_df(spark, [f"k{i}" for i in range(40)]), path)
+    probe = _df(spark, ["k3", "k17", "nope"])
+    n_segments = _index_meta(spark, path)["n_segments"]
+    segs = [
+        r[0]
+        for r in probe.select(F.pmod(hash60(F.col("key")), F.lit(n_segments)))
+        .distinct()
+        .collect()
+    ]
+
+    def got(segments):
+        return sorted(
+            r[0]
+            for r in keyset_index_probe(
+                spark, path, probe, segments=segments, confirm_segments=segments
+            ).collect()
+        )
+
+    assert got(None) == got(segs) == got(list(range(n_segments))) == ["k17", "k3"]
+    assert got([]) == []

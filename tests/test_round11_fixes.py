@@ -7,11 +7,7 @@
    decode="png_any" -> functions/codecs.png_decode_auto);
 2. (low) _png_decode enforces the spec's PLTE ordering (PNG 1.2
    §4.1.2): PLTE after the first IDAT and a second PLTE chunk are
-   classified rejections, not silent decodes;
-3. (low) compute_batch_routing survives NULL text rows (a NULL
-   hash/pmod key is dropped, matching the unfused path's degrade);
-4. (low) per-compile spool dirs share ONE process-wide atexit sweep
-   and deregister on unpersist — no per-trigger callback leak.
+   classified rejections, not silent decodes.
 """
 
 from __future__ import annotations
@@ -203,49 +199,6 @@ def test_fixture_palette_nontrivial():
         pal[3 * i] != pal[3 * i + 1] or pal[3 * i + 1] != pal[3 * i + 2]
         for i in range(256)
     )
-
-
-def test_batch_routing_tolerates_null_text(spark):
-    """A NULL text row must not crash the fused routing collect
-    (int(None) in compute_batch_routing) — its keys are dropped, which
-    is output-identical: a NULL bucket can never match a partition."""
-    from kafka_streams_the_clojure_way_spark.operators.dedup import (
-        build_hash_index,
-    )
-    from kafka_streams_the_clojure_way_spark.plans.ingestion import (
-        compute_batch_routing,
-    )
-    import tempfile
-
-    docs = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon zeta"), (2, None), (3, "x y")],
-        SCHEMA,
-    )
-    with tempfile.TemporaryDirectory() as tmp:
-        path = f"{tmp}/hash_idx"
-        build_hash_index(docs.filter(F.col("text").isNotNull()), path)
-        topo = {
-            "routing": {
-                "id_col": "doc_id",
-                "text": "text",
-                "hash_index_path": path,
-            }
-        }
-        routing = compute_batch_routing(spark, topo, docs)
-        assert "hash_buckets" in routing
-        assert all(isinstance(k, int) for k in routing["hash_buckets"])
-
-
-def test_spool_atexit_registry_deregisters():
-    from kafka_streams_the_clojure_way_spark import artifacts as A
-    from kafka_streams_the_clojure_way_spark.plans import ingestion as I
-
-    before = set(A._LIVE_SCRATCH)
-    d = A.scratch_dir("ingest_spool_test_")
-    assert d in A._LIVE_SCRATCH
-    I._SpoolDir(d).unpersist()
-    assert d not in A._LIVE_SCRATCH
-    assert A._LIVE_SCRATCH == before
 
 
 # ---------------------------------------------------------------------------
